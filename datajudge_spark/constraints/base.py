@@ -15,18 +15,25 @@ re-``test`` without re-running Spark actions.  On failure the optimized
 Spark plans that produced the values are rendered into the
 ``TestResult`` where the reference renders compiled SQL
 (base.py:268-287).
+
+A constraint whose retrieval is one scalar aggregate declares it
+(``_scalar_agg``) instead of running it: ``Requirement.test`` computes
+all such declarations on one source in a single Spark aggregate and
+hands each value to its constraint's retrieval slot
+(``_prefetched``); a lone ``test`` runs the declaration by itself.
 """
 
 from __future__ import annotations
 
 import abc
+from collections import OrderedDict
 from collections.abc import Callable, Collection, Sequence
 from dataclasses import dataclass, field
-from functools import lru_cache
 from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import operators as ops
 from ..formatter import Formatter
 from ..plans import render_plans
 from ..reference import DataReference
@@ -36,13 +43,40 @@ _T = TypeVar("_T")
 
 _DEFAULT_FORMATTER = Formatter()
 
-OptionalSelections = Sequence[DataFrame] | None
+# a thunk defers building plans that only a failure message renders
+OptionalSelections = (
+    Sequence[DataFrame] | Callable[[], list[DataFrame]] | None
+)
 ToleranceGetter = Callable[[SparkSession], float]
 
 # The two retrieval slots wrapped with per-instance caches; subclasses
 # that override either hook keep the caching because the wrap happens on
 # the BOUND method at construction time.
 _CACHED_HOOKS = ("_get_factual_value", "_get_target_value")
+
+
+class _SlotCache:
+    """LRU cache of one bound retrieval slot, keyed by engine
+    (``maxsize=None`` is unbounded).  Unlike ``functools.lru_cache`` it
+    answers ``engine in cache``, so ``Requirement.test`` does not
+    prefetch a value the slot already holds."""
+
+    def __init__(self, fn: Callable[[SparkSession], Any], maxsize: int | None):
+        self._fn = fn
+        self._maxsize = maxsize
+        self._held: OrderedDict = OrderedDict()
+
+    def __contains__(self, engine: SparkSession) -> bool:
+        return engine in self._held
+
+    def __call__(self, engine: SparkSession) -> Any:
+        if engine in self._held:
+            self._held.move_to_end(engine)
+            return self._held[engine]
+        value = self._held[engine] = self._fn(engine)
+        if self._maxsize is not None and len(self._held) > self._maxsize:
+            self._held.popitem(last=False)
+        return value
 
 
 def uncommon_substrings(string1: str, string2: str) -> tuple[str, str]:
@@ -154,6 +188,9 @@ class Constraint(abc.ABC):
         self._target_selections: OptionalSelections = None
         self._output_processors = self._as_processor_list(output_processors)
         self._cache_size = cache_size
+        # id(ref) -> (value, plans) prefetched from a shared scan by
+        # ``Requirement.test``; ``_retrieve`` consumes it
+        self._prefetched: dict[int, tuple[Any, OptionalSelections]] = {}
         self._setup_caching()
 
     @staticmethod
@@ -172,9 +209,8 @@ class Constraint(abc.ABC):
         if self._cache_size == 0:
             return
         for hook in _CACHED_HOOKS:
-            setattr(
-                self, hook, lru_cache(self._cache_size)(getattr(self, hook))
-            )
+            slot = _SlotCache(getattr(self, hook), self._cache_size)
+            setattr(self, hook, slot)
 
     def _check_if_valid_between_or_within(
         self, ref2: DataReference | None, ref_value: Any
@@ -244,12 +280,47 @@ class Constraint(abc.ABC):
             f"Condition on second table: {clause2}. "
         )
 
+    # -- fusable scalar retrievals ----------------------------------------
+
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg | None:
+        """The aggregate this constraint reads from ``ref`` when it is
+        one that can share a scan; ``None`` (the default) keeps the
+        constraint on its own ``_retrieve``."""
+        return None
+
+    def _scalar_requests(
+        self, engine: SparkSession
+    ) -> list[tuple[DataReference, ops.ScalarAgg]]:
+        """``(ref, declaration)`` for each retrieval slot that will read
+        a fusable aggregate from ``ref`` when this constraint is tested
+        on ``engine`` (slots already cached for it are left out)."""
+        requests = []
+        slots = (
+            (self._get_factual_value, self._ref),
+            (self._get_target_value, self._ref2),
+        )
+        for slot, ref in slots:
+            if ref is None or (isinstance(slot, _SlotCache) and engine in slot):
+                continue
+            agg = self._scalar_agg(ref)
+            if agg is not None:
+                requests.append((ref, agg))
+        return requests
+
     # -- subclass contract ----------------------------------------------
 
     def _retrieve(
         self, engine: SparkSession, ref: DataReference
     ) -> tuple[Any, OptionalSelections]:
-        raise NotImplementedError()
+        # constraints that declare a scalar aggregate read the value
+        # prefetched from a shared scan, else run the declaration alone
+        if id(ref) in self._prefetched:
+            return self._prefetched.pop(id(ref))
+        agg = self._scalar_agg(ref)
+        if agg is None:
+            raise NotImplementedError()
+        (fetched,) = ops.run_scalar_aggs(ref.data_source.get_df(engine), [agg])
+        return fetched
 
     def _compare(
         self, value_factual: Any, value_target: Any

@@ -94,11 +94,13 @@ class _DateExtremum(Constraint):
             ref, ref2=ref2, ref_value=parsed, name=name, cache_size=cache_size
         )
 
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg(self._kind, ref)
+
     def _retrieve(
         self, engine: SparkSession, ref: DataReference
     ) -> tuple[dt.date, OptionalSelections]:
-        fetch = ops.get_min if self._kind == "min" else ops.get_max
-        value, selections = fetch(engine, ref)
+        value, selections = super()._retrieve(engine, ref)
         return _convert_to_date(value, self._format), selections
 
     def _compare(
@@ -200,11 +202,12 @@ class DateBetween(Constraint):
         self._lower_bound = lower_bound
         self._upper_bound = upper_bound
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[float | None, OptionalSelections]:
-        return ops.get_fraction_between(
-            engine, ref, self._lower_bound, self._upper_bound
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg(
+            "fraction_between",
+            ref,
+            lower=self._lower_bound,
+            upper=self._upper_bound,
         )
 
     def _compare(self, value_factual: float, value_target: float) -> tuple[bool, str]:

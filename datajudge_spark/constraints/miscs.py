@@ -201,8 +201,8 @@ class MaxNullFraction(Constraint):
             )
         self.max_relative_deviation = max_relative_deviation
 
-    def _retrieve(self, engine: SparkSession, ref: DataReference):
-        return ops.get_missing_fraction(engine, ref)
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg("missing_fraction", ref)
 
     def _compare(
         self, value_factual: float, value_target: float

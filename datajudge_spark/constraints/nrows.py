@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 from .. import operators as ops
 from ..reference import DataReference
 from ..utils import format_difference
-from .base import Constraint, OptionalSelections, TestResult, ToleranceGetter
+from .base import Constraint, TestResult, ToleranceGetter
 
 # Absolute-count verdict templates.  ``got``/``want`` arrive already
 # digit-highlighted where the reference highlights them.
@@ -46,9 +46,9 @@ _SAY_GREW_TOO_LITTLE = (
 class NRows(Constraint, abc.ABC):
     """Base: the factual/target values are plain row counts.
 
-    ``_count_cap`` opts a subclass into LIMIT-capped counting — the scan
-    short-circuits as soon as the threshold is provably met (only sound
-    for a lower-bound gate; reference rationale nrows.py:41-48).
+    ``_count_cap`` opts a subclass into counting capped at the threshold
+    (only sound for a lower-bound gate; reference rationale
+    nrows.py:41-48).
     """
 
     _count_cap = False
@@ -66,11 +66,9 @@ class NRows(Constraint, abc.ABC):
             ref, ref2=ref2, ref_value=n_rows, name=name, cache_size=cache_size
         )
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[int, OptionalSelections]:
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
         cap = self._ref_value if self._count_cap else None
-        return ops.get_row_count(engine, ref, row_limit=cap)
+        return ops.ScalarAgg("count", ref, cap=cap)
 
     def _speak(self, template: str, **fields) -> str:
         return template.format(

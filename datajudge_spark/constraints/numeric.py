@@ -66,11 +66,8 @@ class _NumericExtremum(Constraint):
             ref, ref2=ref2, ref_value=bound, name=name, cache_size=cache_size
         )
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[float, OptionalSelections]:
-        fetch = ops.get_min if self._kind == "min" else ops.get_max
-        return fetch(engine, ref)
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg(self._kind, ref)
 
     def _within(self, got: float, want: float) -> bool:
         return got >= want if self._kind == "min" else got <= want
@@ -150,11 +147,12 @@ class NumericBetween(Constraint):
         self._lower_bound = lower_bound
         self._upper_bound = upper_bound
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[float | None, OptionalSelections]:
-        return ops.get_fraction_between(
-            engine, ref, self._lower_bound, self._upper_bound
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg(
+            "fraction_between",
+            ref,
+            lower=self._lower_bound,
+            upper=self._upper_bound,
         )
 
     def _compare(
@@ -189,10 +187,8 @@ class NumericMean(Constraint):
         )
         self._max_absolute_deviation = max_absolute_deviation
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[float, OptionalSelections]:
-        return ops.get_mean(engine, ref)
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg("mean", ref)
 
     def test(self, engine: SparkSession) -> TestResult:
         # mean-over-empty needs BOTH sides inspected before comparing,

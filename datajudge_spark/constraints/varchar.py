@@ -187,13 +187,8 @@ class _VarCharLengthBound(Constraint):
             ref, ref2=ref2, ref_value=bound, name=name, cache_size=cache_size
         )
 
-    def _retrieve(
-        self, engine: SparkSession, ref: DataReference
-    ) -> tuple[int, OptionalSelections]:
-        fetch = (
-            ops.get_min_length if self._kind == "min" else ops.get_max_length
-        )
-        return fetch(engine, ref)
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        return ops.ScalarAgg(f"{self._kind}_length", ref)
 
     def _compare(
         self, value_factual: int, value_target: int

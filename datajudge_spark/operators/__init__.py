@@ -32,6 +32,7 @@ from .rows import (
     get_row_mismatch,
 )
 from .scalars import (
+    ScalarAgg,
     get_date_growth_rate,
     get_date_span,
     get_fraction_between,
@@ -43,6 +44,7 @@ from .scalars import (
     get_missing_fraction,
     get_percentile,
     get_row_count,
+    run_scalar_aggs,
 )
 from .schema import (
     clear_primary_keys,
@@ -62,6 +64,7 @@ from .uniques import (
 
 __all__ = [
     "MatchAndCompare",
+    "ScalarAgg",
     "clear_primary_keys",
     "declare_primary_keys",
     "duplicates",
@@ -96,4 +99,5 @@ __all__ = [
     "get_uniques",
     "DEFAULT_MAX_UNIQUES",
     "normalize_type_name",
+    "run_scalar_aggs",
 ]

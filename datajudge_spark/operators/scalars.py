@@ -12,11 +12,11 @@ constraint fails (see ``plans.py``). Only O(1) values cross the driver
 boundary; all O(rows) work stays on executors inside whole-stage codegen.
 
 Scale notes (100 TB design):
-- counts/min/max/avg/length extremes are single-pass partial aggregations —
-  Catalyst plans map-side partial + final agg, no full shuffle.
-- ``get_row_count(row_limit=n)`` uses ``df.limit(n)`` so the scan
-  short-circuits (LocalLimit) instead of counting 100 TB to answer "are there
-  at least n rows" (reference rationale: constraints/nrows.py:41-48).
+- counts, missing/between fractions, min/max/avg and length extremes are
+  declared as ``ScalarAgg``s; ``run_scalar_aggs`` computes any number of
+  them that read one source in a single partial + final aggregation (one
+  scan, no full shuffle), each restricted to its own condition.  The
+  ``get_*`` functions below run one declaration alone.
 - the exact percentile avoids a global row_number window (single-partition
   hazard, reference db_access.py:821-825): it aggregates to the distinct-value
   histogram first (one shuffle over |distinct| rows), then takes a cumulative
@@ -25,7 +25,11 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..condition import Condition, merge_conditions
@@ -34,53 +38,174 @@ from ..reference import DataReference
 _Plans = list[DataFrame]
 
 
+@dataclass(frozen=True)
+class ScalarAgg:
+    """One scalar retrieval that can share a scan with others: ``kind``
+    over ``ref``'s single column (no column for ``"count"``), restricted
+    to ``ref``'s condition.
+
+    Kinds: ``count`` (capped at ``cap`` when one is given),
+    ``missing_fraction``, ``fraction_between`` (``lower <= col <=
+    upper``), ``min``, ``max``, ``mean``, ``min_length``,
+    ``max_length``.
+    """
+
+    kind: str
+    ref: DataReference
+    cap: int | None = None
+    lower: str | float | None = None
+    upper: str | float | None = None
+
+
+# one-value kinds: (aggregate function, per-row value of the column)
+_ONE_VALUE = {
+    "min": (F.min, lambda c: c),
+    "max": (F.max, lambda c: c),
+    # avg(cast(col AS double)) (reference casts to DECIMAL,
+    # db_access.py:803-809; Spark's avg over integers is already exact
+    # in double for < 2^53 sums)
+    "mean": (F.avg, lambda c: c.cast("double")),
+    "min_length": (F.min, F.length),
+    "max_length": (F.max, F.length),
+}
+
+# kinds read as two counts: (all rows, rows that hit), in this order
+_TWO_COUNTS = {
+    "missing_fraction": ("n_total", "n_missing"),
+    "fraction_between": ("n_all", "n_filtered"),
+}
+
+
+def _named_aggs(agg: ScalarAgg, on=lambda x: x) -> list[tuple[str, Column]]:
+    """``agg``'s aggregate columns with the names its own plan gives
+    them; ``on`` wraps every per-row input (the shared scan passes
+    ``F.when(condition, ...)``)."""
+    if agg.kind == "count":
+        return [("count", F.count(on(F.lit(1))))]
+    column = F.col(agg.ref.get_column())
+    if agg.kind in _ONE_VALUE:
+        fn, per_row = _ONE_VALUE[agg.kind]
+        return [("value", fn(on(per_row(column))))]
+    if agg.kind == "missing_fraction":
+        # reference db_access.py:967-986 uses two counts; one scan here
+        hit = column.isNull()
+    else:
+        # reference db_access.py:878-903 runs two counts; one scan here
+        name = agg.ref.get_column()
+        hit = Condition(
+            conditions=[
+                Condition(raw_string=f"{name} >= {agg.lower}"),
+                Condition(raw_string=f"{name} <= {agg.upper}"),
+            ],
+            reduction_operator="and",
+        ).to_column()
+    n_rows, n_hit = _TWO_COUNTS[agg.kind]
+    return [
+        (n_rows, F.count(on(F.lit(1)))),
+        (n_hit, F.count(on(F.when(hit, 1)))),
+    ]
+
+
+def _finish(agg: ScalarAgg, values: list) -> object:
+    """The retrieval's value from its aggregate columns."""
+    if agg.kind == "count":
+        return min(values[0], agg.cap) if agg.cap else values[0]
+    if agg.kind == "mean":
+        return float(values[0]) if values[0] is not None else None
+    if agg.kind == "missing_fraction":
+        n_total, n_missing = values
+        return 0 if n_total == 0 else n_missing / n_total
+    if agg.kind == "fraction_between":
+        n_all, n_filtered = values
+        return None if n_all == 0 else n_filtered / n_all
+    return values[0]
+
+
+def _own_plan(df: DataFrame, agg: ScalarAgg) -> _Plans:
+    """``agg``'s own plan, as failure messages show it: ``ref``'s
+    selection of ``df`` (LIMIT-capped for a capped count), else the
+    aggregate over that selection."""
+    selection = agg.ref.select_from(df)
+    if agg.kind == "count":
+        return [selection.limit(agg.cap) if agg.cap else selection]
+    return [selection.select(*[c.alias(n) for n, c in _named_aggs(agg)])]
+
+
+def _fused_frame(df: DataFrame, aggs: list[ScalarAgg]) -> DataFrame:
+    """One global aggregate over ``df`` holding every column of every
+    declaration, in order.  Each condition wraps its own inputs as
+    ``F.when(condition, ...)``, so declarations with different
+    conditions share the scan; when every declaration has a condition,
+    their disjunction also filters the scan (and reaches the parquet
+    reader as a pushed filter)."""
+    conditions = [agg.ref.condition for agg in aggs]
+    columns = []
+    for agg, condition in zip(aggs, conditions):
+        if condition is None:
+            columns += [c for _, c in _named_aggs(agg)]
+        else:
+            cond = condition.to_column()
+            named = _named_aggs(agg, lambda x: F.when(cond, x))
+            columns += [c for _, c in named]
+    if all(c is not None for c in conditions):
+        distinct = list(dict.fromkeys(str(c) for c in conditions))
+        df = df.where(F.expr(" OR ".join(f"({c})" for c in distinct)))
+    return df.agg(*[c.alias(f"v{k}") for k, c in enumerate(columns)])
+
+
+def run_scalar_aggs(
+    df: DataFrame, aggs: list[ScalarAgg]
+) -> list[tuple[object, Callable[[], _Plans]]]:
+    """Compute every declaration in ``aggs`` with ONE Spark aggregate
+    over ``df``, the source frame they all read.
+
+    Returns ``(value, plans)`` per declaration, in order.  ``plans``
+    builds, when called, the plan the declaration runs when computed
+    alone, from the same ``df`` — failure messages render it, so the
+    happy path never builds it and no source is resolved twice.
+    """
+    row = _fused_frame(df, aggs).collect()[0]
+    out, start = [], 0
+    for agg in aggs:
+        width = 2 if agg.kind in _TWO_COUNTS else 1
+        value = _finish(agg, list(row[start:start + width]))
+        out.append((value, partial(_own_plan, df, agg)))
+        start += width
+    return out
+
+
+def _run_alone(spark: SparkSession, agg: ScalarAgg) -> tuple[object, _Plans]:
+    df = agg.ref.data_source.get_df(spark)
+    ((value, plans),) = run_scalar_aggs(df, [agg])
+    return value, plans()
+
+
 def get_row_count(
     spark: SparkSession, ref: DataReference, row_limit: int | None = None
 ) -> tuple[int, _Plans]:
     """Number of rows, optionally capped at ``row_limit``
     (reference db_access.py:740-756)."""
-    selection = ref.get_selection(spark)
-    if row_limit:
-        selection = selection.limit(row_limit)
-    return selection.count(), [selection]
-
-
-def _get_column_agg(
-    spark: SparkSession, ref: DataReference, agg_col
-) -> tuple[object, _Plans]:
-    """Single-scalar aggregate over the ref's only column
-    (reference get_column, db_access.py:759-786)."""
-    column = ref.get_column(spark)
-    selection = ref.get_selection(spark)
-    agg_df = selection.select(agg_col(F.col(column)).alias("value"))
-    row = agg_df.first()
-    return (row["value"] if row is not None else None), [agg_df]
+    return _run_alone(spark, ScalarAgg("count", ref, cap=row_limit))
 
 
 def get_min(spark: SparkSession, ref: DataReference) -> tuple[object, _Plans]:
-    return _get_column_agg(spark, ref, F.min)
+    return _run_alone(spark, ScalarAgg("min", ref))
 
 
 def get_max(spark: SparkSession, ref: DataReference) -> tuple[object, _Plans]:
-    return _get_column_agg(spark, ref, F.max)
+    return _run_alone(spark, ScalarAgg("max", ref))
 
 
 def get_mean(spark: SparkSession, ref: DataReference) -> tuple[object, _Plans]:
-    """``avg(cast(col AS double))`` (reference casts to DECIMAL,
-    db_access.py:803-809; we document double precision — Spark's avg over
-    integers is already exact in double for < 2^53 sums)."""
-    value, plans = _get_column_agg(
-        spark, ref, lambda c: F.avg(c.cast("double"))
-    )
-    return (float(value) if value is not None else None), plans
+    return _run_alone(spark, ScalarAgg("mean", ref))
 
 
 def get_min_length(spark: SparkSession, ref: DataReference) -> tuple[object, _Plans]:
-    return _get_column_agg(spark, ref, lambda c: F.min(F.length(c)))
+    return _run_alone(spark, ScalarAgg("min_length", ref))
 
 
 def get_max_length(spark: SparkSession, ref: DataReference) -> tuple[object, _Plans]:
-    return _get_column_agg(spark, ref, lambda c: F.max(F.length(c)))
+    return _run_alone(spark, ScalarAgg("max_length", ref))
 
 
 def get_fraction_between(
@@ -89,45 +214,19 @@ def get_fraction_between(
     lower_bound: str | float,
     upper_bound: str | float,
 ) -> tuple[float | None, _Plans]:
-    """Fraction of rows with ``lower <= col <= upper``
-    (reference db_access.py:878-903 runs two counts; we fuse them into ONE
-    scan: conditional aggregation avoids the second pass over 100 TB)."""
-    column = ref.get_column(spark)
-    between = Condition(
-        conditions=[
-            Condition(raw_string=f"{column} >= {lower_bound}"),
-            Condition(raw_string=f"{column} <= {upper_bound}"),
-        ],
-        reduction_operator="and",
+    """Fraction of rows with ``lower <= col <= upper``; None on an empty
+    selection."""
+    return _run_alone(
+        spark,
+        ScalarAgg("fraction_between", ref, lower=lower_bound, upper=upper_bound),
     )
-    selection = ref.get_selection(spark)
-    agg_df = selection.select(
-        F.count(F.lit(1)).alias("n_all"),
-        F.count(F.when(between.to_column(), 1)).alias("n_filtered"),
-    )
-    row = agg_df.first()
-    n_all = row["n_all"] if row is not None else 0
-    n_filtered = row["n_filtered"] if row is not None else 0
-    if n_all == 0:
-        return None, [agg_df]
-    return n_filtered / n_all, [agg_df]
 
 
 def get_missing_fraction(
     spark: SparkSession, ref: DataReference
 ) -> tuple[float, _Plans]:
-    """NULL fraction of the ref's column, one scan
-    (reference db_access.py:967-986 uses two counts)."""
-    column = ref.get_column(spark)
-    selection = ref.get_selection(spark)
-    agg_df = selection.select(
-        F.count(F.lit(1)).alias("n_total"),
-        F.count(F.when(F.col(column).isNull(), 1)).alias("n_missing"),
-    )
-    row = agg_df.first()
-    if row is None or row["n_total"] == 0:
-        return 0, [agg_df]
-    return row["n_missing"] / row["n_total"], [agg_df]
+    """NULL fraction of the ref's column; 0 on an empty selection."""
+    return _run_alone(spark, ScalarAgg("missing_fraction", ref))
 
 
 #: Range-bucket count for the two-pass exact percentile.
@@ -235,8 +334,8 @@ def exact_percentile_df(df, column: str, percentage: float):
     # blocks instead of re-running the upstream derivation / re-reading
     # the source (callers like mad_outliers and theil_sen pay this
     # three-scan pattern twice per call — measured seconds of the
-    # build).  One column persists at ~data/width cost; the cache is
-    # freed when the plan is GC'd.
+    # build).  One column persists at ~data/width cost; the cache stays
+    # until ``unpersist`` or ``clearCache`` (GC does not free it).
     from ..pipeline._util import spread
 
     # spread before persisting: the cache keeps its build partitioning,

@@ -51,8 +51,9 @@ def materialize_once(df: DataFrame) -> DataFrame:
     fault-tolerance is why this is persist and NOT ``localCheckpoint``:
     checkpoint blocks are unreplicated and unrecoverable, acceptable
     only where lineage truncation is mandatory (iterative loops, see
-    ``dedup.duplicate_clusters``).  Blocks are freed when the plan is
-    garbage collected.
+    ``dedup.duplicate_clusters``).  Nothing frees the blocks when the
+    DataFrame is garbage collected: Spark's ``CacheManager`` holds them
+    until ``unpersist`` or ``spark.catalog.clearCache()``.
     """
     return df.persist(_PERSIST_LEVEL)
 

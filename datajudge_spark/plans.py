@@ -24,6 +24,9 @@ def plan_string(df: DataFrame) -> str:
 
 
 def render_plans(dfs) -> list[str] | None:
+    """Render ``dfs``, which may be a thunk that builds them."""
+    if callable(dfs):
+        dfs = dfs()
     if not dfs:
         return None
     return [plan_string(df) for df in dfs]

@@ -40,7 +40,11 @@ class DataReference:
 
     def get_selection(self, spark: SparkSession) -> DataFrame:
         """Filtered + projected DataFrame (reference db_access.py:140-163)."""
-        df = self.data_source.get_df(spark)
+        return self.select_from(self.data_source.get_df(spark))
+
+    def select_from(self, df: DataFrame) -> DataFrame:
+        """This reference's selection of ``df``, a frame its source
+        already resolved."""
         if self.condition is not None:
             df = df.where(self.condition.to_column())
         if self.columns:

@@ -32,7 +32,7 @@ from .constraints import stats as stats_constraints
 from .constraints import uniques as uniques_constraints
 from .constraints import varchar as varchar_constraints
 from .constraints.base import Constraint, TestResult
-from .operators import get_date_growth_rate
+from .operators import get_date_growth_rate, run_scalar_aggs
 from .reference import DataReference
 from .sources import (
     DataSource,
@@ -70,7 +70,48 @@ class Requirement(MutableSequence[Constraint]):
         return len(self._constraints)
 
     def test(self, engine: SparkSession) -> list[TestResult]:
-        return [constraint.test(engine) for constraint in self]
+        _prefetch_scalars(engine, self._constraints)
+        try:
+            return [constraint.test(engine) for constraint in self]
+        finally:
+            # a check that raised before reading its prefetched value
+            # must not read it in a later test
+            for constraint in self:
+                constraint._prefetched.clear()
+
+
+def _prefetch_scalars(engine: SparkSession, constraints: list[Constraint]) -> None:
+    """Compute the scalar aggregates the constraints declare with one
+    Spark aggregate per data source, and hand each value to its
+    constraint's retrieval slot.
+
+    Declarations group by source object (all refs of a requirement side
+    share it), so ``get_df`` runs once per group.  If a group's combined
+    aggregate fails (a missing column or an unparsable condition in one
+    member), nothing is prefetched for it: each member then runs its own
+    aggregate inside ``test``, and the error is raised by the same
+    constraint, with the same type, as when nothing is shared.
+    """
+    groups: dict[int, list] = {}
+    for constraint in constraints:
+        for ref, agg in constraint._scalar_requests(engine):
+            groups.setdefault(id(ref.data_source), []).append(
+                (constraint, ref, agg)
+            )
+    for members in groups.values():
+        if len(members) < 2:
+            continue
+        source = members[0][1].data_source
+        try:
+            fetched = run_scalar_aggs(
+                source.get_df(engine), [agg for _, _, agg in members]
+            )
+        except Exception:
+            # any error here is one a member raises alone too; leaving
+            # the group unfetched re-raises it from that member's test
+            continue
+        for (constraint, ref, _), value in zip(members, fetched):
+            constraint._prefetched[id(ref)] = value
 
 
 class WithinRequirement(Requirement):

@@ -6,7 +6,9 @@ schema is reflected from a live database; here a source yields a *lazy*
 DataFrame whose schema comes from the catalog / parquet footer — no
 reflection round-trip, and Catalyst sees the full plan for pushdown.
 
-Sources never trigger jobs; they only declare the scan.
+Sources declare the scan; most trigger no job.  A parquet source does:
+``spark.read.parquet`` runs a job that reads the footers to infer the
+schema, once per ``get_df`` call.
 """
 
 from __future__ import annotations

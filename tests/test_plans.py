@@ -1220,3 +1220,37 @@ def test_decontaminate_winnow_semi_join_no_python(spark):
     assert "LeftSemi" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_scalar_constraints_share_one_scan(spark):
+    # Requirement.test computes the scalar checks of one source as ONE
+    # aggregate: a single parquet scan feeding a map-side partial and a
+    # final HashAggregate, whatever the checks' conditions
+    from datajudge_spark import Condition
+    from datajudge_spark.operators.scalars import ScalarAgg, _fused_frame
+    from datajudge_spark.reference import DataReference
+    from datajudge_spark.sources import ParquetDataSource
+
+    source = ParquetDataSource(f"{SF_DIR}/lineitem.parquet")
+
+    def ref(column=None, cond=None):
+        cols = None if column is None else [column]
+        return DataReference(source, cols, cond and Condition(raw_string=cond))
+
+    aggs = [
+        ScalarAgg("count", ref(cond="l_quantity > 5"), cap=100),
+        ScalarAgg("max", ref("l_discount")),
+        ScalarAgg("mean", ref("l_tax", "l_quantity < 40")),
+        ScalarAgg("missing_fraction", ref("l_returnflag", "l_tax > 0.02")),
+        ScalarAgg("fraction_between", ref("l_quantity"), lower=1, upper=10),
+        ScalarAgg("max_length", ref("l_linestatus", "l_quantity > 5")),
+    ]
+    plan = _executed_plan(_fused_frame(source.get_df(spark), aggs))
+    assert plan.count("FileScan") == 1
+    assert plan.count("HashAggregate") == 2
+    final, partial = [
+        ln for ln in plan.splitlines() if "HashAggregate" in ln
+    ]
+    assert "partial_" not in final
+    assert "partial_count" in partial and "partial_max" in partial
+    assert plan.index(final) < plan.index(partial) < plan.index("FileScan")
