@@ -43,80 +43,44 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _stream_scratch() -> str:
-    """Base dir for streaming scratch (checkpoints, staged micro-batch
-    inputs).  These are per-invocation ephemera — every drain recomputes
-    from the parquet inputs and the dir is removed afterwards — so a
-    memory-backed fs is the right home for their fsync-heavy tiny files
-    (offsets/commits WAL + state-store deltas).  Production streams set
-    a durable checkpoint dir instead; override with
-    ``SPARK_GRAFT_STREAM_SCRATCH``."""
-    import tempfile
+def _event_stream(scope, sf_dir: str) -> DataFrame:
+    """The events table as a file stream of a ``StreamScope``, event
+    time normalized as in ``_t``."""
+    from datajudge_spark.sources import normalize_event_time
 
-    base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-    if base:
-        return base
-    return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    return normalize_event_time(scope.stream(f"{sf_dir}/events.parquet"))
 
 
-def _drain_memory(
-    spark,
-    out: DataFrame,
-    qname: str,
-    mode: str,
-    parts: str = "4",
-    final_wm_batch: bool = True,
-):
-    """availableNow drain into a memory sink with the shared conf shape:
-
-    - ``parts`` state stores (each HDFS-backed store has a fixed
-      init/commit floor, so 4-8 beats defaultParallelism for the tiny
-      state here; on a cluster size this to the executor count),
-    - checkpoint on the scratch fs, removed after termination,
-    - ``final_wm_batch=False`` skips the trailing no-data micro-batch
-      (``noDataMicroBatches.enabled``).  ONLY safe when the sink content
-      cannot depend on a post-data watermark advance: complete-mode aggs
-      re-emit the whole table every batch, inner stream-stream joins and
-      dropDuplicates emit eagerly, update-mode stateful ops with
-      NoTimeout emit only on data.  Left-outer joins (null-padding waits
-      on the watermark) and multi-drain checkpoints (the recovered
-      watermark feeds the NEXT drain's late-row filter) MUST keep it.
-      Verified result-identical per query against the batch oracle.
-    """
-    import shutil
-    import tempfile
-
-    nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    if not final_wm_batch:
-        spark.conf.set(nd_key, "false")
-    ckpt = tempfile.mkdtemp(prefix=f"djs_ckpt_{qname}_", dir=_stream_scratch())
-    try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+def _day_cents_stream(scope, sf_dir: str) -> DataFrame:
+    """Events as ``(k, d, c)`` = (event_type, days since epoch, integer
+    cents), the input shape of ``stateful_cusum`` / ``stateful_zscore``.
+    Cents are cast JVM-side so the Python fold only sums exact ints."""
+    return (
+        _event_stream(scope, sf_dir)
+        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
+        .select(
+            F.col("event_type").alias("k"),
+            F.datediff(
+                F.col("ts").cast("date"), F.lit("1970-01-01")
+            ).alias("d"),
+            _cents("value").alias("c"),
         )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if not final_wm_batch:
-            spark.conf.set(nd_key, "true")
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
 
 
-def _digest_memory_sink(spark, qname: str, digest: DataFrame) -> DataFrame:
-    """Materialize a digest of a memory-sink table and DROP the sink —
-    repeated runs (bench passes) would otherwise pin every drained batch
-    on the driver heap forever."""
-    rows = digest.collect()
-    schema = digest.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+def _final_state_per_key(sink: DataFrame, *fields: str) -> DataFrame:
+    """Per key of an update-mode sink, the emission with the largest
+    first field (``n_obs``, strictly increasing per emission: the final
+    state), as ``event_type`` + ``fields``."""
+    return (
+        sink.groupBy("key")
+        .agg(F.max(F.struct(*fields)).alias("s"))
+        .select(
+            F.col("key").alias("event_type"),
+            *(F.col(f"s.{f}").alias(f) for f in fields),
+        )
+        .orderBy("event_type")
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1451,53 +1415,34 @@ def q_streaming_windowed_counts(spark, sf_dir):
     deterministic and equals the batch GROUP BY — which is exactly the
     oracle SQL. State is (window x event_type) rows only; at scale the
     watermark bounds it regardless of stream length."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, windowed_counts
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import stream_parquet_like, windowed_counts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the file-stream source wants a directory; link the single file in
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_events_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "event_ts", F.col("ts").cast("timestamp")
-    )
-    # streaming state-store count == shuffle partitions at query start;
-    # (window x type) state is tiny here, and each HDFS-backed store has
-    # a fixed init/commit cost (measured at sf0.1: 4-29 s at 32 stores,
-    # ~1.5 s at 8, ~0.8 s at 4 — the floor is store machinery, not
-    # data).  On a real cluster size this to the executor count instead.
-    out = windowed_counts(
-        ev,
-        "event_ts",
-        window_duration="1 day",
-        watermark_delay="1 hour",
-        group_cols=["event_type"],
-    )
-    qname = f"stream_win_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, out, qname, "complete", final_wm_batch=False)
-    # UTC session => 1-day tumbling windows are UTC-midnight aligned,
-    # matching DuckDB date_trunc('day'); cast start to DATE for the digest.
-    # Materialize the digest and DROP the memory sink — repeated runs
-    # (bench passes) would otherwise pin every drained batch on the
-    # driver heap forever.
-    out_df = spark.table(qname).select(
-        F.col("window_start").cast("date").alias("day"),
-        "event_type",
-        "n_rows",
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    # 4 state stores (the scope's default): (window x type) state is
+    # tiny here, and each HDFS-backed store has a fixed init/commit cost
+    # (measured at sf0.1: 4-29 s at 32 stores, ~1.5 s at 8, ~0.8 s at 4
+    # — the floor is store machinery, not data)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).withColumn(
+            "event_ts", F.col("ts").cast("timestamp")
+        )
+        out = windowed_counts(
+            ev,
+            "event_ts",
+            window_duration="1 day",
+            watermark_delay="1 hour",
+            group_cols=["event_type"],
+        )
+        # UTC session => 1-day tumbling windows are UTC-midnight aligned,
+        # matching DuckDB date_trunc('day'); cast start to DATE.
+        return scope.collect(
+            out,
+            "complete",
+            lambda sink: sink.select(
+                F.col("window_start").cast("date").alias("day"),
+                "event_type",
+                "n_rows",
+            ),
+        )
 
 
 # --------------------------------------------------------------------------
@@ -1636,42 +1581,24 @@ def q_streaming_dedup(spark, sf_dir):
     arrival-order-dependent; the key set is not), so the final state
     equals batch SELECT DISTINCT — the oracle. State at scale is bounded
     by the watermark horizon, not |keys ever seen|."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, streaming_dedup
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import stream_parquet_like, streaming_dedup
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_dedup_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "event_ts", F.col("ts").cast("timestamp")
-    )
-    deduped = streaming_dedup(
-        ev, ["user_id", "event_type"], "event_ts", watermark_delay="1 hour"
-    )
-    qname = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    # see q_streaming_windowed_counts: 4 state stores, not 32, for this
-    # state size; size to the executor count on a real cluster
-    _drain_memory(spark, deduped, qname, "append", final_wm_batch=False)
-    # materialize the 1-row digest and drop the sink (the append-mode
-    # memory table holds every deduped ROW — never leave it pinned)
-    out_df = spark.table(qname).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("user_id").cast("bigint").alias("user_checksum"),
-        F.count_distinct("event_type").alias("n_types"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).withColumn(
+            "event_ts", F.col("ts").cast("timestamp")
+        )
+        deduped = streaming_dedup(
+            ev, ["user_id", "event_type"], "event_ts", watermark_delay="1 hour"
+        )
+        return scope.collect(
+            deduped,
+            "append",
+            lambda sink: sink.agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.sum("user_id").cast("bigint").alias("user_checksum"),
+                F.count_distinct("event_type").alias("n_types"),
+            ),
+        )
 
 
 def q_streaming_sessionize(spark, sf_dir):
@@ -1684,38 +1611,24 @@ def q_streaming_sessionize(spark, sf_dir):
     exactly-1800.000000 s gap a measure-zero case (none in the corpus,
     verified by the oracle hash). State is O(open sessions) bounded by
     the inactivity gap at scale."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import stream_parquet_like
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_sess_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "event_ts", F.col("ts").cast("timestamp")
-    )
-    sess = ev.groupBy(
-        F.session_window("event_ts", "30 minutes"), F.col("user_id")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    qname = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, sess, qname, "complete", final_wm_batch=False)
-    out_df = spark.table(qname).groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("n_events").cast("bigint").alias("n_events"),
-        F.max("n_events").alias("max_session_events"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).withColumn(
+            "event_ts", F.col("ts").cast("timestamp")
+        )
+        sess = ev.groupBy(
+            F.session_window("event_ts", "30 minutes"), F.col("user_id")
+        ).agg(F.count(F.lit(1)).alias("n_events"))
+        return scope.collect(
+            sess,
+            "complete",
+            lambda sink: sink.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("n_sessions"),
+                F.sum("n_events").cast("bigint").alias("n_events"),
+                F.max("n_events").alias("max_session_events"),
+            ),
+        )
 
 
 def q_streaming_stateful_counts(spark, sf_dir):
@@ -1725,47 +1638,29 @@ def q_streaming_stateful_counts(spark, sf_dir):
     availableNow; the per-key FINAL state (max of cumulative emissions,
     robust to multi-batch splits) must equal the batch GROUP BY — the
     oracle. Values < 1.0 are nullified upstream to model dirty data."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, stateful_running_counts
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stateful_running_counts,
-        stream_parquet_like,
-    )
+    def digest(sink):
+        final = sink.groupBy("key").agg(
+            F.max("n_rows").alias("n_rows"), F.max("n_nulls").alias("n_nulls")
+        )
+        return final.agg(
+            F.count(F.lit(1)).alias("n_users"),
+            F.sum("n_rows").cast("bigint").alias("total_rows"),
+            F.sum("n_nulls").cast("bigint").alias("total_nulls"),
+            F.max("n_rows").alias("max_user_rows"),
+        )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_state_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "v", F.when(F.col("value") >= 1.0, F.col("value"))
-    )
-    counts = stateful_running_counts(ev, "user_id", "v")
-    qname = f"stream_state_{uuid.uuid4().hex[:8]}"
     # 8 stores, not 4: unlike the 5-key cusum/zscore drains this op
     # groups ~|users| keys through Python workers, and the per-key
     # pandas work outweighs the extra store init (A/B min-of-3:
     # 2.20 / 1.75 / 1.35 s at 2 / 4 / 8 partitions)
-    _drain_memory(spark, counts, qname, "update", parts="8", final_wm_batch=False)
-    final = spark.table(qname).groupBy("key").agg(
-        F.max("n_rows").alias("n_rows"), F.max("n_nulls").alias("n_nulls")
-    )
-    out_df = final.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("n_rows").cast("bigint").alias("total_rows"),
-        F.sum("n_nulls").cast("bigint").alias("total_nulls"),
-        F.max("n_rows").alias("max_user_rows"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, state_stores=8, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).withColumn(
+            "v", F.when(F.col("value") >= 1.0, F.col("value"))
+        )
+        counts = stateful_running_counts(ev, "user_id", "v")
+        return scope.collect(counts, "update", digest)
 
 
 def q_streaming_cusum(spark, sf_dir):
@@ -1777,60 +1672,17 @@ def q_streaming_cusum(spark, sf_dir):
     increasing per emission) must hash-equal the batch per-key CUSUM,
     the oracle.  Cents are cast JVM-side (decimal(18,2) HALF_UP) so the
     Python fold only ever sums exact integers."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, stateful_cusum
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stateful_cusum,
-        stream_parquet_like,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_cusum_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = (
-        normalize_event_time(raw)
-        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            F.col("event_type").alias("k"),
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("1970-01-01")
-            ).alias("d"),
-            _cents("value")
-            .alias("c"),
+    with StreamScope(spark, watermark_flush=False) as scope:
+        digests = stateful_cusum(_day_cents_stream(scope, sf_dir))
+        return scope.collect(
+            digests,
+            "update",
+            lambda sink: _final_state_per_key(
+                sink, "n_obs", "n_days", "change_day", "cusum_max"
+            ),
         )
-    )
-    digests = stateful_cusum(ev)
-    qname = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, digests, qname, "update", final_wm_batch=False)
-    final = (
-        spark.table(qname)
-        .groupBy("key")
-        .agg(
-            F.max(
-                F.struct("n_obs", "n_days", "change_day", "cusum_max")
-            ).alias("s")
-        )
-        .select(
-            F.col("key").alias("event_type"),
-            F.col("s.n_obs").alias("n_obs"),
-            F.col("s.n_days").alias("n_days"),
-            F.col("s.change_day").alias("change_day"),
-            F.col("s.cusum_max").alias("cusum_max"),
-        )
-        .orderBy("event_type")
-    )
-    rows = final.collect()
-    schema = final.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
 
 
 def q_streaming_zscore(spark, sf_dir):
@@ -1842,60 +1694,19 @@ def q_streaming_zscore(spark, sf_dir):
     hash-equal the batch rolling-window oracle: the Python fold uses
     the SAME exact-integer window sums and the SAME one-double z
     expression as ``operators.timeseries.zscore_anomalies``."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, stateful_zscore
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stateful_zscore,
-        stream_parquet_like,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_zscore_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = (
-        normalize_event_time(raw)
-        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            F.col("event_type").alias("k"),
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("1970-01-01")
-            ).alias("d"),
-            _cents("value")
-            .alias("c"),
+    with StreamScope(spark, watermark_flush=False) as scope:
+        digests = stateful_zscore(
+            _day_cents_stream(scope, sf_dir), window_days=7, threshold=2.0
         )
-    )
-    digests = stateful_zscore(ev, window_days=7, threshold=2.0)
-    qname = f"stream_zscore_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, digests, qname, "update", final_wm_batch=False)
-    final = (
-        spark.table(qname)
-        .groupBy("key")
-        .agg(
-            F.max(
-                F.struct("n_obs", "n_days", "n_anomalies", "max_abs_z")
-            ).alias("s")
+        return scope.collect(
+            digests,
+            "update",
+            lambda sink: _final_state_per_key(
+                sink, "n_obs", "n_days", "n_anomalies", "max_abs_z"
+            ),
         )
-        .select(
-            F.col("key").alias("event_type"),
-            F.col("s.n_obs").alias("n_obs"),
-            F.col("s.n_days").alias("n_days"),
-            F.col("s.n_anomalies").alias("n_anomalies"),
-            F.col("s.max_abs_z").alias("max_abs_z"),
-        )
-        .orderBy("event_type")
-    )
-    rows = final.collect()
-    schema = final.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
 
 
 def q_streaming_psi_buckets(spark, sf_dir):
@@ -1906,42 +1717,25 @@ def q_streaming_psi_buckets(spark, sf_dir):
     equals the batch GROUP BY over the SAME pure-arithmetic bucket
     expression (``operators.stats.value_bucket``) — the oracle.  State
     is (window x n_buckets) counters bounded by the watermark."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, windowed_value_buckets
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        windowed_value_buckets,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_psi_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "event_ts", F.col("ts").cast("timestamp")
-    )
-    out = windowed_value_buckets(
-        ev, "event_ts", "value", lo=0.0, hi=500.0, n_buckets=10,
-        window="1 day", watermark="1 hour",
-    )
-    qname = f"stream_psi_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, out, qname, "complete", final_wm_batch=False)
-    out_df = spark.table(qname).select(
-        F.col("win.start").cast("date").alias("day"),
-        "bucket",
-        F.col("n").cast("bigint").alias("n"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).withColumn(
+            "event_ts", F.col("ts").cast("timestamp")
+        )
+        out = windowed_value_buckets(
+            ev, "event_ts", "value", lo=0.0, hi=500.0, n_buckets=10,
+            window="1 day", watermark="1 hour",
+        )
+        return scope.collect(
+            out,
+            "complete",
+            lambda sink: sink.select(
+                F.col("win.start").cast("date").alias("day"),
+                "bucket",
+                F.col("n").cast("bigint").alias("n"),
+            ),
+        )
 
 
 def q_embedding_norm_stats(spark, sf_dir):
@@ -2766,76 +2560,58 @@ def q_streaming_bootstrap(spark, sf_dir):
     batch bootstrap of the same rows exactly; the drained sink is then
     digested with the batch rank rule — hash-equal to the SQL oracle."""
     import math
-    import os
-    import tempfile
-    import uuid
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        streaming_bootstrap_sums,
-    )
+    from datajudge_spark.streaming import StreamScope, streaming_bootstrap_sums
 
     n_reps = 32
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_boot_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).where(F.col("value").isNotNull())
-    cents = _cents("value")
-    sums = streaming_bootstrap_sums(
-        ev.select(F.col("event_id"), cents.alias("cents")),
-        "event_id",
-        "cents",
-        n_reps=n_reps,
-    )
-    qname = f"stream_boot_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, sums, qname, "complete", final_wm_batch=False)
-    state = spark.table(qname)
-    # batch post-processing of the drained 32-row state: identical rank
-    # rule as operators.resample.bootstrap_mean_ci
-    from pyspark.sql import Window as W
 
-    m = state.select(
-        "cnt",
-        "s",
-        F.col("rep"),
-        F.when(
-            F.col("n") > 0,
-            F.round(F.col("sw").cast("double") / F.col("n").cast("double"), 6),
-        ).alias("m"),
-    )
-    rn = F.row_number().over(
-        W.orderBy(F.col("m").asc_nulls_last(), "rep")
-    )
-    lo_idx = math.ceil(2.5 / 100.0 * n_reps)
-    med_idx = math.ceil(0.5 * n_reps)
-    hi_idx = math.ceil(97.5 / 100.0 * n_reps)
-    ranked = m.select("cnt", "s", "m", rn.alias("rn"))
-    out_df = ranked.groupBy("cnt", "s").agg(
-        F.max(F.when(F.col("rn") == lo_idx, F.col("m"))).alias("boot_lo"),
-        F.max(F.when(F.col("rn") == med_idx, F.col("m"))).alias(
-            "boot_median"
-        ),
-        F.max(F.when(F.col("rn") == hi_idx, F.col("m"))).alias("boot_hi"),
-    ).select(
-        F.col("cnt").cast("bigint").alias("n_rows"),
-        F.lit(n_reps).cast("int").alias("n_reps"),
-        F.round(
-            F.col("s").cast("double") / F.col("cnt").cast("double"), 6
-        ).alias("point_mean"),
-        "boot_lo",
-        "boot_median",
-        "boot_hi",
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    def digest(state):
+        # batch post-processing of the drained 32-row state: identical
+        # rank rule as operators.resample.bootstrap_mean_ci
+        m = state.select(
+            "cnt",
+            "s",
+            F.col("rep"),
+            F.when(
+                F.col("n") > 0,
+                F.round(
+                    F.col("sw").cast("double") / F.col("n").cast("double"), 6
+                ),
+            ).alias("m"),
+        )
+        rn = F.row_number().over(
+            Window.orderBy(F.col("m").asc_nulls_last(), "rep")
+        )
+        lo_idx = math.ceil(2.5 / 100.0 * n_reps)
+        med_idx = math.ceil(0.5 * n_reps)
+        hi_idx = math.ceil(97.5 / 100.0 * n_reps)
+        ranked = m.select("cnt", "s", "m", rn.alias("rn"))
+        return ranked.groupBy("cnt", "s").agg(
+            F.max(F.when(F.col("rn") == lo_idx, F.col("m"))).alias("boot_lo"),
+            F.max(F.when(F.col("rn") == med_idx, F.col("m"))).alias(
+                "boot_median"
+            ),
+            F.max(F.when(F.col("rn") == hi_idx, F.col("m"))).alias("boot_hi"),
+        ).select(
+            F.col("cnt").cast("bigint").alias("n_rows"),
+            F.lit(n_reps).cast("int").alias("n_reps"),
+            F.round(
+                F.col("s").cast("double") / F.col("cnt").cast("double"), 6
+            ).alias("point_mean"),
+            "boot_lo",
+            "boot_median",
+            "boot_hi",
+        )
+
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir).where(F.col("value").isNotNull())
+        sums = streaming_bootstrap_sums(
+            ev.select(F.col("event_id"), _cents("value").alias("cents")),
+            "event_id",
+            "cents",
+            n_reps=n_reps,
+        )
+        return scope.collect(sums, "complete", digest)
 
 
 def q_streaming_gumbel(spark, sf_dir):
@@ -2845,41 +2621,22 @@ def q_streaming_gumbel(spark, sf_dir):
     maxima equal the batch block maxima exactly, so the Gumbel fit of
     the drained state hash-equals the batch EVT digest of the same
     rows — capacity planning that stays current per micro-batch."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.operators.timeseries import gumbel_fit_from_maxima
+    from datajudge_spark.streaming import StreamScope, streaming_block_maxima
 
-    from datajudge_spark.operators.timeseries import (
-        gumbel_fit_from_maxima,
-    )
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        streaming_block_maxima,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_gumbel_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
-    cents = _cents("value")
-    maxima = streaming_block_maxima(
-        ev.select(F.col("ts"), cents.alias("cents")), "ts", "cents",
-        block="month",
-    )
-    qname = f"stream_gumbel_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, maxima, qname, "complete", final_wm_batch=False)
-    state = spark.table(qname)
-    out_df = gumbel_fit_from_maxima(state, "m", (12, 60))
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir)
+        maxima = streaming_block_maxima(
+            ev.select(F.col("ts"), _cents("value").alias("cents")),
+            "ts",
+            "cents",
+            block="month",
+        )
+        return scope.collect(
+            maxima,
+            "complete",
+            lambda state: gumbel_fit_from_maxima(state, "m", (12, 60)),
+        )
 
 
 def q_streaming_grouped_gumbel(spark, sf_dir):
@@ -2889,46 +2646,27 @@ def q_streaming_grouped_gumbel(spark, sf_dir):
     equals the batch per-source block maxima exactly (MAX associative),
     and the per-group Gumbel fit of the drained state hash-equals the
     batch digest."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.operators.timeseries import gumbel_fit_from_maxima
+    from datajudge_spark.streaming import StreamScope, streaming_block_maxima
 
-    from datajudge_spark.operators.timeseries import (
-        gumbel_fit_from_maxima,
-    )
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        streaming_block_maxima,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_ggum_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
-    cents = _cents("value")
-    maxima = streaming_block_maxima(
-        ev.select(F.col("ts"), F.col("event_type"), cents.alias("cents")),
-        "ts",
-        "cents",
-        block="day",
-        group_col="event_type",
-    )
-    qname = f"stream_ggum_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, maxima, qname, "complete", final_wm_batch=False)
-    state = spark.table(qname)
-    out_df = gumbel_fit_from_maxima(
-        state, "m", (30,), group_cols=["event_type"]
-    ).orderBy("event_type")
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    with StreamScope(spark, watermark_flush=False) as scope:
+        ev = _event_stream(scope, sf_dir)
+        maxima = streaming_block_maxima(
+            ev.select(
+                F.col("ts"), F.col("event_type"), _cents("value").alias("cents")
+            ),
+            "ts",
+            "cents",
+            block="day",
+            group_col="event_type",
+        )
+        return scope.collect(
+            maxima,
+            "complete",
+            lambda state: gumbel_fit_from_maxima(
+                state, "m", (30,), group_cols=["event_type"]
+            ).orderBy("event_type"),
+        )
 
 
 def q_gumbel_return_level(spark, sf_dir):
@@ -3432,25 +3170,30 @@ def q_streaming_interval_join(spark, sf_dir):
     once, so the drained sink equals the batch range join — the oracle.
     Join state at scale is bounded by watermark + range bound, never by
     stream length."""
-    import os
-    import tempfile
-    import uuid
+    from datajudge_spark.streaming import StreamScope, interval_join_streams
 
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        interval_join_streams,
-        stream_parquet_like,
-    )
+    with StreamScope(spark, watermark_flush=False) as scope:
+        joined = interval_join_streams(
+            *_purchase_click_streams(scope, sf_dir),
+            "p_ts",
+            "c_ts",
+            watermark_delay="1 hour",
+        )
+        return scope.collect(
+            joined,
+            "append",
+            lambda sink: sink.agg(
+                F.count(F.lit(1)).alias("n_matched"),
+                F.sum("click_id").cast("bigint").alias("sum_click_id"),
+                F.sum("purchase_id").cast("bigint").alias("sum_purchase_id"),
+            ),
+        )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_ivj_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
+
+def _purchase_click_streams(scope, sf_dir: str):
+    """(purchases, clicks, on) of the interval-join contracts: each
+    purchase pairs with the same user's clicks in the following 2 h."""
+    ev = _event_stream(scope, sf_dir).withColumn(
         "event_ts", F.col("ts").cast("timestamp")
     )
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -3463,27 +3206,12 @@ def q_streaming_interval_join(spark, sf_dir):
         F.col("user_id").alias("c_user"),
         F.col("event_ts").alias("c_ts"),
     )
-    cond = (
+    on = (
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("p_ts"))
         & (F.col("c_ts") < F.col("p_ts") + F.expr("INTERVAL 2 HOURS"))
     )
-    joined = interval_join_streams(
-        purchases, clicks, cond, "p_ts", "c_ts", watermark_delay="1 hour"
-    )
-    qname = f"stream_ivj_{uuid.uuid4().hex[:8]}"
-    # see q_streaming_windowed_counts: 8 state stores, not 32
-    _drain_memory(spark, joined, qname, "append", final_wm_batch=False)
-    # 1-row digest, then drop the sink (append mode pins matched ROWS)
-    out_df = spark.table(qname).agg(
-        F.count(F.lit(1)).alias("n_matched"),
-        F.sum("click_id").cast("bigint").alias("sum_click_id"),
-        F.sum("purchase_id").cast("bigint").alias("sum_purchase_id"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    return purchases, clicks, on
 
 
 def q_streaming_left_join(spark, sf_dir):
@@ -3495,60 +3223,32 @@ def q_streaming_left_join(spark, sf_dir):
     ``p_ts + 2h < min(max(p_ts), max(c_ts)) - 1h``.  The final drained
     set depends only on the data (watermark is monotone), so the batch
     oracle reproduces it exactly with that inequality."""
-    import os
-    import tempfile
-    import uuid
-
-    from datajudge_spark.sources import normalize_event_time
     from datajudge_spark.streaming import (
+        StreamScope,
         interval_left_join_streams,
-        stream_parquet_like,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_loj_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw).withColumn(
-        "event_ts", F.col("ts").cast("timestamp")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("event_ts").alias("p_ts"),
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("event_ts").alias("c_ts"),
-    )
-    cond = (
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts"))
-        & (F.col("c_ts") < F.col("p_ts") + F.expr("INTERVAL 2 HOURS"))
-    )
-    joined = interval_left_join_streams(
-        purchases, clicks, cond, "p_ts", "c_ts", watermark_delay="1 hour"
-    )
-    qname = f"stream_loj_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, joined, qname, "append")
-    out_df = spark.table(qname).agg(
-        F.count(F.lit(1)).alias("n_emitted"),
-        F.count("click_id").alias("n_matched"),
-        F.sum(F.when(F.col("click_id").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_unmatched"),
-        F.sum("purchase_id").cast("bigint").alias("sum_purchase_id"),
-        F.sum("click_id").cast("bigint").alias("sum_click_id"),
-    )
-    rows = out_df.collect()
-    schema = out_df.schema
-    spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    # keeps the watermark-flush batch: null-padding waits on it
+    with StreamScope(spark) as scope:
+        joined = interval_left_join_streams(
+            *_purchase_click_streams(scope, sf_dir),
+            "p_ts",
+            "c_ts",
+            watermark_delay="1 hour",
+        )
+        return scope.collect(
+            joined,
+            "append",
+            lambda sink: sink.agg(
+                F.count(F.lit(1)).alias("n_emitted"),
+                F.count("click_id").alias("n_matched"),
+                F.sum(F.when(F.col("click_id").isNull(), 1).otherwise(0))
+                .cast("bigint")
+                .alias("n_unmatched"),
+                F.sum("purchase_id").cast("bigint").alias("sum_purchase_id"),
+                F.sum("click_id").cast("bigint").alias("sum_click_id"),
+            ),
+        )
 
 
 def q_winsorized_mean(spark, sf_dir):
@@ -5252,118 +4952,83 @@ def q_streaming_late_data(spark, sf_dir):
     dropped — the two guarantees a 100 TB streaming ingest needs from
     event-time processing."""
     import os
-    import tempfile
-
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import windowed_counts
 
     from datajudge_spark.pipeline._util import materialize_once
+    from datajudge_spark.sources import normalize_event_time
+    from datajudge_spark.streaming import StreamScope, windowed_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # persisted: the bounds probe + three staged slice writes all read
-    # the normalized frame — one parquet scan instead of four
-    ev_all = materialize_once(
-        normalize_event_time(batch_like).withColumn(
-            "event_ts", F.col("ts").cast("timestamp")
+    # keeps the watermark-flush batch: the watermark recovered from the
+    # shared checkpoint feeds the NEXT drain's late-row filter
+    with StreamScope(spark) as scope:
+        # persisted for the scope: the bounds probe + the staged slice
+        # write both read the normalized frame — one parquet scan, not two
+        ev_all = materialize_once(
+            normalize_event_time(
+                scope.session.read.parquet(f"{sf_dir}/events.parquet")
+            ).withColumn("event_ts", F.col("ts").cast("timestamp"))
         )
-    )
-    bounds = ev_all.agg(
-        F.max(F.col("event_ts").cast("date")).alias("mx")
-    ).first()
-    max_day = bounds["mx"]
-    # deterministic slices by event day (D = max_day):
-    #   file 1: day <= D-3, EXCEPT a held-back slice of day D-3
-    #           (event_id % 5 == 0)
-    #   file 2: days D-2..D  +  the held-back D-3 slice (late, within
-    #           the 3-day watermark)
-    #   file 3: re-send of ALL day D-6 rows (beyond watermark -> must
-    #           be dropped, else that day double-counts)
-    day = F.col("event_ts").cast("date")
-    d3 = F.date_sub(F.lit(max_day), 3)
-    d6 = F.date_sub(F.lit(max_day), 6)
-    held = (day == d3) & (F.col("event_id") % 5 == 0)
-    # scratch fs: the staged slices + shared checkpoint are ephemera of
-    # this invocation (removed below); the three drains still recompute
-    # everything from the events parquet
-    base_dir = tempfile.mkdtemp(
-        prefix="djs_stream_late_", dir=_stream_scratch()
-    )
-    stream_dir = os.path.join(base_dir, "in")
-    ckpt_dir = os.path.join(base_dir, "ckpt")
-    os.makedirs(stream_dir)
-    # all three arrival slices staged in ONE write job (the slices
-    # overlap — file 3 re-sends day D-6 rows already in file 1 — so a
-    # row carries an ARRAY of slice labels and explodes; repartition by
-    # slice gives one file per slice directory).  Slice membership is
-    # identical to the previous three filtered writes; within-file row
-    # order is irrelevant (the drains aggregate counts).
-    lab = F.array(
-        F.when((day <= d3) & ~held, F.lit(0)),
-        F.when((day > d3) | held, F.lit(1)),
-        F.when(day == d6, F.lit(2)),
-    )
-    gen = os.path.join(base_dir, "gen")
-    (
-        ev_all.withColumn(
-            "__slice",
-            F.explode(F.filter(lab, lambda x: x.isNotNull())),
+        scope.callback(ev_all.unpersist)
+        max_day = ev_all.agg(
+            F.max(F.col("event_ts").cast("date")).alias("mx")
+        ).first()["mx"]
+        # deterministic slices by event day (D = max_day):
+        #   file 1: day <= D-3, EXCEPT a held-back slice of day D-3
+        #           (event_id % 5 == 0)
+        #   file 2: days D-2..D  +  the held-back D-3 slice (late, within
+        #           the 3-day watermark)
+        #   file 3: re-send of ALL day D-6 rows (beyond watermark -> must
+        #           be dropped, else that day double-counts)
+        day = F.col("event_ts").cast("date")
+        d3 = F.date_sub(F.lit(max_day), 3)
+        d6 = F.date_sub(F.lit(max_day), 6)
+        held = (day == d3) & (F.col("event_id") % 5 == 0)
+        # all three arrival slices written in ONE job (the slices overlap
+        # — file 3 re-sends day D-6 rows already in file 1 — so a row
+        # carries an ARRAY of slice labels and explodes; repartition by
+        # slice gives one file per slice directory).  Within-file row
+        # order is irrelevant (the drains aggregate counts).
+        lab = F.array(
+            F.when((day <= d3) & ~held, F.lit(0)),
+            F.when((day > d3) | held, F.lit(1)),
+            F.when(day == d6, F.lit(2)),
         )
-        .repartition(3, "__slice")
-        .write.partitionBy("__slice")
-        .mode("overwrite")
-        .parquet(gen)
-    )
-    staged = []
-    for i in range(3):
-        sub = os.path.join(gen, f"__slice={i}")
-        src = next(
-            f for f in os.listdir(sub) if f.endswith(".parquet")
+        gen = os.path.join(scope.dir, "gen")
+        (
+            ev_all.withColumn(
+                "__slice",
+                F.explode(F.filter(lab, lambda x: x.isNotNull())),
+            )
+            .repartition(3, "__slice")
+            .write.partitionBy("__slice")
+            .parquet(gen)
         )
-        staged.append((os.path.join(sub, src),
-                       os.path.join(stream_dir, f"batch-{i}.parquet")))
-    written = spark.read.parquet(staged[0][0])
-    # one checkpointed availableNow drain per arriving file; the
-    # foreachBatch sink collects every update-mode emission (tiny:
-    # only keys whose count changed in that batch).  State — including
-    # the watermark — recovers from the checkpoint between drains.
-    emitted = []
+        # one checkpointed availableNow drain per arriving file; the
+        # foreachBatch sink collects every update-mode emission (tiny:
+        # only keys whose count changed in that batch).  State —
+        # including the watermark — recovers from the checkpoint
+        # between drains.
+        emitted = []
 
-    def _sink(batch_df, _bid):
-        emitted.extend(
-            batch_df.select(
-                F.col("window_start").cast("date").alias("day"),
-                "event_type",
-                "n_rows",
-            ).collect()
-        )
+        def _sink(batch_df, _bid):
+            emitted.extend(
+                batch_df.select(
+                    F.col("window_start").cast("date").alias("day"),
+                    "event_type",
+                    "n_rows",
+                ).collect()
+            )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for src, dst in staged:
-            os.rename(src, dst)
-            ev = spark.readStream.schema(written.schema).parquet(stream_dir)
+        for i in range(3):
+            sub = os.path.join(gen, f"__slice={i}")
+            part = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
             out = windowed_counts(
-                ev,
+                scope.stream(os.path.join(sub, part)),
                 "event_ts",
                 window_duration="1 day",
                 watermark_delay="3 days",
                 group_cols=["event_type"],
             )
-            query = (
-                out.writeStream.foreachBatch(_sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        import shutil
-
-        shutil.rmtree(base_dir, ignore_errors=True)
+            scope.drain(out, "update", _sink)
     # update mode re-emits a key each time its count grows; the final
     # value per key is the max across all drains.
     final: dict = {}
@@ -5384,33 +5049,19 @@ def q_streaming_ab_ztest(spark, sf_dir):
     the drained row feeds the IDENTICAL z expression tree the batch
     operator uses (operators.stats.ztest_from_counts) — hash-equal to
     the SQL oracle."""
-    import os
-    import tempfile
-    import uuid
-
     from datajudge_spark.operators.stats import ztest_from_counts
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        streaming_ab_counts,
-    )
+    from datajudge_spark.streaming import StreamScope, streaming_ab_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_ab_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
-    day = F.dayofmonth(F.col("ts").cast("timestamp"))
-    counts = streaming_ab_counts(
-        ev, day <= 15, day >= 16, F.col("event_type") == "purchase"
-    )
-    qname = f"stream_ab_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, counts, qname, "complete", final_wm_batch=False)
-    return ztest_from_counts(spark.table(qname))
+    with StreamScope(spark, watermark_flush=False) as scope:
+        day = F.dayofmonth(F.col("ts").cast("timestamp"))
+        counts = streaming_ab_counts(
+            _event_stream(scope, sf_dir),
+            day <= 15,
+            day >= 16,
+            F.col("event_type") == "purchase",
+        )
+        state = scope.collect(counts, "complete")
+    return ztest_from_counts(state)
 
 
 def q_grouped_psi(spark, sf_dir):
@@ -5707,38 +5358,23 @@ def q_streaming_srm(spark, sf_dir):
     # state frame equals the batch GROUP BY exactly; feeding it through
     # the IDENTICAL chi-square fold (srm_from_counts) hash-matches the
     # batch sample_ratio_mismatch digest.  State is O(|variants|).
-    import os
-    import tempfile
-    import uuid
-
     from datajudge_spark.operators.stats import srm_from_counts
-    from datajudge_spark.sources import normalize_event_time
     from datajudge_spark.streaming import (
-        stream_parquet_like,
+        StreamScope,
         streaming_assignment_counts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_srm_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
     m = F.col("user_id") % 10
     variant = (
         F.when(m < 5, F.lit("a")).when(m < 8, F.lit("b")).otherwise(F.lit("c"))
     )
-    counts = streaming_assignment_counts(
-        ev.select(variant.alias("variant")), "variant"
-    )
-    qname = f"stream_srm_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, counts, qname, "complete", final_wm_batch=False)
-    return srm_from_counts(
-        spark.table(qname), {"a": 0.5, "b": 0.3, "c": 0.2}
-    )
+    with StreamScope(spark, watermark_flush=False) as scope:
+        counts = streaming_assignment_counts(
+            _event_stream(scope, sf_dir).select(variant.alias("variant")),
+            "variant",
+        )
+        state = scope.collect(counts, "complete")
+    return srm_from_counts(state, {"a": 0.5, "b": 0.3, "c": 0.2})
 
 
 def q_did_ab(spark, sf_dir):
@@ -5968,39 +5604,25 @@ def q_streaming_cmh(spark, sf_dir):
     # conditional GROUP BY exactly; feeding it through the IDENTICAL
     # fold (cmh_from_counts) hash-matches the batch cmh_test digest.
     # State is O(|strata|).
-    import os
-    import tempfile
-    import uuid
-
     from datajudge_spark.operators.stats import cmh_from_counts
-    from datajudge_spark.sources import normalize_event_time
     from datajudge_spark.streaming import (
-        stream_parquet_like,
+        StreamScope,
         streaming_stratum_2x2_counts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_cmh_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
-    counts = streaming_stratum_2x2_counts(
-        ev.select(
-            F.dayofweek(F.col("ts").cast("timestamp")).alias("dow"),
-            "user_id",
-            "event_type",
-        ),
-        "dow",
-        F.col("user_id") % 2 == 0,
-        F.col("event_type") == "purchase",
-    )
-    qname = f"stream_cmh_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, counts, qname, "complete", final_wm_batch=False)
-    return cmh_from_counts(spark.table(qname))
+    with StreamScope(spark, watermark_flush=False) as scope:
+        counts = streaming_stratum_2x2_counts(
+            _event_stream(scope, sf_dir).select(
+                F.dayofweek(F.col("ts").cast("timestamp")).alias("dow"),
+                "user_id",
+                "event_type",
+            ),
+            "dow",
+            F.col("user_id") % 2 == 0,
+            F.col("event_type") == "purchase",
+        )
+        state = scope.collect(counts, "complete")
+    return cmh_from_counts(state)
 
 
 def q_chao1_richness(spark, sf_dir):
@@ -6234,37 +5856,19 @@ def q_streaming_obf_monitor(spark, sf_dir):
     uses (operators.stats.obf_sequential_ztest) — hash-equal to the SQL
     oracle.  The critical value enters both engines as the same
     driver-computed literal (norm_ppf)."""
-    import os
-    import tempfile
-    import uuid
-
     from datajudge_spark.operators.stats import obf_sequential_ztest
-    from datajudge_spark.sources import normalize_event_time
-    from datajudge_spark.streaming import (
-        stream_parquet_like,
-        streaming_look_counts,
-    )
+    from datajudge_spark.streaming import StreamScope, streaming_look_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_like = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream_dir = tempfile.mkdtemp(prefix="djs_stream_obf_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stream_dir, "part-0.parquet"),
-    )
-    raw = stream_parquet_like(spark, stream_dir, batch_like)
-    ev = normalize_event_time(raw)
-    day = F.dayofmonth(F.col("ts").cast("timestamp"))
-    looks = streaming_look_counts(
-        ev,
-        day,
-        F.col("user_id") % 2 == 0,
-        F.col("user_id") % 2 == 1,
-        F.col("event_type") == "purchase",
-    )
-    qname = f"stream_obf_{uuid.uuid4().hex[:8]}"
-    _drain_memory(spark, looks, qname, "complete", final_wm_batch=False)
-    return obf_sequential_ztest(spark.table(qname)).orderBy("look")
+    with StreamScope(spark, watermark_flush=False) as scope:
+        looks = streaming_look_counts(
+            _event_stream(scope, sf_dir),
+            F.dayofmonth(F.col("ts").cast("timestamp")),
+            F.col("user_id") % 2 == 0,
+            F.col("user_id") % 2 == 1,
+            F.col("event_type") == "purchase",
+        )
+        state = scope.collect(looks, "complete")
+    return obf_sequential_ztest(state).orderBy("look")
 
 
 _R12_WINDOW = [

@@ -22,10 +22,21 @@ Scale notes: ``foreachBatch`` validation inherits the batch engine's
 plans (partial aggregation, pushdown into the micro-batch scan);
 windowed aggs shuffle on (window, keys) with watermark-bounded state —
 both are the standard 1000-executor-safe constructions.
+
+Every availableNow drain — the monitor's and the contract queries' —
+runs through :class:`StreamScope`, which owns the staging dir, the
+checkpoint, the sinks and the session confs of the drain and removes
+them all when the scope exits.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 from typing import TYPE_CHECKING, Any
 
@@ -33,11 +44,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
     from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
     from datajudge_spark.requirements import Requirement
 
 __all__ = [
+    "StreamScope",
     "StreamingConstraintMonitor",
     "windowed_counts",
     "windowed_null_fraction",
@@ -60,6 +73,172 @@ def stream_parquet_like(spark, path: str, like_batch: DataFrame) -> DataFrame:
     existing batch DataFrame (streams require a declared schema, and the
     file-stream source requires a directory, not a single file)."""
     return spark.readStream.schema(like_batch.schema).parquet(path)
+
+
+def _scratch_base() -> str:
+    """Base dir for drain scratch (staged inputs, checkpoints).  These
+    are ephemera of one scope — every drain recomputes from its inputs
+    and the scope removes its dir on exit — so a memory-backed fs is the
+    right home for their fsync-heavy tiny files (offsets/commits WAL +
+    state-store deltas).  Override with ``SPARK_GRAFT_STREAM_SCRATCH``;
+    production streams that must survive a restart set a durable
+    checkpoint of their own instead."""
+    base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
+    if base:
+        return base
+    return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+
+
+def _confs(spark: "SparkSession") -> dict[str, str]:
+    """``spark.conf.getAll`` as one JSON string: the dict conversion of
+    ``getAll`` costs two py4j round trips per entry (~11 ms a session)."""
+    jvm = spark.sparkContext._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    return json.loads(
+        mapper.writeValueAsString(spark._jsparkSession.conf().getAllAsJava())
+    )
+
+
+class StreamScope(contextlib.ExitStack):
+    """Scope of availableNow drains that leaves nothing behind.
+
+    On exit it removes, in reverse order of creation, everything it made:
+    the queries (stopped), the memory-sink views, the scratch dir (staged
+    inputs + the scope's one checkpoint) and whatever the caller
+    registered with :meth:`callback` (e.g. ``frame.unpersist``).
+
+    Streams from :meth:`stream` are built in a child session
+    (``spark.newSession()``) that copies the caller's runtime SQL confs
+    and then sets, on itself only:
+
+    - ``state_stores`` shuffle partitions — the stream's state-store
+      count.  Each HDFS-backed store has a fixed init/commit floor, so
+      4-8 beats defaultParallelism for small state; on a cluster size it
+      to the executor count.
+    - ``watermark_flush=False`` skips the trailing no-data micro-batch
+      (``noDataMicroBatches.enabled``).  ONLY safe when the sink content
+      cannot depend on a post-data watermark advance: complete-mode aggs
+      re-emit the whole table every batch, inner stream-stream joins and
+      dropDuplicates emit eagerly, update-mode stateful ops with
+      NoTimeout emit only on data.  Left-outer joins (null-padding waits
+      on the watermark) and multi-drain checkpoints (the recovered
+      watermark feeds the NEXT drain's late-row filter) MUST keep it.
+    - ``nanosAsLong``, so parquet TIMESTAMP(NANOS) inputs read as
+      epoch-nanos BIGINT (see ``sources.normalize_event_time``).
+
+    The caller's session is never written.  A frame built in another
+    session (e.g. a user's stream given to
+    :meth:`StreamingConstraintMonitor.run_available`) drains under that
+    session's confs, with the scope's checkpoint.
+
+    All drains of one scope share its checkpoint: several drains of one
+    stream resume from each other's offsets and state; two different
+    streams need two scopes.
+    """
+
+    def __init__(
+        self,
+        spark: "SparkSession",
+        state_stores: int = 4,
+        watermark_flush: bool = True,
+    ) -> None:
+        super().__init__()
+        self._spark = spark
+        self._state_stores = state_stores
+        self._watermark_flush = watermark_flush
+        self._session: "SparkSession | None" = None
+        self._like: DataFrame | None = None
+        self.dir = ""
+
+    def __enter__(self) -> "StreamScope":
+        super().__enter__()
+        self.dir = tempfile.mkdtemp(prefix="djs_stream_", dir=_scratch_base())
+        self.callback(shutil.rmtree, self.dir, ignore_errors=True)
+        return self
+
+    @property
+    def session(self) -> "SparkSession":
+        """The child session the scope's streams are built in."""
+        if self._session is None:
+            child = self._spark.newSession()
+            inherited = _confs(child)
+            for key, value in _confs(self._spark).items():
+                if inherited.get(key) != value:
+                    child.conf.set(key, value)
+            child.conf.set(
+                "spark.sql.shuffle.partitions", str(self._state_stores)
+            )
+            child.conf.set(
+                "spark.sql.streaming.noDataMicroBatches.enabled",
+                str(self._watermark_flush).lower(),
+            )
+            child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            self._session = child
+        return self._session
+
+    def stream(self, path: str) -> DataFrame:
+        """Stage the parquet file ``path`` (symlinked into the scope's
+        input dir) and return a file stream over every file staged so
+        far, with the schema of the first."""
+        input_dir = os.path.join(self.dir, "input")
+        os.makedirs(input_dir, exist_ok=True)
+        n = len(os.listdir(input_dir))
+        os.symlink(
+            os.path.abspath(path),
+            os.path.join(input_dir, f"part-{n}.parquet"),
+        )
+        if self._like is None:
+            self._like = self.session.read.parquet(path)
+        return stream_parquet_like(self.session, input_dir, self._like)
+
+    def drain(
+        self,
+        out: DataFrame,
+        mode: str,
+        foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    ) -> "StreamingQuery":
+        """Run ``out`` with ``trigger(availableNow=True)`` until it has
+        processed everything available, into ``foreach_batch`` or, when
+        none is given, a memory sink named ``query.name`` (a temp view
+        in ``out``'s session until the scope exits)."""
+        writer = out.writeStream.outputMode(mode).option(
+            "checkpointLocation", os.path.join(self.dir, "checkpoint")
+        )
+        if foreach_batch is None:
+            name = f"djs_sink_{uuid.uuid4().hex[:8]}"
+            writer = writer.format("memory").queryName(name)
+            self.callback(out.sparkSession.catalog.dropTempView, name)
+        else:
+            writer = writer.foreachBatch(foreach_batch)
+        query = writer.trigger(availableNow=True).start()
+        self.callback(query.stop)
+        query.awaitTermination()
+        return query
+
+    def collect(
+        self,
+        out: DataFrame,
+        mode: str,
+        digest: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> DataFrame:
+        """Drain ``out`` into a memory sink and return ``digest(sink)``
+        (the sink itself when no digest is given) as a frame of collected
+        rows in the caller's session, independent of the sink and of the
+        child session.
+
+        The rows go JVM to JVM into a local relation: a Python-side
+        ``createDataFrame`` would ship them back as a pickled RDD, one
+        more job on every action over the result."""
+        query = self.drain(out, mode)
+        sink = out.sparkSession.table(query.name)
+        result = digest(sink) if digest else sink
+        rows = result._jdf.collectAsList()
+        return DataFrame(
+            self._spark._jsparkSession.createDataFrame(
+                rows, result._jdf.schema()
+            ),
+            self._spark,
+        )
 
 
 class StreamingConstraintMonitor:
@@ -94,10 +273,10 @@ class StreamingConstraintMonitor:
 
     def run_available(self, stream_df: DataFrame) -> "StreamingQuery":
         """Process everything currently available, then stop (the batch-
-        like trigger used for backfills and tests)."""
-        query = self.writer(stream_df).trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
+        like trigger used for backfills and tests).  The checkpoint lives
+        in a :class:`StreamScope` and is removed on return."""
+        with StreamScope(stream_df.sparkSession) as scope:
+            return scope.drain(stream_df, "append", self._process_batch)
 
     @property
     def all_passed(self) -> bool:

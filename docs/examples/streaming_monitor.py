@@ -13,7 +13,6 @@ Run:  PYTHONPATH=/root/repo python docs/examples/streaming_monitor.py
 """
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -21,30 +20,27 @@ from datajudge_spark import WithinRequirement, get_spark
 from datajudge_spark.sources import normalize_event_time
 from datajudge_spark.streaming import (
     StreamingConstraintMonitor,
+    StreamScope,
     psi_between_histograms,
-    stream_parquet_like,
     windowed_counts,
     windowed_value_buckets,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+EVENTS = f"{SF_DIR}/events.parquet"
 N_BUCKETS = 10
+
+
+def events_stream(scope: StreamScope):
+    """The events parquet staged as a file stream of ``scope`` (file
+    streams need a directory; the scope links the file into its own)."""
+    return normalize_event_time(scope.stream(EVENTS)).withColumn(
+        "event_ts", F.col("ts").cast("timestamp")
+    )
 
 
 def main() -> None:
     spark = get_spark("streaming-monitor")
-    batch = normalize_event_time(
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-    ).withColumn("event_ts", F.col("ts").cast("timestamp"))
-
-    # file-stream sources need a directory; link the events parquet in
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(f"{SF_DIR}/events.parquet", f"{stream_dir}/part-0.parquet")
-    stream = normalize_event_time(
-        stream_parquet_like(
-            spark, stream_dir, spark.read.parquet(f"{SF_DIR}/events.parquet")
-        )
-    ).withColumn("event_ts", F.col("ts").cast("timestamp"))
 
     # 1. run a requirement against every micro-batch
     def factory(batch_df):
@@ -55,46 +51,46 @@ def main() -> None:
         return req
 
     monitor = StreamingConstraintMonitor(factory)
-    monitor.run_available(stream)
+    with StreamScope(spark) as scope:
+        monitor.run_available(events_stream(scope))
     n_checks = sum(len(rs) for _, rs in monitor.results)
     print(f"micro-batch constraints: {n_checks} checks, "
           f"all_passed={monitor.all_passed}")
 
-    # 2. windowed row counts per event type
-    out = windowed_counts(
-        stream, "event_ts", window_duration="6 hours",
-        watermark_delay="1 hour", group_cols=["event_type"],
-    )
-    q = (
-        out.writeStream.format("memory").queryName("wc")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    n_win = spark.sql("SELECT count(*) c FROM wc").first().c
+    # 2. windowed row counts per event type.  Each drain gets its own
+    # scope: the scope owns the checkpoint, the memory sink and the
+    # staged input, and removes them on exit; collect() hands back the
+    # drained rows as an ordinary DataFrame.
+    with StreamScope(spark) as scope:
+        out = windowed_counts(
+            events_stream(scope), "event_ts", window_duration="6 hours",
+            watermark_delay="1 hour", group_cols=["event_type"],
+        )
+        n_win = scope.collect(out, "append").count()
     print(f"windowed counts emitted: {n_win} (window x type) rows")
 
     # 3. drift gate: windowed histograms vs the full-corpus reference
-    buckets = windowed_value_buckets(
-        stream, "event_ts", "value", lo=0.0, hi=500.0,
-        n_buckets=N_BUCKETS, window="6 hours", watermark="1 hour",
-    )
-    q2 = (
-        buckets.writeStream.format("memory").queryName("wb")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q2.awaitTermination()
     from datajudge_spark.operators.stats import value_bucket
 
-    reference = {
-        r.b: r.n
-        for r in batch.where(F.col("value").isNotNull())
-        .groupBy(value_bucket("value", 0.0, 500.0, N_BUCKETS).alias("b"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    windows = spark.sql(
-        "SELECT win.start AS ws, bucket, n FROM wb"
-    ).collect()
+    with StreamScope(spark) as scope:
+        buckets = windowed_value_buckets(
+            events_stream(scope), "event_ts", "value", lo=0.0, hi=500.0,
+            n_buckets=N_BUCKETS, window="6 hours", watermark="1 hour",
+        )
+        windows = scope.collect(
+            buckets,
+            "append",
+            lambda sink: sink.select(F.col("win.start").alias("ws"),
+                                     "bucket", "n"),
+        ).collect()
+        batch = normalize_event_time(scope.session.read.parquet(EVENTS))
+        reference = {
+            r.b: r.n
+            for r in batch.where(F.col("value").isNotNull())
+            .groupBy(value_bucket("value", 0.0, 500.0, N_BUCKETS).alias("b"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
     per_window: dict = {}
     for r in windows:
         per_window.setdefault(r.ws, {})[r.bucket] = r.n
@@ -111,19 +107,16 @@ def main() -> None:
     from datajudge_spark.operators.stats import obf_sequential_ztest
     from datajudge_spark.streaming import streaming_look_counts
 
-    looks = streaming_look_counts(
-        stream,
-        F.dayofmonth("event_ts"),
-        F.col("user_id") % 2 == 0,
-        F.col("user_id") % 2 == 1,
-        F.col("event_type") == "purchase",
-    )
-    q3 = (
-        looks.writeStream.format("memory").queryName("obf")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q3.awaitTermination()
-    grid = obf_sequential_ztest(spark.table("obf")).orderBy("look")
+    with StreamScope(spark) as scope:
+        looks = streaming_look_counts(
+            events_stream(scope),
+            F.dayofmonth("event_ts"),
+            F.col("user_id") % 2 == 0,
+            F.col("user_id") % 2 == 1,
+            F.col("event_type") == "purchase",
+        )
+        state = scope.collect(looks, "complete")
+    grid = obf_sequential_ztest(state).orderBy("look")
     for r in grid.collect():
         flag = "CROSSED" if r.crossed else "ok"
         zs = "None" if r.z is None else f"{r.z:+.3f}"

@@ -8,6 +8,7 @@ Fixture data mirrors the reference's handcrafted integration corpus
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import SparkSession
@@ -30,6 +31,20 @@ def spark():
         .getOrCreate()
     )
     yield session
+
+
+@pytest.fixture(scope="session", autouse=True)
+def stream_scratch(tmp_path_factory):
+    """Streaming scratch of the whole run goes to one pytest tmp dir
+    (never ``/dev/shm``); anything left in it at the end fails the run."""
+    base = tmp_path_factory.mktemp("stream_scratch")
+    patch = pytest.MonkeyPatch()
+    patch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(base))
+    yield base
+    patch.undo()
+    left = sorted(os.listdir(base))
+    if left:
+        pytest.fail(f"streaming scratch left behind in {base}: {left}")
 
 
 # reference conftest fixture names kept; helper builders below.
