@@ -4967,7 +4967,6 @@ def q_streaming_late_data(spark, sf_dir):
                 scope.session.read.parquet(f"{sf_dir}/events.parquet")
             ).withColumn("event_ts", F.col("ts").cast("timestamp"))
         )
-        scope.callback(ev_all.unpersist)
         max_day = ev_all.agg(
             F.max(F.col("event_ts").cast("date")).alias("mx")
         ).first()["mx"]

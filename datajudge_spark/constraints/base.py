@@ -21,11 +21,16 @@ A constraint whose retrieval is one scalar aggregate declares it
 all such declarations on one source in a single Spark aggregate and
 hands each value to its constraint's retrieval slot
 (``_prefetched``); a lone ``test`` runs the declaration by itself.
+
+Every ``test`` (the base one and each subclass override) runs in its own
+``pipeline._util.cache_scope``: frames a test persists are released when
+it returns, so no verdict is computed from blocks of an earlier run.
 """
 
 from __future__ import annotations
 
 import abc
+import functools
 from collections import OrderedDict
 from collections.abc import Callable, Collection, Sequence
 from dataclasses import dataclass, field
@@ -35,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import operators as ops
 from ..formatter import Formatter
+from ..pipeline._util import cache_scope
 from ..plans import render_plans
 from ..reference import DataReference
 from ..utils import OutputProcessor, output_processor_limit
@@ -77,6 +83,18 @@ class _SlotCache:
         if self._maxsize is not None and len(self._held) > self._maxsize:
             self._held.popitem(last=False)
         return value
+
+
+def _in_cache_scope(test: Callable[..., _T]) -> Callable[..., _T]:
+    """Run ``test`` inside its own ``cache_scope``: whatever the test
+    persists or checkpoints is released when it returns."""
+
+    @functools.wraps(test)
+    def scoped_test(*args, **kwargs):
+        with cache_scope():
+            return test(*args, **kwargs)
+
+    return scoped_test
 
 
 def uncommon_substrings(string1: str, string2: str) -> tuple[str, str]:
@@ -166,6 +184,13 @@ class Constraint(abc.ABC):
     ``SparkSession``; retrievals trigger Spark actions where the
     reference issues SQL round trips.
     """
+
+    def __init_subclass__(cls, **kwargs):
+        # every class's own ``test`` owns a cache scope, so no override
+        # can leak the blocks its statistics pin
+        super().__init_subclass__(**kwargs)
+        if "test" in cls.__dict__:
+            cls.test = _in_cache_scope(cls.__dict__["test"])
 
     def __init__(
         self,
@@ -329,6 +354,7 @@ class Constraint(abc.ABC):
 
     # -- the lifecycle ----------------------------------------------------
 
+    @_in_cache_scope
     def test(self, engine: SparkSession) -> TestResult:
         factual = self._get_factual_value(engine)
         target = self._get_target_value(engine)

@@ -83,10 +83,11 @@ def _excess_tallies(
     """Per-value frequencies of factual values outside the reference
     set (a missing tally renders as -1, mirroring the reference's
     zip_longest fill)."""
+    allowed = set(want)
     return {
         value: tally
         for value, tally in zip_longest(have, tallies, fillvalue=-1)
-        if value not in want
+        if value not in allowed
     }
 
 

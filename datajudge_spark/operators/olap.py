@@ -489,55 +489,6 @@ def zorder_key(
     return reduce(lambda a, b: a.bitwiseOR(b), terms)
 
 
-def zorder_layout(
-    df: DataFrame,
-    cols: Sequence[str],
-    num_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Re-cluster a DataFrame along the Z-order curve of ``cols`` so a
-    subsequent parquet write produces files/row groups with tight
-    min/max ranges on EVERY listed column — multi-dimensional data
-    skipping, where a plain sort only skips on its leading column.
-
-    Each dimension is first min/max-scaled onto the full ``bits``-bit
-    range (one stats pass). Without this, dimensions with different
-    domain sizes interleave badly: the wider column's surplus high bits
-    sit alone at the top of the key and the curve degenerates into a
-    plain sort on that column (Delta's OPTIMIZE ZORDER normalizes the
-    same way, via range-partition ids).
-
-    Then range-partition by z-key (contiguous curve segments per output
-    partition, one skew-aware sampled shuffle) and sort within
-    partitions (no second shuffle). The helper key is dropped: parquet
-    stats on the data columns themselves are what scans prune with.
-    """
-    top = (1 << bits) - 1
-    stats = df.agg(
-        *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(cols)],
-        *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(cols)],
-    ).first()
-    scaled = []
-    for i, c in enumerate(cols):
-        lo, hi = stats[f"__lo_{i}"], stats[f"__hi_{i}"]
-        if lo is None or hi is None or hi == lo:
-            scaled.append(F.lit(0).cast("bigint"))
-        else:
-            scaled.append(
-                F.floor(
-                    (F.col(c).cast("double") - float(lo))
-                    * (float(top) / (float(hi) - float(lo)))
-                ).cast("bigint")
-            )
-    z = zorder_key(scaled, bits=bits)
-    return (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_partitions, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-
-
 def skyline_2d(
     df: DataFrame,
     x_col: str,

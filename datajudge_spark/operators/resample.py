@@ -30,8 +30,6 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pipeline.text import md5_long
-
 #: Inverse-CDF thresholds for Poisson(mean=1) on a uniform integer in
 #: [0, 1e6): weight = #thresholds strictly below u, capped at MAX_W.
 #: floor(F(k) * 1e6) for k = 0..7; beyond 8 the mass is < 1e-6.
@@ -50,31 +48,11 @@ POISSON_MAX_W = len(POISSON1_THRESHOLDS_PPM)
 _PPM = 1_000_000
 
 
-def poisson1_weight(key, rep: int, salt: str = "boot"):
-    """Deterministic Poisson(1) draw for ``(key, rep)`` as a Column.
-
-    ``u = md5(key#<salt><rep>) mod 1e6`` -> inverse CDF via the
-    threshold ladder.  Exact integer comparisons, identical in any
-    engine that reproduces the md5 fold.
-    """
-    u = md5_long(key, salt=f"{salt}{rep}") % _PPM
-    return _poisson1_from_uniform(u)
-
-
-def _poisson1_from_uniform(u):
-    """CASE ladder mapping a uniform integer in [0, 1e6) to Poisson(1)."""
-    w = F.lit(POISSON_MAX_W)
-    # descending CASE ladder: first threshold u falls under wins
-    for k in range(POISSON_MAX_W - 1, -1, -1):
-        w = F.when(u < POISSON1_THRESHOLDS_PPM[k], k).otherwise(w)
-    return w
-
-
 def _poisson1_sql(u_sql: str) -> str:
-    """The same inverse-CDF ladder as ONE SQL string (ascending WHEN
-    chain = first threshold u falls under wins — identical branch
-    semantics and values; the Column-API ladder cost ~40 py4j
-    round-trips per build)."""
+    """Poisson(1) draw for the uniform integer ``u_sql`` in [0, 1e6):
+    the inverse-CDF ladder as ONE SQL string (ascending WHEN chain =
+    first threshold u falls under wins; a Column-API ladder would cost
+    ~40 py4j round-trips per build)."""
     whens = " ".join(
         f"WHEN {u_sql} < {t} THEN {k}"
         for k, t in enumerate(POISSON1_THRESHOLDS_PPM)

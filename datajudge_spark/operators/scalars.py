@@ -334,8 +334,8 @@ def exact_percentile_df(df, column: str, percentage: float):
     # blocks instead of re-running the upstream derivation / re-reading
     # the source (callers like mad_outliers and theil_sen pay this
     # three-scan pattern twice per call — measured seconds of the
-    # build).  One column persists at ~data/width cost; the cache stays
-    # until ``unpersist`` or ``clearCache`` (GC does not free it).
+    # build).  One column persists at ~data/width cost; the caller's
+    # cache scope releases it (see ``materialize_once``).
     from ..pipeline._util import spread
 
     # spread before persisting: the cache keeps its build partitioning,

@@ -15,7 +15,6 @@ SURVEY §4.2).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -119,10 +118,12 @@ def get_cross_cdf(
     # non-numeric orderable fallback: repartitionByRange (a parallel,
     # sampling-based range sort) + per-partition offsets — the window
     # only ever sees one range partition
-    ranged = (
-        hist.repartitionByRange("v")
-        .withColumn("__dj_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    from ..pipeline._util import materialize_once
+
+    ranged = materialize_once(
+        hist.repartitionByRange("v").withColumn(
+            "__dj_pid", F.spark_partition_id()
+        )
     )
     per_part = sorted(
         ranged.groupBy("__dj_pid")

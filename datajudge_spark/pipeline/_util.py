@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +41,46 @@ def in_literal_list(col_name: str, values) -> Column:
 SPREAD_SIZE_THRESHOLD = 1 << 30  # 1 GiB
 
 
+#: Blocks released by the innermost open :func:`cache_scope`; ``None``
+#: when no scope is open.  A context variable, so each thread (and each
+#: ``foreachBatch`` callback thread) sees only the scopes it opened.
+_OPEN_SCOPE: ContextVar[list[Callable[[], None]] | None] = ContextVar(
+    "djs_cache_scope", default=None
+)
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Own every block that :func:`materialize_once` and
+    :func:`iter_checkpoint` pin while the scope is open.
+
+    On exit the scope releases them in reverse order: persisted frames
+    with ``unpersist()``, local checkpoints by unpersisting the RDD
+    under their ``LogicalRDD``.  Scopes nest; a block belongs to the
+    innermost one.  A frame derived from a released block is still
+    valid after exit, except one over a local checkpoint: those blocks
+    have no lineage, so finish using it inside the scope.
+
+    ``Constraint.test`` (hence ``Requirement.test`` and the pytest
+    integration), ``StreamScope`` and the contract harnesses open one.
+    """
+    held: list[Callable[[], None]] = []
+    token = _OPEN_SCOPE.set(held)
+    try:
+        yield
+    finally:
+        _OPEN_SCOPE.reset(token)
+        for release in reversed(held):
+            release()
+
+
+def _owned(df: DataFrame, release: Callable[[], None]) -> DataFrame:
+    held = _OPEN_SCOPE.get()
+    if held is not None:
+        held.append(release)
+    return df
+
+
 def materialize_once(df: DataFrame) -> DataFrame:
     """Compute ``df`` at most once even when it feeds several plan
     branches (self-joins, size lookups, convergence checks).
@@ -51,27 +95,16 @@ def materialize_once(df: DataFrame) -> DataFrame:
     fault-tolerance is why this is persist and NOT ``localCheckpoint``:
     checkpoint blocks are unreplicated and unrecoverable, acceptable
     only where lineage truncation is mandatory (iterative loops, see
-    ``dedup.duplicate_clusters``).  Nothing frees the blocks when the
-    DataFrame is garbage collected: Spark's ``CacheManager`` holds them
-    until ``unpersist`` or ``spark.catalog.clearCache()``.
+    ``dedup.duplicate_clusters``).
+
+    The innermost open :func:`cache_scope` owns the blocks and releases
+    them on exit, so the next read of the same source sees its current
+    data.  With no scope open the session owns them: Spark's
+    ``CacheManager`` keeps them until ``spark.catalog.clearCache()``,
+    and a later read of the same plan (same path) is served from them.
     """
-    return df.persist(_PERSIST_LEVEL)
-
-
-_PERSIST_LEVEL = StorageLevel.MEMORY_AND_DISK
-
-
-def set_replicated_persist(enabled: bool) -> None:
-    """Hardening knob for unreliable clusters (spot instances, frequent
-    executor loss): when enabled, ``materialize_once`` persists with
-    2x block replication (``MEMORY_AND_DISK_2``) so a cached branch
-    survives a lost executor without recomputation of the (expensive)
-    upstream derivation.  Off by default — replication doubles cache
-    footprint and write cost, the wrong trade on a healthy cluster."""
-    global _PERSIST_LEVEL
-    _PERSIST_LEVEL = (
-        StorageLevel.MEMORY_AND_DISK_2 if enabled else StorageLevel.MEMORY_AND_DISK
-    )
+    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return _owned(cached, cached.unpersist)
 
 
 def iter_checkpoint(df: DataFrame) -> DataFrame:
@@ -85,11 +118,16 @@ def iter_checkpoint(df: DataFrame) -> DataFrame:
     operator's opt-in — and falls back to ``localCheckpoint()``
     (executor-local blocks, unrecoverable but zero-infrastructure)
     otherwise.  Both truncate lineage; only the reliable form tolerates
-    losing an executor mid-loop."""
+    losing an executor mid-loop.  The innermost open
+    :func:`cache_scope` releases local checkpoint blocks on exit."""
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().checkpointDir().isDefined():
         return df.checkpoint()
-    return df.localCheckpoint()
+    out = df.localCheckpoint()
+    return _owned(
+        out,
+        lambda: out._jdf.queryExecution().analyzed().rdd().unpersist(False),
+    )
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

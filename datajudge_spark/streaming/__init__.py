@@ -43,6 +43,8 @@ from typing import TYPE_CHECKING, Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pipeline._util import cache_scope
+
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
     from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -103,9 +105,10 @@ class StreamScope(contextlib.ExitStack):
     """Scope of availableNow drains that leaves nothing behind.
 
     On exit it removes, in reverse order of creation, everything it made:
-    the queries (stopped), the memory-sink views, the scratch dir (staged
-    inputs + the scope's one checkpoint) and whatever the caller
-    registered with :meth:`callback` (e.g. ``frame.unpersist``).
+    the queries (stopped), the memory-sink views, the frames persisted
+    while it was open (it is a ``pipeline._util.cache_scope``), the
+    scratch dir (staged inputs + the scope's one checkpoint) and
+    whatever the caller registered with :meth:`callback`.
 
     Streams from :meth:`stream` are built in a child session
     (``spark.newSession()``) that copies the caller's runtime SQL confs
@@ -154,6 +157,7 @@ class StreamScope(contextlib.ExitStack):
         super().__enter__()
         self.dir = tempfile.mkdtemp(prefix="djs_stream_", dir=_scratch_base())
         self.callback(shutil.rmtree, self.dir, ignore_errors=True)
+        self.enter_context(cache_scope())
         return self
 
     @property

@@ -189,6 +189,27 @@ class TestUniques:
         )
         assert outcomes(req, spark) == [True, False, True]
 
+        # the excess tally hashes the reference values: membership must
+        # match a scan of the list for None, NaN (the same object in
+        # both, and a distinct NaN object, which equals nothing) and
+        # 1.0 vs 1; a missing tally still renders as -1
+        from itertools import zip_longest
+
+        from datajudge_spark.constraints.uniques import _excess_tallies
+
+        nan = float("nan")
+        have = [None, nan, float("nan"), 1.0, 2, "a"]
+        want = [None, nan, 1, "b"]
+        tallies = [3, 4, 5, 6]
+        by_scan = {
+            v: t
+            for v, t in zip_longest(have, tallies, fillvalue=-1)
+            if v not in want
+        }
+        got = _excess_tallies(have, tallies, want)
+        assert got == by_scan
+        assert list(got.items()) == [(have[2], 5), (2, -1), ("a", -1)]
+
     def test_max_uniques_guard(self, spark, unique_table1):
         # cap below the actual cardinality (31 distinct incl. NULL):
         # the collect must fail fast, not flood the driver

@@ -15,6 +15,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from datajudge_spark.pipeline._util import cache_scope  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -55,13 +56,24 @@ def _normalize(rows, columns):
 QUERY_NAMES = sorted(entrymod.queries().keys())
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
     q = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
-    sdf = q(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    resident = _persistent_rdds(spark)
+    with cache_scope():
+        sdf = q(spark, SF_DIR)
+        spark_cols = sdf.columns
+        spark_types = dict(sdf.dtypes)
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    # the query's scope released every block it persisted or checkpointed
+    assert _persistent_rdds(spark) == resident, (
+        f"{name}: persisted RDDs survived the query's cache scope"
+    )
     if sql is None:
         # rows-only check, like the driver's weaker gate
         assert spark_rows is not None
@@ -78,7 +90,6 @@ def test_query_matches_oracle(spark, duck, name):
     # stratum_percentile_trim).  Guard: any decimal-typed oracle column must
     # correspond to a decimal-typed Spark column; otherwise the oracle SQL
     # is missing a CAST.
-    spark_types = dict(sdf.dtypes)
     arrow_schema = duck.execute(sql).arrow().schema
     for field in arrow_schema:
         if str(field.type).startswith("decimal"):

@@ -1156,23 +1156,6 @@ class TestQuantize:
 
 
 class TestHardeningKnobs:
-    def test_replicated_persist_level_switch(self, spark):
-        from pyspark import StorageLevel
-
-        from datajudge_spark.pipeline import _util
-
-        df = spark.range(10)
-        try:
-            _util.set_replicated_persist(True)
-            p = _util.materialize_once(df)
-            assert p.storageLevel == StorageLevel.MEMORY_AND_DISK_2
-            p.unpersist()
-        finally:
-            _util.set_replicated_persist(False)
-        p2 = _util.materialize_once(spark.range(5))
-        assert p2.storageLevel == StorageLevel.MEMORY_AND_DISK
-        p2.unpersist()
-
     def test_iter_checkpoint_reliable_when_dir_set(self, spark, tmp_path):
         from datajudge_spark.pipeline._util import iter_checkpoint
 

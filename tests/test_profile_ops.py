@@ -378,60 +378,6 @@ class TestZOrder:
         with pytest.raises(ValueError):
             zorder_key(["a", "b"], bits=32)  # 64 > 63
 
-    def test_layout_prunes_on_non_leading_dimension(self, spark, tmp_path):
-        # the actual 100 TB payoff: a layout sorted on l_orderkey can
-        # NEVER prune a row group for an l_partkey predicate (every
-        # group spans the whole partkey domain), while z-ordered row
-        # groups have bounded min/max on BOTH dimensions. Measured on
-        # real parquet footer stats, the same stats a scan prunes with.
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from datajudge_spark.operators.olap import zorder_layout
-
-        df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        pk_min, pk_max = df.agg(
-            F.min("l_partkey"), F.max("l_partkey")
-        ).first()
-        # a narrow partkey slice (~3% of the domain)
-        q_lo = pk_min
-        q_hi = pk_min + max((pk_max - pk_min) // 32, 1)
-
-        def groups_touched(path_dir):
-            touched, total = 0, 0
-            for f in glob.glob(f"{path_dir}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                sch = {
-                    md.schema.column(i).name: i
-                    for i in range(md.num_columns)
-                }
-                for rg in range(md.num_row_groups):
-                    s = md.row_group(rg).column(sch["l_partkey"]).statistics
-                    total += 1
-                    if s.min <= q_hi and s.max >= q_lo:
-                        touched += 1
-            return touched, total
-
-        opts = {"parquet.block.size": 16 * 1024}
-        nat = str(tmp_path / "natural")
-        df.orderBy("l_orderkey").coalesce(1).write.options(**opts).parquet(
-            nat
-        )
-        zed = str(tmp_path / "zordered")
-        zorder_layout(df, ["l_orderkey", "l_partkey"], 1).coalesce(
-            1
-        ).write.options(**opts).parquet(zed)
-
-        nat_touched, nat_total = groups_touched(nat)
-        z_touched, z_total = groups_touched(zed)
-        # need several row groups for the comparison to mean anything
-        assert nat_total >= 4 and z_total >= 4, (nat_total, z_total)
-        # orderkey-sorted layout cannot prune partkey predicates at all
-        assert nat_touched == nat_total
-        # the z-ordered layout must prune at least half the groups
-        assert z_touched <= z_total / 2, (z_touched, z_total)
-
 
 class TestApproxTopKCheck:
     def test_exact_mode_containment_and_ranks(self, spark):

@@ -1687,11 +1687,11 @@ class TestBootstrapCI:
     def test_poisson_weights_distribution(self, spark):
         from pyspark.sql import functions as F
 
-        from datajudge_spark.operators.resample import poisson1_weight
+        from datajudge_spark.operators.resample import _PPM, _poisson1_sql
+        from datajudge_spark.pipeline.text import md5_long_sql
 
-        df = spark.range(20000).select(
-            poisson1_weight(F.col("id").cast("string"), 0).alias("w")
-        )
+        u_sql = f"({md5_long_sql('CAST(id AS STRING)', salt='boot0')} % {_PPM})"
+        df = spark.range(20000).select(F.expr(_poisson1_sql(u_sql)).alias("w"))
         agg = df.agg(
             F.avg("w").alias("mean"),
             F.avg(F.when(F.col("w") == 0, 1.0).otherwise(0.0)).alias("p0"),
