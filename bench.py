@@ -24,72 +24,13 @@ sys.path.insert(0, REPO)
 import __spark_entry__ as entrymod  # noqa: E402
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = -1.0
-
-    from datajudge_spark.pipeline._util import cache_scope
-    from datajudge_spark.session import get_spark
-
-    spark = get_spark("datajudge-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up: touch every table once (file listing, footer reads, codegen).
-    for name in ("lineitem", "orders", "customer", "supplier", "nation",
-                 "documents", "embeddings", "events"):
-        entrymod._t(spark, sf_dir, name).count()
-
-    # Warm the Python worker pool + Arrow serializer: the first mapInPandas
-    # on a cold session forks one Python worker per core (~20 s at 32
-    # threads, measured in round 1 as multimodal_meta's 23 s).  Workers are
-    # reused afterwards (spark.python.worker.reuse=true), so one no-op pass
-    # with as many partitions as cores moves that one-time cost out of the
-    # timed section.
-    import pandas as _pd  # noqa: F401
-
-    def _noop(batches):
-        for b in batches:
-            yield b
-
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 8, 1, n_part).mapInPandas(
-        _noop, "id long"
-    ).count()
-
-    # Warm whole-stage-codegen families (agg / join / window) on tiny
-    # inputs so the first timed query of each family is not charged for
-    # first-compile of the generated classes.
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    small = spark.range(0, 1000, 1, 4).withColumn("k", _F.col("id") % 7)
-    small.groupBy("k").agg(_F.sum("id"), _F.count("*")).collect()
-    small.join(small.select(_F.col("id").alias("id2")),
-               _F.col("id") == _F.col("id2")).count()
-    small.withColumn(
-        "rn", _F.row_number().over(_W.partitionBy("k").orderBy("id"))
-    ).count()
-
-    # Pure-Python calibration scalar: a fixed CPU-bound loop timed on
-    # this box (min of 3).  Cross-round BENCH artifacts divide by this
-    # to make uniform environment drift self-evident instead of needing
-    # a forensic adjudication each round (VERDICT r9 #3).  ~0.4 s/run.
-    def _calibrate() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            acc = 0
-            for i in range(10_000_000):
-                acc += i * i
-            best = min(best, time.perf_counter() - t0)
-        assert acc != 0
-        return round(best, 4)
-
-    calib_s = _calibrate()
+def warm_pool(spark) -> None:
+    """Warm the Python worker pool + Arrow serializer: the first
+    mapInPandas on a cold session forks one Python worker per core (~20 s
+    at 32 threads, measured in round 1 as multimodal_meta's 23 s).
+    Workers are reused afterwards (spark.python.worker.reuse=true), so
+    one no-op pass with as many partitions as cores moves that one-time
+    cost out of a timed section."""
 
     def _noop_import(batches):
         # the refork charge is fork + MODULE IMPORTS: a worker that has
@@ -108,10 +49,67 @@ def main() -> None:
         for b in batches:
             yield b
 
-    def _warm_python_pool() -> None:
-        spark.range(0, n_part * 8, 1, n_part).mapInPandas(
-            _noop_import, "id long"
-        ).count()
+    n_part = spark.sparkContext.defaultParallelism
+    spark.range(0, n_part * 8, 1, n_part).mapInPandas(
+        _noop_import, "id long"
+    ).count()
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Move one-time session costs out of the timed queries: file
+    listing and footer reads of every table, the Python worker pool, and
+    first-compile of the generated classes."""
+    for name in ("lineitem", "orders", "customer", "supplier", "nation",
+                 "documents", "embeddings", "events"):
+        entrymod._t(spark, sf_dir, name).count()
+    warm_pool(spark)
+
+    # Warm whole-stage-codegen families (agg / join / window) on tiny
+    # inputs so the first timed query of each family is not charged for
+    # first-compile of the generated classes.
+    from pyspark.sql import Window as _W
+    from pyspark.sql import functions as _F
+
+    small = spark.range(0, 1000, 1, 4).withColumn("k", _F.col("id") % 7)
+    small.groupBy("k").agg(_F.sum("id"), _F.count("*")).collect()
+    small.join(small.select(_F.col("id").alias("id2")),
+               _F.col("id") == _F.col("id2")).count()
+    small.withColumn(
+        "rn", _F.row_number().over(_W.partitionBy("k").orderBy("id"))
+    ).count()
+
+
+def calibrate() -> float:
+    """Pure-Python calibration scalar: a fixed CPU-bound loop timed on
+    this box (min of 3).  Cross-round BENCH artifacts divide by this to
+    make uniform environment drift self-evident instead of needing a
+    forensic adjudication each round (VERDICT r9 #3).  ~0.4 s/run."""
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        acc = 0
+        for i in range(10_000_000):
+            acc += i * i
+        best = min(best, time.perf_counter() - t0)
+    assert acc != 0
+    return round(best, 4)
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        sf = -1.0
+
+    from datajudge_spark.pipeline._util import cache_scope
+    from datajudge_spark.session import get_spark
+
+    spark = get_spark("datajudge-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm(spark, sf_dir)
+    calib_s = calibrate()
 
     qs = entrymod.queries()
     timings: dict[str, float] = {name: float("inf") for name in qs}
@@ -120,7 +118,7 @@ def main() -> None:
         # can be reaped between passes, and min-of-N doesn't help if the
         # one-time refork lands on the first mapInPandas query of each
         # pass (r9's multimodal_audio_windows 3.8x artifact).
-        _warm_python_pool()
+        warm_pool(spark)
         for name, fn in qs.items():
             # A pass-start warm is NOT enough: workers are reaped
             # MID-pass too (~200 JVM-only queries idle the pool), and
@@ -130,7 +128,7 @@ def main() -> None:
             # immediately before each Python-worker query so the timed
             # section measures the operator, not worker forking.
             if name.startswith("multimodal"):
-                _warm_python_pool()
+                warm_pool(spark)
             # release (untimed) what the query cached: no pass reads
             # blocks cached by an earlier one
             with cache_scope():

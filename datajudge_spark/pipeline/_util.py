@@ -102,7 +102,12 @@ def materialize_once(df: DataFrame) -> DataFrame:
     data.  With no scope open the session owns them: Spark's
     ``CacheManager`` keeps them until ``spark.catalog.clearCache()``,
     and a later read of the same plan (same path) is served from them.
+    A plan already cached when this is called (by an enclosing scope,
+    the session or the caller's own ``cache()``) stays with its owner:
+    the scope does not release it.
     """
+    if df._jdf.storageLevel().isValid():
+        return df
     cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     return _owned(cached, cached.unpersist)
 

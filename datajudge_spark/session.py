@@ -49,10 +49,7 @@ def get_spark(
         # stays capped at defaultParallelism, and at cluster scale byte
         # counts dominate the floor, so this only affects the small-
         # frame regime it targets.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Keep AQE out of cached-plan output partitioning (the Spark
         # default).  Tried true (AQE coalesces the near-empty 32-way
         # partitioning of persisted frames): it helped single-pass
@@ -60,11 +57,9 @@ def get_spark(
         # which re-read a 150k-600k-row cached histogram 3-4 times per
         # query — a coalesced 1-partition cache runs each pass on one
         # core (wasserstein 0.9 s -> 2.7 s, kruskal 1.2 -> 2.6
-        # measured).  Env-overridable for workloads whose caches are
-        # read once.
+        # measured).
         .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_PLAN_REPARTITION", "false"),
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false"
         )
         # Write small-R shuffles through the sort path (one output file
         # per map task) instead of the bypass-merge path (R files per
@@ -72,12 +67,8 @@ def get_spark(
         # (DiskBlockObjectWriter.initialize) across the digest suite.
         # Production-consistent: bypass never applies past R = 200, so
         # forcing the sort/serialized writer makes small-R behavior
-        # match large-cluster behavior; env-overridable for clusters
-        # whose disks prefer the bypass path.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"),
-        )
+        # match large-cluster behavior.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4's DataFrame-debugging wrapper captures the Python
@@ -89,12 +80,8 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # tolerate parquet TIMESTAMP(NANOS) columns (read as long nanos)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Off for bench/driver runs (the UI server costs startup time and
-        # memory); profiling tools opt in via env to read /api/v1 timings.
-        .config(
-            "spark.ui.enabled",
-            os.environ.get("SPARK_GRAFT_UI_ENABLED", "false"),
-        )
+        # Off: the UI server costs startup time and memory.
+        .config("spark.ui.enabled", "false")
         # The generated-class cache defaults to 100 entries; a suite of 60+
         # distinct query shapes evicts every entry per pass, so each pass
         # re-pays janino compilation (measured 5.5 s on the KS query alone).

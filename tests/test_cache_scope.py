@@ -118,6 +118,22 @@ def test_scopes_do_not_cross_threads():
     assert released == ["scoped"]
 
 
+def test_scope_keeps_blocks_cached_before_it(spark):
+    # the caller's own cache of a plan the scope also pins stays cached:
+    # a scope releases only what it pinned
+    def frame():
+        return _tagged(spark.range(100), "cached-before-scope")
+
+    mine = frame().cache()
+    try:
+        mine.count()
+        with cache_scope():
+            _util.materialize_once(frame()).count()
+        assert mine.storageLevel.useMemory
+    finally:
+        mine.unpersist()
+
+
 def _percentile(spark, tag):
     req = WithinRequirement.from_dataframe(
         _tagged(spark.range(100).select(F.col("id").cast("double").alias("v")), tag),

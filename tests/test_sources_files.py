@@ -9,6 +9,7 @@ from pyspark.sql import Row
 from datajudge_spark.sources.files import (
     CsvDataSource,
     JsonDataSource,
+    OrcDataSource,
     write_bucketed_table,
     write_parquet,
 )
@@ -32,9 +33,13 @@ def test_csv_roundtrip(spark, sample, tmp_path):
 
 
 def test_json_roundtrip(spark, sample, tmp_path):
-    path = str(tmp_path / "json")
-    sample.write.json(path)
-    assert JsonDataSource(path).get_df(spark).count() == 30
+    for source, fmt in ((JsonDataSource, "json"), (OrcDataSource, "orc")):
+        path = str(tmp_path / fmt)
+        sample.write.format(fmt).save(path)
+        df = source(path).get_df(spark)
+        assert df.count() == 30, fmt
+        assert set(df.columns) == {"k", "v", "s"}, fmt
+        assert str(source(path)) == fmt
 
 
 def test_write_parquet_partition_pruning(spark, sample, tmp_path):
