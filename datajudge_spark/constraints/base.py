@@ -25,6 +25,8 @@ hands each value to its constraint's retrieval slot
 Every ``test`` (the base one and each subclass override) runs in its own
 ``pipeline._util.cache_scope``: frames a test persists are released when
 it returns, so no verdict is computed from blocks of an earlier run.
+The outermost scope (``Requirement.test`` opens one around all its
+members) also resolves each data source once.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import operators as ops
 from ..formatter import Formatter
-from ..pipeline._util import cache_scope
+from ..pipeline._util import cache_scope, resolve_source
 from ..plans import render_plans
 from ..reference import DataReference
 from ..utils import OutputProcessor, output_processor_limit
@@ -344,7 +346,9 @@ class Constraint(abc.ABC):
         agg = self._scalar_agg(ref)
         if agg is None:
             raise NotImplementedError()
-        (fetched,) = ops.run_scalar_aggs(ref.data_source.get_df(engine), [agg])
+        (fetched,) = ops.run_scalar_aggs(
+            resolve_source(engine, ref.data_source), [agg]
+        )
         return fetched
 
     def _compare(

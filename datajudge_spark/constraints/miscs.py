@@ -124,8 +124,7 @@ class Uniqueness(Constraint):
                     Uniqueness will be tested for all columns."""
                 )
 
-        uniques, _ = ops.get_unique_count(engine, self._ref)
-        rows, _ = ops.get_row_count(engine, self._ref)
+        (uniques, rows), _ = ops.get_unique_and_row_count(engine, self._ref)
         if rows == 0:
             return TestResult(True, "No occurrences.")
         if self._enough_uniques(uniques, rows):

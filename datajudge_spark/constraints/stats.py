@@ -7,6 +7,7 @@ import math
 from pyspark.sql import SparkSession
 
 from .. import operators as ops
+from ..operators.stats import ks_2sample_distributed
 from ..reference import DataReference
 from .base import Constraint, TestResult
 
@@ -145,9 +146,15 @@ class KolmogorovSmirnov2Sample(Constraint):
     def _calculate_statistic(
         engine: SparkSession, ref1: DataReference, ref2: DataReference
     ) -> tuple[float, float | None, int, int]:
-        d_statistic, _ = ops.get_ks_2sample(engine, ref1, ref2)
-        n_samples, _ = ops.get_row_count(engine, ref1)
-        m_samples, _ = ops.get_row_count(engine, ref2)
+        # the sample sizes (row counts, NULLs included) come from the
+        # statistic's own totals probe: no separate count scans, and no
+        # cross-CDF plan surface, which this check never renders
+        d_statistic, n_samples, m_samples = ks_2sample_distributed(
+            ref1.get_selection(engine),
+            ref2.get_selection(engine),
+            ref1.get_column(engine),
+            ref2.get_column(engine),
+        )
         p_value = KolmogorovSmirnov2Sample.approximate_p_value(
             d_statistic, n_samples, m_samples
         )

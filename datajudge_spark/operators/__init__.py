@@ -57,6 +57,7 @@ from .schema import (
 from .stats import get_cross_cdf, get_ks_2sample
 from .uniques import (
     DEFAULT_MAX_UNIQUES,
+    get_unique_and_row_count,
     get_unique_count,
     get_unique_count_union,
     get_uniques,
@@ -94,6 +95,7 @@ __all__ = [
     "get_row_difference_count",
     "get_row_difference_sample",
     "get_row_mismatch",
+    "get_unique_and_row_count",
     "get_unique_count",
     "get_unique_count_union",
     "get_uniques",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline._util import resolve_source
 from ..reference import DataReference
 
 _Plans = list[DataFrame]
@@ -168,7 +169,7 @@ def get_column_array_agg(
     column_names = ref.get_columns(spark)
     if not column_names:
         raise ValueError("There must be a column to group by")
-    selection = ref.data_source.get_df(spark)
+    selection = resolve_source(spark, ref.data_source)
     if ref.condition is not None:
         selection = selection.where(ref.condition.to_column())
     grouped = selection.groupBy(*column_names).agg(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..condition import Condition, merge_conditions
+from ..pipeline._util import resolve_source
 from ..reference import DataReference
 
 _Plans = list[DataFrame]
@@ -175,7 +176,7 @@ def run_scalar_aggs(
 
 
 def _run_alone(spark: SparkSession, agg: ScalarAgg) -> tuple[object, _Plans]:
-    df = agg.ref.data_source.get_df(spark)
+    df = resolve_source(spark, agg.ref.data_source)
     ((value, plans),) = run_scalar_aggs(df, [agg])
     return value, plans()
 

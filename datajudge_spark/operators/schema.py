@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..pipeline._util import resolve_source
 from ..reference import DataReference
 
 # name -> [pk columns]; keyed by str(data_source).
@@ -47,7 +48,7 @@ def get_column_names(
     spark: SparkSession, ref: DataReference
 ) -> tuple[list[str], None]:
     """All columns of the underlying data source (reference db_access.py:989-993)."""
-    return ref.data_source.get_df(spark).columns, None
+    return resolve_source(spark, ref.data_source).columns, None
 
 
 def get_column_type(

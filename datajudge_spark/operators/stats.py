@@ -15,6 +15,8 @@ SURVEY §4.2).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -160,28 +162,44 @@ def get_cross_cdf(
 
 def get_ks_2sample(
     spark: SparkSession, ref1: DataReference, ref2: DataReference
-) -> tuple[float, _Plans]:
+) -> tuple[float, Callable[[], _Plans]]:
     """Two-sample Kolmogorov-Smirnov test statistic
     d = max |cdf1 - cdf2| (reference db_access.py:1283-1315).
 
-    Computed via :func:`ks_d_statistic_distributed` — value-identical to
+    Computed via :func:`ks_2sample_distributed` — value-identical to
     the cross-CDF construction (verified in tests), but with no stage
     whose size depends on |distinct values| landing in one partition.
+    The plan surface for failure reporting is the cross-CDF selection;
+    building it runs the cross-CDF probe jobs, so it is returned as a
+    thunk and built only when a message renders it.
     """
-    df1, df2 = ref1.get_selection(spark), ref2.get_selection(spark)
-    d = ks_d_statistic_distributed(
-        df1, df2, ref1.get_column(spark), ref2.get_column(spark)
+    d, _, _ = ks_2sample_distributed(
+        ref1.get_selection(spark),
+        ref2.get_selection(spark),
+        ref1.get_column(spark),
+        ref2.get_column(spark),
     )
-    # plan surface for failure reporting: the cross-CDF selection
-    filled, c1, c2 = get_cross_cdf(spark, ref1, ref2)
-    agg_df = filled.select(F.max(F.abs(F.col(c1) - F.col(c2))).alias("d"))
-    return d, [agg_df]
+
+    def plans() -> _Plans:
+        filled, c1, c2 = get_cross_cdf(spark, ref1, ref2)
+        return [filled.select(F.max(F.abs(F.col(c1) - F.col(c2))).alias("d"))]
+
+    return d, plans
 
 
 def ks_d_statistic_distributed(
     df1: DataFrame, df2: DataFrame, col1: str, col2: str
 ) -> float:
-    """Exact two-sample KS d-statistic with NO global-window stage.
+    """The d-statistic of :func:`ks_2sample_distributed`."""
+    return ks_2sample_distributed(df1, df2, col1, col2)[0]
+
+
+def ks_2sample_distributed(
+    df1: DataFrame, df2: DataFrame, col1: str, col2: str
+) -> tuple[float, int, int]:
+    """Exact two-sample KS d-statistic with NO global-window stage, and
+    the row count of each sample, NULLs included (the sample sizes the
+    KS p-value and acceptance threshold take).
 
     The histogram-based construction above bounds the ordered window by
     |distinct values| — fine for discrete domains, but on a continuous
@@ -189,13 +207,15 @@ def ks_d_statistic_distributed(
     single-partition sort (SURVEY §4.4). This variant stays parallel at
     any cardinality:
 
-    1. ONE map-side aggregate scan computes side totals N1, N2 AND
-       approximate range boundaries (a ``percentile_approx`` sketch over
-       the union) — boundary accuracy only affects bucket *balance*,
-       never the result;
-    2. union both samples with a side tag, aggregated to
+    1. union both samples with a side tag, aggregated to
        (value, n1, n2) per distinct value — one shuffle, map-side agg;
-    3. each distinct value is assigned the range bucket
+       NULL values form one group of their own;
+    2. ONE aggregate over that histogram computes each side's row count
+       (all groups), its non-NULL total N1, N2, AND approximate range
+       boundaries (a ``percentile_approx`` sketch over the distinct
+       values) — boundary accuracy only affects bucket *balance*,
+       never the result;
+    3. each non-NULL distinct value is assigned the range bucket
        ``#boundaries <= value`` (a pure column expression — no
        ``repartitionByRange`` sampling job, which would re-scan and
        re-aggregate the whole union a third time);
@@ -218,10 +238,10 @@ def ks_d_statistic_distributed(
     """
     tagged = df1.select(
         F.col(col1).alias("val"), F.lit(1).alias("n1"), F.lit(0).alias("n2")
-    ).where(F.col("val").isNotNull()).unionAll(
+    ).unionAll(
         df2.select(
             F.col(col2).alias("val"), F.lit(0).alias("n1"), F.lit(1).alias("n2")
-        ).where(F.col("val").isNotNull())
+        )
     )
     dtype = dict(tagged.dtypes)["val"]
     numeric = dtype in (
@@ -242,7 +262,13 @@ def ks_d_statistic_distributed(
             F.sum("n1").alias("n1"), F.sum("n2").alias("n2")
         )
     )
-    aggs = [F.sum("n1").alias("t1"), F.sum("n2").alias("t2")]
+    present = F.col("val").isNotNull()
+    aggs = [
+        F.sum("n1").alias("r1"),
+        F.sum("n2").alias("r2"),
+        F.sum(F.when(present, F.col("n1"))).alias("t1"),
+        F.sum(F.when(present, F.col("n2"))).alias("t2"),
+    ]
     if numeric and fracs:
         aggs.append(
             F.percentile_approx(
@@ -261,6 +287,7 @@ def ks_d_statistic_distributed(
             if b is not None and b not in seen:
                 seen.add(b)
                 bounds.append(b)
+    values = hist.where(present)
     if bounds:
         # range bucket = number of boundaries <= value; boundaries are
         # sorted, so bucket ids enumerate the ranges in value order.
@@ -272,9 +299,9 @@ def ks_d_statistic_distributed(
                 lambda acc, b: acc
                 + F.when(F.col("val") >= b, F.lit(1)).otherwise(F.lit(0)),
             )
-        ranged = hist.withColumn("pid", bucket)
+        ranged = values.withColumn("pid", bucket)
     else:
-        ranged = hist.repartitionByRange("val").withColumn(
+        ranged = values.repartitionByRange("val").withColumn(
             "pid", F.spark_partition_id()
         )
     w = (
@@ -300,7 +327,7 @@ def ks_d_statistic_distributed(
         d = max(d, abs(r.mx + c), abs(r.mn + c))
         acc1 += r.t1
         acc2 += r.t2
-    return float(d)
+    return float(d), int(tot["r1"]), int(tot["r2"])
 
 
 def _sql_str(value) -> str:

@@ -86,6 +86,28 @@ def get_unique_count(
     return distinct.count(), [distinct]
 
 
+def get_unique_and_row_count(
+    spark: SparkSession, ref: DataReference
+) -> tuple[tuple[int, int], _Plans]:
+    """``(distinct tuples, rows)`` of the selection in ONE aggregate:
+    the per-tuple row counts, then their count and sum.  Grouping keeps
+    all-NULL tuples as one group, as ``distinct()`` does."""
+    selection = ref.get_selection(spark)
+    # positional names: any column name (dotted, duplicated) groups
+    keys = [f"__dj_k{i}" for i in range(len(selection.columns))]
+    per_tuple = (
+        selection.toDF(*keys)
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__dj_n"))
+    )
+    counts = per_tuple.agg(
+        F.count(F.lit(1)).alias("uniques"),
+        F.coalesce(F.sum("__dj_n"), F.lit(0)).alias("rows"),
+    )
+    row = counts.first()
+    return (int(row["uniques"]), int(row["rows"])), [counts]
+
+
 def get_unique_count_union(
     spark: SparkSession, ref: DataReference, ref2: DataReference
 ) -> tuple[int, _Plans]:

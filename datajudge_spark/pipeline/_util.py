@@ -5,10 +5,14 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from contextvars import ContextVar
+from typing import TYPE_CHECKING
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from datajudge_spark.sources import DataSource
 
 
 def in_literal_list(col_name: str, values) -> Column:
@@ -49,6 +53,15 @@ _OPEN_SCOPE: ContextVar[list[Callable[[], None]] | None] = ContextVar(
 )
 
 
+#: Sources resolved by :func:`resolve_source` in the outermost open
+#: :func:`cache_scope`, keyed by ``(id(source), id(spark))``; each entry
+#: holds the source and session too, so neither id is reused while the
+#: scope is open.  ``None`` when no scope is open.
+_SOURCE_MEMO: ContextVar[dict[tuple[int, int], tuple] | None] = ContextVar(
+    "djs_source_memo", default=None
+)
+
+
 @contextmanager
 def cache_scope() -> Iterator[None]:
     """Own every block that :func:`materialize_once` and
@@ -61,17 +74,47 @@ def cache_scope() -> Iterator[None]:
     valid after exit, except one over a local checkpoint: those blocks
     have no lineage, so finish using it inside the scope.
 
+    The outermost open scope also holds the frames
+    :func:`resolve_source` resolved, so each source is resolved once per
+    scope and afresh in the next one.
+
     ``Constraint.test`` (hence ``Requirement.test`` and the pytest
     integration), ``StreamScope`` and the contract harnesses open one.
     """
     held: list[Callable[[], None]] = []
     token = _OPEN_SCOPE.set(held)
+    memo_token = (
+        _SOURCE_MEMO.set({}) if _SOURCE_MEMO.get() is None else None
+    )
     try:
         yield
     finally:
         _OPEN_SCOPE.reset(token)
+        if memo_token is not None:
+            _SOURCE_MEMO.reset(memo_token)
         for release in reversed(held):
             release()
+
+
+def resolve_source(spark: SparkSession, source: DataSource) -> DataFrame:
+    """``source.get_df(spark)``, resolved at most once per outermost
+    open :func:`cache_scope`.
+
+    Resolving a parquet source runs a job that reads the file footers;
+    every constraint of a requirement, and both sides of a between
+    constraint over one source object, read the same frame instead.
+    With no scope open the source is resolved on every call.  The frame
+    keeps the schema and file listing of its resolution, so a table
+    rewritten between two tests is read fresh only when no scope is
+    open around both (each ``test`` opens its own).
+    """
+    memo = _SOURCE_MEMO.get()
+    if memo is None:
+        return source.get_df(spark)
+    key = (id(source), id(spark))
+    if key not in memo:
+        memo[key] = (source, spark, source.get_df(spark))
+    return memo[key][2]
 
 
 def _owned(df: DataFrame, release: Callable[[], None]) -> DataFrame:

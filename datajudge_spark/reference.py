@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .condition import Condition, merge_conditions  # noqa: F401  (re-export)
+from .pipeline._util import resolve_source
 from .sources import DataSource
 
 
@@ -39,8 +40,9 @@ class DataReference:
         )
 
     def get_selection(self, spark: SparkSession) -> DataFrame:
-        """Filtered + projected DataFrame (reference db_access.py:140-163)."""
-        return self.select_from(self.data_source.get_df(spark))
+        """Filtered + projected DataFrame (reference db_access.py:140-163);
+        the source is resolved once per open ``cache_scope``."""
+        return self.select_from(resolve_source(spark, self.data_source))
 
     def select_from(self, df: DataFrame) -> DataFrame:
         """This reference's selection of ``df``, a frame its source

@@ -33,6 +33,7 @@ from .constraints import uniques as uniques_constraints
 from .constraints import varchar as varchar_constraints
 from .constraints.base import Constraint, TestResult
 from .operators import get_date_growth_rate, run_scalar_aggs
+from .pipeline._util import cache_scope, resolve_source
 from .reference import DataReference
 from .sources import (
     DataSource,
@@ -70,14 +71,16 @@ class Requirement(MutableSequence[Constraint]):
         return len(self._constraints)
 
     def test(self, engine: SparkSession) -> list[TestResult]:
-        _prefetch_scalars(engine, self._constraints)
-        try:
-            return [constraint.test(engine) for constraint in self]
-        finally:
-            # a check that raised before reading its prefetched value
-            # must not read it in a later test
-            for constraint in self:
-                constraint._prefetched.clear()
+        # one scope around every member: each source is resolved once
+        with cache_scope():
+            _prefetch_scalars(engine, self._constraints)
+            try:
+                return [constraint.test(engine) for constraint in self]
+            finally:
+                # a check that raised before reading its prefetched value
+                # must not read it in a later test
+                for constraint in self:
+                    constraint._prefetched.clear()
 
 
 def _prefetch_scalars(engine: SparkSession, constraints: list[Constraint]) -> None:
@@ -86,11 +89,12 @@ def _prefetch_scalars(engine: SparkSession, constraints: list[Constraint]) -> No
     constraint's retrieval slot.
 
     Declarations group by source object (all refs of a requirement side
-    share it), so ``get_df`` runs once per group.  If a group's combined
-    aggregate fails (a missing column or an unparsable condition in one
-    member), nothing is prefetched for it: each member then runs its own
-    aggregate inside ``test``, and the error is raised by the same
-    constraint, with the same type, as when nothing is shared.
+    share it); the caller's scope resolves each source once.  If a
+    group's combined aggregate fails (a missing column or an unparsable
+    condition in one member), nothing is prefetched for it: each member
+    then runs its own aggregate inside ``test``, and the error is raised
+    by the same constraint, with the same type, as when nothing is
+    shared.
     """
     groups: dict[int, list] = {}
     for constraint in constraints:
@@ -104,7 +108,7 @@ def _prefetch_scalars(engine: SparkSession, constraints: list[Constraint]) -> No
         source = members[0][1].data_source
         try:
             fetched = run_scalar_aggs(
-                source.get_df(engine), [agg for _, _, agg in members]
+                resolve_source(engine, source), [agg for _, _, agg in members]
             )
         except Exception:
             # any error here is one a member raises alone too; leaving

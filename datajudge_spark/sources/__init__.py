@@ -8,7 +8,10 @@ reflection round-trip, and Catalyst sees the full plan for pushdown.
 
 Sources declare the scan; most trigger no job.  A parquet source does:
 ``spark.read.parquet`` runs a job that reads the footers to infer the
-schema, once per ``get_df`` call.
+schema.  The library resolves each source through
+``pipeline._util.resolve_source``, once per test scope (a
+``Requirement.test`` or a lone ``Constraint.test``), so that job runs
+once per source object and test.
 """
 
 from __future__ import annotations

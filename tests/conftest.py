@@ -47,6 +47,22 @@ def stream_scratch(tmp_path_factory):
         pytest.fail(f"streaming scratch left behind in {base}: {left}")
 
 
+def count_jobs(spark, tag: str, fn):
+    """``(fn(), number of Spark jobs fn ran)``.  Jobs are attributed by
+    job tag, which adds to whatever job group or description the code
+    under test sets instead of replacing it."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    # job events reach the status store through the async listener bus
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
 # reference conftest fixture names kept; helper builders below.
 
 def make_source(df, name: str) -> DataSource:

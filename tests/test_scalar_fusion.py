@@ -21,6 +21,8 @@ from pyspark.sql import types as T
 
 from datajudge_spark import BetweenRequirement, Condition, WithinRequirement
 
+from conftest import count_jobs
+
 _EXPR_ID = re.compile(r"#\d+L?")
 
 _SCHEMA = T.StructType(
@@ -231,28 +233,15 @@ def test_analysis_error_raised_by_its_own_constraint(
     assert req[1] in owners
 
 
-def _jobs_of(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_one_parquet_source_runs_at_most_three_jobs(spark, tables):
     conditions = ["k > 3", "k < 25", "x > 10", "s IS NOT NULL"]
     req = _within(tables["t"], conditions)
     del req[2]  # twelve constraints, four distinct conditions
     assert len(req) == 12
-    results, jobs = _jobs_of(spark, "fusion-jobs", lambda: req.test(spark))
+    results, jobs = count_jobs(spark, "fusion-jobs", lambda: req.test(spark))
     assert len(results) == 12
     # one parquet footer job plus the shared aggregate's two stages
     assert 1 <= jobs <= 3
     # re-testing the same requirement reads the per-instance caches
-    _, again = _jobs_of(spark, "fusion-jobs-again", lambda: req.test(spark))
+    _, again = count_jobs(spark, "fusion-jobs-again", lambda: req.test(spark))
     assert again == 0

@@ -1,0 +1,193 @@
+"""Source resolution and per-check work of the non-scalar constraints.
+
+``Requirement.test`` and a lone ``Constraint.test`` resolve each data
+source once (``pipeline._util.resolve_source`` inside their
+``cache_scope``): a parquet source pays its footer job once per test, not
+once per ``get_selection``.  The KS check takes its sample sizes from
+its own statistic and the uniqueness check counts tuples and rows in one
+aggregate.  These tests pin the resolution counts and the Spark jobs per
+check, and that the memo never serves a frame across tests or mixes the
+two sides of a self-comparison.
+"""
+
+from __future__ import annotations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from datajudge_spark import BetweenRequirement, Condition, WithinRequirement
+from datajudge_spark.constraints.stats import KolmogorovSmirnov2Sample
+from datajudge_spark.reference import DataReference
+from datajudge_spark.sources import ParquetDataSource
+
+from conftest import count_jobs
+
+
+class CountingSource(ParquetDataSource):
+    def __init__(self, path: str, name: str | None = None):
+        super().__init__(path, name=name)
+        self.calls = 0
+
+    def get_df(self, spark):
+        self.calls += 1
+        return super().get_df(spark)
+
+
+def _write(path: str, n: int, extra: bool = False) -> None:
+    cols = {
+        "k": pa.array([i // 2 for i in range(n)], pa.int64()),
+        "g": pa.array([i % 3 for i in range(n)], pa.int64()),
+        "v": pa.array(
+            [None if i % 7 == 0 else float((i * 37) % 101) for i in range(n)],
+            pa.float64(),
+        ),
+    }
+    if extra:
+        cols["w"] = pa.array([float(i) for i in range(n)], pa.float64())
+    pq.write_table(pa.table(cols), path)
+
+
+@pytest.fixture(scope="module")
+def table(tmp_path_factory) -> str:
+    path = str(tmp_path_factory.mktemp("memo") / "t.parquet")
+    _write(path, 400)
+    return path
+
+
+def _heavy(src) -> WithinRequirement:
+    req = WithinRequirement(src)
+    req.add_uniqueness_constraint(["k", "g"], max_duplicate_fraction=0.6)
+    req.add_functional_dependency_constraint(["k"], ["g"])
+    req.add_numeric_percentile_constraint(
+        "v", 50, 50.0, max_absolute_deviation=5.0
+    )
+    return req
+
+
+def _ks(src1, src2, cond1="g = 0", cond2="g = 1") -> BetweenRequirement:
+    req = BetweenRequirement(src1, src2)
+    req.add_ks_2sample_constraint(
+        "v",
+        "v",
+        condition1=Condition(raw_string=cond1),
+        condition2=Condition(raw_string=cond2),
+    )
+    return req
+
+
+def test_requirement_resolves_its_source_once(spark, table):
+    src = CountingSource(table)
+    results = _heavy(src).test(spark)
+    assert len(results) == 3
+    assert src.calls == 1
+
+
+def test_ks_resolves_each_source_once(spark, table):
+    src1, src2 = CountingSource(table), CountingSource(table)
+    _ks(src1, src2).test(spark)
+    assert (src1.calls, src2.calls) == (1, 1)
+    alone1, alone2 = CountingSource(table), CountingSource(table)
+    (constraint,) = _ks(alone1, alone2)
+    constraint.test(spark)
+    assert (alone1.calls, alone2.calls) == (1, 1)
+
+
+def test_ks_check_jobs(spark, table):
+    (constraint,) = _ks(ParquetDataSource(table), ParquetDataSource(table))
+    _, jobs = count_jobs(spark, "memo-ks", lambda: constraint.test(spark))
+    # two footer jobs, the histogram and its totals probe, the bucket pass;
+    # no cross-CDF probes and no separate row-count scans
+    assert jobs <= 8, jobs
+
+
+def test_uniqueness_check_jobs(spark, table):
+    req = WithinRequirement(ParquetDataSource(table))
+    req.add_uniqueness_constraint(["k", "g"], max_duplicate_fraction=0.6)
+    (constraint,) = req
+    result, jobs = count_jobs(
+        spark, "memo-uniqueness", lambda: constraint.test(spark)
+    )
+    assert result.outcome
+    # one footer job and one aggregate: its two shuffles and the result
+    assert jobs <= 4, jobs
+
+
+def test_rewritten_table_is_read_fresh(spark, tmp_path):
+    path = str(tmp_path / "snap.parquet")
+    _write(path, 50)
+    first = WithinRequirement.from_parquet(path)
+    first.add_n_rows_equality_constraint(50)
+    assert [r.outcome for r in first.test(spark)] == [True]
+    _write(path, 80, extra=True)
+    second = WithinRequirement.from_parquet(path)
+    second.add_column_existence_constraint(["w"])
+    second.add_n_rows_equality_constraint(80)
+    results = second.test(spark)
+    assert [r.outcome for r in results] == [True, True], [
+        r.failure_message for r in results
+    ]
+
+
+def test_one_source_on_both_sides(spark, table):
+    def build(src1, src2):
+        req = BetweenRequirement(src1, src2)
+        req.add_row_matching_equality_constraint(
+            ["k", "g"], ["k", "g"], ["v"], ["v"], 0.0,
+            condition1=Condition(raw_string="g = 0"),
+        )
+        req.add_row_matching_equality_constraint(
+            ["k"], ["k"], ["g"], ["g"], 0.0,
+        )
+        req.add_ks_2sample_constraint(
+            "v", "v",
+            condition1=Condition(raw_string="g = 0"),
+            condition2=Condition(raw_string="g = 2"),
+        )
+        return req
+
+    same = ParquetDataSource(table)
+    shared = build(same, same).test(spark)
+    apart = build(ParquetDataSource(table), ParquetDataSource(table)).test(spark)
+
+    def seen(results):
+        return [
+            (r.outcome, r.failure_message, r.constraint_description)
+            for r in results
+        ]
+
+    assert [r.outcome for r in shared][:2] == [True, False]
+    assert seen(shared) == seen(apart)
+
+
+def test_ks_with_nulls(spark, tmp_path):
+    # sample 1: 30 rows, 10 NULL; sample 2: 25 rows, 5 NULL
+    path = str(tmp_path / "nulls.parquet")
+    side = [0] * 30 + [1] * 25
+    vals = [None if i % 3 == 0 else float(i % 11) for i in range(30)] + [
+        None if i % 5 == 0 else float(i % 7) + 0.5 for i in range(25)
+    ]
+    pq.write_table(
+        pa.table({"side": pa.array(side, pa.int64()),
+                  "v": pa.array(vals, pa.float64())}),
+        path,
+    )
+    src = ParquetDataSource(path)
+    ref1 = DataReference(src, ["v"], Condition(raw_string="side = 0"))
+    ref2 = DataReference(src, ["v"], Condition(raw_string="side = 1"))
+    d, _, n, m = KolmogorovSmirnov2Sample._calculate_statistic(
+        spark, ref1, ref2
+    )
+    assert (n, m) == (30, 25)
+
+    x = sorted(v for v in vals[:30] if v is not None)
+    y = sorted(v for v in vals[30:] if v is not None)
+    expected = max(
+        abs(sum(a <= t for a in x) / len(x) - sum(b <= t for b in y) / len(y))
+        for t in x + y
+    )
+    assert d == pytest.approx(expected, abs=1e-12)
+    (result,) = _ks(src, src, "side = 0", "side = 1").test(spark)
+    assert result.outcome is KolmogorovSmirnov2Sample.check_acceptance(
+        d, n, m, 0.05
+    )
