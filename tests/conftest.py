@@ -15,12 +15,21 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from datajudge_spark import ExpressionDataSource, WithinRequirement
+from datajudge_spark._py4j_cache import install_py4j_name_cache
 from datajudge_spark.reference import DataReference
 from datajudge_spark.sources import DataSource
 
 
+_WORKER_DAEMON_DIR = os.path.join(os.path.dirname(__file__), "spark_worker")
+
+
 @pytest.fixture(scope="session")
 def spark():
+    # the driver-overhead settings of ``get_spark``, which change no
+    # result: py4j name resolution once per gateway, no Python call-site
+    # capture on every DataFrame/Column call, and a codegen cache that
+    # holds the suite's query shapes instead of recompiling them
+    install_py4j_name_cache()
     session = (
         SparkSession.builder.appName("datajudge-spark-tests")
         .master("local[4]")
@@ -28,6 +37,12 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # Python workers import pyspark from plain directories, not from
+        # the zips Spark puts first on their path (see the module)
+        .config("spark.python.daemon.module", "djs_worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _WORKER_DAEMON_DIR)
         .getOrCreate()
     )
     yield session
