@@ -250,10 +250,18 @@ class NumericPercentile(Constraint):
         self._max_absolute_deviation = max_absolute_deviation
         self._max_relative_deviation = max_relative_deviation
 
+    def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
+        # the (min, max, count) probe can share the requirement's scan
+        # (the numeric percentile reads it); the rest cannot
+        return ops.ScalarAgg("range", ref)
+
     def _retrieve(
         self, engine: SparkSession, ref: DataReference
     ) -> tuple[float, OptionalSelections]:
-        return ops.get_percentile(engine, ref, self.percentage)
+        # the range probe, when the requirement's aggregate computed it
+        prefetched = self._prefetched.pop(id(ref), None)
+        probe = prefetched[0] if prefetched else None
+        return ops.get_percentile(engine, ref, self.percentage, probe)
 
     def _blame(self, got, want, how: str, diff, slack) -> str:
         # the reference's relative branch carries a doubled space after

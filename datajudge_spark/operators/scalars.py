@@ -18,15 +18,20 @@ Scale notes (100 TB design):
   scan, no full shuffle), each restricted to its own condition.  The
   ``get_*`` functions below run one declaration alone.
 - the exact percentile avoids a global row_number window (single-partition
-  hazard, reference db_access.py:821-825): it aggregates to the distinct-value
-  histogram first (one shuffle over |distinct| rows), then takes a cumulative
-  sum over values — identical result, bounded state.
+  hazard, reference db_access.py:821-825): a range probe (min, max, count;
+  a ``range`` ``ScalarAgg``, so a requirement folds it into its shared
+  aggregate), a range-bucket histogram that locates the target bucket, and
+  one global aggregate that picks the j-th sorted value of that bucket —
+  four Spark jobs when the probe is shared, no private shuffle or cache,
+  identical result, state bounded by ``PERCENTILE_REFINE_ROWS``.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 from dataclasses import dataclass
+from fractions import Fraction
 from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -48,7 +53,8 @@ class ScalarAgg:
     Kinds: ``count`` (capped at ``cap`` when one is given),
     ``missing_fraction``, ``fraction_between`` (``lower <= col <=
     upper``), ``min``, ``max``, ``mean``, ``min_length``,
-    ``max_length``.
+    ``max_length``, and ``range``: the ``(min, max, non-null count)``
+    probe of the exact percentile.
     """
 
     kind: str
@@ -76,6 +82,9 @@ _TWO_COUNTS = {
     "fraction_between": ("n_all", "n_filtered"),
 }
 
+# aggregate columns per kind, where more than one
+_WIDTH = {"range": 3, **{kind: 2 for kind in _TWO_COUNTS}}
+
 
 def _named_aggs(agg: ScalarAgg, on=lambda x: x) -> list[tuple[str, Column]]:
     """``agg``'s aggregate columns with the names its own plan gives
@@ -87,6 +96,12 @@ def _named_aggs(agg: ScalarAgg, on=lambda x: x) -> list[tuple[str, Column]]:
     if agg.kind in _ONE_VALUE:
         fn, per_row = _ONE_VALUE[agg.kind]
         return [("value", fn(on(per_row(column))))]
+    if agg.kind == "range":
+        return [
+            ("lo", F.min(on(column))),
+            ("hi", F.max(on(column))),
+            ("total", F.count(on(column))),
+        ]
     if agg.kind == "missing_fraction":
         # reference db_access.py:967-986 uses two counts; one scan here
         hit = column.isNull()
@@ -119,6 +134,8 @@ def _finish(agg: ScalarAgg, values: list) -> object:
     if agg.kind == "fraction_between":
         n_all, n_filtered = values
         return None if n_all == 0 else n_filtered / n_all
+    if agg.kind == "range":
+        return tuple(values)
     return values[0]
 
 
@@ -168,7 +185,7 @@ def run_scalar_aggs(
     row = _fused_frame(df, aggs).collect()[0]
     out, start = [], 0
     for agg in aggs:
-        width = 2 if agg.kind in _TWO_COUNTS else 1
+        width = _WIDTH.get(agg.kind, 1)
         value = _finish(agg, list(row[start:start + width]))
         out.append((value, partial(_own_plan, df, agg)))
         start += width
@@ -234,8 +251,8 @@ def get_missing_fraction(
 PERCENTILE_BUCKETS = 4096
 
 #: Refine the target range-bucket while it still holds more rows than
-#: this — the bound on what the final single-partition cumulative
-#: window is ever asked to sort.
+#: this — the bound on what the final pass is ever asked to sort on
+#: one task.
 PERCENTILE_REFINE_ROWS = 65536
 
 
@@ -290,7 +307,9 @@ def _order_proxy_expr(non_null, column: str, dtype: str):
     return None
 
 
-def exact_percentile_df(df, column: str, percentage: float):
+def exact_percentile_df(
+    df, column: str, percentage: float, range_probe: tuple | None = None
+):
     """Exact percentile as a 1-row DataFrame, computed scale-out.
 
     Semantics (reference db_access.py:812-857): the smallest value v such
@@ -300,26 +319,38 @@ def exact_percentile_df(df, column: str, percentage: float):
 
     A naive construction sorts ALL (distinct) values under one global
     window — a single-partition bottleneck on near-unique columns
-    (SURVEY §4.4). Instead, two fully-parallel passes:
+    (SURVEY §4.4).  Instead, for a numeric column, fully-parallel passes
+    over ``df`` as given (no private shuffle or cache: a caller whose
+    input is expensive persists it, as ``mad_outliers`` and
+    ``theil_sen`` do):
 
-    1. range-bucket histogram: counts per ``PERCENTILE_BUCKETS`` equal
-       ranges (one groupBy; B rows to the driver),
-    2. driver cumsum over B bucket counts locates the target bucket,
-    3. the cumulative window runs only over the *distinct values of the
-       target bucket* (expected |distinct|/B rows; degenerates to the
-       naive plan only if every value lands in one bucket).
+    1. the range probe ``(min, max, non-null count)`` — skipped when the
+       caller passes it as ``range_probe`` (``NumericPercentile`` reads
+       it from its requirement's shared aggregate, a ``range``
+       :class:`ScalarAgg`; other columns ignore it);
+    2. range-bucket histogram: counts per ``PERCENTILE_BUCKETS`` equal
+       ranges (one groupBy; B rows to the driver); a driver cumsum over
+       them locates the target bucket;
+    3. one global aggregate over the target bucket's rows: the j-th of
+       its sorted values, ``j`` computed on the driver.
 
-    The result is identical to the naive construction — the bucketing is
-    a partitioning of the sorted domain, not an approximation.
+    Pass 2 repeats (refinement, see below) while the target bucket holds
+    more than ``PERCENTILE_REFINE_ROWS`` rows, so the list pass 3
+    collects stays bounded.  The result is identical to the naive
+    construction — the bucketing is a partitioning of the sorted domain,
+    not an approximation.  Where the bucket's values cannot be split
+    further as doubles (many duplicates; wide integers or decimals that
+    collapse to one double), pass 3 is the cumulative window over the
+    bucket's distinct values instead, ordered by the true value.
 
     Non-numeric orderable columns (date/timestamp/string) range-bucket
     on a MONOTONE numeric proxy (:func:`_order_proxy_expr` — day number
-    / epoch microseconds / prefix bytes) and then run the exact same
-    two-pass plan; the cumulative window still orders by the TRUE value,
-    restricted to the target bucket, so a near-unique timestamp column
-    no longer degenerates into one global single-partition window.
-    Types with no cheap proxy (binary/boolean) keep the distinct-value
-    histogram fallback (bounded by |distinct values|).
+    / epoch microseconds / prefix bytes) and then run the same bucketed
+    plan; the cumulative window orders by the TRUE value, restricted to
+    the target bucket, so a near-unique timestamp column no longer
+    degenerates into one global single-partition window.  Types with no
+    cheap proxy (binary/boolean) keep the distinct-value histogram
+    fallback (bounded by |distinct values|).
 
     Every "have we reached the percentile" test uses the ONE comparison
     form ``cum * 100 >= percentage * total`` — mixing formulations (e.g.
@@ -327,25 +358,7 @@ def exact_percentile_df(df, column: str, percentage: float):
     percentage`` in another) can disagree by 1 ulp at exact boundaries and
     select off-by-one values.
     """
-    from ..pipeline._util import materialize_once
-
-    # The two driver probes (min/max/total, per-bucket counts) and the
-    # final target-bucket histogram each scan the input: persist the
-    # single-column projection ONCE so passes 2 and 3 read cached
-    # blocks instead of re-running the upstream derivation / re-reading
-    # the source (callers like mad_outliers and theil_sen pay this
-    # three-scan pattern twice per call — measured seconds of the
-    # build).  One column persists at ~data/width cost; the caller's
-    # cache scope releases it (see ``materialize_once``).
-    from ..pipeline._util import spread
-
-    # spread before persisting: the cache keeps its build partitioning,
-    # and a single-file scan would otherwise pin every probe pass (the
-    # bucket histograms, the refinement min/max, the final window) to
-    # the scan's 1-3 tasks.  No-op at real corpus scale.
-    non_null = materialize_once(
-        spread(df.where(F.col(column).isNotNull()).select(column))
-    )
+    non_null = df.where(F.col(column).isNotNull()).select(column)
     dtype = dict(df.dtypes)[column]
     numeric = dtype in ("tinyint", "smallint", "int", "bigint", "float",
                         "double") or dtype.startswith("decimal")
@@ -438,31 +451,41 @@ def exact_percentile_df(df, column: str, percentage: float):
         hist = src.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
         return _cum_select(hist, cum_before, total)
 
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.count(F.lit(1)).alias("total"),
-    ).first()
-    if stats is None or stats["total"] == 0 or stats["lo"] is None:
+    if range_probe is None:
+        stats = non_null.agg(
+            F.min(column).alias("lo"),
+            F.max(column).alias("hi"),
+            F.count(F.lit(1)).alias("total"),
+        ).first()
+        range_probe = (stats["lo"], stats["hi"], stats["total"])
+    lo, hi, total = range_probe
+    if not total or lo is None:
         raise ValueError("Percentile selection could not be fetched.")
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
+    # the value as the groupBy of the naive construction sees it: -0.0
+    # and 0.0 are one value, 0.0
+    value = F.col(column)
+    if dtype in ("float", "double"):
+        value = F.when(value == 0, F.lit(0).cast(dtype)).otherwise(value)
+    # compared uncast: wide integers and decimals that differ can read
+    # as one double
+    if lo == hi:
+        return non_null.agg(F.min(value).alias("value"))
     value_col = F.col(column).cast("double")
-    if hi == lo:
-        return non_null.agg(F.min(column).alias("value"))
     # Iterative range REFINEMENT: on heavy-tailed domains (pairwise
     # slopes, deviations) the outlier-stretched [lo, hi] puts nearly all
-    # mass in one linear bucket, and the final cumulative window would
-    # sort that bucket's distinct values on ONE task — the §4.4 hazard
-    # this two-pass plan exists to avoid (measured: 1.28M of theil_sen's
-    # 2.9M pair slopes in a single bucket).  Re-bucket WITHIN the target
-    # bucket (filter by bucket id — a pure partition of the sorted
-    # domain, so the selected value is identical) until it is small;
-    # each level is one cheap probe over the cached projection and
-    # shrinks the range by up to PERCENTILE_BUCKETS x.
-    cum_before, src = 0, non_null
-    while True:
+    # mass in one linear bucket, and the final pass would sort that
+    # bucket on ONE task — the §4.4 hazard this plan exists to avoid
+    # (measured: 1.28M of theil_sen's 2.9M pair slopes in a single
+    # bucket).  Re-bucket WITHIN the target bucket (filter by bucket id
+    # — a pure partition of the sorted domain, so the selected value is
+    # identical) until it is small; each level is one cheap probe and
+    # shrinks the range by up to PERCENTILE_BUCKETS x.  A range that is
+    # one double, or not finite (NaN, +-inf), cannot be split.
+    cum_before, src, tb_count = 0, non_null, total
+    flo, fhi = float(lo), float(hi)
+    while fhi != flo and math.isfinite(fhi - flo):
         bucket = F.least(
-            F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
+            F.floor((value_col - flo) / (fhi - flo) * PERCENTILE_BUCKETS),
             F.lit(PERCENTILE_BUCKETS - 1),
         ).cast("int")
         target_bucket, cum_before, tb_count = _locate_bucket(
@@ -474,15 +497,18 @@ def exact_percentile_df(df, column: str, percentage: float):
         sub = src.agg(
             F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
         ).first()
-        lo2, hi2 = float(sub["lo"]), float(sub["hi"])
-        if hi2 == lo2:
-            break
-        lo, hi = lo2, hi2
-    hist = (
-        src.groupBy(F.col(column).alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return _cum_select(hist, cum_before, total)
+        flo, fhi = float(sub["lo"]), float(sub["hi"])
+    if tb_count > PERCENTILE_REFINE_ROWS:
+        hist = src.groupBy(value.alias("value")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        return _cum_select(hist, cum_before, total)
+    # the bucket's j-th sorted value: the smallest j >= 1 with
+    # (cum_before + j) * 100 >= percentage * total, in exact arithmetic
+    # (null past the bucket's end, as the window finds no row there)
+    j = max(1, math.ceil(Fraction(percentage * total) / 100) - cum_before)
+    nth = F.try_element_at(F.array_sort(F.collect_list(value)), F.lit(j))
+    return src.agg(nth.alias("value"))
 
 
 def exact_percentiles_df(df, column: str, percentages: list[float]):
@@ -494,8 +520,7 @@ def exact_percentiles_df(df, column: str, percentages: list[float]):
     range-bucket histogram, and ONE filtered scan covering the union of
     target buckets — 3 scans total for ANY number of percentiles, where
     repeated single calls would pay 3 each. The per-bucket cumulative
-    windows stay bounded by |distinct values in bucket| exactly as in
-    the single-target construction.
+    windows stay bounded by |distinct values in bucket|.
 
     Numeric columns only (the monitoring use case: p50/p90/p99 bands in
     one pass). Returns one row with a ``p{pct:g}`` column per target.
@@ -504,11 +529,10 @@ def exact_percentiles_df(df, column: str, percentages: list[float]):
         raise ValueError("At least one percentage is required.")
     from ..pipeline._util import materialize_once, spread
 
-    # same three-pass sharing discipline as exact_percentile_df: the
-    # stats probe, the bucket histogram and the union-of-target-buckets
-    # scan all read ONE spread, persisted single-column projection
-    # instead of re-scanning the source serially (a single-file scan
-    # reads as 1 task; spread no-ops at corpus scale)
+    # the stats probe, the bucket histogram and the union-of-target-
+    # buckets scan all read ONE spread, persisted single-column
+    # projection instead of re-scanning the source serially (a
+    # single-file scan reads as 1 task; spread no-ops at corpus scale)
     non_null = materialize_once(
         spread(df.where(F.col(column).isNotNull()).select(column))
     )
@@ -588,12 +612,17 @@ def exact_percentiles_df(df, column: str, percentages: list[float]):
 
 
 def get_percentile(
-    spark: SparkSession, ref: DataReference, percentage: float
+    spark: SparkSession,
+    ref: DataReference,
+    percentage: float,
+    range_probe: tuple | None = None,
 ) -> tuple[float, _Plans]:
-    """Exact percentile metric (see :func:`exact_percentile_df`)."""
+    """Exact percentile metric (see :func:`exact_percentile_df`);
+    ``range_probe`` is the value of ``ScalarAgg("range", ref)`` when
+    the caller already computed it."""
     column = ref.get_column(spark)
     selection = ref.get_selection(spark)
-    candidates = exact_percentile_df(selection, column, percentage)
+    candidates = exact_percentile_df(selection, column, percentage, range_probe)
     row = candidates.first()
     if row is None or row["value"] is None:
         raise ValueError("Percentile selection could not be fetched.")
@@ -662,11 +691,9 @@ def exact_weighted_percentile_df(
     a short decimal; a 15-digit repeating fraction inflates p_den and
     with it the decimal width headroom).
     """
-    from fractions import Fraction
-
     from ..pipeline._util import materialize_once
 
-    # same three-pass shape as exact_percentile_df: persist the 2-column
+    # three passes like exact_percentile_df's: persist the 2-column
     # projection so the stats probe, bucket-weights probe and final
     # target-bucket histogram scan the source once, not three times
     non_null = materialize_once(

@@ -54,10 +54,11 @@ _OPEN_SCOPE: ContextVar[list[Callable[[], None]] | None] = ContextVar(
 
 
 #: Sources resolved by :func:`resolve_source` in the outermost open
-#: :func:`cache_scope`, keyed by ``(id(source), id(spark))``; each entry
-#: holds the source and session too, so neither id is reused while the
-#: scope is open.  ``None`` when no scope is open.
-_SOURCE_MEMO: ContextVar[dict[tuple[int, int], tuple] | None] = ContextVar(
+#: :func:`cache_scope`, keyed by ``(source.resolution_key(), id(spark))``
+#: (the source's id unless it says otherwise); each entry holds the
+#: source and session too, so neither id is reused while the scope is
+#: open.  ``None`` when no scope is open.
+_SOURCE_MEMO: ContextVar[dict[tuple[object, int], tuple] | None] = ContextVar(
     "djs_source_memo", default=None
 )
 
@@ -102,7 +103,8 @@ def resolve_source(spark: SparkSession, source: DataSource) -> DataFrame:
 
     Resolving a parquet source runs a job that reads the file footers;
     every constraint of a requirement, and both sides of a between
-    constraint over one source object, read the same frame instead.
+    constraint over one source object or one parquet path, read the
+    same frame instead.
     With no scope open the source is resolved on every call.  The frame
     keeps the schema and file listing of its resolution, so a table
     rewritten between two tests is read fresh only when no scope is
@@ -111,7 +113,7 @@ def resolve_source(spark: SparkSession, source: DataSource) -> DataFrame:
     memo = _SOURCE_MEMO.get()
     if memo is None:
         return source.get_df(spark)
-    key = (id(source), id(spark))
+    key = (source.resolution_key(), id(spark))
     if key not in memo:
         memo[key] = (source, spark, source.get_df(spark))
     return memo[key][2]

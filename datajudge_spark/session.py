@@ -17,6 +17,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Holds ``djs_worker_daemon``, the Python worker daemon ``get_spark``
+#: selects.  A plain directory, not a package: the daemon starts before
+#: anything of this library is imported.
+WORKER_DAEMON_DIR = os.path.join(os.path.dirname(__file__), "_spark_worker")
+
 
 def get_spark(
     app_name: str = "datajudge-spark",
@@ -78,6 +83,12 @@ def get_spark(
         # suite's ~300k API calls that is tens of seconds of pure
         # driver-side overhead for an error-message nicety — off.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers import pyspark from plain directories, not from
+        # the zips Spark puts first on their path: each task otherwise
+        # re-reads the zips' directories, ~0.35 s per task of a Python
+        # UDF, pandas UDF or Python-row frame (see the daemon module)
+        .config("spark.python.daemon.module", "djs_worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", WORKER_DAEMON_DIR)
         # tolerate parquet TIMESTAMP(NANOS) columns (read as long nanos)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Off: the UI server costs startup time and memory.

@@ -11,7 +11,8 @@ Sources declare the scan; most trigger no job.  A parquet source does:
 schema.  The library resolves each source through
 ``pipeline._util.resolve_source``, once per test scope (a
 ``Requirement.test`` or a lone ``Constraint.test``), so that job runs
-once per source object and test.
+once per parquet path (per source object for the other sources) and
+test.
 """
 
 from __future__ import annotations
@@ -29,6 +30,11 @@ class DataSource(ABC):
 
     @abstractmethod
     def get_df(self, spark: SparkSession) -> DataFrame: ...
+
+    def resolution_key(self) -> object:
+        """What ``get_df`` depends on: sources with equal keys share one
+        resolution per test scope.  By default the source object's id."""
+        return id(self)
 
 
 class TableDataSource(DataSource):
@@ -85,6 +91,13 @@ class ParquetDataSource(DataSource):
 
     def get_df(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._path)
+
+    def resolution_key(self) -> object:
+        # the plain read depends on the path alone; a subclass with its
+        # own ``get_df`` keeps the object key
+        if type(self).get_df is ParquetDataSource.get_df:
+            return ("parquet", self._path)
+        return id(self)
 
 
 class ExpressionDataSource(DataSource):

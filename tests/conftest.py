@@ -17,10 +17,8 @@ from pyspark.sql import types as T
 from datajudge_spark import ExpressionDataSource, WithinRequirement
 from datajudge_spark._py4j_cache import install_py4j_name_cache
 from datajudge_spark.reference import DataReference
+from datajudge_spark.session import WORKER_DAEMON_DIR
 from datajudge_spark.sources import DataSource
-
-
-_WORKER_DAEMON_DIR = os.path.join(os.path.dirname(__file__), "spark_worker")
 
 
 @pytest.fixture(scope="session")
@@ -39,10 +37,9 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "4000")
-        # Python workers import pyspark from plain directories, not from
-        # the zips Spark puts first on their path (see the module)
+        # the Python worker daemon of ``get_spark`` (see its module)
         .config("spark.python.daemon.module", "djs_worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _WORKER_DAEMON_DIR)
+        .config("spark.executorEnv.PYTHONPATH", WORKER_DAEMON_DIR)
         .getOrCreate()
     )
     yield session

@@ -7,7 +7,9 @@ once per ``get_selection``.  The KS check takes its sample sizes from
 its own statistic and the uniqueness check counts tuples and rows in one
 aggregate.  These tests pin the resolution counts and the Spark jobs per
 check, and that the memo never serves a frame across tests or mixes the
-two sides of a self-comparison.
+two sides of a self-comparison.  Plain parquet sources over one path
+share one resolution; the percentile's range probe joins the
+requirement's shared aggregate.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import pytest
 
 from datajudge_spark import BetweenRequirement, Condition, WithinRequirement
 from datajudge_spark.constraints.stats import KolmogorovSmirnov2Sample
+from datajudge_spark.pipeline._util import cache_scope, resolve_source
 from datajudge_spark.reference import DataReference
 from datajudge_spark.sources import ParquetDataSource
 
@@ -111,6 +114,75 @@ def test_uniqueness_check_jobs(spark, table):
     assert result.outcome
     # one footer job and one aggregate: its two shuffles and the result
     assert jobs <= 4, jobs
+
+
+def test_parquet_sources_over_one_path_resolve_once(spark, table, monkeypatch):
+    paths = []
+    read = ParquetDataSource.get_df
+
+    def counted(self, engine):
+        paths.append(self._path)
+        return read(self, engine)
+
+    monkeypatch.setattr(ParquetDataSource, "get_df", counted)
+    _ks(ParquetDataSource(table), ParquetDataSource(table)).test(spark)
+    assert paths == [table]
+    (constraint,) = _ks(ParquetDataSource(table), ParquetDataSource(table))
+    constraint.test(spark)
+    assert paths == [table, table]
+
+
+def test_rewritten_path_is_read_fresh_in_the_next_scope(spark, tmp_path):
+    path = str(tmp_path / "snap.parquet")
+    _write(path, 50)
+    with cache_scope():
+        first = resolve_source(spark, ParquetDataSource(path))
+        assert resolve_source(spark, ParquetDataSource(path)) is first
+        assert first.count() == 50
+    _write(path, 80, extra=True)
+    with cache_scope():
+        second = resolve_source(spark, ParquetDataSource(path))
+        assert "w" in second.columns and second.count() == 80
+
+
+def _percentile_req(src, with_mean: bool = False) -> WithinRequirement:
+    req = WithinRequirement(src)
+    if with_mean:
+        req.add_numeric_mean_constraint("v", 50.0, 10.0)
+    req.add_numeric_percentile_constraint(
+        "v", 50, 50.0, max_absolute_deviation=5.0
+    )
+    return req
+
+
+def test_lone_percentile_jobs(spark, table):
+    (constraint,) = _percentile_req(ParquetDataSource(table))
+    result, jobs = count_jobs(
+        spark, "memo-percentile", lambda: constraint.test(spark)
+    )
+    assert result.outcome
+    # the footer job, then the range probe, the bucket histogram and the
+    # target bucket's aggregate: a shuffle map stage and a result each
+    assert jobs <= 7, jobs
+
+
+def test_percentile_probe_joins_the_requirement_aggregate(spark, table):
+    req = _percentile_req(ParquetDataSource(table), with_mean=True)
+    percentile = req[1]
+    own_test, jobs = percentile.test, []
+
+    def counted(engine):
+        result, n = count_jobs(
+            spark, "memo-percentile-fused", lambda: own_test(engine)
+        )
+        jobs.append(n)
+        return result
+
+    percentile.test = counted
+    assert [r.outcome for r in req.test(spark)] == [True, True]
+    # the range probe ran in the mean's aggregate: the bucket histogram
+    # and the target bucket's aggregate are left
+    assert len(jobs) == 1 and jobs[0] <= 4, jobs
 
 
 def test_rewritten_table_is_read_fresh(spark, tmp_path):

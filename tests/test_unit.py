@@ -328,6 +328,120 @@ class TestNonNumericPercentileProxy:
         assert got == dt.date(2020, 1, 1)
 
 
+def _same_value(a, b) -> bool:
+    """Equal values, with the sign of a float zero and NaN compared as
+    such."""
+    import math
+
+    if isinstance(a, float) and isinstance(b, float):
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(a) and math.isnan(b)
+        return a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+    return a == b
+
+
+class TestPercentileEdgeCases:
+    """The numeric percentile against the naive global-window
+    construction (and the plain sorted rule) on the inputs where the
+    bucketed plan takes its special exits."""
+
+    PCTS = (0.0, 1.0, 25.0, 50.0, 70.0, 99.9, 100.0)
+
+    @staticmethod
+    def _sorted_rule(values, p):
+        rows = sorted(values)
+        return next(
+            v for i, v in enumerate(rows) if (i + 1) * 100 >= p * len(rows)
+        )
+
+    def _check_naive(self, df, pcts=PCTS):
+        from datajudge_spark.operators.scalars import exact_percentile_df
+
+        naive = TestNonNumericPercentileProxy._naive
+        for p in pcts:
+            got = exact_percentile_df(df, "v", p).first()["value"]
+            want = naive(df, "v", p)
+            assert _same_value(got, want), (p, got, want)
+
+    def test_signed_zeros(self, spark):
+        import math
+
+        rows = [(-0.0,)] * 4 + [(0.0,)] * 3
+        rows += [(-1.5,), (2.5,), (1e-300,), (-1e-300,)]
+        df = spark.createDataFrame(rows, "v double")
+        assert any(
+            math.copysign(1.0, r[0]) < 0 and r[0] == 0 for r in df.collect()
+        )
+        self._check_naive(df)
+        # min == max: every value is a zero
+        self._check_naive(
+            spark.createDataFrame([(-0.0,)] * 3 + [(0.0,)] * 2, "v double")
+        )
+        self._check_naive(spark.createDataFrame([(-0.0,)] * 3, "v double"))
+
+    def test_nan(self, spark):
+        nan = float("nan")
+        rows = [(1.0,), (nan,), (2.0,), (nan,), (3.0,), (-4.0,), (None,)]
+        self._check_naive(spark.createDataFrame(rows, "v double"))
+        self._check_naive(spark.createDataFrame([(nan,)] * 3, "v double"))
+
+    def test_nan_with_refinement(self, spark, monkeypatch):
+        # a NaN maximum makes the range unsplittable: the plan must end
+        # (it used to re-probe the same range forever) and stay exact
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 16)
+        rows = [(float(i % 50),) for i in range(200)] + [(float("nan"),)] * 3
+        self._check_naive(spark.createDataFrame(rows, "v double"))
+
+    def test_forced_refinement(self, spark, monkeypatch):
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        self._check_naive(TestPercentileBucketRefinement()._skewed_df(spark))
+
+    def test_duplicates_exit_refinement(self, spark, monkeypatch):
+        # the target bucket holds 200 copies of one value: its range
+        # cannot be split, so it ends on the distinct-value window
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        rows = [(5.0,)] * 200 + [(float(i),) for i in range(0, 1000, 10)]
+        self._check_naive(spark.createDataFrame(rows, "v double"))
+
+    def test_wide_integers(self, spark, monkeypatch):
+        import datajudge_spark.operators.scalars as sc
+
+        base = 2**60
+        values = [base + k for k in (3, 0, 4, 1, 2)]
+        df = spark.createDataFrame([(v,) for v in values], "v bigint")
+        for p in self.PCTS:
+            got = sc.exact_percentile_df(df, "v", p).first()["value"]
+            assert got == self._sorted_rule(values, p), p
+        # a bucket of values that read as one double, past refinement
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 16)
+        values = [base + k for k in range(100)] + [2**62]
+        df = spark.createDataFrame([(v,) for v in values], "v bigint")
+        for p in self.PCTS:
+            got = sc.exact_percentile_df(df, "v", p).first()["value"]
+            assert got == self._sorted_rule(values, p), p
+
+    def test_wide_decimals(self, spark):
+        from decimal import Decimal
+
+        from datajudge_spark.operators.scalars import exact_percentile_df
+
+        # 38 digits, beyond the default decimal context: built from text
+        values = [
+            Decimal(f"12345678901234567890.{k:018d}") for k in (2, 0, 4, 1, 3)
+        ]
+        assert len(set(values)) == 5 and len({float(v) for v in values}) == 1
+        df = spark.createDataFrame([(v,) for v in values], "v decimal(38,18)")
+        for p in self.PCTS:
+            got = exact_percentile_df(df, "v", p).first()["value"]
+            assert got == self._sorted_rule(values, p), p
+
+
 class TestExactWeightedPercentile:
     def test_unit_weights_match_unweighted(self, spark):
         from datajudge_spark.operators.scalars import (
