@@ -2332,9 +2332,9 @@ def q_running_distinct_users(spark, sf_dir):
 
 
 def q_percentile_bands(spark, sf_dir):
-    # p50/p90/p99 monitoring bands from ONE shared histogram: 3 scans
-    # total for any number of targets (repeated single-percentile calls
-    # pay 3 each). Same exact smallest-v-with->=p% semantics, same
+    # p50/p90/p99 monitoring bands from ONE bucketed percentile walk:
+    # the probe, the bucket histogram and the final aggregate serve any
+    # number of targets. Same exact smallest-v-with->=p% semantics, same
     # single comparison form.
     from datajudge_spark.operators.scalars import exact_percentiles_df
 
@@ -3001,10 +3001,10 @@ def q_zorder_digest(spark, sf_dir):
 
 
 def q_weighted_percentile(spark, sf_dir):
-    # quantity-weighted median unit price in cents: same two-pass
-    # range-bucketed plan as the exact percentile, but the histogram
-    # accumulates DECIMAL(38,0) integer weights — no float accumulation
-    # anywhere, so the boundary value is engine-exact.
+    # quantity-weighted median unit price in cents: the exact
+    # percentile's range-bucketed plan, but the histogram accumulates
+    # DECIMAL(38,0) integer weights — no float accumulation anywhere,
+    # so the boundary value is engine-exact.
     from datajudge_spark.operators.scalars import exact_weighted_percentile_df
 
     li = _t(spark, sf_dir, "lineitem")
@@ -3319,9 +3319,9 @@ def q_equidepth_histogram(spark, sf_dir):
     from datajudge_spark.pipeline._util import materialize_once
 
     li = _t(spark, sf_dir, "lineitem")
-    # the cents projection feeds the stats pass, the bucket histogram,
-    # the filtered threshold scan, AND the final bucketing scan —
-    # persist it once
+    # the cents projection feeds the range probe, the bucket histogram,
+    # the threshold aggregate, AND the final bucketing scan — persist
+    # it once
     vals = materialize_once(
         li.select(_cents("l_extendedprice").alias("c")).where(
             F.col("c").isNotNull()
@@ -3432,9 +3432,10 @@ def q_percentile_drift(spark, sf_dir):
     # quantile-grid drift report between A-flag and R-flag extended
     # prices: the exact p25..p99 of BOTH samples, long-form with per-
     # quantile deltas — the "where exactly did the distribution move?"
-    # companion to the scalar KS/EMD digests.  Each side is the shared-
-    # histogram multi-percentile plan (3 scans for any number of
-    # quantiles); the two 1-row results melt and join on the quantile.
+    # companion to the scalar KS/EMD digests.  Each side is one bucketed
+    # multi-percentile walk (one probe, histogram and final aggregate
+    # for any number of quantiles); the two 1-row results melt and join
+    # on the quantile.
     from datajudge_spark.operators.scalars import exact_percentiles_df
 
     li = _t(spark, sf_dir, "lineitem")
@@ -3730,7 +3731,7 @@ def q7_volume_shipping(spark, sf_dir):
 
 
 def q_grouped_median(spark, sf_dir):
-    # exact median quantity per return flag: the grouped percentile's
+    # exact median quantity per return flag: the grouped percentiles'
     # window is PARTITIONED by group over each group's distinct-value
     # histogram (50 quantities) — parallel across groups, bounded within
     from datajudge_spark.operators.scalars import grouped_exact_percentile

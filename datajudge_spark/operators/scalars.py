@@ -17,13 +17,16 @@ Scale notes (100 TB design):
   them that read one source in a single partial + final aggregation (one
   scan, no full shuffle), each restricted to its own condition.  The
   ``get_*`` functions below run one declaration alone.
-- the exact percentile avoids a global row_number window (single-partition
-  hazard, reference db_access.py:821-825): a range probe (min, max, count;
-  a ``range`` ``ScalarAgg``, so a requirement folds it into its shared
-  aggregate), a range-bucket histogram that locates the target bucket, and
-  one global aggregate that picks the j-th sorted value of that bucket —
-  four Spark jobs when the probe is shared, no private shuffle or cache,
-  identical result, state bounded by ``PERCENTILE_REFINE_ROWS``.
+- every exact percentile (single, bands, weighted, any orderable type)
+  runs one kernel, ``_exact_percentiles``, and avoids a global
+  row_number window (single-partition hazard, reference
+  db_access.py:821-825): a range probe (min, max, count; a ``range``
+  ``ScalarAgg``, so a requirement folds it into its shared aggregate),
+  range-bucket histograms that locate each target's bucket, and one
+  final aggregate over those buckets for all targets — four Spark jobs
+  for one numeric target when the probe is shared, no private shuffle
+  or cache, identical result, state bounded by
+  ``PERCENTILE_REFINE_ROWS``.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from fractions import Fraction
 from functools import partial
+from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -247,20 +251,22 @@ def get_missing_fraction(
     return _run_alone(spark, ScalarAgg("missing_fraction", ref))
 
 
-#: Range-bucket count for the two-pass exact percentile.
+#: Range-bucket count of each level of the exact percentile's walk.
 PERCENTILE_BUCKETS = 4096
 
-#: Refine the target range-bucket while it still holds more rows than
-#: this — the bound on what the final pass is ever asked to sort on
+#: Refine a target range-bucket while it still holds more rows than
+#: this — the bound on what the final step is ever asked to sort on
 #: one task.
 PERCENTILE_REFINE_ROWS = 65536
+
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
 def _order_proxy_expr(non_null, column: str, dtype: str):
     """A numeric Column that is (non-strictly) MONOTONE in ``column``'s
     sort order, used only to range-bucket non-numeric orderable types —
     never to compare values (ties at proxy granularity just share a
-    bucket, and the final cumulative window orders by the true value).
+    bucket, and the final step orders by the true value).
 
     - date: days since epoch (exact, strictly monotone)
     - timestamp / timestamp_ntz: microseconds since epoch (exact; µs
@@ -271,14 +277,15 @@ def _order_proxy_expr(non_null, column: str, dtype: str):
       so the byte prefix is monotone; the zero padding keeps shorter
       strings ordered before their extensions; 48 bits stay exact in a
       double.  Stripping the shared prefix (computed from one min/max
-      agg) is what gives key-style columns ('Customer#000…') a usable
-      spread instead of one hot bucket.
+      agg) is what gives key-style columns ('Customer#000…') usable
+      buckets instead of one hot bucket.
 
     The returned expression reads the column via the alias ``__pv_src``
     (callers project ``column AS __pv_src`` first — sidesteps SQL
     identifier quoting inside the string branch's ``expr``).  Returns
     None for types without a cheap monotone proxy (binary, boolean, …) —
-    callers fall back to the distinct-value histogram.
+    callers then put every row in one bucket (the distinct-value
+    histogram).
     """
     if dtype == "date":
         return F.datediff(
@@ -307,308 +314,284 @@ def _order_proxy_expr(non_null, column: str, dtype: str):
     return None
 
 
+@dataclass(eq=False)
+class _Range:
+    """The rows ``pred`` keeps (all rows when it is None): one bucket of
+    every level walked so far.  Their keys span ``[lo, hi]``; they hold
+    ``rows`` rows of total ``mass``, and ``before`` is the mass of all
+    rows below them."""
+
+    pred: Column | None
+    lo: float
+    hi: float
+    rows: int
+    mass: int
+    before: int
+
+    def splits(self) -> bool:
+        # a range that is one double, or not finite (NaN, +-inf),
+        # cannot be split
+        return self.hi > self.lo and math.isfinite(self.hi - self.lo)
+
+    def bucket(self, key: Column) -> Column:
+        # clamped on both sides: Catalyst may fold it on literal rows
+        # that an outer level's filter excludes
+        b = F.floor((key - self.lo) / (self.hi - self.lo) * PERCENTILE_BUCKETS)
+        return F.greatest(
+            F.least(b, F.lit(PERCENTILE_BUCKETS - 1)), F.lit(0)
+        ).cast("int")
+
+
+def _within(src, ranges: list[_Range], then):
+    """``src``'s rows in ``ranges``, and ``CASE WHEN ranges[0].pred THEN
+    then(0, ranges[0]) ... END`` over them (``then(0, ranges[0])`` when
+    there is one range)."""
+    if len(ranges) == 1:
+        (r,) = ranges
+        return src if r.pred is None else src.where(r.pred), then(0, r)
+    case = F  # F.when starts the chain, Column.when continues it
+    for k, r in enumerate(ranges):
+        case = case.when(r.pred, then(k, r))
+    return src.where(case.isNotNull()), case
+
+
+def _exact_percentiles(
+    df,
+    column: str,
+    targets: list[tuple[str, float]],
+    weight_column: str | None = None,
+    range_probe: tuple | None = None,
+) -> DataFrame:
+    """The exact percentile kernel: one row with a column ``name`` per
+    ``(name, percentage)`` target, the smallest non-null v such that
+    the rows with value <= v hold at least ``percentage`` % of the mass
+    — their count, or the sum of ``weight_column``.
+
+    Every row gets a double bucket key that is non-strictly monotone in
+    the value's order: the value itself for numeric columns, the
+    :func:`_order_proxy_expr` proxy for dates, timestamps and strings,
+    and one constant (a single bucket) for types with no proxy.  Then:
+
+    1. the range probe: min and max key, row count, total mass (and the
+       least weight) — ``range_probe`` passes the unweighted
+       ``(min, max, count)`` when the caller already has it;
+    2. the walk (:func:`_walk`): one histogram per level over the
+       ranges that still hold a target, ``PERCENTILE_BUCKETS`` equal
+       buckets per range (rows and mass per bucket; a few thousand rows
+       to the driver), whose cumulative mass locates each target's
+       bucket.  A target bucket with more than
+       ``PERCENTILE_REFINE_ROWS`` rows is bucketed again on its own key
+       range, so a heavy tail cannot put the whole column in the final
+       step;
+    3. one final aggregate (:func:`_final_step`) answers every target:
+       the j-th of its bucket's sorted values (``j`` computed on the
+       driver), or, where a bucket that cannot be split further still
+       holds more rows or the rows carry weights, the first value whose
+       cumulative mass over the target buckets' distinct values,
+       ordered by the true value, reaches the target.
+
+    The bucketing partitions the sorted domain, so the result is the
+    naive global-window construction's.  Each target's threshold is the
+    least cumulative mass ``need`` with ``need * 100 >= percentage *
+    total`` in exact rational arithmetic (the unweighted product is the
+    double ``percentage * total``, the weighted one the decimal
+    ``percentage``), and the driver and the engine both compare ``cum
+    >= need``.  Float values read -0.0 as 0.0, as a groupBy does.
+    """
+    keep = F.col(column).isNotNull()
+    cols = [F.col(column).alias("__pv_src")]
+    if weight_column is not None:
+        keep &= F.col(weight_column).isNotNull()
+        cols.append(F.col(weight_column).cast("decimal(38,0)").alias("__w"))
+    src = df.where(keep).select(*cols)
+    # the aggregate mass of a set of rows, and the least weight
+    if weight_column is None:
+        mass_of, least_of = F.count(F.lit(1)), F.lit(1)
+    else:
+        mass_of, least_of = F.sum("__w"), F.min("__w")
+    dtype = dict(df.dtypes)[column]
+    value = F.col("__pv_src")
+    if dtype in ("float", "double"):
+        value = F.when(value == 0, F.lit(0).cast(dtype)).otherwise(value)
+    if dtype in _NUMERIC or dtype.startswith("decimal"):
+        key = F.col("__pv_src").cast("double")
+    else:
+        key = _order_proxy_expr(src, "__pv_src", dtype)
+        key = F.lit(0.0) if key is None else key
+        range_probe = None
+    if range_probe is None:
+        probe = src.agg(
+            F.min(key), F.max(key), F.count(F.lit(1)), mass_of, least_of
+        ).first()
+    else:
+        probe = (*range_probe, range_probe[2], 1)
+    lo, hi, rows, mass, least_weight = probe
+    if not rows or mass is None or mass <= 0:
+        what = "Percentile selection" if weight_column is None else (
+            "Weighted percentile"
+        )
+        raise ValueError(f"{what} could not be fetched.")
+    if least_weight < 0:
+        raise ValueError(
+            "Weighted percentile requires non-negative weights; "
+            f"min({weight_column}) = {least_weight}."
+        )
+    mass = int(mass)
+    needs = [
+        math.ceil(
+            (Fraction(p * mass) if weight_column is None
+             else Fraction(str(p)) * mass) / 100
+        )
+        for _, p in targets
+    ]
+
+    top = _Range(None, float(lo), float(hi), rows, mass, 0)
+    at = _walk(src, key, mass_of, top, needs)
+    weighted = weight_column is not None
+    return _final_step(src, value, mass_of, targets, at, needs, weighted)
+
+
+def _walk(src, key: Column, mass_of: Column, top: _Range, needs: list):
+    """Each target's range: the bucket whose cumulative mass first
+    reaches the target's ``need``, re-bucketed while it holds more than
+    ``PERCENTILE_REFINE_ROWS`` rows and can be split.  One histogram
+    (a Spark job pair) per level covers every range still open.
+
+    A bucket's key range is its own bounds on the first level and the
+    extremes of its keys below it: the first level, often the only one,
+    skips the two extra aggregates, and a bucket of one repeated value
+    stops refining one level later."""
+    at = [top] * len(needs)
+    level = [top] if top.splits() else []
+    while level:
+        bucket = [r.bucket(key) for r in level]
+        rows_in, cell = _within(
+            src, level, lambda k, r: bucket[k] + k * PERCENTILE_BUCKETS
+        )
+        extremes = [] if top in level else [F.min(key), F.max(key)]
+        hist = (
+            rows_in.groupBy(cell)
+            .agg(F.count(F.lit(1)), mass_of, *extremes)
+            .collect()
+        )
+        buckets = [[] for _ in level]
+        for c, n, m, *span in sorted(hist):
+            k, b = divmod(c, PERCENTILE_BUCKETS)
+            r = level[k]
+            step = (r.hi - r.lo) / PERCENTILE_BUCKETS
+            klo, khi = span or (r.lo + b * step, r.lo + (b + 1) * step)
+            buckets[k].append((b, n, int(m), klo, khi))
+        chosen: dict[tuple[int, int], _Range] = {}
+        for t, need in enumerate(needs):
+            if at[t] not in level:
+                continue
+            k = level.index(at[t])
+            before = at[t].before
+            for i, (b, n, m, klo, khi) in enumerate(buckets[k]):
+                if before + m >= need or i == len(buckets[k]) - 1:
+                    break
+                before += m
+            if (k, b) not in chosen:
+                pred = bucket[k] == b
+                if at[t].pred is not None:
+                    pred = at[t].pred & pred
+                chosen[k, b] = _Range(pred, klo, khi, n, m, before)
+            at[t] = chosen[k, b]
+        level = [
+            r for r in chosen.values()
+            if r.rows > PERCENTILE_REFINE_ROWS and r.splits()
+        ]
+    return at
+
+
+def _final_step(src, value, mass_of, targets, at, needs, weighted: bool):
+    """One aggregate over the rows of the targets' ranges ``at`` that
+    answers every target: the j-th sorted value of its range, or, with
+    weights or a range too large to sort, the first value whose
+    cumulative mass reaches ``need``."""
+    ranges = list(dict.fromkeys(at))
+    picked, region = _within(src, ranges, lambda k, r: F.lit(k))
+    if not weighted and all(r.rows <= PERCENTILE_REFINE_ROWS for r in ranges):
+        # one range: the filter already keeps its rows alone
+        sorted_values = [
+            F.array_sort(F.collect_list(
+                value if len(ranges) == 1 else F.when(r.pred, value)
+            ))
+            for r in ranges
+        ]
+        return picked.agg(*[
+            F.try_element_at(
+                sorted_values[ranges.index(r)], F.lit(max(1, need - r.before))
+            ).alias(name)
+            for (name, _), r, need in zip(targets, at, needs)
+        ])
+    # one cumulative window over the ranges' distinct values, range by
+    # range: range k's rows start after the mass of ranges 0..k-1
+    hist = picked.groupBy(
+        region.alias("__r"), value.alias("value")
+    ).agg(mass_of.alias("__m"))
+    win = Window.orderBy("__r", "value").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    cum = hist.select("__r", "value", F.sum("__m").over(win).alias("__cum"))
+    offsets = list(accumulate((r.mass for r in ranges), initial=0))
+
+    def reached(r: _Range, need: int) -> Column:
+        k = ranges.index(r)
+        least_cum = F.lit(str(need - r.before + offsets[k]))
+        return (F.col("__r") == k) & (
+            F.col("__cum") >= least_cum.cast("decimal(38,0)")
+        )
+
+    return cum.agg(*[
+        F.min(F.when(reached(r, need), F.col("value"))).alias(name)
+        for (name, _), r, need in zip(targets, at, needs)
+    ])
+
+
 def exact_percentile_df(
     df, column: str, percentage: float, range_probe: tuple | None = None
 ):
-    """Exact percentile as a 1-row DataFrame, computed scale-out.
+    """Exact percentile as a 1-row DataFrame (column ``value``),
+    computed scale-out.
 
     Semantics (reference db_access.py:812-857): the smallest value v such
     that at least ``percentage`` % of non-null values are <= v.
     ``percentile_approx`` is deliberately NOT used (breaks exact
-    semantics, SURVEY §7.3.1).
+    semantics, SURVEY §7.3.1), and neither is the naive construction's
+    global window over all distinct values (a single-partition
+    bottleneck on near-unique columns, SURVEY §4.4).
 
-    A naive construction sorts ALL (distinct) values under one global
-    window — a single-partition bottleneck on near-unique columns
-    (SURVEY §4.4).  Instead, for a numeric column, fully-parallel passes
-    over ``df`` as given (no private shuffle or cache: a caller whose
-    input is expensive persists it, as ``mad_outliers`` and
-    ``theil_sen`` do):
-
-    1. the range probe ``(min, max, non-null count)`` — skipped when the
-       caller passes it as ``range_probe`` (``NumericPercentile`` reads
-       it from its requirement's shared aggregate, a ``range``
-       :class:`ScalarAgg`; other columns ignore it);
-    2. range-bucket histogram: counts per ``PERCENTILE_BUCKETS`` equal
-       ranges (one groupBy; B rows to the driver); a driver cumsum over
-       them locates the target bucket;
-    3. one global aggregate over the target bucket's rows: the j-th of
-       its sorted values, ``j`` computed on the driver.
-
-    Pass 2 repeats (refinement, see below) while the target bucket holds
-    more than ``PERCENTILE_REFINE_ROWS`` rows, so the list pass 3
-    collects stays bounded.  The result is identical to the naive
-    construction — the bucketing is a partitioning of the sorted domain,
-    not an approximation.  Where the bucket's values cannot be split
-    further as doubles (many duplicates; wide integers or decimals that
-    collapse to one double), pass 3 is the cumulative window over the
-    bucket's distinct values instead, ordered by the true value.
-
-    Non-numeric orderable columns (date/timestamp/string) range-bucket
-    on a MONOTONE numeric proxy (:func:`_order_proxy_expr` — day number
-    / epoch microseconds / prefix bytes) and then run the same bucketed
-    plan; the cumulative window orders by the TRUE value, restricted to
-    the target bucket, so a near-unique timestamp column no longer
-    degenerates into one global single-partition window.  Types with no
-    cheap proxy (binary/boolean) keep the distinct-value histogram
-    fallback (bounded by |distinct values|).
-
-    Every "have we reached the percentile" test uses the ONE comparison
-    form ``cum * 100 >= percentage * total`` — mixing formulations (e.g.
-    ``cum >= total*percentage/100`` in one place and ``cum*100/total >=
-    percentage`` in another) can disagree by 1 ulp at exact boundaries and
-    select off-by-one values.
+    Runs the bucketed kernel (:func:`_exact_percentiles`) over ``df``
+    as given, with no private shuffle or cache: a caller whose input is
+    expensive persists it, as ``mad_outliers`` and ``theil_sen`` do.
+    For a numeric column that is four Spark jobs when the range probe
+    ``(min, max, non-null count)`` comes in as ``range_probe``
+    (``NumericPercentile`` reads it from its requirement's shared
+    aggregate, a ``range`` :class:`ScalarAgg`; other columns ignore
+    it).  Dates, timestamps and strings bucket on a monotone proxy;
+    types with no proxy (binary, boolean) keep the distinct-value
+    histogram.
     """
-    non_null = df.where(F.col(column).isNotNull()).select(column)
-    dtype = dict(df.dtypes)[column]
-    numeric = dtype in ("tinyint", "smallint", "int", "bigint", "float",
-                        "double") or dtype.startswith("decimal")
-
-    def _locate_bucket(src, bucket_col, cum_before: int, total: int):
-        """One bucket-histogram probe: walk the per-bucket counts in
-        bucket order with the single canonical comparison form and
-        return (target_bucket, cum_before, target_count)."""
-        bucket_counts = dict(
-            src.groupBy(bucket_col.alias("b"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        target_bucket = PERCENTILE_BUCKETS - 1
-        for b in sorted(bucket_counts):
-            if (cum_before + bucket_counts[b]) * 100 >= percentage * total:
-                target_bucket = b
-                break
-            cum_before += bucket_counts[b]
-        return target_bucket, cum_before, bucket_counts.get(target_bucket, 0)
-
-    def _cum_select(hist, cum_before: int, total: int):
-        w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-        cum = hist.select(
-            "value", (F.sum("cnt").over(w) + F.lit(cum_before)).alias("cum_cnt")
-        )
-        return cum.where(
-            F.col("cum_cnt") * 100 >= F.lit(percentage * total)
-        ).select(F.min("value").alias("value"))
-
-    if not numeric:
-        pv = _order_proxy_expr(non_null, column, dtype)
-        if pv is None:
-            # no cheap monotone proxy: distinct-value histogram under
-            # one cumulative window (bounded by |distinct values|)
-            total = non_null.count()
-            if total == 0:
-                raise ValueError(
-                    "Percentile selection could not be fetched."
-                )
-            hist = non_null.groupBy(F.col(column).alias("value")).agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            return _cum_select(hist, 0, total)
-        proj = non_null.select(
-            F.col(column).alias("__pv_src")
-        ).select(F.col("__pv_src").alias("value"), pv.alias("__pv"))
-        stats = proj.agg(
-            F.min("__pv").alias("lo"),
-            F.max("__pv").alias("hi"),
-            F.count(F.lit(1)).alias("total"),
-        ).first()
-        if stats is None or stats["total"] == 0 or stats["lo"] is None:
-            raise ValueError("Percentile selection could not be fetched.")
-        lo, hi, total = (
-            float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-        )
-        if hi == lo:
-            # proxy cannot split the domain (single value, or strings
-            # identical through 6 bytes past the common prefix): the
-            # histogram stays bounded by |distinct values|
-            hist = proj.groupBy("value").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            return _cum_select(hist, 0, total)
-        # iterative range refinement (see the numeric branch below):
-        # re-bucket within the target bucket while it still holds more
-        # rows than one window task should sort
-        cum_before, src = 0, proj
-        while True:
-            bucket = F.least(
-                F.floor(
-                    (F.col("__pv") - lo) / (hi - lo) * PERCENTILE_BUCKETS
-                ),
-                F.lit(PERCENTILE_BUCKETS - 1),
-            ).cast("int")
-            target_bucket, cum_before, tb_count = _locate_bucket(
-                src, bucket, cum_before, total
-            )
-            src = src.where(bucket == target_bucket)
-            if tb_count <= PERCENTILE_REFINE_ROWS:
-                break
-            sub = src.agg(
-                F.min("__pv").alias("lo"), F.max("__pv").alias("hi")
-            ).first()
-            lo2, hi2 = float(sub["lo"]), float(sub["hi"])
-            if hi2 == lo2:
-                break
-            lo, hi = lo2, hi2
-        hist = src.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
-        return _cum_select(hist, cum_before, total)
-
-    if range_probe is None:
-        stats = non_null.agg(
-            F.min(column).alias("lo"),
-            F.max(column).alias("hi"),
-            F.count(F.lit(1)).alias("total"),
-        ).first()
-        range_probe = (stats["lo"], stats["hi"], stats["total"])
-    lo, hi, total = range_probe
-    if not total or lo is None:
-        raise ValueError("Percentile selection could not be fetched.")
-    # the value as the groupBy of the naive construction sees it: -0.0
-    # and 0.0 are one value, 0.0
-    value = F.col(column)
-    if dtype in ("float", "double"):
-        value = F.when(value == 0, F.lit(0).cast(dtype)).otherwise(value)
-    # compared uncast: wide integers and decimals that differ can read
-    # as one double
-    if lo == hi:
-        return non_null.agg(F.min(value).alias("value"))
-    value_col = F.col(column).cast("double")
-    # Iterative range REFINEMENT: on heavy-tailed domains (pairwise
-    # slopes, deviations) the outlier-stretched [lo, hi] puts nearly all
-    # mass in one linear bucket, and the final pass would sort that
-    # bucket on ONE task — the §4.4 hazard this plan exists to avoid
-    # (measured: 1.28M of theil_sen's 2.9M pair slopes in a single
-    # bucket).  Re-bucket WITHIN the target bucket (filter by bucket id
-    # — a pure partition of the sorted domain, so the selected value is
-    # identical) until it is small; each level is one cheap probe and
-    # shrinks the range by up to PERCENTILE_BUCKETS x.  A range that is
-    # one double, or not finite (NaN, +-inf), cannot be split.
-    cum_before, src, tb_count = 0, non_null, total
-    flo, fhi = float(lo), float(hi)
-    while fhi != flo and math.isfinite(fhi - flo):
-        bucket = F.least(
-            F.floor((value_col - flo) / (fhi - flo) * PERCENTILE_BUCKETS),
-            F.lit(PERCENTILE_BUCKETS - 1),
-        ).cast("int")
-        target_bucket, cum_before, tb_count = _locate_bucket(
-            src, bucket, cum_before, total
-        )
-        src = src.where(bucket == target_bucket)
-        if tb_count <= PERCENTILE_REFINE_ROWS:
-            break
-        sub = src.agg(
-            F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-        ).first()
-        flo, fhi = float(sub["lo"]), float(sub["hi"])
-    if tb_count > PERCENTILE_REFINE_ROWS:
-        hist = src.groupBy(value.alias("value")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        return _cum_select(hist, cum_before, total)
-    # the bucket's j-th sorted value: the smallest j >= 1 with
-    # (cum_before + j) * 100 >= percentage * total, in exact arithmetic
-    # (null past the bucket's end, as the window finds no row there)
-    j = max(1, math.ceil(Fraction(percentage * total) / 100) - cum_before)
-    nth = F.try_element_at(F.array_sort(F.collect_list(value)), F.lit(j))
-    return src.agg(nth.alias("value"))
+    return _exact_percentiles(
+        df, column, [("value", percentage)], range_probe=range_probe
+    )
 
 
 def exact_percentiles_df(df, column: str, percentages: list[float]):
-    """Several exact percentiles from ONE shared histogram pass.
+    """Several exact percentiles from one walk: one row with a
+    ``p{pct:g}`` column per target (``.`` read as ``_``).
 
-    Same semantics per target as :func:`exact_percentile_df` (smallest v
-    with >= p%% of non-null values <= v, identical single comparison
-    form), but the expensive work is shared: one stats pass, one
-    range-bucket histogram, and ONE filtered scan covering the union of
-    target buckets — 3 scans total for ANY number of percentiles, where
-    repeated single calls would pay 3 each. The per-bucket cumulative
-    windows stay bounded by |distinct values in bucket|.
-
-    Numeric columns only (the monitoring use case: p50/p90/p99 bands in
-    one pass). Returns one row with a ``p{pct:g}`` column per target.
+    Same semantics per target as :func:`exact_percentile_df`; the
+    kernel's probe, per-level histograms and final aggregate are shared
+    by every target, so p50/p90/p99 monitoring bands cost what one
+    percentile does.
     """
     if not percentages:
         raise ValueError("At least one percentage is required.")
-    from ..pipeline._util import materialize_once, spread
-
-    # the stats probe, the bucket histogram and the union-of-target-
-    # buckets scan all read ONE spread, persisted single-column
-    # projection instead of re-scanning the source serially (a
-    # single-file scan reads as 1 task; spread no-ops at corpus scale)
-    non_null = materialize_once(
-        spread(df.where(F.col(column).isNotNull()).select(column))
+    return _exact_percentiles(
+        df, column, [(f"p{p:g}".replace(".", "_"), p) for p in percentages]
     )
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.count(F.lit(1)).alias("total"),
-    ).first()
-    if stats is None or stats["total"] == 0 or stats["lo"] is None:
-        raise ValueError("Percentile selection could not be fetched.")
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-
-    def _name(p: float) -> str:
-        return f"p{p:g}".replace(".", "_")
-
-    if hi == lo:
-        single = non_null.agg(F.min(column).alias("v"))
-        return single.select(
-            *[F.col("v").alias(_name(p)) for p in percentages]
-        )
-    value_col = F.col(column).cast("double")
-    bucket = F.least(
-        F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
-        F.lit(PERCENTILE_BUCKETS - 1),
-    ).cast("int")
-    bucket_counts = dict(
-        non_null.groupBy(bucket.alias("b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    # per-target bucket + its preceding cumulative count (driver fold
-    # over <= PERCENTILE_BUCKETS integers)
-    targets: dict[float, int] = {}
-    cum_before_map: dict[int, int] = {}
-    for pct in percentages:
-        cum_before, target_bucket = 0, PERCENTILE_BUCKETS - 1
-        for b in sorted(bucket_counts):
-            if (cum_before + bucket_counts[b]) * 100 >= pct * total:
-                target_bucket = b
-                break
-            cum_before += bucket_counts[b]
-        targets[pct] = target_bucket
-        cum_before_map[target_bucket] = cum_before
-    needed = sorted(set(targets.values()))
-    offset_entries = []
-    for b in needed:
-        offset_entries += [F.lit(b), F.lit(cum_before_map[b])]
-    offsets = F.create_map(*offset_entries)
-    hist = (
-        non_null.where(bucket.isin(needed))
-        .groupBy(bucket.alias("b"), F.col(column).alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = (
-        Window.partitionBy("b")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = hist.select(
-        "b",
-        "value",
-        (F.sum("cnt").over(w) + offsets[F.col("b")]).alias("cum_cnt"),
-    )
-    # one aggregate emits every band: conditional min per target, the
-    # same single comparison form as the single-target operator
-    aggs = [
-        F.min(
-            F.when(
-                (F.col("b") == targets[pct])
-                & (F.col("cum_cnt") * 100 >= F.lit(pct * total)),
-                F.col("value"),
-            )
-        ).alias(_name(pct))
-        for pct in percentages
-    ]
-    return cum.agg(*aggs)
 
 
 def get_percentile(
@@ -678,130 +661,26 @@ def exact_weighted_percentile_df(
     Weights must be non-negative integers (counts, cents, token counts)
     so every cumulative sum is exact — no float accumulation order to
     disagree about; a negative ``min(weight)`` raises (it would break
-    the monotone cumulative and silently return a wrong value). The
-    plan is the same two fully-parallel passes as the unweighted
-    operator: a range-bucket histogram of SUM(weight) (B rows to the
-    driver), a driver cumsum to locate the target bucket, then a
-    cumulative window over the distinct values of that bucket only.
-    The boundary test keeps the ONE comparison form, with
-    ``percentage`` expanded to an exact rational p_num/p_den:
-    ``cum * 100 * p_den >= p_num * total`` — all-integer on both the
-    driver and the engine, so the two never disagree even when
-    ``percentage * total`` exceeds double's 2^53 (keep ``percentage``
-    a short decimal; a 15-digit repeating fraction inflates p_den and
-    with it the decimal width headroom).
+    the monotone cumulative and silently return a wrong value).  The
+    plan is the bucketed kernel (:func:`_exact_percentiles`) with each
+    row weighing its ``DECIMAL(38,0)`` weight, ending on the cumulative
+    window over the target bucket's distinct values.  ``percentage`` is
+    read as the exact rational of its decimal string, so the threshold
+    stays exact when ``percentage * total`` exceeds double's 2^53.
     """
-    from ..pipeline._util import materialize_once
-
-    # three passes like exact_percentile_df's: persist the 2-column
-    # projection so the stats probe, bucket-weights probe and final
-    # target-bucket histogram scan the source once, not three times
-    non_null = materialize_once(
-        df.where(
-            F.col(column).isNotNull() & F.col(weight_column).isNotNull()
-        ).select(column, weight_column)
+    return _exact_percentiles(
+        df, column, [("value", percentage)], weight_column=weight_column
     )
-    w = F.col(weight_column).cast("decimal(38,0)")
-    # percentage as an exact rational (Fraction parses the decimal
-    # string exactly), so the boundary test is INTEGER arithmetic on
-    # both the driver and the engine — a double RHS degrades to 2^53
-    # precision and can disagree with the driver-side bucket selection
-    # for petabyte-scale weight totals
-    frac = Fraction(str(percentage))
-    p_num, p_den = frac.numerator, frac.denominator
-
-    def _cum_select(hist, cum_before: int, total: int):
-        win = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-        cum = hist.select(
-            "value",
-            (F.sum("wsum").over(win) + F.lit(cum_before).cast("decimal(38,0)"))
-            .alias("cum_w"),
-        )
-        rhs = F.lit(str(p_num * total)).cast("decimal(38,0)")
-        return cum.where(
-            F.col("cum_w") * (100 * p_den) >= rhs
-        ).select(F.min("value").alias("value"))
-
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.sum(w).alias("total"),
-        F.min(w).alias("wmin"),
-    ).first()
-    if stats is None or stats["total"] is None or int(stats["total"]) <= 0:
-        raise ValueError("Weighted percentile could not be fetched.")
-    if int(stats["wmin"]) < 0:
-        raise ValueError(
-            "Weighted percentile requires non-negative weights; "
-            f"min({weight_column}) = {stats['wmin']}."
-        )
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-    if hi == lo:
-        return non_null.agg(F.min(column).alias("value"))
-    value_col = F.col(column).cast("double")
-    bucket = F.least(
-        F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
-        F.lit(PERCENTILE_BUCKETS - 1),
-    ).cast("int")
-    bucket_weights = dict(
-        non_null.groupBy(bucket.alias("b")).agg(F.sum(w).alias("ws")).collect()
-    )
-    cum_before, target_bucket = 0, PERCENTILE_BUCKETS - 1
-    for b in sorted(bucket_weights):
-        if (cum_before + int(bucket_weights[b])) * 100 * p_den >= p_num * total:
-            target_bucket = b
-            break
-        cum_before += int(bucket_weights[b])
-    hist = (
-        non_null.where(bucket == target_bucket)
-        .groupBy(F.col(column).alias("value"))
-        .agg(F.sum(w).alias("wsum"))
-    )
-    return _cum_select(hist, cum_before, total)
 
 
 def grouped_exact_percentile(
     df: DataFrame, group_col: str, value_col: str, percentage: float
 ) -> DataFrame:
-    """Exact per-group percentile (smallest v such that at least
-    ``percentage``% of the group's non-null values are <= v) — the
-    grouped form of :func:`exact_percentile_df`, one row per group.
-
-    The cumulative window is PARTITIONED BY GROUP over each group's
-    distinct-VALUE histogram — parallel across groups, and within a
-    group bounded by |distinct values| (best on bounded domains:
-    quantities, ratings, day counts; a near-unique column concentrated
-    in ONE group degenerates to that group's sort, at which point the
-    two-pass bucketed single-group form is the right tool).
-
-    The acceptance test uses the single comparison form
-    ``cum * 100 >= percentage * total`` (see exact_percentile_df's
-    ulp-boundary note).
-    """
-    hist = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"), F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w_cum = (
-        Window.partitionBy("grp")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("grp").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "grp",
-        "v",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("total"),
-    )
-    return (
-        cum.where(F.col("cum") * 100 >= F.lit(percentage) * F.col("total"))
-        .groupBy("grp")
-        .agg(F.min("v").alias("value"))
-    )
+    """Exact per-group percentile, one ``(grp, value)`` row per group:
+    :func:`grouped_exact_percentiles` with one target."""
+    return grouped_exact_percentiles(
+        df, group_col, value_col, [percentage]
+    ).toDF("grp", "value")
 
 
 def grouped_exact_percentiles(
@@ -814,10 +693,15 @@ def grouped_exact_percentiles(
     group with a ``p{n}`` column per requested percentage (smallest v
     such that at least n% of the group's non-null values are <= v).
 
-    Any number of percentiles shares the single group-partitioned
-    cumulative window and ONE aggregate — never a pass per quantile
-    (the multi-quantile form of :func:`grouped_exact_percentile`; same
-    bounded-domain caveat, same single comparison form).
+    The cumulative window is PARTITIONED BY GROUP over each group's
+    distinct-VALUE histogram — parallel across groups, and within a
+    group bounded by |distinct values| (best on bounded domains:
+    quantities, ratings, day counts; a near-unique column concentrated
+    in ONE group degenerates to that group's sort, at which point the
+    bucketed single-group :func:`exact_percentiles_df` is the right
+    tool).  Any number of percentiles shares the window and ONE
+    aggregate — never a pass per quantile — with the single comparison
+    form ``cum * 100 >= percentage * total``.
     """
     if not percentages:
         raise ValueError("percentages must be non-empty")
@@ -867,11 +751,11 @@ def winsorized_stats(
 
     Exactness/scale design:
 
-    - both cut points come from ONE shared range-bucketed histogram
-      pass (:func:`exact_percentiles_df` — reference percentile
+    - both cut points come from ONE walk of the bucketed percentile
+      kernel (:func:`exact_percentiles_df` — reference percentile
       semantics, no global sort at any cardinality);
     - the cuts broadcast into a single aggregate over the fact scan —
-      two scans total regardless of table size, no window over rows;
+      no window over rows;
     - the clipped mean divides a DECIMAL(38,0)-exact integer sum by the
       exact count, so it is partition-order independent (a double
       running mean is not); input must be integer-valued (cents, ids,
@@ -880,12 +764,7 @@ def winsorized_stats(
     if not (0.0 < p_lo < p_hi < 100.0):
         raise ValueError("need 0 < p_lo < p_hi < 100")
 
-    def _name(p: float) -> str:
-        return f"p{p:g}".replace(".", "_")
-
-    cuts = exact_percentiles_df(df, column, [p_lo, p_hi]).select(
-        F.col(_name(p_lo)).alias("__lo"), F.col(_name(p_hi)).alias("__hi")
-    )
+    cuts = exact_percentiles_df(df, column, [p_lo, p_hi]).toDF("__lo", "__hi")
     x = F.col(column)
     clipped = F.least(F.greatest(x, F.col("__lo")), F.col("__hi"))
     return (

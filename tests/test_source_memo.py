@@ -9,7 +9,8 @@ aggregate.  These tests pin the resolution counts and the Spark jobs per
 check, and that the memo never serves a frame across tests or mixes the
 two sides of a self-comparison.  Plain parquet sources over one path
 share one resolution; the percentile's range probe joins the
-requirement's shared aggregate.
+requirement's shared aggregate, and percentile bands and the weighted
+percentile run the same bucketed plan.
 """
 
 from __future__ import annotations
@@ -20,6 +21,11 @@ import pytest
 
 from datajudge_spark import BetweenRequirement, Condition, WithinRequirement
 from datajudge_spark.constraints.stats import KolmogorovSmirnov2Sample
+from datajudge_spark.operators.scalars import (
+    exact_percentile_df,
+    exact_percentiles_df,
+    exact_weighted_percentile_df,
+)
 from datajudge_spark.pipeline._util import cache_scope, resolve_source
 from datajudge_spark.reference import DataReference
 from datajudge_spark.sources import ParquetDataSource
@@ -183,6 +189,36 @@ def test_percentile_probe_joins_the_requirement_aggregate(spark, table):
     # the range probe ran in the mean's aggregate: the bucket histogram
     # and the target bucket's aggregate are left
     assert len(jobs) == 1 and jobs[0] <= 4, jobs
+
+
+def _operator_jobs(spark, table, tag, percentile) -> int:
+    with cache_scope():
+        df = spark.read.parquet(table)
+        return count_jobs(spark, tag, lambda: percentile(df).first())[1]
+
+
+def test_percentile_bands_jobs(spark, table):
+    single = _operator_jobs(
+        spark, table, "jobs-single",
+        lambda df: exact_percentile_df(df, "v", 50.0),
+    )
+    bands = _operator_jobs(
+        spark, table, "jobs-bands",
+        lambda df: exact_percentiles_df(df, "v", [50.0, 90.0, 99.0]),
+    )
+    # any number of targets shares the probe, the bucket histogram and
+    # the final aggregate: no private spread or persist
+    assert bands <= single + 1, (bands, single)
+
+
+def test_weighted_percentile_jobs(spark, table):
+    jobs = _operator_jobs(
+        spark, table, "jobs-weighted",
+        lambda df: exact_weighted_percentile_df(df, "v", "g", 50.0),
+    )
+    # the range probe and the bucket histogram (a shuffle map stage and
+    # a result each), then the target bucket's cumulative window
+    assert jobs <= 7, jobs
 
 
 def test_rewritten_table_is_read_fresh(spark, tmp_path):

@@ -230,6 +230,41 @@ class TestPercentileBucketRefinement:
         refined = sc.exact_percentile_df(df, "v", 75.0).first()["value"]
         assert refined == unrefined
 
+    def _two_cluster_df(self, spark):
+        # two dense clusters share one level-1 bucket, then each holds
+        # a target bucket that is refined again: two ranges in a level
+        vals = [(i / 1e6,) for i in range(2000)]
+        vals += [(0.5 + i / 1e6,) for i in range(2000)]
+        vals += [(1.0e12,), (-1.0e12,)]
+        return spark.createDataFrame(vals, "v double")
+
+    PCTS = [1.0, 25.0, 50.0, 75.0, 99.9]
+
+    def test_bands_match_naive(self, spark, monkeypatch):
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        naive = TestNonNumericPercentileProxy._naive
+        for df in (self._skewed_df(spark), self._two_cluster_df(spark)):
+            got = list(sc.exact_percentiles_df(df, "v", self.PCTS).first())
+            assert got == [naive(df, "v", p) for p in self.PCTS]
+
+    def test_weighted_matches_row_expansion(self, spark, monkeypatch):
+        from pyspark.sql import functions as F
+
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        naive = TestNonNumericPercentileProxy._naive
+        for df in (self._skewed_df(spark), self._two_cluster_df(spark)):
+            df = df.withColumn("w", (F.abs(F.hash("v")) % 3).cast("bigint"))
+            expanded = df.select(
+                F.explode(F.expr("array_repeat(v, CAST(w AS INT))")).alias("v")
+            )
+            for p in self.PCTS:
+                got = sc.exact_weighted_percentile_df(df, "v", "w", p).first()
+                assert got["value"] == naive(expanded, "v", p), p
+
 
 class TestNonNumericPercentileProxy:
     """The date/timestamp/string percentile path range-buckets on a
@@ -409,27 +444,47 @@ class TestPercentileEdgeCases:
         rows = [(5.0,)] * 200 + [(float(i),) for i in range(0, 1000, 10)]
         self._check_naive(spark.createDataFrame(rows, "v double"))
 
+    def _check_sorted_rule(self, df, values):
+        """The single-target call, the bands and the unit-weight
+        percentile over ``df``'s ``v`` against the sorted rule."""
+        from pyspark.sql import functions as F
+
+        import datajudge_spark.operators.scalars as sc
+
+        unit = df.withColumn("w", F.lit(1))
+        forms = {
+            "single": [
+                sc.exact_percentile_df(df, "v", p).first()["value"]
+                for p in self.PCTS
+            ],
+            "bands": list(
+                sc.exact_percentiles_df(df, "v", list(self.PCTS)).first()
+            ),
+            "weighted": [
+                sc.exact_weighted_percentile_df(unit, "v", "w", p)
+                .first()["value"]
+                for p in self.PCTS
+            ],
+        }
+        want = [self._sorted_rule(values, p) for p in self.PCTS]
+        for form, got in forms.items():
+            assert got == want, form
+
     def test_wide_integers(self, spark, monkeypatch):
         import datajudge_spark.operators.scalars as sc
 
         base = 2**60
         values = [base + k for k in (3, 0, 4, 1, 2)]
         df = spark.createDataFrame([(v,) for v in values], "v bigint")
-        for p in self.PCTS:
-            got = sc.exact_percentile_df(df, "v", p).first()["value"]
-            assert got == self._sorted_rule(values, p), p
+        self._check_sorted_rule(df, values)
         # a bucket of values that read as one double, past refinement
         monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 16)
         values = [base + k for k in range(100)] + [2**62]
         df = spark.createDataFrame([(v,) for v in values], "v bigint")
-        for p in self.PCTS:
-            got = sc.exact_percentile_df(df, "v", p).first()["value"]
-            assert got == self._sorted_rule(values, p), p
+        self._check_sorted_rule(df, values)
 
     def test_wide_decimals(self, spark):
         from decimal import Decimal
-
-        from datajudge_spark.operators.scalars import exact_percentile_df
 
         # 38 digits, beyond the default decimal context: built from text
         values = [
@@ -437,9 +492,26 @@ class TestPercentileEdgeCases:
         ]
         assert len(set(values)) == 5 and len({float(v) for v in values}) == 1
         df = spark.createDataFrame([(v,) for v in values], "v decimal(38,18)")
-        for p in self.PCTS:
-            got = exact_percentile_df(df, "v", p).first()["value"]
-            assert got == self._sorted_rule(values, p), p
+        self._check_sorted_rule(df, values)
+
+    def test_literal_outliers(self, spark):
+        # Catalyst folds the level-2 bucket expression on the two
+        # literal rows, which the level-1 filter excludes: the bucket
+        # number must stay in range for them too
+        from datajudge_spark.operators.scalars import (
+            exact_percentile_df,
+            exact_percentiles_df,
+        )
+
+        df = spark.sql(
+            "SELECT CAST(id AS DOUBLE) / 200001.0 AS v FROM range(200000) "
+            "UNION ALL SELECT 1e12 UNION ALL SELECT -1e12"
+        )
+        values = [i / 200001.0 for i in range(200000)] + [1e12, -1e12]
+        got = exact_percentile_df(df, "v", 50.0).first()["value"]
+        assert got == self._sorted_rule(values, 50.0)
+        bands = exact_percentiles_df(df, "v", [1.0, 99.0]).first()
+        assert list(bands) == [self._sorted_rule(values, p) for p in (1.0, 99.0)]
 
 
 class TestExactWeightedPercentile:

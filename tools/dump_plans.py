@@ -13,6 +13,9 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
+# tools/profile.py would shadow the stdlib module pyspark imports
+sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
