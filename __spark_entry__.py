@@ -29,10 +29,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # with this flag (as epoch-nanos BIGINT); TIMESTAMP(MICROS) data is
         # unaffected. normalize_event_time unifies both shapes.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        from datajudge_spark.sources import normalize_event_time
+    from datajudge_spark.sources import normalize_event_time, read_parquet
 
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events":
         df = normalize_event_time(df, "ts")
     if name in ("documents", "embeddings"):
         # single-file scans land in one partition; spread so the CPU-heavy
@@ -4955,7 +4955,7 @@ def q_streaming_late_data(spark, sf_dir):
     import os
 
     from datajudge_spark.pipeline._util import materialize_once
-    from datajudge_spark.sources import normalize_event_time
+    from datajudge_spark.sources import normalize_event_time, read_parquet
     from datajudge_spark.streaming import StreamScope, windowed_counts
 
     # keeps the watermark-flush batch: the watermark recovered from the
@@ -4965,7 +4965,7 @@ def q_streaming_late_data(spark, sf_dir):
         # write both read the normalized frame — one parquet scan, not two
         ev_all = materialize_once(
             normalize_event_time(
-                scope.session.read.parquet(f"{sf_dir}/events.parquet")
+                read_parquet(scope.session, f"{sf_dir}/events.parquet")
             ).withColumn("event_ts", F.col("ts").cast("timestamp"))
         )
         max_day = ev_all.agg(

@@ -101,10 +101,12 @@ def resolve_source(spark: SparkSession, source: DataSource) -> DataFrame:
     """``source.get_df(spark)``, resolved at most once per outermost
     open :func:`cache_scope`.
 
-    Resolving a parquet source runs a job that reads the file footers;
-    every constraint of a requirement, and both sides of a between
+    Every constraint of a requirement, and both sides of a between
     constraint over one source object or one parquet path, read the
-    same frame instead.
+    same frame.  A parquet source's footer job is not tied to this memo:
+    ``sources.read_parquet`` runs it on the first read of a path and
+    again only when the path's files or the inference confs change,
+    whatever scope reads it.
     With no scope open the source is resolved on every call.  The frame
     keeps the schema and file listing of its resolution, so a table
     rewritten between two tests is read fresh only when no scope is

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datajudge_spark.pipeline._util import materialize_once, spread
+from datajudge_spark.sources import read_parquet
 
 __all__ = [
     "cosine",
@@ -895,7 +896,7 @@ def save_ivf_index(centroids: DataFrame, path: str) -> None:
 def load_ivf_index(spark, path: str) -> DataFrame:
     """Load centroids saved by :func:`save_ivf_index` (k-row DataFrame,
     broadcast-sized — feed straight to :func:`topk_ivf`/:func:`ivf_cells`)."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def norm_stats(

@@ -6,20 +6,142 @@ schema is reflected from a live database; here a source yields a *lazy*
 DataFrame whose schema comes from the catalog / parquet footer — no
 reflection round-trip, and Catalyst sees the full plan for pushdown.
 
-Sources declare the scan; most trigger no job.  A parquet source does:
-``spark.read.parquet`` runs a job that reads the footers to infer the
-schema.  The library resolves each source through
+Sources declare the scan and trigger no job, with one exception: the
+first read of a parquet path runs a job that reads the footers to infer
+the schema.  Every parquet read of the library goes through
+:func:`read_parquet`, which memoizes the inferred schema by the files'
+identity and the session confs that shape inference; a later read of the
+unchanged files declares that schema and runs no job.  The memo holds
+schemas only, never data.  Paths on a non-local file system always pay
+the footer job.  The library resolves each source through
 ``pipeline._util.resolve_source``, once per test scope (a
-``Requirement.test`` or a lone ``Constraint.test``), so that job runs
-once per parquet path (per source object for the other sources) and
-test.
+``Requirement.test`` or a lone ``Constraint.test``), so each parquet
+path (each object for the other sources) is resolved once per test.
 """
 
 from __future__ import annotations
 
+import errno
+import os
+import stat
+import weakref
 from abc import ABC, abstractmethod
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+
+# the session confs that change the schema a parquet read infers (the
+# footer's types, the partition columns' types and names); a hadoop
+# ``fs.defaultFS`` set in the session decides what a path without a
+# scheme names
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+    "spark.sql.caseSensitive",
+    "fs.defaultFS",
+)
+
+# path -> (key, the JVM StructType a plain read inferred under that key,
+# a JVM reader declaring it in the last session that read the path); a
+# read under a new key replaces the path's entry
+_SCHEMAS: dict[str, tuple] = {}
+# SparkContext -> its JVM hadoop Configuration (one object per context)
+_HADOOP_CONFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, without the footer job when the
+    path's files and the inference confs are those of an earlier read.
+
+    The key is every file under ``path`` (relative name, size, mtime,
+    ctime and inode) and the values of ``_INFERENCE_CONFS``.  Any write
+    or ``utime`` moves a file's ctime, which no user can set back, so a
+    rewrite is read fresh unless it keeps size, inode and both times to
+    the file system's timestamp resolution.  Only local paths have a key:
+    an absolute ``file:`` path, or an absolute path without a scheme
+    while ``fs.defaultFS`` is local.  Every other path, a glob pattern,
+    and a path whose listing fails are read the plain way each time.
+    """
+    key = _schema_key(spark, path)
+    held = _SCHEMAS.get(path) if key is not None else None
+    if held is None or held[0] != key:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[path] = (key, df._jdf.schema(), None)
+        return df
+    _, schema, reader = held
+    # a reader serves every read of its session in one py4j call
+    session = spark._jsparkSession
+    if reader is None or reader[0] is not session:
+        reader = (session, session.read().schema(schema))
+        _SCHEMAS[path] = (key, schema, reader)
+    return DataFrame(reader[1].parquet(path), spark)
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    url = urlsplit(path)
+    # another scheme or host, a path relative to the JVM's working
+    # directory, or a pattern Hadoop expands: no key
+    if (
+        url.scheme not in ("", "file")
+        or url.netloc
+        or url.query
+        or url.fragment
+        or not url.path.startswith("/")
+        or any(c in url.path for c in "*?[]{}\\%")
+    ):
+        return None
+    # every conf in one py4j call rather than one call per conf
+    confs = dict.fromkeys(_INFERENCE_CONFS)
+    for line in spark.conf._jconf.getAll().mkString("\n").split("\n"):
+        name, _, value = line.partition(" -> ")
+        if name in confs:
+            confs[name] = value
+    if not url.scheme:
+        default_fs = confs["fs.defaultFS"]
+        if default_fs is None:
+            sc = spark.sparkContext
+            if sc not in _HADOOP_CONFS:
+                _HADOOP_CONFS[sc] = sc._jsc.hadoopConfiguration()
+            default_fs = _HADOOP_CONFS[sc].get("fs.defaultFS")
+        if default_fs.rstrip("/") != "file:":
+            return None
+    try:
+        files = _file_identity(url.path)
+    except OSError:
+        return None
+    return files, tuple(confs.values()), spark.sparkContext._gateway
+
+
+def _file_identity(root: str) -> tuple:
+    """``(relative name, size, mtime, ctime, inode)`` of every file under
+    ``root``, following symlinks as Spark's listing does."""
+    top = os.stat(root)
+    if not stat.S_ISDIR(top.st_mode):
+        return (("", top.st_size, top.st_mtime_ns, top.st_ctime_ns, top.st_ino),)
+    files, todo, seen = [], [("", root)], {(top.st_dev, top.st_ino)}
+    while todo:
+        rel, directory = todo.pop()
+        with os.scandir(directory) as entries:
+            for entry in entries:
+                st = entry.stat()
+                name = rel + entry.name
+                if not stat.S_ISDIR(st.st_mode):
+                    files.append(
+                        (name, st.st_size, st.st_mtime_ns, st.st_ctime_ns,
+                         st.st_ino)
+                    )
+                elif (st.st_dev, st.st_ino) in seen:
+                    raise OSError(errno.ELOOP, "directory visited twice", entry.path)
+                else:
+                    seen.add((st.st_dev, st.st_ino))
+                    todo.append((name + "/", entry.path))
+    return tuple(sorted(files))
 
 
 class DataSource(ABC):
@@ -90,7 +212,7 @@ class ParquetDataSource(DataSource):
         return self._name
 
     def get_df(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._path)
+        return read_parquet(spark, self._path)
 
     def resolution_key(self) -> object:
         # the plain read depends on the path alone; a subclass with its

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline._util import cache_scope
+from ..sources import read_parquet
 
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
@@ -192,7 +193,7 @@ class StreamScope(contextlib.ExitStack):
             os.path.join(input_dir, f"part-{n}.parquet"),
         )
         if self._like is None:
-            self._like = self.session.read.parquet(path)
+            self._like = read_parquet(self.session, path)
         return stream_parquet_like(self.session, input_dir, self._like)
 
     def drain(

@@ -1,4 +1,4 @@
-"""tools/profile.py: one layered record per query, from a clean state,
+"""tools/layers.py: one layered record per query, from a clean state,
 with the py4j counter removed afterwards."""
 
 from __future__ import annotations
@@ -12,13 +12,13 @@ import __spark_entry__ as entrymod
 
 TOOL = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools", "profile.py",
+    "tools", "layers.py",
 )
 
 
 def _load_tool():
-    # loaded under another name: "profile" is a stdlib module
-    spec = importlib.util.spec_from_file_location("profile_tool", TOOL)
+    # tools/ is a directory of scripts, not a package
+    spec = importlib.util.spec_from_file_location("layers", TOOL)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

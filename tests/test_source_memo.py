@@ -2,11 +2,14 @@
 
 ``Requirement.test`` and a lone ``Constraint.test`` resolve each data
 source once (``pipeline._util.resolve_source`` inside their
-``cache_scope``): a parquet source pays its footer job once per test, not
-once per ``get_selection``.  The KS check takes its sample sizes from
+``cache_scope``), and a parquet read declares the schema memoized by
+``sources.read_parquet`` when the files and inference confs are those of
+an earlier read: a parquet path pays its footer job once, not once per
+``get_selection`` or per test.  The KS check takes its sample sizes from
 its own statistic and the uniqueness check counts tuples and rows in one
 aggregate.  These tests pin the resolution counts and the Spark jobs per
-check, and that the memo never serves a frame across tests or mixes the
+check, that the schema memo never outlives a rewrite or a conf change,
+and that the source memo never serves a frame across tests or mixes the
 two sides of a self-comparison.  Plain parquet sources over one path
 share one resolution; the percentile's range probe joins the
 requirement's shared aggregate, and percentile bands and the weighted
@@ -15,11 +18,18 @@ percentile run the same bucketed plan.
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from datajudge_spark import BetweenRequirement, Condition, WithinRequirement
+from datajudge_spark import (
+    BetweenRequirement,
+    Condition,
+    WithinRequirement,
+    sources,
+)
 from datajudge_spark.constraints.stats import KolmogorovSmirnov2Sample
 from datajudge_spark.operators.scalars import (
     exact_percentile_df,
@@ -28,7 +38,7 @@ from datajudge_spark.operators.scalars import (
 )
 from datajudge_spark.pipeline._util import cache_scope, resolve_source
 from datajudge_spark.reference import DataReference
-from datajudge_spark.sources import ParquetDataSource
+from datajudge_spark.sources import ParquetDataSource, read_parquet
 
 from conftest import count_jobs
 
@@ -105,8 +115,9 @@ def test_ks_resolves_each_source_once(spark, table):
 def test_ks_check_jobs(spark, table):
     (constraint,) = _ks(ParquetDataSource(table), ParquetDataSource(table))
     _, jobs = count_jobs(spark, "memo-ks", lambda: constraint.test(spark))
-    # two footer jobs, the histogram and its totals probe, the bucket pass;
-    # no cross-CDF probes and no separate row-count scans
+    # at most one footer job (both sides read one path), the histogram
+    # and its totals probe, the bucket pass; no cross-CDF probes and no
+    # separate row-count scans
     assert jobs <= 8, jobs
 
 
@@ -118,7 +129,8 @@ def test_uniqueness_check_jobs(spark, table):
         spark, "memo-uniqueness", lambda: constraint.test(spark)
     )
     assert result.outcome
-    # one footer job and one aggregate: its two shuffles and the result
+    # at most one footer job and one aggregate: its two shuffles and the
+    # result
     assert jobs <= 4, jobs
 
 
@@ -151,6 +163,149 @@ def test_rewritten_path_is_read_fresh_in_the_next_scope(spark, tmp_path):
         assert "w" in second.columns and second.count() == 80
 
 
+def _footer_jobs(spark, path: str, tag: str) -> tuple:
+    """``(frame, jobs)`` of resolving a parquet source over ``path`` in a
+    fresh ``cache_scope``, as the first check of a test does."""
+    with cache_scope():
+        return count_jobs(
+            spark, tag, lambda: resolve_source(spark, ParquetDataSource(path))
+        )
+
+
+def test_unchanged_path_runs_no_footer_job_in_a_later_scope(spark, tmp_path):
+    path = str(tmp_path / "same.parquet")
+    _write(path, 50)
+    assert _footer_jobs(spark, path, "memo-first")[1] == 1
+    df, jobs = _footer_jobs(spark, path, "memo-second")
+    assert jobs == 0
+    assert df.count() == 50
+
+    def presence():
+        req = WithinRequirement.from_parquet(path)
+        req.add_column_existence_constraint(["k", "v"])
+        return req.test(spark)
+
+    results, jobs = count_jobs(spark, "memo-requirement", presence)
+    assert [r.outcome for r in results] == [True] and jobs == 0
+
+
+def test_rewrite_with_the_same_schema_is_read_fresh(spark, tmp_path):
+    path = str(tmp_path / "values.parquet")
+    pq.write_table(pa.table({"v": pa.array([1, 2, 3], pa.int64())}), path)
+    assert _footer_jobs(spark, path, "memo-values-1")[0].collect()[0][0] == 1
+    pq.write_table(pa.table({"v": pa.array([7, 8, 9], pa.int64())}), path)
+    df, jobs = _footer_jobs(spark, path, "memo-values-2")
+    assert jobs == 1
+    assert sorted(r.v for r in df.collect()) == [7, 8, 9]
+
+
+def test_same_size_rewrite_with_the_old_mtime_is_read_fresh(spark, tmp_path):
+    # two files alike in size, one column named "a" and one named "b"
+    path, other = str(tmp_path / "inplace.parquet"), str(tmp_path / "b.parquet")
+    values = pa.array(range(20), pa.int64())
+    pq.write_table(pa.table({"a": values}), path)
+    pq.write_table(pa.table({"b": values}), other)
+    with open(other, "rb") as fh:
+        rewrite = fh.read()
+    before = os.stat(path)
+    assert before.st_size == len(rewrite)
+    assert _footer_jobs(spark, path, "memo-inplace-1")[0].columns == ["a"]
+    with open(path, "r+b") as fh:
+        fh.write(rewrite)
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(path)
+    assert (after.st_ino, after.st_size, after.st_mtime_ns) == (
+        before.st_ino, before.st_size, before.st_mtime_ns
+    )
+    df, jobs = _footer_jobs(spark, path, "memo-inplace-2")
+    assert jobs == 1 and df.columns == ["b"]
+
+
+def test_nanos_as_long_toggle_reads_each_settings_schema(spark, tmp_path):
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
+    previous = spark.conf.get(conf, None)
+
+    def read(value):
+        spark.conf.set(conf, value)
+        try:
+            return read_parquet(spark, path).schema
+        except Exception as exc:  # the setting's own answer may be an error
+            return type(exc)
+
+    try:
+        seen = [read(v) for v in ("true", "false", "true", "false")]
+        spark.conf.set(conf, "false")
+        try:
+            plain_false = spark.read.parquet(path).schema
+        except Exception as exc:
+            plain_false = type(exc)
+        spark.conf.set(conf, "true")
+        plain_true = spark.read.parquet(path).schema
+    finally:
+        if previous is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, previous)
+    assert seen == [plain_true, plain_false, plain_true, plain_false]
+    assert seen[0] != seen[1]
+
+
+def test_partitioned_directory_from_the_memo_matches_a_plain_read(
+    spark, tmp_path
+):
+    root = str(tmp_path / "parts")
+    table = pa.table({
+        "p": pa.array([i % 3 for i in range(30)], pa.int64()),
+        "d": pa.array(["x", "y"] * 15),
+        "v": pa.array([float(i) for i in range(30)]),
+    })
+    pq.write_to_dataset(table, root, partition_cols=["p", "d"])
+    assert _footer_jobs(spark, root, "memo-parts-1")[1] >= 1
+    memo, jobs = _footer_jobs(spark, root, "memo-parts-2")
+    plain = spark.read.parquet(root)
+    assert jobs == 0
+    assert memo.schema == plain.schema
+    assert sorted(memo.collect()) == sorted(plain.collect())
+
+
+def test_missing_path_raises_as_a_plain_read(spark, tmp_path):
+    path = str(tmp_path / "missing.parquet")
+    with pytest.raises(Exception) as plain:
+        spark.read.parquet(path)
+    with pytest.raises(type(plain.value)):
+        read_parquet(spark, path)
+
+
+def test_glob_path_is_read_the_plain_way(spark, tmp_path):
+    # Spark expands the pattern to "ta.parquet"; a file named like the
+    # pattern itself must not stand in for what it matches
+    glob = str(tmp_path / "t[ab].parquet")
+    pq.write_table(pa.table({"x": pa.array([1], pa.int64())}), glob)
+    matched = str(tmp_path / "ta.parquet")
+    for column in ("a", "b"):
+        pq.write_table(pa.table({column: pa.array([1], pa.int64())}), matched)
+        df, jobs = count_jobs(
+            spark, f"memo-glob-{column}", lambda: read_parquet(spark, glob)
+        )
+        assert jobs == 1 and df.columns == [column]
+    assert glob not in sources._SCHEMAS
+
+
+def test_rewrites_keep_one_entry_per_path(spark, tmp_path):
+    path = str(tmp_path / "rewritten.parquet")
+    _write(path, 10)
+    read_parquet(spark, path)
+    entries = len(sources._SCHEMAS)
+    for n in range(11, 16):
+        _write(path, n, extra=n % 2 == 0)
+        assert read_parquet(spark, path).count() == n
+    assert len(sources._SCHEMAS) == entries
+    assert sum(key == path for key in sources._SCHEMAS) == 1
+
+
 def _percentile_req(src, with_mean: bool = False) -> WithinRequirement:
     req = WithinRequirement(src)
     if with_mean:
@@ -167,8 +322,9 @@ def test_lone_percentile_jobs(spark, table):
         spark, "memo-percentile", lambda: constraint.test(spark)
     )
     assert result.outcome
-    # the footer job, then the range probe, the bucket histogram and the
-    # target bucket's aggregate: a shuffle map stage and a result each
+    # at most the footer job, then the range probe, the bucket histogram
+    # and the target bucket's aggregate: a shuffle map stage and a result
+    # each
     assert jobs <= 7, jobs
 
 

@@ -4,18 +4,16 @@ contract query at sf0.001, as evidence for the plan properties the test
 suite asserts (pushdown, broadcasts, partial aggs, WindowGroupLimit,
 no cartesian products, no single-partition windows).
 
-Run:  PYTHONPATH=/root/repo python tools/dump_plans.py
+Run:  python tools/dump_plans.py
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TOOLS = os.path.join(REPO, "tools")
-# tools/profile.py would shadow the stdlib module pyspark imports
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -129,6 +127,7 @@ HEADLINE = [
 
 
 def main() -> None:
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
     from datajudge_spark.session import get_spark
 
     spark = get_spark("plan-dump")

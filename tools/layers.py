@@ -23,7 +23,7 @@ the passes is kept, and one JSON record per query is printed:
 - ``rows``.
 
 Usage:
-    python tools/profile.py --sf-dir DIR [--runs N] [--out FILE]
+    python tools/layers.py --sf-dir DIR [--runs N] [--out FILE]
         [--explain DIR] [query ...]
 
 ``--out`` writes the records as JSON; ``--explain`` writes each query's
@@ -39,12 +39,7 @@ import sys
 import time
 from contextlib import contextmanager
 
-TOOLS = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(TOOLS)
-# Run as a script, this file would shadow the stdlib ``profile`` module
-# that pyspark's profiler imports through cProfile.
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import calibrate, warm, warm_pool  # noqa: E402

@@ -15,6 +15,7 @@ sizes the session like bench.py (local[CPUS], large heap) instead.
 
 from __future__ import annotations
 
+import argparse
 import datetime as dt
 import json
 import math
@@ -52,9 +53,12 @@ def _normalize(rows, columns):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1_window_replica.json"
-    names = sys.argv[3:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/tmp/sf1")
+    ap.add_argument("out", nargs="?", default="/tmp/sf1_window_replica.json")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    sf_dir, out_path, names = args.sf_dir, args.out, args.names
     if not names:
         names = list(entrymod._R12_WINDOW)
         for extra in ("decontaminate_winnow", "grouped_qte"):
