@@ -27,6 +27,16 @@ Every ``test`` (the base one and each subclass override) runs in its own
 it returns, so no verdict is computed from blocks of an earlier run.
 The outermost scope (``Requirement.test`` opens one around all its
 members) also resolves each data source once.
+
+Members that still run Spark jobs after the prefetch (``_needs_spark``)
+run at the same time in ``Requirement.test``, on up to
+``_threads.MAX_THREADS`` threads with the caller's one; the others run
+in the caller's thread.  Results keep the members' order, and after
+every member finished the exception of the lowest-index member that
+raised is raised.  In the base ``test`` a between constraint whose two
+slots both still run jobs reads them on two threads (``_read_slots``).
+One constraint object never runs in two threads at once: its slot
+caches and plan attributes are not thread-safe.
 """
 
 from __future__ import annotations
@@ -41,6 +51,7 @@ from typing import Any, TypeVar
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import operators as ops
+from .._threads import can_overlap, run_overlapped
 from ..formatter import Formatter
 from ..pipeline._util import cache_scope, resolve_source
 from ..plans import render_plans
@@ -334,6 +345,64 @@ class Constraint(abc.ABC):
                 requests.append((ref, agg))
         return requests
 
+    # -- what a test still runs ------------------------------------------
+
+    #: a ``test`` override that reads Spark only through the two
+    #: retrieval slots (``NumericMean``'s, which inspects both values)
+    _test_reads_only_slots = False
+    #: the prefetched declaration is the slot's value; ``False`` when it
+    #: only starts a retrieval that runs jobs of its own
+    _prefetch_is_value = True
+
+    def _slot_needs_spark(
+        self, hook: str, ref: DataReference | None, engine: SparkSession
+    ) -> bool:
+        slot = getattr(self, hook)
+        if isinstance(slot, _SlotCache) and engine in slot:
+            return False
+        if getattr(type(self), hook) is not getattr(Constraint, hook):
+            return True
+        if ref is None:
+            return False  # a within constraint's literal target
+        return not (self._prefetch_is_value and id(ref) in self._prefetched)
+
+    def _needs_spark(self, engine: SparkSession) -> bool:
+        """Whether ``test`` on ``engine`` may still run a Spark job, given
+        the slots cached for ``engine`` and the values prefetched so far.
+        ``True`` unless the test reads only its two retrieval slots and
+        each holds its value or reads it from ``_prefetched``."""
+        cls = type(self)
+        if cls.test is not Constraint.test and not cls._test_reads_only_slots:
+            return True
+        return self._slot_needs_spark(
+            "_get_factual_value", self._ref, engine
+        ) or self._slot_needs_spark("_get_target_value", self._ref2, engine)
+
+    def _read_slots(self, engine: SparkSession) -> tuple[Any, Any]:
+        """The factual and the target value.  A between constraint whose
+        two slots both still run jobs reads them at the same time, each
+        side's source resolved first in this thread.  Overridden slots
+        may depend on each other, so they are read one after the other."""
+        cls = type(self)
+        if (
+            self._ref2 is not None
+            and all(getattr(cls, h) is getattr(Constraint, h)
+                    for h in _CACHED_HOOKS)
+            and self._slot_needs_spark("_get_factual_value", self._ref, engine)
+            and self._slot_needs_spark("_get_target_value", self._ref2, engine)
+            and can_overlap()
+        ):
+            resolve_sources(engine, [self])
+            factual, target = run_overlapped(
+                engine,
+                [
+                    functools.partial(self._get_factual_value, engine),
+                    functools.partial(self._get_target_value, engine),
+                ],
+            )
+            return factual, target
+        return self._get_factual_value(engine), self._get_target_value(engine)
+
     # -- subclass contract ----------------------------------------------
 
     def _retrieve(
@@ -360,8 +429,7 @@ class Constraint(abc.ABC):
 
     @_in_cache_scope
     def test(self, engine: SparkSession) -> TestResult:
-        factual = self._get_factual_value(engine)
-        target = self._get_target_value(engine)
+        factual, target = self._read_slots(engine)
         ok, assertion_message = self._compare(factual, target)
         if ok:
             return TestResult.success()
@@ -376,6 +444,23 @@ class Constraint(abc.ABC):
         for processor in self._output_processors or ():
             values, _ = processor(values)
         return values
+
+
+def resolve_sources(
+    engine: SparkSession, constraints: Sequence[Constraint]
+) -> None:
+    """Resolve the data source of each side of the constraints into the
+    open scope's source memo, before threads that read it start.  A
+    source that fails here is left out of the memo: its constraint
+    raises the same error from its own test."""
+    for constraint in constraints:
+        for ref in (constraint._ref, constraint._ref2):
+            if ref is None:
+                continue
+            try:
+                resolve_source(engine, ref.data_source)
+            except Exception:
+                pass
 
 
 def format_sample(sample, ref: DataReference) -> str:

@@ -187,6 +187,8 @@ class NumericMean(Constraint):
         )
         self._max_absolute_deviation = max_absolute_deviation
 
+    _test_reads_only_slots = True
+
     def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
         return ops.ScalarAgg("mean", ref)
 
@@ -249,6 +251,9 @@ class NumericPercentile(Constraint):
                 )
         self._max_absolute_deviation = max_absolute_deviation
         self._max_relative_deviation = max_relative_deviation
+
+    # the prefetched range probe only starts the percentile kernel
+    _prefetch_is_value = False
 
     def _scalar_agg(self, ref: DataReference) -> ops.ScalarAgg:
         # the (min, max, count) probe can share the requirement's scan

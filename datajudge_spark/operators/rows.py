@@ -140,19 +140,30 @@ def get_functional_dependency_violations(
     spark: SparkSession, ref: DataReference, key_columns: list[str]
 ) -> tuple[list, _Plans]:
     """Distinct tuples whose key maps to >1 distinct value combination
-    (reference db_access.py:711-737): DISTINCT cte -> GROUP BY key HAVING
-    count>1 -> semi-join back. The semi-join broadcasts when the violating
-    key set is small (it usually is), so only one wide shuffle remains."""
-    uniques = ref.get_selection(spark).distinct()
-    violating_keys = (
-        uniques.groupBy(*key_columns)
-        .agg(F.count(F.lit(1)).alias("__dj_cnt"))
-        .where(F.col("__dj_cnt") > 1)
-        .drop("__dj_cnt")
+    (reference db_access.py:711-737), in one scan and one shuffle.
+
+    The reference semi-joins the distinct tuples back to their violating
+    keys, so a key holding a NULL never violates; those rows are dropped
+    first.  The rest are hash-partitioned by key, so the DISTINCT and the
+    per-key grouping (each tuple as a positional struct) both run inside
+    the partitions.  The DISTINCT normalizes floats as before: NaNs are
+    equal and -0.0 is 0.0, also in the returned tuples.  (Two scans of the
+    semi-join plan did not share their exchange: the filters Catalyst
+    infers for the join made its two sides differ.)"""
+    selection = ref.get_selection(spark)
+    for k in key_columns:
+        selection = selection.where(F.col(k).isNotNull())
+    violations = (
+        selection.repartition(*key_columns)
+        .distinct()
+        .groupBy(*key_columns)
+        .agg(F.collect_list(F.struct("*")).alias("__dj_rows"))
+        .where(F.size("__dj_rows") > 1)
     )
-    violation_tuples = uniques.join(violating_keys, on=key_columns, how="left_semi")
-    result = [tuple(row) for row in violation_tuples.collect()]
-    return result, [violation_tuples]
+    result = [
+        tuple(row) for group in violations.collect() for row in group["__dj_rows"]
+    ]
+    return result, [violations]
 
 
 def get_column_array_agg(

@@ -116,9 +116,11 @@ def resolve_source(spark: SparkSession, source: DataSource) -> DataFrame:
     if memo is None:
         return source.get_df(spark)
     key = (source.resolution_key(), id(spark))
-    if key not in memo:
-        memo[key] = (source, spark, source.get_df(spark))
-    return memo[key][2]
+    held = memo.get(key)
+    if held is None:
+        # two threads that both missed read the frame stored first
+        held = memo.setdefault(key, (source, spark, source.get_df(spark)))
+    return held[2]
 
 
 def _owned(df: DataFrame, release: Callable[[], None]) -> DataFrame:

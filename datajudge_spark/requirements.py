@@ -12,12 +12,14 @@ the DataFrame-flavored spelling of ``from_expression(s)``.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Collection, MutableSequence, Sequence
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ._threads import can_overlap, run_overlapped
 from .condition import Condition
 from .operators.uniques import DEFAULT_MAX_UNIQUES
 from .constraints import column as column_constraints
@@ -31,7 +33,7 @@ from .constraints import row as row_constraints
 from .constraints import stats as stats_constraints
 from .constraints import uniques as uniques_constraints
 from .constraints import varchar as varchar_constraints
-from .constraints.base import Constraint, TestResult
+from .constraints.base import Constraint, TestResult, resolve_sources
 from .operators import get_date_growth_rate, run_scalar_aggs
 from .pipeline._util import cache_scope, resolve_source
 from .reference import DataReference
@@ -71,16 +73,66 @@ class Requirement(MutableSequence[Constraint]):
         return len(self._constraints)
 
     def test(self, engine: SparkSession) -> list[TestResult]:
-        # one scope around every member: each source is resolved once
+        """Test every member on ``engine``; the results keep the
+        members' order.
+
+        One ``cache_scope`` spans the members, so each source is
+        resolved once.  The scalar aggregates they declare are computed
+        first, one fused aggregate per source (``_prefetch_scalars``).
+        A member that this serves, or whose retrieval slots are cached,
+        then runs in the caller's thread.  When at least two members
+        still run Spark jobs, those run at the same time on up to
+        ``_threads.MAX_THREADS`` threads, the caller's one included
+        (``_threads.run_overlapped``).  Their sources are resolved first
+        in the caller's thread, and a constraint object listed twice
+        runs its occurrences one after the other in one thread.
+
+        Every member runs even if another raises; then the exception of
+        the lowest-index member that raised is raised.  Without pinned
+        threads the members run one after another and the first
+        exception stops them.
+        """
         with cache_scope():
             _prefetch_scalars(engine, self._constraints)
             try:
-                return [constraint.test(engine) for constraint in self]
+                return _test_members(engine, self._constraints)
             finally:
                 # a check that raised before reading its prefetched value
                 # must not read it in a later test
                 for constraint in self:
                     constraint._prefetched.clear()
+
+
+def _test_members(
+    engine: SparkSession, constraints: list[Constraint]
+) -> list[TestResult]:
+    # each constraint object once, with the indices it is listed at
+    listed: dict[int, list[int]] = {}
+    for index, constraint in enumerate(constraints):
+        listed.setdefault(id(constraint), []).append(index)
+    busy, served = [], []
+    for indices in listed.values():
+        needs_spark = constraints[indices[0]]._needs_spark(engine)
+        (busy if needs_spark else served).append(indices)
+    if len(busy) < 2 or not can_overlap():
+        return [constraint.test(engine) for constraint in constraints]
+    resolve_sources(engine, [constraints[indices[0]] for indices in busy])
+    outcomes: list = [None] * len(constraints)
+
+    def run(indices: list[int]) -> None:
+        for index in indices:
+            try:
+                outcomes[index] = (True, constraints[index].test(engine))
+            except Exception as exc:
+                outcomes[index] = (False, exc)
+
+    for indices in served:
+        run(indices)
+    run_overlapped(engine, [functools.partial(run, indices) for indices in busy])
+    for ok, value in outcomes:
+        if not ok:
+            raise value
+    return [value for _, value in outcomes]
 
 
 def _prefetch_scalars(engine: SparkSession, constraints: list[Constraint]) -> None:

@@ -48,9 +48,13 @@ _INFERENCE_CONFS = (
 
 # path -> (key, the JVM StructType a plain read inferred under that key,
 # a JVM reader declaring it in the last session that read the path); a
-# read under a new key replaces the path's entry
+# read under a new key replaces the path's entry.  Threads may read a
+# path at once: each entry is replaced whole, by one assignment of a
+# tuple that is never mutated, so a reader sees an old entry or a new
+# one; two threads that both missed store equal entries.
 _SCHEMAS: dict[str, tuple] = {}
-# SparkContext -> its JVM hadoop Configuration (one object per context)
+# SparkContext -> its JVM hadoop Configuration (one object per context;
+# two threads that both missed store the same one)
 _HADOOP_CONFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 

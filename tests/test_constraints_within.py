@@ -326,6 +326,28 @@ class TestMiscs:
         req.add_functional_dependency_constraint(["a"], ["c"])  # fail
         assert outcomes(req, spark) == [True, False]
 
+    def test_functional_dependency_nulls_nans_and_signed_zeros(self, spark):
+        # a NULL in the key never violates; NaN keys are one key and
+        # -0.0 is 0.0, in keys and in values, as the DISTINCT +
+        # semi-join formulation of the reference gives
+        from datajudge_spark import operators as ops
+        from conftest import make_ref
+
+        nan, inf = float("nan"), float("inf")
+        df = spark.createDataFrame(
+            [(1.0, -0.0, 1), (1.0, 0.0, 1), (nan, 1.0, 1), (nan, 2.0, 1),
+             (-0.0, 5.0, 1), (0.0, 6.0, 1), (None, 1.0, 1), (None, 2.0, 1),
+             (2.0, nan, 1), (2.0, nan, 1), (3.0, inf, 1), (3.0, nan, 1),
+             (4.0, 1.0, None), (4.0, 1.0, 2), (5.0, 1.0, None), (5.0, 2.0, None)],
+            "k double, v double, m int",
+        ).repartition(4)
+        ref = make_ref(df, "fd_floats", ["k", "m", "v"])
+        got, _ = ops.get_functional_dependency_violations(spark, ref, ["k", "m"])
+        assert sorted(map(repr, got)) == sorted(map(repr, [
+            (0.0, 1, 5.0), (0.0, 1, 6.0), (3.0, 1, inf), (3.0, 1, nan),
+            (nan, 1, 1.0), (nan, 1, 2.0),
+        ]))
+
     def test_primary_key_definition(self, spark, int_table1):
         clear_primary_keys()
         declare_primary_keys("int_table1", ["col_int"])

@@ -1251,3 +1251,25 @@ def test_scalar_constraints_share_one_scan(spark):
     assert "partial_" not in final
     assert "partial_count" in partial and "partial_max" in partial
     assert plan.index(final) < plan.index(partial) < plan.index("FileScan")
+
+
+def test_functional_dependency_one_scan_one_exchange(spark):
+    # one hash exchange by key feeds both the DISTINCT and the per-key
+    # grouping; no semi-join scans the source a second time
+    from datajudge_spark import Condition
+    from datajudge_spark.operators import get_functional_dependency_violations
+    from datajudge_spark.reference import DataReference
+    from datajudge_spark.sources import ParquetDataSource
+
+    ref = DataReference(
+        ParquetDataSource(f"{SF_DIR}/lineitem.parquet"),
+        ["l_orderkey", "l_linenumber", "l_returnflag"],
+        Condition(raw_string="l_quantity > 5"),
+    )
+    _, (df,) = get_functional_dependency_violations(
+        spark, ref, ["l_orderkey", "l_linenumber"]
+    )
+    final = _executed_plan(df).split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1, final
+    assert final.count("Exchange") == 1, final
+    assert "Join" not in final, final

@@ -48,3 +48,24 @@ def test_one_clean_layered_record_per_query(spark):
     assert recs["mad_outliers"]["cached_read"] is True
     assert jsc.getPersistentRDDs().size() == pinned
     assert GatewayClient.send_command is send
+
+
+def test_memory_releases_counted_apart(spark):
+    # py4j's finalizer sends a release whenever the garbage collector
+    # frees a proxy; build_rt must not move with them
+    from py4j import protocol
+
+    tool = _load_tool()
+    client = spark.sparkContext._gateway._gateway_client
+    jlist = spark.sparkContext._jvm.java.util.ArrayList()
+    release = (
+        protocol.MEMORY_COMMAND_NAME
+        + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+        + jlist._target_id
+        + "\ne\n"
+    )
+    with tool._counted_round_trips() as rt:
+        assert jlist.size() == 0
+        client.send_command(release)
+    assert rt["calls"] == 1
+    assert rt["releases"] >= 1

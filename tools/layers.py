@@ -8,7 +8,10 @@ the clean state that ``bench.py`` times.  The minimum of each field over
 the passes is kept, and one JSON record per query is printed:
 
 - ``build_s``, ``build_rt``: wall time and py4j round-trips of
-  ``fn(spark, sf_dir)``, the driver-side plan build;
+  ``fn(spark, sf_dir)``, the driver-side plan build.  ``build_rt``
+  leaves out py4j's memory-release commands, which its finalizer sends
+  whenever the garbage collector frees a proxy, so it repeats exactly
+  from run to run; ``build_release_rt`` counts those;
 - ``analysis_ms``, ``optimization_ms``, ``planning_ms``: the
   ``QueryPlanningTracker`` phases of the collected frame;
 - ``exec_s``: wall time of ``collect()``;
@@ -48,15 +51,18 @@ from datajudge_spark.pipeline._util import cache_scope  # noqa: E402
 
 @contextmanager
 def _counted_round_trips():
-    """Count py4j round-trips in ``counter[0]`` while open."""
+    """Count py4j round-trips while open: memory releases in
+    ``counter["releases"]``, every other command in ``counter["calls"]``."""
+    from py4j import protocol
     from py4j.java_gateway import GatewayClient
 
-    counter = [0]
+    counter = {"calls": 0, "releases": 0}
     orig = GatewayClient.send_command
 
-    def counted(self, *a, **k):
-        counter[0] += 1
-        return orig(self, *a, **k)
+    def counted(self, command, *a, **k):
+        release = command.startswith(protocol.MEMORY_COMMAND_NAME)
+        counter["releases" if release else "calls"] += 1
+        return orig(self, command, *a, **k)
 
     GatewayClient.send_command = counted
     try:
@@ -70,9 +76,9 @@ def _run(spark, sf_dir, name, fn, tag, rt, explain_dir):
     with cache_scope():
         sc.addJobTag(tag)
         try:
-            rt0, t0 = rt[0], time.perf_counter()
+            rt0, t0 = dict(rt), time.perf_counter()
             df = fn(spark, sf_dir)
-            rt1, t1 = rt[0], time.perf_counter()
+            rt1, t1 = dict(rt), time.perf_counter()
             rows = len(df.collect())
             t2 = time.perf_counter()
         finally:
@@ -105,7 +111,8 @@ def _run(spark, sf_dir, name, fn, tag, rt, explain_dir):
         end = max(end, b)
     return {
         "build_s": round(t1 - t0, 4),
-        "build_rt": rt1 - rt0,
+        "build_rt": rt1["calls"] - rt0["calls"],
+        "build_release_rt": rt1["releases"] - rt0["releases"],
         **{f"{p}_ms": phases.get(p, 0)
            for p in ("analysis", "optimization", "planning")},
         "exec_s": round(t2 - t1, 4),
