@@ -1,10 +1,9 @@
 """Constraint kernel: ``TestResult`` + the ``Constraint`` ABC.
 
-Behavioral parity with the reference lifecycle
-(/root/reference/src/datajudge/constraints/base.py:33-309), restructured
-in this repo's idiom; the externally visible bytes — validation errors,
-descriptions, condition strings, logging-message layout — are pinned in
-tests/test_message_parity.py.
+Behavioral parity with the reference lifecycle (the reference's
+constraints/base.py), restructured in this repo's idiom; the externally
+visible bytes — validation errors, descriptions, condition strings,
+logging-message layout — are pinned in tests/test_message_parity.py.
 
 The lifecycle: a constraint pulls a *factual* value out of ``ref`` and a
 *target* value out of either ``ref2`` (a "between" constraint) or the
@@ -13,8 +12,22 @@ then ``_compare``s them.  Retrievals are cached per instance
 (``cache_size=0`` disables, ``None`` = unbounded), so a requirement can
 re-``test`` without re-running Spark actions.  On failure the optimized
 Spark plans that produced the values are rendered into the
-``TestResult`` where the reference renders compiled SQL
-(base.py:268-287).
+``TestResult`` where the reference renders compiled SQL.
+
+A statistic (constraints/stats.py) is the same lifecycle.  Its factual
+value is the summary its operator collects (``_retrieve`` also returns
+the frames behind it, for the failure plans); ``_compare`` judges it
+against bounds the constraint holds.  A two-sample statistic reads both
+sides into that one summary, and its target slot reads no data.  When
+the data leaves a statistic undefined (an empty side, a constant
+column) the verdict is an ``Undefined``: from ``_compare``, or from
+``_undefined`` when the operator raises its documented ``ValueError``.
+That mapping happens in one place, inside the cached slot, so an
+undefined statistic is not recomputed on a re-test either.  Only an
+``Undefined`` pass keeps its message (it says why the pass is vacuous);
+an ordinary pass drops it, as in the reference.  Argument errors (a
+statistic's column count) raise from ``_check_arguments`` before any
+retrieval, so they are never mapped.
 
 A constraint whose retrieval is one scalar aggregate declares it
 (``_scalar_agg``) instead of running it: ``Requirement.test`` computes
@@ -46,7 +59,7 @@ import functools
 from collections import OrderedDict
 from collections.abc import Callable, Collection, Sequence
 from dataclasses import dataclass, field
-from typing import Any, TypeVar
+from typing import Any, NamedTuple, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -96,6 +109,16 @@ class _SlotCache:
         if self._maxsize is not None and len(self._held) > self._maxsize:
             self._held.popitem(last=False)
         return value
+
+
+class Undefined(NamedTuple):
+    """The verdict on a statistic that its data leaves undefined: an
+    empty side, a constant column.  Unlike an ordinary ``(ok, message)``
+    verdict, a passing ``Undefined`` keeps its message, which says why
+    the pass is vacuous."""
+
+    ok: bool
+    message: str
 
 
 def _in_cache_scope(test: Callable[..., _T]) -> Callable[..., _T]:
@@ -192,8 +215,13 @@ class Constraint(abc.ABC):
 
     Subclasses implement ``_retrieve`` (DataReference -> value +
     contributing DataFrames) and ``_compare`` (factual, target ->
-    verdict + message), or override ``test``/the ``_get_*_value`` hooks
-    outright for multi-probe statistics.  The execution engine is a
+    verdict + message).  A statistic's value is the summary its
+    operator collects; it may declare ``_undefined`` (the verdict when
+    the operator raises its documented ``ValueError``) and
+    ``_check_arguments`` (the errors its arguments raise before any
+    Spark job), and a two-sample one overrides ``_get_target_value`` to
+    read no data.  Twelve constraints outside ``stats.py`` still
+    override ``test`` itself.  The execution engine is a
     ``SparkSession``; retrievals trigger Spark actions where the
     reference issues SQL round trips.
     """
@@ -270,14 +298,26 @@ class Constraint(abc.ABC):
     # -- retrieval slots (cached per instance, overridable) ------------
 
     def _get_factual_value(self, engine: SparkSession) -> Any:
-        value, self._factual_selections = self._retrieve(engine, self._ref)
+        value, self._factual_selections = self._read_side(engine, self._ref)
         return value
 
     def _get_target_value(self, engine: SparkSession) -> Any:
         if self._ref2 is None:
             return self._ref_value
-        value, self._target_selections = self._retrieve(engine, self._ref2)
+        value, self._target_selections = self._read_side(engine, self._ref2)
         return value
+
+    def _read_side(
+        self, engine: SparkSession, ref: DataReference
+    ) -> tuple[Any, OptionalSelections]:
+        """``_retrieve`` from ``ref``.  The ``ValueError`` an operator
+        raises on data that leaves a statistic undefined becomes the
+        class's ``_undefined`` verdict, which the slot caches like a
+        value; the failure renders the side's selection."""
+        try:
+            return self._retrieve(engine, ref)
+        except ValueError as exc:
+            return self._undefined(exc), [ref.get_selection(engine)]
 
     # -- message building blocks ---------------------------------------
 
@@ -425,16 +465,32 @@ class Constraint(abc.ABC):
     ) -> tuple[bool, str | None]:
         raise NotImplementedError()
 
+    def _undefined(self, exc: ValueError) -> Undefined:
+        """The verdict when ``_retrieve`` raised ``exc``, the documented
+        ``ValueError`` of an operator whose statistic the data leaves
+        undefined.  By default the error propagates."""
+        raise exc
+
+    def _check_arguments(self) -> None:
+        """Raise ``ValueError`` for arguments that no data can satisfy
+        (the columns a statistic reads), before any retrieval."""
+
     # -- the lifecycle ----------------------------------------------------
 
     @_in_cache_scope
     def test(self, engine: SparkSession) -> TestResult:
+        self._check_arguments()
         factual, target = self._read_slots(engine)
-        ok, assertion_message = self._compare(factual, target)
+        undefined = [v for v in (factual, target) if isinstance(v, Undefined)]
+        verdict = undefined[0] if undefined else self._compare(factual, target)
+        ok, message = verdict
         if ok:
-            return TestResult.success()
+            # only an undefined statistic explains its pass
+            return TestResult(
+                True, message if isinstance(verdict, Undefined) else None
+            )
         return TestResult.failure(
-            assertion_message,
+            message,
             self.get_description(),
             render_plans(self._factual_selections),
             render_plans(self._target_selections),

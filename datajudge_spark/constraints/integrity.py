@@ -37,8 +37,6 @@ class ForeignKey(Constraint):
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
     def test(self, engine: SparkSession) -> TestResult:
-        if self._ref2 is None:
-            raise ValueError("ForeignKey requires a parent reference (ref2).")
         from ..operators.integrity import fk_orphan_stats
 
         child = self._ref.get_selection(engine)

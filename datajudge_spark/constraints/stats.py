@@ -1,15 +1,182 @@
-"""Statistical constraints (parity: /root/reference/src/datajudge/constraints/stats.py)."""
+"""Statistical constraints (parity with the reference's
+constraints/stats.py, which has the two-sample KS test; the rest are
+extensions).
+
+Every class is a statistic on the one lifecycle of ``Constraint.test``
+(constraints/base.py).  It declares two things:
+
+- ``_retrieve``: the summary it collects (the digest rows of its
+  operator) and the frames behind them, whose plans a failure renders;
+- ``_compare``: the verdict on that summary against the bounds the
+  constraint holds, as ``(ok, message)``.
+
+The summary is read once, through the factual slot's per-instance
+cache, so a re-test runs no Spark job.  A statistic its data leaves
+undefined (an empty side, a constant column) is judged ``Undefined``:
+by ``_compare`` from the summary, or by ``_undefined`` when the
+operator raises its documented ``ValueError``.
+"""
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .. import operators as ops
-from ..operators.stats import ks_2sample_distributed
+from ..operators import diff, olap, profile, resample, scalars, skew
+from ..operators import stats as stat_ops
+from ..operators import timeseries
+from ..pipeline import decontam, dedup, similarity
+from ..pipeline._util import materialize_once
 from ..reference import DataReference
-from .base import Constraint, TestResult
+from .base import Constraint, Undefined
+
+_COUNTS = {2: "two", 3: "three", 4: "four"}
+
+
+def _rows(df: DataFrame) -> tuple[list, list[DataFrame]]:
+    """The rows ``df`` collects, and ``df`` for a failure to render."""
+    return df.collect(), [df]
+
+
+def _row(df: DataFrame) -> tuple:
+    """The first row ``df`` collects (``None`` when it has none), and
+    ``df`` for a failure to render."""
+    rows = df.collect()
+    return (rows[0] if rows else None), [df]
+
+
+def _cents(column: str):
+    """``column`` in integer cents, so sums of it are decimal-exact."""
+    return (F.col(column).cast("decimal(18,2)") * 100).cast("bigint")
+
+
+def _complete_rows(ref: DataReference, engine: SparkSession) -> DataFrame:
+    """The selection of ``ref`` where none of its columns is NULL."""
+    return ref.get_selection(engine).where(functools.reduce(
+        operator.and_, (F.col(c).isNotNull() for c in ref.get_columns())
+    ))
+
+
+def _daily_cents(ref: DataReference, engine: SparkSession) -> DataFrame:
+    """The daily sum, in cents (``__cents``), of a ``(date_column,
+    value_column)`` reference, over the rows where both are set."""
+    date_col, value_col = ref.get_columns(engine)
+    return timeseries.daily_totals(
+        _complete_rows(ref, engine), date_col, F.sum(_cents(value_col)),
+        "__cents",
+    )
+
+
+def _bootstrap_mean_ci(
+    ref: DataReference, engine: SparkSession, n_reps: int
+) -> DataFrame:
+    """The bootstrap digest of the mean of a ``(key_column,
+    value_column)`` reference, in cents."""
+    key_col, value_col = ref.get_columns(engine)
+    df = ref.get_selection(engine).where(F.col(value_col).isNotNull())
+    return resample.bootstrap_mean_ci(
+        df.select(F.col(key_col), _cents(value_col).alias("__cents")),
+        key_col,
+        "__cents",
+        n_reps=n_reps,
+    )
+
+
+def _look_counts(constraint, ref: DataReference, engine: SparkSession):
+    """The per-look counts of a sequential A/B gate."""
+    return stat_ops.sequential_look_counts(
+        ref.get_selection(engine),
+        # expr, not col: the look is often a derived grain
+        # (date_part('day', ts)), not a physical column
+        F.expr(constraint._look),
+        constraint._population_a.to_column(),
+        constraint._population_b.to_column(),
+        constraint._success.to_column(),
+    )
+
+
+def _largest_qte(grid: list, max_abs: float) -> list:
+    """The cells of a quantile-treatment-effect grid above ``max_abs``,
+    largest first."""
+    return sorted(
+        (r for r in grid if r["qte"] is not None and abs(r["qte"]) > max_abs),
+        key=lambda r: -abs(r["qte"]),
+    )
+
+
+def _lowest_q(rows: list, n: int = 5) -> list:
+    """The first ``n`` BH digest rows in ``orderBy("q_value", "group")``
+    order, NULL groups first."""
+    return sorted(
+        rows, key=lambda r: (r["q_value"], r["group"] is not None, r["group"])
+    )[:n]
+
+
+class _Statistic(Constraint):
+    """A constraint on a statistic of its data; see the module
+    docstring.  The target slot holds the literal ``ref_value``, which
+    ``_compare`` does not read: the bounds live on the instance."""
+
+    #: the columns the reference names, checked before any Spark job:
+    #: ``(count, roles)`` for ``count`` columns named ``roles`` in the
+    #: error; ``1`` for the single column of ``DataReference.get_column``
+    #: on each side, where ``_undefined`` would otherwise map its error;
+    #: ``None`` for no check
+    _columns: int | tuple[int, str] | None = None
+
+    def _check_arguments(self) -> None:
+        if self._columns == 1:
+            for ref in (self._ref, self._ref2):
+                if ref is not None:
+                    ref.get_column()
+        elif self._columns is not None:
+            count, roles = self._columns
+            columns = self._ref.get_columns()
+            if not columns or len(columns) != count:
+                raise ValueError(
+                    f"{type(self).__name__} requires exactly "
+                    f"{_COUNTS[count]} columns{roles}."
+                )
+
+
+class _TwoSample(_Statistic):
+    """A statistic of both sides at once (a two-sample test): the
+    factual slot reads the joint summary and the target slot reads no
+    data, so the summary is one slot read that ``_read_slots`` never
+    splits over two threads."""
+
+    def _get_target_value(self, engine: SparkSession) -> None:
+        return None
+
+    def _sides(self, engine: SparkSession) -> tuple[DataFrame, DataFrame]:
+        return (
+            self._ref.get_selection(engine), self._ref2.get_selection(engine)
+        )
+
+    def _aligned_sides(self, engine: SparkSession):
+        """Both selections, the second one's column renamed to the first
+        one's, and that column."""
+        col1 = self._ref.get_column(engine)
+        col2 = self._ref2.get_column(engine)
+        df1, df2 = self._sides(engine)
+        if col2 != col1:
+            df2 = df2.select(F.col(col2).alias(col1))
+        return df1, df2, col1
+
+    def _tagged_union(self, engine: SparkSession) -> DataFrame:
+        """Both sides' column as ``__v``, tagged ``a`` or ``b`` in ``__g``."""
+        d1, d2 = (
+            side.select(F.col(ref.get_column(engine)).alias("__v"),
+                        F.lit(tag).alias("__g"))
+            for side, ref, tag in zip(
+                self._sides(engine), (self._ref, self._ref2), "ab"
+            )
+        )
+        return d1.unionByName(d2)
 
 
 def _ks_one_sample_cdf(d: float, n: int) -> float:
@@ -84,7 +251,7 @@ def _ks_one_sample_cdf(d: float, n: int) -> float:
     return float(min(max(t * 10.0 ** p_exp, 0.0), 1.0))
 
 
-class KolmogorovSmirnov2Sample(Constraint):
+class KolmogorovSmirnov2Sample(_TwoSample):
     """Two-sample KS test: d-statistic computed in-engine (operators.stats),
     acceptance and p-value math on the driver (reference stats.py:13-142)."""
 
@@ -148,8 +315,8 @@ class KolmogorovSmirnov2Sample(Constraint):
     ) -> tuple[float, float | None, int, int]:
         # the sample sizes (row counts, NULLs included) come from the
         # statistic's own totals probe: no separate count scans, and no
-        # cross-CDF plan surface, which this check never renders
-        d_statistic, n_samples, m_samples = ks_2sample_distributed(
+        # cross-CDF plan surface (a failure renders the two selections)
+        d_statistic, n_samples, m_samples = stat_ops.ks_2sample_distributed(
             ref1.get_selection(engine),
             ref2.get_selection(engine),
             ref1.get_column(engine),
@@ -160,15 +327,13 @@ class KolmogorovSmirnov2Sample(Constraint):
         )
         return d_statistic, p_value, n_samples, m_samples
 
-    def test(self, engine: SparkSession) -> TestResult:
-        if self._ref2 is None:
-            raise ValueError("KolmogorovSmirnov2Sample requires ref2.")
-        d_statistic, p_value, n_samples, m_samples = self._calculate_statistic(
+    def _retrieve(self, engine: SparkSession, _):
+        return self._calculate_statistic(
             engine, self._ref, self._ref2
-        )
-        result = self.check_acceptance(
-            d_statistic, n_samples, m_samples, self._significance_level
-        )
+        ), list(self._sides(engine))
+
+    def _compare(self, summary, _):
+        d_statistic, p_value, n_samples, m_samples = summary
         assertion_text = (
             f"Null hypothesis (H0) for the 2-sample Kolmogorov-Smirnov test "
             f"was rejected, i.e., "
@@ -179,12 +344,12 @@ class KolmogorovSmirnov2Sample(Constraint):
         if p_value is not None:
             assertion_text += f" and {p_value=}"
         assertion_text += "."
-        if not result:
-            return TestResult.failure(assertion_text, self.get_description())
-        return TestResult.success()
+        return self.check_acceptance(
+            d_statistic, n_samples, m_samples, self._significance_level
+        ), assertion_text
 
 
-class PopulationStabilityIndex(Constraint):
+class PopulationStabilityIndex(_TwoSample):
     """PSI drift gate between two samples — extension, no reference
     counterpart (datajudge's only distribution test is the KS 2-sample).
 
@@ -210,43 +375,30 @@ class PopulationStabilityIndex(Constraint):
         self._lo, self._hi, self._n_buckets = lo, hi, n_buckets
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        if self._ref2 is None:
-            raise ValueError("PopulationStabilityIndex requires ref2.")
-        from ..operators.stats import psi_drift
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.psi_drift(
+            *self._aligned_sides(engine), self._lo, self._hi, self._n_buckets
+        ))
 
-        col1 = self._ref.get_column(engine)
-        col2 = self._ref2.get_column(engine)
-        df1 = self._ref.get_selection(engine)
-        df2 = self._ref2.get_selection(engine)
-        if col2 != col1:
-            from pyspark.sql import functions as F
-
-            df2 = df2.select(F.col(col2).alias(col1))
-        psi = psi_drift(
-            df1, df2, col1, self._lo, self._hi, self._n_buckets
-        ).collect()[0]["psi"]
+    def _compare(self, row, _):
+        psi = row["psi"]
         if psi is None:
             # both references selected zero (or all-null) rows: no
             # distribution to compare — a clean failure, not a TypeError
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Population stability index between {self._ref} and "
                 f"{self._target_prefix} is undefined: insufficient data "
-                "(no non-null rows in one or both references). ",
-                self.get_description(),
-            )
-        if psi <= self._max_psi:
-            return TestResult.success()
-        assertion_text = (
+                "(no non-null rows in one or both references). "
+            ))
+        return psi <= self._max_psi, (
             f"Population stability index between {self._ref} and "
             f"{self._target_prefix} is {psi}, exceeding the maximum "
             f"{self._max_psi} ({self._n_buckets} buckets over "
             f"[{self._lo}, {self._hi})). "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class HeavyHitterShare(Constraint):
+class HeavyHitterShare(_Statistic):
     """No key group may exceed a maximum share of rows — the "is one
     key hot enough to skew my joins / poison my training mix?" gate.
     Extension, no reference counterpart.
@@ -269,34 +421,31 @@ class HeavyHitterShare(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.olap import heavy_hitters
-
-        df = self._ref.get_selection(engine)
-        cols = self._ref.get_columns(engine)
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        cols = ref.get_columns(engine)
         # candidates at >= max ppm, then the exact integer strict compare
-        hh = heavy_hitters(
-            df, cols, self._max_share_ppm, include_total=True
+        hh = olap.heavy_hitters(
+            ref.get_selection(engine), cols, self._max_share_ppm,
+            include_total=True,
         ).where(
             F.col("n") * 1_000_000 > F.col("total") * self._max_share_ppm
         )
-        offenders = hh.orderBy(F.col("n").desc(), *cols).limit(20).collect()
+        return _rows(hh.orderBy(F.col("n").desc(), *cols).limit(20))
+
+    def _compare(self, offenders, _):
         if not offenders:
-            return TestResult.success()
+            return True, None
         worst = offenders[0]
-        key = tuple(worst[c] for c in cols)
-        assertion_text = (
+        key = tuple(worst[c] for c in self._ref.get_columns())
+        return False, (
             f"{self._ref} has {len(offenders)}{'+' if len(offenders) == 20 else ''} "
             f"key group(s) above {self._max_share_ppm} ppm of rows; worst "
             f"is {key} with {worst['n']} rows "
             f"(share {worst['share']}, total {worst['total']}). "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class EmbeddingNormFraction(Constraint):
+class EmbeddingNormFraction(_Statistic):
     """At least ``min_fraction`` of embedding vectors must have an L2
     norm inside [lo, hi] — the normalization health gate before any
     cosine-based dedup/ANN. Extension, no reference counterpart.
@@ -320,31 +469,28 @@ class EmbeddingNormFraction(Constraint):
             ref, ref_value=min_fraction, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..pipeline.similarity import norm_stats
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(similarity.norm_stats(
+            ref.get_selection(engine), ref.get_column(engine), None,
+            self._lo, self._hi,
+        ))
 
-        df = self._ref.get_selection(engine)
-        col = self._ref.get_column(engine)
-        row = norm_stats(df, col, None, self._lo, self._hi).collect()
-        if not row or row[0]["n_vecs"] == 0:
-            return TestResult.failure(
+    def _compare(self, row, _):
+        if row is None or row["n_vecs"] == 0:
+            return Undefined(False, (
                 f"{self._ref} has no vectors: the norm fraction is "
-                "undefined (insufficient data). ",
-                self.get_description(),
-            )
-        frac = row[0]["frac_unit"]
-        if frac >= self._min_fraction:
-            return TestResult.success()
-        assertion_text = (
-            f"{self._ref} has only fraction {frac} of {row[0]['n_vecs']} "
+                "undefined (insufficient data). "
+            ))
+        frac = row["frac_unit"]
+        return frac >= self._min_fraction, (
+            f"{self._ref} has only fraction {frac} of {row['n_vecs']} "
             f"vectors with L2 norm in [{self._lo}, {self._hi}], below the "
-            f"required {self._min_fraction} (avg norm {row[0]['avg_norm']}, "
-            f"range [{row[0]['min_norm']}, {row[0]['max_norm']}]). "
+            f"required {self._min_fraction} (avg norm {row['avg_norm']}, "
+            f"range [{row['min_norm']}, {row['max_norm']}]). "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class NeardupRecallMin(Constraint):
+class NeardupRecallMin(_Statistic):
     """Eval gate for the targeted near-dup LSH lookup: the
     micro-averaged recall of :func:`pipeline.dedup.
     query_neardup_candidates` against brute-force exact-Jaccard truth
@@ -398,11 +544,9 @@ class NeardupRecallMin(Constraint):
             ref, ref_value=min_recall, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..pipeline.dedup import query_neardup_recall
-
-        rows = query_neardup_recall(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(dedup.query_neardup_recall(
+            ref.get_selection(engine),
             self._id,
             self._text,
             self._query_ids,
@@ -411,20 +555,21 @@ class NeardupRecallMin(Constraint):
             shingle_n=self._shingle_n,
             bands=self._bands,
             rows=self._rows,
-        ).collect()
+        ))
+
+    def _compare(self, rows, _):
         total_true = sum(r["n_true"] for r in rows)
         total_hits = sum(r["n_hits"] for r in rows)
         if total_true == 0:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 f"None of the {len(rows)} query documents has a true "
                 f"near-duplicate at Jaccard >= {self._threshold}; the "
                 "recall gate is vacuous — verify the query ids exist "
-                "in the corpus before trusting this pass.",
-            )
+                "in the corpus before trusting this pass."
+            ))
         recall = total_hits / total_true
         if recall >= self._min_recall:
-            return TestResult.success()
+            return True, None
         missed = sorted(
             (
                 (r["query_id"], r["n_hits"], r["n_true"])
@@ -436,17 +581,16 @@ class NeardupRecallMin(Constraint):
         missed_str = ", ".join(
             f"{q!r} ({h}/{t})" for q, h, t in missed
         )
-        assertion_text = (
+        return False, (
             f"Near-dup lookup recall over {len(self._query_ids)} query "
             f"documents of {self._ref} is {round(recall, 6)} "
             f"({total_hits}/{total_true} true Jaccard >= "
             f"{self._threshold} pairs found), below the required "
             f"{self._min_recall}; worst queries: {missed_str}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class PoolCoverageMin(Constraint):
+class PoolCoverageMin(_Statistic):
     """Saturation gate on two capture sources: the observed distinct
     union must cover at least ``min_coverage`` of the Chapman
     capture-recapture pool estimate — "my two crawls have already seen
@@ -483,28 +627,25 @@ class PoolCoverageMin(Constraint):
             ref, ref_value=min_coverage, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..pipeline.decontam import capture_recapture
-
-        row = capture_recapture(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(decontam.capture_recapture(
+            ref.get_selection(engine),
             self._source,
             self._text,
             self._src_a,
             self._src_b,
-        ).collect()[0]
+        ))
+
+    def _compare(self, row, _):
         if not row["n_a"] or not row["n_b"]:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Pool coverage of {self._ref} is undefined: source "
                 f"{self._src_a!r} has {row['n_a']} and {self._src_b!r} "
                 f"has {row['n_b']} distinct documents (a capture is "
-                "empty). ",
-                self.get_description(),
-            )
+                "empty). "
+            ))
         coverage = row["n_union"] / row["chapman_total"]
-        if coverage >= self._min_coverage:
-            return TestResult.success()
-        assertion_text = (
+        return coverage >= self._min_coverage, (
             f"Sources {self._src_a!r} and {self._src_b!r} of {self._ref} "
             f"have captured an estimated {round(coverage, 6)} of their "
             f"document pool (union {row['n_union']} of Chapman estimate "
@@ -513,10 +654,9 @@ class PoolCoverageMin(Constraint):
             f"required {self._min_coverage} — an estimated "
             f"{row['est_unseen']} distinct documents remain unseen. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class DailyVolumeAnomaly(Constraint):
+class DailyVolumeAnomaly(_Statistic):
     """Rolling z-score gate on daily row volume: at most
     ``max_anomalies`` days may deviate more than ``threshold`` standard
     deviations from their trailing window — the "did ingestion break /
@@ -545,39 +685,32 @@ class DailyVolumeAnomaly(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import daily_totals, zscore_anomalies
-
-        df = self._ref.get_selection(engine)
-        col = self._ref.get_column(engine)
-        daily = daily_totals(
-            df, col, F.count(F.lit(1)).cast("bigint"), alias="n_rows"
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        daily = timeseries.daily_totals(
+            ref.get_selection(engine), ref.get_column(engine),
+            F.count(F.lit(1)).cast("bigint"), alias="n_rows",
         )
-        flagged = (
-            zscore_anomalies(
+        return _rows(
+            timeseries.zscore_anomalies(
                 daily, "n_rows", self._window_days, self._threshold
             )
             .where(F.col("is_anomaly"))
             .orderBy("day")
             .limit(max(self._max_anomalies + 20, 21))
-            .collect()
         )
-        if len(flagged) <= self._max_anomalies:
-            return TestResult.success()
+
+    def _compare(self, flagged, _):
         days = [(str(r["day"]), r["n_rows"], r["z"]) for r in flagged[:5]]
-        assertion_text = (
+        return len(flagged) <= self._max_anomalies, (
             f"{self._ref} has {len(flagged)} daily-volume anomalies "
             f"(|z| > {self._threshold} vs the trailing "
             f"{self._window_days}-day window), exceeding the allowed "
             f"{self._max_anomalies}. First offenders (day, rows, z): "
             f"{days}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class SnapshotDiff(Constraint):
+class SnapshotDiff(_TwoSample):
     """Bound the fraction of added/removed/changed keys between two
     snapshots of a table — the "did this load mutate more than it
     should?" CDC audit. Extension, no reference counterpart (datajudge's
@@ -609,23 +742,21 @@ class SnapshotDiff(Constraint):
         self._max_changed = max_changed_fraction
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.diff import snapshot_diff_counts
-
-        df_new = self._ref.get_selection(engine)
-        df_old = self._ref2.get_selection(engine)
-        row = snapshot_diff_counts(
+    def _retrieve(self, engine: SparkSession, _):
+        df_new, df_old = self._sides(engine)
+        return _row(diff.snapshot_diff_counts(
             df_old, df_new, self._keys, self._compare_columns
-        ).collect()[0]
+        ))
+
+    def _compare(self, row, _):
         n_old = row["n_removed"] + row["n_changed"] + row["n_unchanged"]
         n_new = row["n_added"] + row["n_changed"] + row["n_unchanged"]
         if n_old == 0 and n_new == 0:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Snapshot diff between {self._ref} and {self._target_prefix}"
                 " is undefined: both snapshots selected zero rows "
-                "(insufficient data). ",
-                self.get_description(),
-            )
+                "(insufficient data). "
+            ))
         problems = []
         checks = [
             ("added", self._max_added, row["n_added"], max(n_new, 1)),
@@ -641,19 +772,16 @@ class SnapshotDiff(Constraint):
                     f"{label} fraction {frac:.6f} ({count}/{denom}) exceeds "
                     f"{bound}"
                 )
-        if not problems:
-            return TestResult.success()
-        assertion_text = (
+        return not problems, (
             f"Snapshot diff between {self._ref} (new) and "
             f"{self._target_prefix} (old) on keys {self._keys}: "
             + "; ".join(problems)
             + f". Full digest: +{row['n_added']} -{row['n_removed']} "
             f"~{row['n_changed']} ={row['n_unchanged']}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class MadOutlierFraction(Constraint):
+class MadOutlierFraction(_Statistic):
     """At most ``max_fraction`` of values may sit further than
     ``k * 1.4826 * MAD`` from the exact median — the robust-outlier
     gate that a single extreme value cannot inflate (unlike mean/stddev
@@ -663,6 +791,8 @@ class MadOutlierFraction(Constraint):
     percentile (operators.stats.mad_outliers); one digest row reaches
     the driver.
     """
+
+    _columns = 1
 
     def __init__(
         self,
@@ -678,33 +808,29 @@ class MadOutlierFraction(Constraint):
             ref, ref_value=max_fraction, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import mad_outliers
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.mad_outliers(
+            ref.get_selection(engine), ref.get_column(engine), k=self._k
+        ))
 
-        col = self._ref.get_column(engine)
-        df = self._ref.get_selection(engine)
-        try:
-            row = mad_outliers(df, col, k=self._k).collect()[0]
-        except ValueError:
-            return TestResult.failure(
-                f"MAD outlier fraction of {self._ref} is undefined: "
-                "insufficient data (no non-null rows). ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"MAD outlier fraction of {self._ref} is undefined: "
+            "insufficient data (no non-null rows). "
+        ))
+
+    def _compare(self, row, _):
         fraction = row["outlier_fraction"]
-        if fraction <= self._max_fraction:
-            return TestResult.success()
-        assertion_text = (
+        return fraction <= self._max_fraction, (
             f"{fraction} of values of {self._ref} ({row['n_outliers']} of "
             f"{row['n_rows']}) deviate more than {self._k} * 1.4826 * MAD "
             f"(median {row['median']}, MAD {row['mad']}, threshold "
             f"{row['threshold']}) — exceeding the maximum outlier fraction "
             f"{self._max_fraction}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class WinsorizedMeanWithin(Constraint):
+class WinsorizedMeanWithin(_Statistic):
     """The winsorized mean of ``column`` (values clipped at the exact
     ``p_lo``/``p_hi`` percentiles before averaging) must sit within
     ``max_absolute_deviation`` of ``mean_value`` — the robust location
@@ -718,6 +844,8 @@ class WinsorizedMeanWithin(Constraint):
     DECIMAL(38,0)-exact integer sum by the exact count (best on integer
     domains — cents, counts — where it is engine-exact).
     """
+
+    _columns = 1
 
     def __init__(
         self,
@@ -736,31 +864,28 @@ class WinsorizedMeanWithin(Constraint):
             ref, ref_value=mean_value, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.scalars import winsorized_stats
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(scalars.winsorized_stats(
+            ref.get_selection(engine), ref.get_column(engine),
+            self._p_lo, self._p_hi,
+        ))
 
-        col = self._ref.get_column(engine)
-        df = self._ref.get_selection(engine)
-        try:
-            row = winsorized_stats(
-                df, col, self._p_lo, self._p_hi
-            ).collect()[0]
-        except (ValueError, IndexError):
-            return TestResult.failure(
-                f"Winsorized mean of {self._ref} is undefined: "
-                "empty selection or invalid percentile bounds. ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Winsorized mean of {self._ref} is undefined: "
+            "empty selection or invalid percentile bounds. "
+        ))
+
+    def _compare(self, row, _):
+        if row is None:
+            return self._undefined(None)
         if row["n"] == 0 or row["winsorized_mean"] is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Winsorized mean of {self._ref} is undefined: "
-                "no non-null rows. ",
-                self.get_description(),
-            )
+                "no non-null rows. "
+            ))
         got = row["winsorized_mean"]
-        if abs(got - self._mean_value) <= self._max_dev:
-            return TestResult.success()
-        assertion_text = (
+        return abs(got - self._mean_value) <= self._max_dev, (
             f"Winsorized mean of {self._ref} (clip at p{self._p_lo:g}="
             f"{row['lo_cut']}, p{self._p_hi:g}={row['hi_cut']}; "
             f"{row['n_clipped_lo']}+{row['n_clipped_hi']} of {row['n']} "
@@ -768,7 +893,6 @@ class WinsorizedMeanWithin(Constraint):
             f"{self._max_dev} from {self._mean_value}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
 def _gamma_q(a: float, x: float) -> float:
@@ -820,7 +944,7 @@ def _gamma_q(a: float, x: float) -> float:
     return max(0.0, min(1.0, q))
 
 
-class GiniMax(Constraint):
+class GiniMax(_Statistic):
     """Concentration gate: the exact Gini coefficient of a column may
     not exceed ``max_gini`` — "is one key/customer/document dominating
     this distribution?".  Extension, no reference counterpart.
@@ -828,6 +952,8 @@ class GiniMax(Constraint):
     Engine side is operators.stats.gini_coefficient (bucket-partitioned
     rank sums, decimal-exact); one digest row reaches the driver.
     """
+
+    _columns = 1
 
     def __init__(
         self,
@@ -839,37 +965,32 @@ class GiniMax(Constraint):
         self._max_gini = max_gini
         super().__init__(ref, ref_value=max_gini, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import gini_coefficient
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.gini_coefficient(
+            ref.get_selection(engine), ref.get_column(engine)
+        ))
 
-        col = self._ref.get_column(engine)
-        df = self._ref.get_selection(engine)
-        try:
-            row = gini_coefficient(df, col).collect()[0]
-        except ValueError:
-            return TestResult.failure(
-                f"Gini coefficient of {self._ref} is undefined: "
-                "insufficient data (no non-null rows). ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Gini coefficient of {self._ref} is undefined: "
+            "insufficient data (no non-null rows). "
+        ))
+
+    def _compare(self, row, _):
         gini = row["gini"]
         if gini is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Gini coefficient of {self._ref} is undefined "
-                "(zero total). ",
-                self.get_description(),
-            )
-        if gini <= self._max_gini:
-            return TestResult.success()
-        assertion_text = (
+                "(zero total). "
+            ))
+        return gini <= self._max_gini, (
             f"Gini coefficient of {self._ref} is {gini} "
             f"(n={row['n']}, sum={row['sum_value']}) — exceeding the "
             f"maximum {self._max_gini}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class ParetoFrontierSize(Constraint):
+class ParetoFrontierSize(_Statistic):
     """Tradeoff-shape gate: the number of DISTINCT non-dominated
     ``(x, y)`` points (2-D skyline) must lie within
     ``[min_points, max_points]``.  A collapsed frontier (1 point) means
@@ -883,6 +1004,8 @@ class ParetoFrontierSize(Constraint):
     no global sort); only the frontier rows reach the driver and only
     their COUNT is judged.
     """
+
+    _columns = 2, ": (x_column, y_column)"
 
     def __init__(
         self,
@@ -911,45 +1034,35 @@ class ParetoFrontierSize(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.olap import skyline_2d
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "ParetoFrontierSize requires exactly two columns: "
-                "(x_column, y_column)."
-            )
-        x_col, y_col = cols
-        frontier = skyline_2d(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        x_col, y_col = ref.get_columns(engine)
+        return _rows(olap.skyline_2d(
+            ref.get_selection(engine),
             x_col,
             y_col,
             minimize_x=self._minimize_x,
             maximize_y=self._maximize_y,
-        ).collect()
+        ))
+
+    def _compare(self, frontier, _):
         n = len(frontier)
-        ok = True
-        if self._max_points is not None and n > self._max_points:
-            ok = False
-        if self._min_points is not None and n < self._min_points:
-            ok = False
-        if ok:
-            return TestResult.success()
+        x_col, y_col = self._ref.get_columns()
         direction = (
             f"{'min' if self._minimize_x else 'max'} {x_col}, "
             f"{'max' if self._maximize_y else 'min'} {y_col}"
         )
-        assertion_text = (
+        return (
+            (self._max_points is None or n <= self._max_points)
+            and (self._min_points is None or n >= self._min_points)
+        ), (
             f"Pareto frontier of ({direction}) on {self._ref} has "
             f"{n} non-dominated point(s) — outside "
             f"[{self._min_points or 1}, {self._max_points or 'inf'}]. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class ChiSquaredIndependence(Constraint):
+class ChiSquaredIndependence(_Statistic):
     """Pearson chi-squared independence test between two categorical
     columns of ONE data source: fails when independence is REJECTED at
     ``significance_level`` (p-value below it).  Extension — peers the
@@ -959,6 +1072,8 @@ class ChiSquaredIndependence(Constraint):
     (operators.stats.chi_squared_independence); the p-value is the
     regularized upper incomplete gamma on the driver (no scipy).
     """
+
+    _columns = 2, ""
 
     def __init__(
         self,
@@ -974,35 +1089,28 @@ class ChiSquaredIndependence(Constraint):
             ref, ref_value=significance_level, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import chi_squared_independence
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.chi_squared_independence(
+            ref.get_selection(engine), *ref.get_columns(engine)
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "ChiSquaredIndependence requires exactly two columns."
-            )
-        df = self._ref.get_selection(engine)
-        rows = chi_squared_independence(df, cols[0], cols[1]).collect()
-        if not rows or rows[0]["dof"] is None or rows[0]["dof"] < 1:
-            return TestResult.failure(
+    def _compare(self, row, _):
+        if row is None or row["dof"] is None or row["dof"] < 1:
+            return Undefined(False, (
                 f"Chi-squared test of {self._ref} is undefined: fewer "
-                "than two observed categories per column. ",
-                self.get_description(),
-            )
-        dof, chi2 = rows[0]["dof"], rows[0]["chi2"]
+                "than two observed categories per column. "
+            ))
+        dof, chi2 = row["dof"], row["chi2"]
         p = _gamma_q(dof / 2.0, chi2 / 2.0)
-        if p >= self._significance_level:
-            return TestResult.success()
-        assertion_text = (
-            f"Columns {cols} of {self._ref} are not independent: "
-            f"chi2={chi2} (dof={dof}), p-value {p} < significance level "
-            f"{self._significance_level}. {self._condition_string} "
+        return p >= self._significance_level, (
+            f"Columns {self._ref.get_columns()} of {self._ref} are not "
+            f"independent: chi2={chi2} (dof={dof}), p-value {p} < "
+            f"significance level {self._significance_level}. "
+            f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class MannWhitneyU(Constraint):
+class MannWhitneyU(_TwoSample):
     """Two-sample Mann-Whitney U (Wilcoxon rank-sum) between a column
     of each data source: fails when the normal-approximation two-sided
     p-value (tie-corrected) drops below ``significance_level`` —
@@ -1013,6 +1121,8 @@ class MannWhitneyU(Constraint):
     once via the bucket-partitioned cumulative
     (operators.stats.mann_whitney_u) — one digest row out.
     """
+
+    _columns = 1
 
     def __init__(
         self,
@@ -1027,50 +1137,36 @@ class MannWhitneyU(Constraint):
         self._significance_level = significance_level
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.mann_whitney_u(
+            self._tagged_union(engine), "__v", "__g", "a", "b"
+        ))
 
-        from ..operators.stats import mann_whitney_u
+    def _undefined(self, exc):
+        # both sides empty: the rank histogram has no values at all
+        return Undefined(False, (
+            f"Mann-Whitney test between {self._ref} and "
+            f"{self._target_prefix} is undefined: one side has no "
+            "non-null rows. "
+        ))
 
-        col1 = self._ref.get_column(engine)
-        col2 = self._ref2.get_column(engine)
-        d1 = self._ref.get_selection(engine).select(
-            F.col(col1).alias("__v"), F.lit("a").alias("__g")
-        )
-        d2 = self._ref2.get_selection(engine).select(
-            F.col(col2).alias("__v"), F.lit("b").alias("__g")
-        )
-        try:
-            row = mann_whitney_u(
-                d1.unionByName(d2), "__v", "__g", "a", "b"
-            ).collect()[0]
-        except ValueError:
-            # both sides empty: the rank histogram has no values at all
-            row = {"n_a": 0, "n_b": 0}
+    def _compare(self, row, _):
         if not row["n_a"] or not row["n_b"]:
-            return TestResult.failure(
-                f"Mann-Whitney test between {self._ref} and "
-                f"{self._target_prefix} is undefined: one side has no "
-                "non-null rows. ",
-                self.get_description(),
-            )
+            return self._undefined(None)
         z = row["z"]
         if z is None or math.isnan(z):
             # zero variance: every value identical across both sides
-            return TestResult.success()
+            return True, None
         p = math.erfc(abs(z) / math.sqrt(2.0))  # two-sided
-        if p >= self._significance_level:
-            return TestResult.success()
-        assertion_text = (
+        return p >= self._significance_level, (
             f"Location shift between {self._ref} and {self._target_prefix}: "
             f"U={row['u_a']} (n={row['n_a']}/{row['n_b']}), z={z}, "
             f"two-sided p-value {p} < significance level "
             f"{self._significance_level}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class WassersteinMax(Constraint):
+class WassersteinMax(_TwoSample):
     """Distribution-drift gate on the exact 1-D Wasserstein (earth
     mover's) distance between a column of each source: fails when the
     distance exceeds ``max_distance`` (in the column's units).  Unlike
@@ -1081,6 +1177,8 @@ class WassersteinMax(Constraint):
     Engine side is operators.stats.wasserstein_1d (bucket-partitioned
     windows, no global sort); one digest row reaches the driver.
     """
+
+    _columns = 1
 
     def __init__(
         self,
@@ -1095,36 +1193,31 @@ class WassersteinMax(Constraint):
         self._max_distance = max_distance
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import wasserstein_1d
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.wasserstein_1d(
+            *self._sides(engine),
+            self._ref.get_column(engine),
+            self._ref2.get_column(engine),
+        ))
 
-        try:
-            row = wasserstein_1d(
-                self._ref.get_selection(engine),
-                self._ref2.get_selection(engine),
-                self._ref.get_column(engine),
-                self._ref2.get_column(engine),
-            ).collect()[0]
-        except ValueError:
-            return TestResult.failure(
-                f"Wasserstein distance between {self._ref} and "
-                f"{self._target_prefix} is undefined: insufficient data "
-                "(one or both sides have no non-null rows). ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Wasserstein distance between {self._ref} and "
+            f"{self._target_prefix} is undefined: insufficient data "
+            "(one or both sides have no non-null rows). "
+        ))
+
+    def _compare(self, row, _):
         emd = row["emd"]
-        if emd <= self._max_distance:
-            return TestResult.success()
-        assertion_text = (
+        return emd <= self._max_distance, (
             f"Wasserstein distance between {self._ref} and "
             f"{self._target_prefix} is {emd} "
             f"(n={row['n1']}/{row['n2']}) — exceeding the maximum "
             f"{self._max_distance}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class GroupedKsMax(Constraint):
+class GroupedKsMax(_Statistic):
     """Segment-drift gate: for every group of ``group_column``, the KS
     distance between the group's ``value_column`` distribution and the
     POOLED distribution may not exceed ``max_d`` — "which segment's
@@ -1137,6 +1230,8 @@ class GroupedKsMax(Constraint):
     multi-cumulative; one row per group reaches the driver.  Groups with
     no rows report as undefined (NULL d) and fail the gate explicitly.
     """
+
+    _columns = 2, ": (value_column, group_column)"
 
     def __init__(
         self,
@@ -1154,38 +1249,30 @@ class GroupedKsMax(Constraint):
         self._max_groups = max_groups
         super().__init__(ref, ref_value=max_d, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import grouped_ks
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.grouped_ks(
+            ref.get_selection(engine),
+            *ref.get_columns(engine),
+            groups=self._groups,
+            max_groups=self._max_groups,
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "GroupedKsMax requires exactly two columns: "
-                "(value_column, group_column)."
-            )
-        df = self._ref.get_selection(engine)
-        try:
-            rows = grouped_ks(
-                df,
-                cols[0],
-                cols[1],
-                groups=self._groups,
-                max_groups=self._max_groups,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Grouped KS of {cols} on {self._ref} is undefined: "
-                f"{exc} ",
-                self.get_description(),
-            )
-        undefined = [r[cols[1]] for r in rows if r["d"] is None]
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Grouped KS of {self._ref.get_columns()} on {self._ref} is "
+            f"undefined: {exc} "
+        ))
+
+    def _compare(self, rows, _):
+        value_col, group_col = self._ref.get_columns()
+        undefined = [r[group_col] for r in rows if r["d"] is None]
         violators = [
-            (r[cols[1]], r["d"], r["n"])
+            (r[group_col], r["d"], r["n"])
             for r in rows
             if r["d"] is not None and r["d"] > self._max_d
         ]
         if not undefined and not violators:
-            return TestResult.success()
+            return True, None
         parts = []
         if violators:
             listed = ", ".join(
@@ -1198,15 +1285,14 @@ class GroupedKsMax(Constraint):
             parts.append(
                 f"groups with no rows (KS undefined): {sorted(undefined)}."
             )
-        assertion_text = (
-            f"Grouped KS of {cols[0]} by {cols[1]} on {self._ref}: "
+        return False, (
+            f"Grouped KS of {value_col} by {group_col} on {self._ref}: "
             + " ".join(parts)
             + f" {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class SpearmanBounds(Constraint):
+class SpearmanBounds(_Statistic):
     """Monotone-association gate: the exact tie-averaged Spearman rho
     between two numeric columns of ONE source must lie within
     [min_rho, max_rho] — "quantity should still drive price",
@@ -1217,6 +1303,8 @@ class SpearmanBounds(Constraint):
     (bucket-partitioned rank maps, DECIMAL-exact sufficient
     statistics); one digest row reaches the driver.
     """
+
+    _columns = 2, ""
 
     def __init__(
         self,
@@ -1236,38 +1324,32 @@ class SpearmanBounds(Constraint):
             ref, ref_value=(min_rho, max_rho), name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import spearman_correlation
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.spearman_correlation(
+            ref.get_selection(engine), *ref.get_columns(engine)
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError("SpearmanBounds requires exactly two columns.")
-        df = self._ref.get_selection(engine)
-        try:
-            row = spearman_correlation(df, cols[0], cols[1]).collect()[0]
-        except ValueError:
-            row = {"n": 0, "rho": None}
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Spearman correlation of {self._ref.get_columns()} on "
+            f"{self._ref} is undefined: insufficient data (no complete "
+            "rows, or a constant column). "
+        ))
+
+    def _compare(self, row, _):
         rho = row["rho"]
         if rho is None:
-            return TestResult.failure(
-                f"Spearman correlation of {cols} on {self._ref} is "
-                "undefined: insufficient data (no complete rows, or a "
-                "constant column). ",
-                self.get_description(),
-            )
+            return self._undefined(None)
         lo = self._min_rho if self._min_rho is not None else -1.0
         hi = self._max_rho if self._max_rho is not None else 1.0
-        if lo <= rho <= hi:
-            return TestResult.success()
-        assertion_text = (
-            f"Spearman correlation of {cols} on {self._ref} is {rho} "
-            f"(n={row['n']}) — outside [{lo}, {hi}]. "
+        return lo <= rho <= hi, (
+            f"Spearman correlation of {self._ref.get_columns()} on "
+            f"{self._ref} is {rho} (n={row['n']}) — outside [{lo}, {hi}]. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class QuantileGridGapMax(Constraint):
+class QuantileGridGapMax(_Statistic):
     """Per-segment distribution-shape gate: at every decile of the
     pooled ``value_column`` distribution, each group's exact quantile
     may not sit more than ``max_abs_gap`` away from the pooled
@@ -1280,6 +1362,8 @@ class QuantileGridGapMax(Constraint):
     multi-cumulative; groups x (deciles-1) rows reach the driver.
     Groups with no rows report NULL quantiles and fail explicitly.
     """
+
+    _columns = 2, ": (value_column, group_column)"
 
     def __init__(
         self,
@@ -1303,41 +1387,33 @@ class QuantileGridGapMax(Constraint):
             ref, ref_value=max_abs_gap, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import grouped_quantile_grid
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.grouped_quantile_grid(
+            ref.get_selection(engine),
+            *ref.get_columns(engine),
+            groups=self._groups,
+            deciles=self._deciles,
+            max_groups=self._max_groups,
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "QuantileGridGapMax requires exactly two columns: "
-                "(value_column, group_column)."
-            )
-        df = self._ref.get_selection(engine)
-        try:
-            rows = grouped_quantile_grid(
-                df,
-                cols[0],
-                cols[1],
-                groups=self._groups,
-                deciles=self._deciles,
-                max_groups=self._max_groups,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Quantile grid of {cols} on {self._ref} is undefined: "
-                f"{exc} ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Quantile grid of {self._ref.get_columns()} on {self._ref} "
+            f"is undefined: {exc} "
+        ))
+
+    def _compare(self, rows, _):
+        value_col, group_col = self._ref.get_columns()
         undefined = sorted(
-            {r[cols[1]] for r in rows if r["gap"] is None}
+            {r[group_col] for r in rows if r["gap"] is None}
         )
         violators = [
-            (r[cols[1]], r["decile"], r["gap"])
+            (r[group_col], r["decile"], r["gap"])
             for r in rows
             if r["gap"] is not None and abs(r["gap"]) > self._max_abs_gap
         ]
         if not undefined and not violators:
-            return TestResult.success()
+            return True, None
         parts = []
         if violators:
             listed = ", ".join(
@@ -1352,15 +1428,14 @@ class QuantileGridGapMax(Constraint):
             parts.append(
                 f"groups with no rows (quantiles undefined): {undefined}."
             )
-        assertion_text = (
-            f"Quantile grid of {cols[0]} by {cols[1]} on {self._ref}: "
+        return False, (
+            f"Quantile grid of {value_col} by {group_col} on {self._ref}: "
             + " ".join(parts)
             + f" {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class GroupedTrendSlopeBetween(Constraint):
+class GroupedTrendSlopeBetween(_Statistic):
     """Per-segment robust-trend gate: each group's Theil-Sen slope of
     the DAILY sum of ``value_column`` over ``date_column`` must lie
     within [min_slope, max_slope] (units: value per day) — "no segment's
@@ -1375,6 +1450,8 @@ class GroupedTrendSlopeBetween(Constraint):
     the driver.  Groups with fewer than two days have no slope (NULL)
     and fail explicitly.
     """
+
+    _columns = 3, ": (date_column, value_column, group_column)"
 
     def __init__(
         self,
@@ -1398,54 +1475,41 @@ class GroupedTrendSlopeBetween(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import grouped_theil_sen
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 3:
-            raise ValueError(
-                "GroupedTrendSlopeBetween requires exactly three columns: "
-                "(date_column, value_column, group_column)."
-            )
-        date_col, value_col, group_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull()
-            & F.col(value_col).isNotNull()
-            & F.col(group_col).isNotNull()
-        )
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        date_col, value_col, group_col = ref.get_columns(engine)
+        df = _complete_rows(ref, engine)
         daily = df.groupBy(
             group_col, F.col(date_col).cast("date").alias("day")
         ).agg(F.sum(value_col).alias("__total"))
-        # discovery inside the try: a max_groups overflow must report as
-        # a failing TestResult like the other grouped gates, not abort
-        # the whole requirement run
-        try:
-            groups = self._groups
-            if groups is None:
-                rows = (
-                    df.select(F.col(group_col).alias("g"))
-                    .distinct()
-                    .limit(self._max_groups + 1)
-                    .collect()
-                )
-                if len(rows) > self._max_groups:
-                    raise ValueError(
-                        f"more than max_groups={self._max_groups} "
-                        f"distinct groups in {group_col}; pass an "
-                        "explicit `groups` list."
-                    )
-                groups = sorted(r["g"] for r in rows)
-            out = grouped_theil_sen(
-                daily, group_col, "__total", groups=groups
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Grouped Theil-Sen of {cols} on {self._ref} is "
-                f"undefined: {exc} ",
-                self.get_description(),
+        groups = self._groups
+        if groups is None:
+            rows = (
+                df.select(F.col(group_col).alias("g"))
+                .distinct()
+                .limit(self._max_groups + 1)
+                .collect()
             )
+            if len(rows) > self._max_groups:
+                # an undefined verdict like the other grouped gates', not
+                # an error that aborts the whole requirement run
+                raise ValueError(
+                    f"more than max_groups={self._max_groups} "
+                    f"distinct groups in {group_col}; pass an "
+                    "explicit `groups` list."
+                )
+            groups = sorted(r["g"] for r in rows)
+        return _rows(timeseries.grouped_theil_sen(
+            daily, group_col, "__total", groups=groups
+        ))
+
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Grouped Theil-Sen of {self._ref.get_columns()} on "
+            f"{self._ref} is undefined: {exc} "
+        ))
+
+    def _compare(self, out, _):
+        date_col, value_col, group_col = self._ref.get_columns()
         lo = self._min_slope if self._min_slope is not None else float("-inf")
         hi = self._max_slope if self._max_slope is not None else float("inf")
         undefined = sorted(
@@ -1457,7 +1521,7 @@ class GroupedTrendSlopeBetween(Constraint):
             if r["slope"] is not None and not lo <= r["slope"] <= hi
         ]
         if not undefined and not violators:
-            return TestResult.success()
+            return True, None
         parts = []
         if violators:
             listed = ", ".join(
@@ -1473,16 +1537,15 @@ class GroupedTrendSlopeBetween(Constraint):
                 f"groups with under two days (slope undefined): "
                 f"{undefined}."
             )
-        assertion_text = (
+        return False, (
             f"Grouped Theil-Sen slope of daily sum({value_col}) by "
             f"{group_col} on {self._ref}: "
             + " ".join(parts)
             + f" {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class GroupedOls2SlopeBetween(Constraint):
+class GroupedOls2SlopeBetween(_Statistic):
     """Per-group CONTROLLED-trend gate: each group's OLS coefficient on
     ``x1_column``, fit jointly with ``x2_column`` and an intercept
     (``operators.timeseries.grouped_ols2``), must lie within
@@ -1499,6 +1562,8 @@ class GroupedOls2SlopeBetween(Constraint):
     normal matrix / zero y-variance) come back NULL and fail
     explicitly.
     """
+
+    _columns = 4, ": (x1_column, x2_column, value_column, group_column)"
 
     def __init__(
         self,
@@ -1522,31 +1587,19 @@ class GroupedOls2SlopeBetween(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        x1_col, x2_col, value_col, group_col = ref.get_columns(engine)
+        return _rows(timeseries.grouped_ols2(
+            _complete_rows(ref, engine), group_col, x1_col, x2_col, value_col
+        ))
 
-        from ..operators.timeseries import grouped_ols2
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 4:
-            raise ValueError(
-                "GroupedOls2SlopeBetween requires exactly four columns: "
-                "(x1_column, x2_column, value_column, group_column)."
-            )
-        x1_col, x2_col, value_col, group_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(x1_col).isNotNull()
-            & F.col(x2_col).isNotNull()
-            & F.col(value_col).isNotNull()
-            & F.col(group_col).isNotNull()
-        )
-        out = grouped_ols2(df, group_col, x1_col, x2_col, value_col).collect()
+    def _compare(self, out, _):
+        x1_col, x2_col, value_col, group_col = self._ref.get_columns()
         if not out:
-            return TestResult.failure(
-                f"Grouped OLS of {cols} on {self._ref} is undefined: "
-                "the selection is empty. ",
-                self.get_description(),
-            )
+            return Undefined(False, (
+                f"Grouped OLS of {self._ref.get_columns()} on {self._ref} "
+                "is undefined: the selection is empty. "
+            ))
         lo = self._min_beta1 if self._min_beta1 is not None else float("-inf")
         hi = self._max_beta1 if self._max_beta1 is not None else float("inf")
         undefined = sorted(
@@ -1567,7 +1620,7 @@ class GroupedOls2SlopeBetween(Constraint):
             else []
         )
         if not undefined and not slope_viol and not r2_viol:
-            return TestResult.success()
+            return True, None
         parts = []
         if slope_viol:
             listed = ", ".join(
@@ -1589,16 +1642,15 @@ class GroupedOls2SlopeBetween(Constraint):
                 "groups with a degenerate fit (collinear regressors or "
                 f"zero variance): {undefined}."
             )
-        assertion_text = (
+        return False, (
             f"Grouped OLS of {value_col} ~ {x1_col} + {x2_col} by "
             f"{group_col} on {self._ref}: "
             + " ".join(parts)
             + f" {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class JsDivergenceMax(Constraint):
+class JsDivergenceMax(_TwoSample):
     """Jensen-Shannon drift gate between two samples — the bounded,
     symmetric companion to :class:`PopulationStabilityIndex` (JS is
     capped at ln 2 ~ 0.693 and finite on disjoint support, so one empty
@@ -1627,41 +1679,28 @@ class JsDivergenceMax(Constraint):
         self._lo, self._hi, self._n_buckets = lo, hi, n_buckets
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        if self._ref2 is None:
-            raise ValueError("JsDivergenceMax requires ref2.")
-        from ..operators.stats import js_divergence
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.js_divergence(
+            *self._aligned_sides(engine), self._lo, self._hi, self._n_buckets
+        ))
 
-        col1 = self._ref.get_column(engine)
-        col2 = self._ref2.get_column(engine)
-        df1 = self._ref.get_selection(engine)
-        df2 = self._ref2.get_selection(engine)
-        if col2 != col1:
-            from pyspark.sql import functions as F
-
-            df2 = df2.select(F.col(col2).alias(col1))
-        jsd = js_divergence(
-            df1, df2, col1, self._lo, self._hi, self._n_buckets
-        ).collect()[0]["jsd"]
+    def _compare(self, row, _):
+        jsd = row["jsd"]
         if jsd is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Jensen-Shannon divergence between {self._ref} and "
                 f"{self._target_prefix} is undefined: insufficient data "
-                "(no non-null rows in one or both references). ",
-                self.get_description(),
-            )
-        if jsd <= self._max_jsd:
-            return TestResult.success()
-        assertion_text = (
+                "(no non-null rows in one or both references). "
+            ))
+        return jsd <= self._max_jsd, (
             f"Jensen-Shannon divergence between {self._ref} and "
             f"{self._target_prefix} is {jsd}, exceeding the maximum "
             f"{self._max_jsd} ({self._n_buckets} buckets over "
             f"[{self._lo}, {self._hi})). "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class MutualInformationMax(Constraint):
+class MutualInformationMax(_Statistic):
     """Dependence-leakage gate: the mutual information between two
     columns of ONE source may not exceed ``max_mi`` nats (or, with
     ``normalized=True``, the normalized MI in [0, 1] may not exceed the
@@ -1674,6 +1713,8 @@ class MutualInformationMax(Constraint):
     Engine side is ``operators.stats.mutual_information``: one cell
     shuffle, margins aggregate the cells, one digest row out.
     """
+
+    _columns = 2, ""
 
     def __init__(
         self,
@@ -1691,38 +1732,29 @@ class MutualInformationMax(Constraint):
         self._normalized = normalized
         super().__init__(ref, ref_value=max_mi, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import mutual_information
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.mutual_information(
+            ref.get_selection(engine), *ref.get_columns(engine)
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "MutualInformationMax requires exactly two columns."
-            )
-        df = self._ref.get_selection(engine)
-        row = mutual_information(df, cols[0], cols[1]).collect()[0]
-        metric = "nmi" if self._normalized else "mi"
-        value = row[metric]
+    def _compare(self, row, _):
+        cols = self._ref.get_columns()
+        label = "Normalized mutual" if self._normalized else "Mutual"
+        value = row["nmi" if self._normalized else "mi"]
         if value is None:
-            return TestResult.failure(
-                f"{'Normalized mutual' if self._normalized else 'Mutual'} "
-                f"information of {cols} on {self._ref} is undefined: "
-                "insufficient data (no complete rows, or a constant "
-                "column under normalization). ",
-                self.get_description(),
-            )
-        if value <= self._max_mi:
-            return TestResult.success()
-        assertion_text = (
-            f"{'Normalized mutual' if self._normalized else 'Mutual'} "
-            f"information of {cols[0]} and {cols[1]} on {self._ref} is "
-            f"{value} (n={row['n']}), exceeding the maximum "
+            return Undefined(False, (
+                f"{label} information of {cols} on {self._ref} is "
+                "undefined: insufficient data (no complete rows, or a "
+                "constant column under normalization). "
+            ))
+        return value <= self._max_mi, (
+            f"{label} information of {cols[0]} and {cols[1]} on "
+            f"{self._ref} is {value} (n={row['n']}), exceeding the maximum "
             f"{self._max_mi}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class SeasonalityStrengthBounds(Constraint):
+class SeasonalityStrengthBounds(_Statistic):
     """Weekly-seasonality gate: the ANOVA R² of the daily
     ``sum(value_column)`` series on its day-of-period phase must lie
     within [min_strength, max_strength] — "this metric should breathe
@@ -1735,6 +1767,8 @@ class SeasonalityStrengthBounds(Constraint):
     driver fold.  A series with no variance (or under one day) has no
     defined strength and fails explicitly.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -1761,52 +1795,36 @@ class SeasonalityStrengthBounds(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import (
-            daily_totals,
-            seasonality_strength,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        date_col, value_col = ref.get_columns(engine)
+        daily = timeseries.daily_totals(
+            _complete_rows(ref, engine), date_col, F.sum(value_col),
+            alias="__total",
         )
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "SeasonalityStrengthBounds requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        daily = daily_totals(
-            df, date_col, F.sum(value_col), alias="__total"
-        )
-        row = seasonality_strength(
+        return _row(timeseries.seasonality_strength(
             daily, "__total", period=self._period
-        ).collect()[0]
+        ))
+
+    def _compare(self, row, _):
+        date_col, value_col = self._ref.get_columns()
         strength = row["strength"]
         if strength is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Seasonality strength of daily sum({value_col}) over "
                 f"{date_col} on {self._ref} is undefined: the series has "
-                f"no variance or no days (n_days={row['n_days']}). ",
-                self.get_description(),
-            )
+                f"no variance or no days (n_days={row['n_days']}). "
+            ))
         lo = self._min_strength if self._min_strength is not None else 0.0
         hi = self._max_strength if self._max_strength is not None else 1.0
-        if lo <= strength <= hi:
-            return TestResult.success()
-        assertion_text = (
+        return lo <= strength <= hi, (
             f"Seasonality strength of daily sum({value_col}) over "
             f"{date_col} on {self._ref} is {strength} "
             f"(n_days={row['n_days']}, period={self._period}) — outside "
             f"[{lo}, {hi}]. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class ProfileDrift(Constraint):
+class ProfileDrift(_TwoSample):
     """Multi-column profile drift gate between two snapshots: fails when
     any profiled column's mean / null fraction / distinct count shifts
     past its tolerance (``operators.profile.profile_drift``).  One
@@ -1838,29 +1856,26 @@ class ProfileDrift(Constraint):
         self._distinct_rel_tol = distinct_rel_tol
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        if self._ref2 is None:
-            raise ValueError("ProfileDrift requires ref2.")
-        from ..operators.profile import profile_drift
-
-        columns = self._ref.get_columns(engine)
-        columns2 = self._ref2.get_columns(engine)
+    def _check_arguments(self) -> None:
+        columns = self._ref.get_columns()
+        columns2 = self._ref2.get_columns()
         if columns2 != columns:
             raise ValueError(
                 "ProfileDrift requires the same column list on both "
                 f"references; got {columns} vs {columns2}."
             )
-        rows = profile_drift(
-            self._ref.get_selection(engine),
-            self._ref2.get_selection(engine),
-            columns,
+
+    def _retrieve(self, engine: SparkSession, _):
+        return _rows(profile.profile_drift(
+            *self._sides(engine),
+            self._ref.get_columns(engine),
             mean_rel_tol=self._mean_rel_tol,
             null_abs_tol=self._null_abs_tol,
             distinct_rel_tol=self._distinct_rel_tol,
-        ).collect()
+        ))
+
+    def _compare(self, rows, _):
         drifted = [r for r in rows if r["drifted"]]
-        if not drifted:
-            return TestResult.success()
         details = "; ".join(
             f"{r['col_name']}: mean {r['mean_a']} -> {r['mean_b']} "
             f"(rel delta {r['mean_rel_delta']}), null fraction "
@@ -1868,17 +1883,16 @@ class ProfileDrift(Constraint):
             f"{r['distinct_a']} -> {r['distinct_b']}"
             for r in drifted
         )
-        assertion_text = (
+        return not drifted, (
             f"Column profiles of {self._ref} drifted against "
             f"{self._target_prefix} beyond tolerance "
             f"(mean_rel_tol={self._mean_rel_tol}, "
             f"null_abs_tol={self._null_abs_tol}, "
             f"distinct_rel_tol={self._distinct_rel_tol}): {details}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CusumStabilityMax(Constraint):
+class CusumStabilityMax(_Statistic):
     """Level-shift gate: the CUSUM peak of the daily ``sum(value)``
     series may not exceed a bound — the sustained-regime-change
     detector that the local z-score anomaly gate misses (a 10% shift
@@ -1892,6 +1906,8 @@ class CusumStabilityMax(Constraint):
     ``max_cusum`` bounds the absolute peak in value units.  The failure
     message names the most likely change day.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -1916,39 +1932,24 @@ class CusumStabilityMax(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import cusum_changepoint, daily_totals
-        from ..pipeline._util import materialize_once
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "CusumStabilityMax requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = materialize_once(
-            daily_totals(df, date_col, F.sum(cents), alias="__cents")
-        )
-        rows = cusum_changepoint(daily, "__cents").collect()
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        daily = materialize_once(_daily_cents(ref, engine))
+        peak = timeseries.cusum_changepoint(daily, "__cents")
+        rows = peak.collect()
         if not rows:
+            return None, [peak]
+        mean_abs = daily.agg(F.avg(F.abs(F.col("__cents"))).alias("m"))
+        return (rows[0], mean_abs.collect()[0]["m"]), [peak, mean_abs]
+
+    def _compare(self, summary, _):
+        if summary is None:
             # Empty / all-null (date, value) selection: no series, no
             # shift — vacuously stable, consistent with the other
             # time-series gates on empty input.
-            return TestResult.success()
-        row = rows[0]
+            return True, None
+        row, mean_abs = summary
+        date_col, value_col = self._ref.get_columns()
         cusum_value = row["cusum_max"] / 100.0
-        mean_abs = daily.agg(
-            F.avg(F.abs(F.col("__cents"))).alias("m")
-        ).collect()[0]["m"]
         relative = (
             cusum_value * 100.0 / mean_abs if mean_abs else None
         )
@@ -1960,8 +1961,8 @@ class CusumStabilityMax(Constraint):
         ):
             ok = False
         if ok:
-            return TestResult.success()
-        assertion_text = (
+            return True, None
+        return False, (
             f"CUSUM peak of daily sum({value_col}) over {date_col} on "
             f"{self._ref} is {cusum_value}"
             + (
@@ -1975,10 +1976,9 @@ class CusumStabilityMax(Constraint):
             f"max_relative={self._max_relative}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class BootstrapMeanStability(Constraint):
+class BootstrapMeanStability(_Statistic):
     """The Poisson-bootstrap confidence interval of ``mean(value)`` must
     be narrow (``max_relative_width``: CI width / |point mean|) and/or
     contain ``target_value`` — "is the mean a stable number, or one fat
@@ -1993,6 +1993,8 @@ class BootstrapMeanStability(Constraint):
     Values are cent-scaled before summing (decimal-exact); the digest
     reports in value units.
     """
+
+    _columns = 2, ": (key_column, value_column)"
 
     def __init__(
         self,
@@ -2021,35 +2023,12 @@ class BootstrapMeanStability(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(_bootstrap_mean_ci(ref, engine, self._n_reps))
 
-        from ..operators.resample import bootstrap_mean_ci
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "BootstrapMeanStability requires exactly two columns: "
-                "(key_column, value_column)."
-            )
-        key_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        rows = bootstrap_mean_ci(
-            df.select(F.col(key_col), cents.alias("__cents")),
-            key_col,
-            "__cents",
-            n_reps=self._n_reps,
-        ).collect()
-        if not rows or rows[0]["n_rows"] == 0:
-            return TestResult(
-                True, "No rows; bootstrap gate holds vacuously."
-            )
-        row = rows[0]
+    def _compare(self, row, _):
+        if row is None or row["n_rows"] == 0:
+            return Undefined(True, "No rows; bootstrap gate holds vacuously.")
         lo, hi = row["boot_lo"] / 100.0, row["boot_hi"] / 100.0
         point = row["point_mean"] / 100.0
         problems = []
@@ -2073,12 +2052,10 @@ class BootstrapMeanStability(Constraint):
                 f"target mean {self._target} lies outside the bootstrap "
                 f"CI [{lo}, {hi}] of {self._ref}."
             )
-        if problems:
-            return TestResult.failure(" ".join(problems))
-        return TestResult.success()
+        return not problems, " ".join(problems)
 
 
-class TheilsUMin(Constraint):
+class TheilsUMin(_Statistic):
     """Graded functional-dependency gate: Theil's uncertainty
     coefficient ``U(A|B) = MI/H(A)`` — the fraction of A's entropy
     explained by B — must stay >= ``min_u``.  The probabilistic
@@ -2092,6 +2069,8 @@ class TheilsUMin(Constraint):
     gate fails loudly rather than passing vacuously.
     """
 
+    _columns = 2, ": (dependent_column, determinant_column)"
+
     def __init__(
         self,
         ref: DataReference,
@@ -2104,34 +2083,28 @@ class TheilsUMin(Constraint):
         self._min_u = min_u
         super().__init__(ref, ref_value=min_u, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import theils_u
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.theils_u(
+            ref.get_selection(engine), *ref.get_columns(engine)
+        ))
 
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "TheilsUMin requires exactly two columns: "
-                "(dependent_column, determinant_column)."
-            )
-        a, b = cols
-        row = theils_u(self._ref.get_selection(engine), a, b).collect()[0]
+    def _compare(self, row, _):
+        a, b = self._ref.get_columns()
         if row["n"] == 0:
-            return TestResult(True, "No rows; dependence gate is vacuous.")
+            return Undefined(True, "No rows; dependence gate is vacuous.")
         u = row["u_a_given_b"]
         if u is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Theil's U of {self._ref} is undefined: {a!r} has zero "
                 f"entropy (constant column) over {row['n']} rows."
-            )
-        if u >= self._min_u:
-            return TestResult.success()
-        return TestResult.failure(
+            ))
+        return u >= self._min_u, (
             f"{b!r} explains only {u} of {a!r}'s entropy in {self._ref} "
             f"(Theil's U), below the required {self._min_u}."
         )
 
 
-class WhiteNoiseLjungBox(Constraint):
+class WhiteNoiseLjungBox(_Statistic):
     """White-noise gate on the daily ``sum(value)`` series: the
     Ljung-Box portmanteau statistic at ``max_lag`` must stay under
     ``max_q`` (e.g. the chi-squared critical value for the chosen
@@ -2144,6 +2117,8 @@ class WhiteNoiseLjungBox(Constraint):
     calendar-bounded daily frame — decimal-exact per-lag sufficient
     statistics, fixed-order cumulative fold.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -2163,33 +2138,19 @@ class WhiteNoiseLjungBox(Constraint):
             ref, ref_value=(max_q, max_lag), name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(timeseries.autocorrelation(
+            _daily_cents(ref, engine), "__cents", self._max_lag
+        ))
 
-        from ..operators.timeseries import autocorrelation, daily_totals
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "WhiteNoiseLjungBox requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = daily_totals(df, date_col, F.sum(cents), "__cents")
-        rows = autocorrelation(daily, "__cents", self._max_lag).collect()
+    def _compare(self, rows, _):
         if not rows:
-            return TestResult(
+            return Undefined(
                 True, "No daily series; white-noise gate is vacuous."
             )
         q = rows[-1]["ljung_box_q"]
         if q <= self._max_q:
-            return TestResult.success()
+            return True, None
         worst = max(
             (r for r in rows if r["acf"] is not None),
             key=lambda r: abs(r["acf"]),
@@ -2201,13 +2162,13 @@ class WhiteNoiseLjungBox(Constraint):
             if worst is not None
             else ""
         )
-        return TestResult.failure(
+        return False, (
             f"Daily series of {self._ref} is not white noise: Ljung-Box "
             f"Q({self._max_lag}) = {q} exceeds {self._max_q}{detail}."
         )
 
 
-class MannKendallStability(Constraint):
+class MannKendallStability(_Statistic):
     """No-trend gate on the daily ``sum(value)`` series: the
     continuity-corrected Mann-Kendall z statistic must satisfy
     ``|z| <= max_abs_z`` (1.96 = the 5% two-sided normal bound).
@@ -2220,6 +2181,8 @@ class MannKendallStability(Constraint):
     all-tied series (zero variance) has undefined z and passes: a
     constant series carries no trend by construction.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -2235,35 +2198,19 @@ class MannKendallStability(Constraint):
             ref, ref_value=max_abs_z, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.mann_kendall(
+            _daily_cents(ref, engine), "__cents"
+        ))
 
-        from ..operators.timeseries import daily_totals, mann_kendall
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "MannKendallStability requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = daily_totals(df, date_col, F.sum(cents), "__cents")
-        row = mann_kendall(daily, "__cents").first()
+    def _compare(self, row, _):
         if row is None or row["n_days"] == 0:
-            return TestResult(
-                True, "No daily series; trend gate is vacuous."
-            )
+            return Undefined(True, "No daily series; trend gate is vacuous.")
         z = row["z"]
         if z is None or abs(z) <= self._max_abs_z:
-            return TestResult.success()
+            return True, None
         direction = "upward" if z > 0 else "downward"
-        return TestResult.failure(
+        return False, (
             f"Daily series of {self._ref} carries a monotonic "
             f"{direction} trend: Mann-Kendall z = {z} over "
             f"{row['n_days']} days (S = {row['s_stat']}), outside "
@@ -2271,7 +2218,7 @@ class MannKendallStability(Constraint):
         )
 
 
-class JointOutlierBound(Constraint):
+class JointOutlierBound(_Statistic):
     """Joint-outlier gate: no distinct (x, y) value pair may exceed a
     squared Mahalanobis distance of ``max_d2`` from the column pair's
     own covariance structure (optionally tolerating
@@ -2285,6 +2232,8 @@ class JointOutlierBound(Constraint):
     columns) passes: there is no joint structure to violate, and the
     1-D gates own that case.
     """
+
+    _columns = 2, ": (x, y)"
 
     def __init__(
         self,
@@ -2307,40 +2256,28 @@ class JointOutlierBound(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import mahalanobis_outliers_2d
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "JointOutlierBound requires exactly two columns: (x, y)."
-            )
-        x, y = cols
-        top = mahalanobis_outliers_2d(
-            self._ref.get_selection(engine),
-            x,
-            y,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.mahalanobis_outliers_2d(
+            ref.get_selection(engine),
+            *ref.get_columns(engine),
             k=self._max_violations + 5,
-        )
-        offenders = [
-            r for r in top.collect() if r["d2"] > self._max_d2
-        ]
-        if len(offenders) <= self._max_violations:
-            return TestResult.success()
+        ))
+
+    def _compare(self, top, _):
+        x, y = self._ref.get_columns()
+        offenders = [r for r in top if r["d2"] > self._max_d2]
         sample = ", ".join(
             f"({r['x']}, {r['y']}) d2={r['d2']} x{r['cnt']}"
             for r in offenders[:5]
         )
-        return TestResult.failure(
+        return len(offenders) <= self._max_violations, (
             f"{len(offenders)}+ distinct ({x}, {y}) pairs of {self._ref} "
             f"exceed the joint Mahalanobis bound d2 <= {self._max_d2} "
             f"(allowed: {self._max_violations}). Worst: {sample}."
         )
 
 
-class BootstrapMeanOverlap(Constraint):
+class BootstrapMeanOverlap(_Statistic):
     """Two-sample mean comparison with uncertainty: the Poisson-
     bootstrap confidence intervals of ``mean(value)`` in the two
     sources must overlap (or leave a gap of at most ``max_gap`` value
@@ -2375,46 +2312,29 @@ class BootstrapMeanOverlap(Constraint):
             ref, ref2=ref2, name=name, cache_size=cache_size
         )
 
-    def _ci(self, engine: SparkSession, ref: DataReference):
-        from pyspark.sql import functions as F
+    def _check_arguments(self) -> None:
+        for ref in (self._ref, self._ref2):
+            cols = ref.get_columns()
+            if not cols or len(cols) != 2:
+                raise ValueError(
+                    "BootstrapMeanOverlap requires two columns per "
+                    "source: (key_column, value_column)."
+                )
 
-        from ..operators.resample import bootstrap_mean_ci
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        # each side's interval is its own slot: the two run at once
+        return _row(_bootstrap_mean_ci(ref, engine, self._n_reps))
 
-        cols = ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "BootstrapMeanOverlap requires two columns per source: "
-                "(key_column, value_column)."
-            )
-        key_col, value_col = cols
-        df = ref.get_selection(engine).where(F.col(value_col).isNotNull())
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        rows = bootstrap_mean_ci(
-            df.select(F.col(key_col), cents.alias("__cents")),
-            key_col,
-            "__cents",
-            n_reps=self._n_reps,
-        ).collect()
-        if not rows or rows[0]["n_rows"] == 0:
-            return None
-        row = rows[0]
-        return (row["boot_lo"] / 100.0, row["boot_hi"] / 100.0)
-
-    def test(self, engine: SparkSession) -> TestResult:
-        ci1 = self._ci(engine, self._ref)
-        ci2 = self._ci(engine, self._ref2)
-        if ci1 is None or ci2 is None:
-            return TestResult(
-                True,
+    def _compare(self, row1, row2):
+        if any(row is None or row["n_rows"] == 0 for row in (row1, row2)):
+            return Undefined(True, (
                 "At least one side has no rows; no evidence of a mean "
-                "difference.",
-            )
+                "difference."
+            ))
+        ci1 = (row1["boot_lo"] / 100.0, row1["boot_hi"] / 100.0)
+        ci2 = (row2["boot_lo"] / 100.0, row2["boot_hi"] / 100.0)
         gap = max(ci1[0] - ci2[1], ci2[0] - ci1[1], 0.0)
-        if gap <= self._max_gap:
-            return TestResult.success()
-        return TestResult.failure(
+        return gap <= self._max_gap, (
             f"Bootstrap mean CIs of {self._ref} and {self._ref2} are "
             f"separated: [{ci1[0]}, {ci1[1]}] vs [{ci2[0]}, {ci2[1]}] "
             f"leaves a gap of {gap}, above the allowed {self._max_gap} — "
@@ -2423,7 +2343,7 @@ class BootstrapMeanOverlap(Constraint):
         )
 
 
-class MonotoneTrend(Constraint):
+class MonotoneTrend(_Statistic):
     """Monotone-calibration gate: the bucketed mean of ``y`` against
     ``x`` must be nondecreasing (or nonincreasing with
     ``decreasing=True``) up to ``max_deviation`` — measured as the
@@ -2437,6 +2357,8 @@ class MonotoneTrend(Constraint):
     over bounded grids.  ``decreasing`` negates y (isotonic fit of -y
     nonincreasing in y).  Empty selections pass vacuously.
     """
+
+    _columns = 2, ": (x, y)"
 
     def __init__(
         self,
@@ -2461,38 +2383,28 @@ class MonotoneTrend(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import isotonic_calibration
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "MonotoneTrend requires exactly two columns: (x, y)."
-            )
-        x, y = cols
-        df = self._ref.get_selection(engine)
-        cents = (F.col(y).cast("decimal(18,2)") * 100).cast("bigint")
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        x, y = ref.get_columns(engine)
         sign = -1 if self._decreasing else 1
-        rows = isotonic_calibration(
-            df.select(F.col(x), (cents * sign).alias("__y")),
+        return _rows(stat_ops.isotonic_calibration(
+            ref.get_selection(engine).select(
+                F.col(x), (_cents(y) * sign).alias("__y")
+            ),
             x,
             "__y",
             n_buckets=self._n_buckets,
-        ).collect()
+        ))
+
+    def _compare(self, rows, _):
         if not rows:
-            return TestResult(
-                True, "No rows; monotonicity holds vacuously."
-            )
+            return Undefined(True, "No rows; monotonicity holds vacuously.")
         worst = max(
             rows, key=lambda r: abs(r["mean_y"] - r["fitted"])
         )
         dev = abs(worst["mean_y"] - worst["fitted"]) / 100.0
-        if dev <= self._max_dev:
-            return TestResult.success()
+        x, y = self._ref.get_columns()
         direction = "nonincreasing" if self._decreasing else "nondecreasing"
-        return TestResult.failure(
+        return dev <= self._max_dev, (
             f"mean({y}) is not {direction} in {x} for {self._ref}: "
             f"bucket {worst['bucket']} (n={worst['n']}) deviates "
             f"{dev} from the isotonic fit, above the allowed "
@@ -2500,7 +2412,7 @@ class MonotoneTrend(Constraint):
         )
 
 
-class Rank2SampleMax(Constraint):
+class Rank2SampleMax(_TwoSample):
     """Distribution-drift gate on a rank two-sample statistic —
     Anderson-Darling A² (``statistic='ad'``, tail-weighted) or
     Cramér-von Mises T (``statistic='cvm'``, integral-squared) —
@@ -2513,6 +2425,8 @@ class Rank2SampleMax(Constraint):
     union-histogram shuffle + the shared bucket-partitioned cumulative,
     DECIMAL-exact numerators); one digest row reaches the driver.
     """
+
+    _columns = 1
 
     _LABELS = {"ad": "Anderson-Darling A²", "cvm": "Cramér-von Mises T"}
 
@@ -2533,36 +2447,31 @@ class Rank2SampleMax(Constraint):
         self._max_value = max_value
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import rank_2sample_tests
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.rank_2sample_tests(
+            *self._sides(engine),
+            self._ref.get_column(engine),
+            self._ref2.get_column(engine),
+        ))
 
-        try:
-            row = rank_2sample_tests(
-                self._ref.get_selection(engine),
-                self._ref2.get_selection(engine),
-                self._ref.get_column(engine),
-                self._ref2.get_column(engine),
-            ).collect()[0]
-        except ValueError:
-            return TestResult.failure(
-                f"{self._LABELS[self._statistic]} between {self._ref} "
-                f"and {self._target_prefix} is undefined: one or both "
-                "sides have no non-null rows. ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"{self._LABELS[self._statistic]} between {self._ref} "
+            f"and {self._target_prefix} is undefined: one or both "
+            "sides have no non-null rows. "
+        ))
+
+    def _compare(self, row, _):
         value = row[self._statistic]
-        if value <= self._max_value:
-            return TestResult.success()
-        assertion_text = (
+        return value <= self._max_value, (
             f"{self._LABELS[self._statistic]} between {self._ref} and "
             f"{self._target_prefix} is {value} "
             f"(n={row['n1']}/{row['n2']}) — exceeding the maximum "
             f"{self._max_value}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class JarqueBeraMax(Constraint):
+class JarqueBeraMax(_Statistic):
     """Normality gate: the Jarque-Bera statistic of an integer-valued
     column (cents, counts) may not exceed ``max_jb`` — "is a sigma rule
     (z-score / 3-sigma alerting) even a sound premise for this column?"
@@ -2585,32 +2494,27 @@ class JarqueBeraMax(Constraint):
         self._max_jb = max_jb
         super().__init__(ref, ref_value=max_jb, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import jarque_bera
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.jarque_bera(
+            ref.get_selection(engine), ref.get_column(engine)
+        ))
 
-        df = self._ref.get_selection(engine)
-        col = self._ref.get_column(engine)
-        rows = jarque_bera(df, col).collect()
-        row = rows[0] if rows else None
+    def _compare(self, row, _):
         if row is None or row["jb"] is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Jarque-Bera statistic of {self._ref} is undefined: "
-                "fewer than 2 non-null rows or zero variance. ",
-                self.get_description(),
-            )
-        if row["jb"] <= self._max_jb:
-            return TestResult.success()
-        assertion_text = (
+                "fewer than 2 non-null rows or zero variance. "
+            ))
+        return row["jb"] <= self._max_jb, (
             f"Jarque-Bera statistic of {self._ref} is {row['jb']} "
             f"(n={row['n']}, skewness={row['skewness']}, "
             f"kurtosis={row['kurtosis']}) — exceeding the maximum "
             f"{self._max_jb}; sigma-rule gates are unsound on this "
             f"column. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class TwoProportionZMax(Constraint):
+class TwoProportionZMax(_Statistic):
     """A/B gate: |pooled two-proportion z| between two row-filter
     populations of ONE table may not exceed ``max_abs_z`` ("the success
     rate must not have moved significantly between the control and
@@ -2641,34 +2545,30 @@ class TwoProportionZMax(Constraint):
             ref, ref_value=max_abs_z, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import two_proportion_ztest
-
-        row = two_proportion_ztest(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.two_proportion_ztest(
+            ref.get_selection(engine),
             self._population_a.to_column(),
             self._population_b.to_column(),
             self._success.to_column(),
-        ).collect()[0]
+        ))
+
+    def _compare(self, row, _):
         if row["z"] is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Two-proportion z between populations of {self._ref} "
                 f"is undefined (empty side or zero pooled variance; "
-                f"n_a={row['n_a']}, n_b={row['n_b']}). ",
-                self.get_description(),
-            )
-        if abs(row["z"]) <= self._max_abs_z:
-            return TestResult.success()
-        assertion_text = (
+                f"n_a={row['n_a']}, n_b={row['n_b']}). "
+            ))
+        return abs(row["z"]) <= self._max_abs_z, (
             f"Two-proportion z between populations of {self._ref} is "
             f"{row['z']} (rate_a={row['rate_a']} on n={row['n_a']}, "
             f"rate_b={row['rate_b']} on n={row['n_b']}) — |z| exceeds "
             f"the maximum {self._max_abs_z}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CupedDiffMax(Constraint):
+class CupedDiffMax(_Statistic):
     """Variance-reduced A/B gate: the CUPED-adjusted between-variant
     difference of an integer post-period metric may not exceed
     ``max_abs_diff`` in absolute value — "after removing what the
@@ -2701,43 +2601,35 @@ class CupedDiffMax(Constraint):
             ref, ref_value=max_abs_diff, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import cuped_adjusted_diff
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.cuped_adjusted_diff(
+            ref.get_selection(engine), self._pre, self._post, self._assign
+        ))
 
-        try:
-            row = cuped_adjusted_diff(
-                self._ref.get_selection(engine),
-                self._pre,
-                self._post,
-                self._assign,
-            ).collect()[0]
-        except ValueError as exc:
-            return TestResult.failure(
-                f"CUPED difference on {self._ref} is undefined: {exc}. ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"CUPED difference on {self._ref} is undefined: {exc}. "
+        ))
+
+    def _compare(self, row, _):
         diff = row["diff_cuped"] if row["diff_cuped"] is not None else row[
             "diff_raw"
         ]
         kind = "CUPED-adjusted" if row["diff_cuped"] is not None else "raw"
         if diff is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"CUPED difference on {self._ref} is undefined: a variant "
-                f"is empty (n_a={row['n_a']}, n_b={row['n_b']}). ",
-                self.get_description(),
-            )
-        if abs(diff) <= self._max_abs_diff:
-            return TestResult.success()
-        assertion_text = (
+                f"is empty (n_a={row['n_a']}, n_b={row['n_b']}). "
+            ))
+        return abs(diff) <= self._max_abs_diff, (
             f"{kind} A/B difference of '{self._post}' on {self._ref} is "
             f"{diff} (theta={row['theta']}, rho2={row['rho2']}, "
             f"n={row['n_a']}/{row['n_b']}) — |diff| exceeds the maximum "
             f"{self._max_abs_diff}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class LogrankMax(Constraint):
+class LogrankMax(_Statistic):
     """Survival-equality gate: the two-group log-rank χ² statistic may
     not exceed ``max_chi2`` (3.84 = 5% on χ²(1)) — "the two cohorts'
     churn/survival curves must not differ significantly".  Extension,
@@ -2765,29 +2657,23 @@ class LogrankMax(Constraint):
             ref, ref_value=max_chi2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.timeseries import logrank_test
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.logrank_test(
+            ref.get_selection(engine), self._duration, self._event,
+            self._group,
+        ))
 
-        try:
-            rows = logrank_test(
-                self._ref.get_selection(engine),
-                self._duration,
-                self._event,
-                self._group,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Log-rank test on {self._ref} is undefined: {exc}. ",
-                self.get_description(),
-            )
-        row = rows[0] if rows else None
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Log-rank test on {self._ref} is undefined: {exc}. "
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["chi2"] is None:
             # no events / zero variance: the curves carry no evidence of
             # difference — vacuously equal
-            return TestResult.success()
-        if row["chi2"] <= self._max_chi2:
-            return TestResult.success()
-        assertion_text = (
+            return True, None
+        return row["chi2"] <= self._max_chi2, (
             f"Log-rank chi-squared between the two '{self._group}' groups "
             f"of {self._ref} is {row['chi2']} "
             f"(observed={row['observed_1']}, expected={row['expected_1']}, "
@@ -2795,10 +2681,9 @@ class LogrankMax(Constraint):
             f"{self._max_chi2}; the survival curves differ. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CoxScoreMax(Constraint):
+class CoxScoreMax(_Statistic):
     """Hazard-association gate: the Cox proportional-hazards SCORE
     chi-squared for a numeric covariate may not exceed ``max_chi2``
     (3.84 = 5% on χ²(1)) — "time-to-churn must not associate with this
@@ -2829,23 +2714,18 @@ class CoxScoreMax(Constraint):
             ref, ref_value=max_chi2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.timeseries import cox_score_test
-
-        rows = cox_score_test(
-            self._ref.get_selection(engine),
-            self._duration,
-            self._event,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.cox_score_test(
+            ref.get_selection(engine), self._duration, self._event,
             self._covariate,
-        ).collect()
-        row = rows[0] if rows else None
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["chi2"] is None:
             # no events / zero information (constant covariate): the
             # data carries no evidence of association — vacuously pass
-            return TestResult.success()
-        if row["chi2"] <= self._max_chi2:
-            return TestResult.success()
-        assertion_text = (
+            return True, None
+        return row["chi2"] <= self._max_chi2, (
             f"Cox score chi-squared of hazard vs '{self._covariate}' on "
             f"{self._ref} is {row['chi2']} (U={row['u_score']}, "
             f"I={row['information']}, {row['n_events']} events over "
@@ -2853,10 +2733,9 @@ class CoxScoreMax(Constraint):
             f"{self._max_chi2}; the covariate associates with the "
             f"hazard. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class ObfCrossingMax(Constraint):
+class ObfCrossingMax(_Statistic):
     """Group-sequential A/B gate: monitoring the experiment at every
     look with an O'Brien-Fleming-shaped boundary, at most
     ``max_crossed_looks`` looks may cross — "peeking after every look
@@ -2910,36 +2789,22 @@ class ObfCrossingMax(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import (
-            obf_sequential_ztest,
-            sequential_look_counts,
-        )
-
-        looks = sequential_look_counts(
-            self._ref.get_selection(engine),
-            # expr, not col: the look is often a derived grain
-            # (date_part('day', ts)), not a physical column
-            F.expr(self._look),
-            self._population_a.to_column(),
-            self._population_b.to_column(),
-            self._success.to_column(),
-        )
-        grid = obf_sequential_ztest(
-            looks,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.obf_sequential_ztest(
+            _look_counts(self, ref, engine),
             alpha=self._alpha,
             critical_value=self._critical_value,
             n_looks=self._n_looks,
-        ).collect()
+        ))
+
+    def _compare(self, grid, _):
         crossed = sorted(
             (r for r in grid if r["crossed"]), key=lambda r: r["look"]
         )
         if len(crossed) <= self._max_crossed:
-            return TestResult.success()
+            return True, None
         first = crossed[0]
-        assertion_text = (
+        return False, (
             f"Sequential O'Brien-Fleming monitor on {self._ref} crossed "
             f"at {len(crossed)} of {len(grid)} looks (allowed "
             f"{self._max_crossed}): first at look {first['look']!r} with "
@@ -2947,10 +2812,9 @@ class ObfCrossingMax(Constraint):
             f"(info fraction {first['info_frac']}, alpha={self._alpha}). "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class QteMax(Constraint):
+class QteMax(_Statistic):
     """Distribution-wide A/B gate: no decile's quantile treatment
     effect ``|q_b − q_a|`` may exceed ``max_abs_qte`` — "the treatment
     must not have moved ANY part of the outcome distribution more than
@@ -2987,46 +2851,36 @@ class QteMax(Constraint):
             ref, ref_value=max_abs_qte, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import quantile_treatment_effect
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.quantile_treatment_effect(
+            ref.get_selection(engine),
+            self._value,
+            self._assign,
+            deciles=self._deciles,
+        ))
 
-        try:
-            grid = quantile_treatment_effect(
-                self._ref.get_selection(engine),
-                self._value,
-                self._assign,
-                deciles=self._deciles,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Quantile treatment effect on {self._ref} is undefined: "
-                f"{exc}. ",
-                self.get_description(),
-            )
-        offenders = sorted(
-            (
-                r for r in grid
-                if r["qte"] is not None and abs(r["qte"]) > self._max_abs
-            ),
-            key=lambda r: -abs(r["qte"]),
-        )
-        if not offenders:
-            return TestResult.success()
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Quantile treatment effect on {self._ref} is undefined: "
+            f"{exc}. "
+        ))
+
+    def _compare(self, grid, _):
+        offenders = _largest_qte(grid, self._max_abs)
         worst = [
             (r["decile"], r["q_a"], r["q_b"], r["qte"])
             for r in offenders[:5]
         ]
-        assertion_text = (
+        return not offenders, (
             f"{len(offenders)} of {len(grid)} deciles of "
             f"'{self._value}' between the two '{self._assign}' variants "
             f"of {self._ref} move more than {self._max_abs} — worst "
             f"(decile, q_a, q_b, qte): {worst}; the treatment effect is "
             f"not distributionally bounded. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class GroupedQteMax(Constraint):
+class GroupedQteMax(_Statistic):
     """Per-segment distribution-wide A/B gate: in EVERY segment of
     ``group_column``, no decile's quantile treatment effect may exceed
     ``max_abs_qte`` — the segment refinement of :class:`QteMax` (a
@@ -3073,52 +2927,42 @@ class GroupedQteMax(Constraint):
             ref, ref_value=max_abs_qte, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import grouped_quantile_treatment_effect
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.grouped_quantile_treatment_effect(
+            ref.get_selection(engine),
+            self._value,
+            self._assign,
+            self._group,
+            groups=self._groups,
+            deciles=self._deciles,
+            max_groups=self._max_groups,
+        ))
 
-        try:
-            grid = grouped_quantile_treatment_effect(
-                self._ref.get_selection(engine),
-                self._value,
-                self._assign,
-                self._group,
-                groups=self._groups,
-                deciles=self._deciles,
-                max_groups=self._max_groups,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Grouped quantile treatment effect on {self._ref} is "
-                f"undefined: {exc}. ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Grouped quantile treatment effect on {self._ref} is "
+            f"undefined: {exc}. "
+        ))
+
+    def _compare(self, grid, _):
         null_cells = [r for r in grid if r["qte"] is None]
         if self._require_both and null_cells:
             segs = sorted(
                 {str(r[self._group]) for r in null_cells}
             )[:5]
-            return TestResult.failure(
+            return False, (
                 f"{len(null_cells)} of {len(grid)} (segment, decile) "
                 f"cells of '{self._value}' in {self._ref} miss one "
                 f"'{self._assign}' variant entirely (segments {segs}) "
                 f"and require_both_variants is set. "
-                f"{self._condition_string} ",
-                self.get_description(),
+                f"{self._condition_string} "
             )
-        offenders = sorted(
-            (
-                r for r in grid
-                if r["qte"] is not None and abs(r["qte"]) > self._max_abs
-            ),
-            key=lambda r: -abs(r["qte"]),
-        )
-        if not offenders:
-            return TestResult.success()
+        offenders = _largest_qte(grid, self._max_abs)
         worst = [
             (r[self._group], r["decile"], r["q_a"], r["q_b"], r["qte"])
             for r in offenders[:5]
         ]
-        assertion_text = (
+        return not offenders, (
             f"{len(offenders)} of {len(grid)} (segment, decile) cells "
             f"of '{self._value}' between the two '{self._assign}' "
             f"variants of {self._ref} move more than {self._max_abs} — "
@@ -3126,10 +2970,9 @@ class GroupedQteMax(Constraint):
             f"treatment effect is not distributionally bounded in every "
             f"'{self._group}' segment. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class WinnowingContaminationMax(Constraint):
+class WinnowingContaminationMax(_TwoSample):
     """Train/eval contamination gate with a LOCAL-match guarantee: at
     most ``max_fraction`` of the eval-side documents may share any
     winnowing-selected fingerprint with the train-side corpus (any
@@ -3179,54 +3022,46 @@ class WinnowingContaminationMax(Constraint):
             ref, ref2=ref2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..pipeline._util import materialize_once
-        from ..pipeline.decontam import winnowing_contamination
-
-        train = self._ref.get_selection(engine).select(
-            F.col(self._id1).alias("_id"),
-            F.col(self._t1).alias("_txt"),
-        )
-        evals = self._ref2.get_selection(engine).select(
-            F.col(self._id2).alias("_id"),
-            F.col(self._t2).alias("_txt"),
-        )
-        out = materialize_once(
-            winnowing_contamination(
-                train, evals, "_id", "_txt", k=self._k, w=self._w
+    def _retrieve(self, engine: SparkSession, _):
+        train, evals = (
+            side.select(F.col(id_col).alias("_id"), F.col(text).alias("_txt"))
+            for side, id_col, text in zip(
+                self._sides(engine), (self._id1, self._id2),
+                (self._t1, self._t2),
             )
         )
-        d = out.agg(
+        out = decontam.winnowing_contamination(
+            train, evals, "_id", "_txt", k=self._k, w=self._w
+        )
+        bad = F.col("contamination") > self._min_overlap
+        # one aggregate: the counts and the 5 worst documents, most
+        # contaminated first, then by id (the struct's field order)
+        worst = F.struct(
+            (-F.col("contamination")).alias("rank"), "eval_id", "n_fp",
+            "n_hit", "contamination",
+        )
+        return _row(out.agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(
-                    F.col("contamination") > self._min_overlap, 1
-                ).otherwise(0)
-            ).alias("bad"),
-        ).first()
-        n, bad = int(d["n"] or 0), int(d["bad"] or 0)
+            F.sum(F.when(bad, 1).otherwise(0)).alias("bad"),
+            F.slice(
+                F.sort_array(F.collect_list(F.when(bad, worst))), 1, 5
+            ).alias("worst"),
+        ))
+
+    def _compare(self, row, _):
+        n, bad = int(row["n"] or 0), int(row["bad"] or 0)
         if n == 0:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Winnowing contamination between {self._ref} and "
                 f"{self._ref2} is undefined: the eval side "
-                "has no tokenized documents. ",
-                self.get_description(),
-            )
+                "has no tokenized documents. "
+            ))
         fraction = bad / n
-        if fraction <= self._max_fraction:
-            return TestResult.success()
         worst = [
             (r["eval_id"], r["n_fp"], r["n_hit"], r["contamination"])
-            for r in out.where(
-                F.col("contamination") > self._min_overlap
-            )
-            .orderBy(F.desc("contamination"), "eval_id")
-            .limit(5)
-            .collect()
+            for r in row["worst"]
         ]
-        assertion_text = (
+        return fraction <= self._max_fraction, (
             f"{bad} of {n} eval documents of {self._ref2} "
             f"share winnowing fingerprints (k={self._k}, w={self._w}, "
             f"min_overlap={self._min_overlap}) with the training "
@@ -3235,10 +3070,9 @@ class WinnowingContaminationMax(Constraint):
             f"(eval_id, n_fp, n_hit, contamination): {worst}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class AlwaysValidPMin(Constraint):
+class AlwaysValidPMin(_Statistic):
     """Anytime-valid A/B gate: the always-valid p-value (mixture
     sequential probability ratio over the per-look cumulative counts)
     must stay at or above ``alpha`` at every look — monitor
@@ -3287,22 +3121,12 @@ class AlwaysValidPMin(Constraint):
             ref, ref_value=alpha, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(stat_ops.avi_sequential_ztest(
+            _look_counts(self, ref, engine), phi=self._phi
+        ))
 
-        from ..operators.stats import (
-            avi_sequential_ztest,
-            sequential_look_counts,
-        )
-
-        looks = sequential_look_counts(
-            self._ref.get_selection(engine),
-            F.expr(self._look),
-            self._population_a.to_column(),
-            self._population_b.to_column(),
-            self._success.to_column(),
-        )
-        grid = avi_sequential_ztest(looks, phi=self._phi).collect()
+    def _compare(self, grid, _):
         rejected = sorted(
             (
                 r for r in grid
@@ -3312,9 +3136,9 @@ class AlwaysValidPMin(Constraint):
             key=lambda r: r["look"],
         )
         if not rejected:
-            return TestResult.success()
+            return True, None
         first = rejected[0]
-        assertion_text = (
+        return False, (
             f"The always-valid p-value of the '{self._look}'-monitored "
             f"success-rate difference on {self._ref} dropped to "
             f"{first['p_always_valid']} at look {first['look']!r} "
@@ -3322,10 +3146,9 @@ class AlwaysValidPMin(Constraint):
             f"alpha={self._alpha} — a significant difference at an "
             f"anytime-valid guarantee. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class StratifiedDiffMax(Constraint):
+class StratifiedDiffMax(_Statistic):
     """Post-stratification A/B gate: the stratum-weighted adjusted
     between-variant difference of an integer metric may not exceed
     ``max_abs_diff`` in absolute value — the categorical-covariate
@@ -3352,54 +3175,45 @@ class StratifiedDiffMax(Constraint):
             ref, ref_value=max_abs_diff, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import post_stratified_diff
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.post_stratified_diff(
+            ref.get_selection(engine), self._metric, self._assign,
+            self._stratum,
+        ))
 
-        try:
-            rows = post_stratified_diff(
-                self._ref.get_selection(engine),
-                self._metric,
-                self._assign,
-                self._stratum,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Stratified difference on {self._ref} is undefined: "
-                f"{exc}. ",
-                self.get_description(),
-            )
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Stratified difference on {self._ref} is undefined: "
+            f"{exc}. "
+        ))
+
+    def _compare(self, row, _):
         # Both assignment levels can exist while every row has a NULL
         # metric or stratum — the per-stratum frame is then empty and
         # the digest yields ZERO rows, not a NULL-diff row.
-        row = rows[0] if rows else None
         if row is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Stratified difference on {self._ref} is undefined: no "
-                f"non-null (metric, stratum) rows reach any stratum. ",
-                self.get_description(),
-            )
+                f"non-null (metric, stratum) rows reach any stratum. "
+            ))
         diff = row["diff_stratified"]
         if diff is None:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Stratified difference on {self._ref} is undefined: no "
                 f"stratum contains both variants "
                 f"(n_a={row['n_a']}, n_b={row['n_b']}, "
-                f"n_strata={row['n_strata']}). ",
-                self.get_description(),
-            )
-        if abs(diff) <= self._max_abs_diff:
-            return TestResult.success()
-        assertion_text = (
+                f"n_strata={row['n_strata']}). "
+            ))
+        return abs(diff) <= self._max_abs_diff, (
             f"Post-stratified A/B difference of '{self._metric}' on "
             f"{self._ref} is {diff} (raw={row['diff_raw']}, "
             f"strata={row['n_strata']}, n={row['n_a']}/{row['n_b']}) — "
             f"|diff| exceeds the maximum {self._max_abs_diff}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class RatioZMax(Constraint):
+class RatioZMax(_Statistic):
     """Ratio-metric A/B gate: |delta-method z| of the ratio-of-sums
     metric (numerator/denominator, e.g. clicks per impression) between
     the two levels of an assignment column may not exceed ``max_abs_z``
@@ -3430,45 +3244,36 @@ class RatioZMax(Constraint):
             ref, ref_value=max_abs_z, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import ratio_metric_ztest
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.ratio_metric_ztest(
+            ref.get_selection(engine), self._num, self._den, self._assign
+        ))
 
-        try:
-            rows = ratio_metric_ztest(
-                self._ref.get_selection(engine),
-                self._num,
-                self._den,
-                self._assign,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Ratio z-test on {self._ref} is undefined: {exc}. ",
-                self.get_description(),
-            )
-        row = rows[0] if rows else None
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Ratio z-test on {self._ref} is undefined: {exc}. "
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["z"] is None:
             detail = (
                 f"n_a={row['n_a']}, n_b={row['n_b']}" if row else "no rows"
             )
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Ratio z-test on {self._ref} is undefined (variant "
                 f"with n < 2, zero denominator, or zero variance; "
-                f"{detail}). ",
-                self.get_description(),
-            )
-        if abs(row["z"]) <= self._max_abs_z:
-            return TestResult.success()
-        assertion_text = (
+                f"{detail}). "
+            ))
+        return abs(row["z"]) <= self._max_abs_z, (
             f"Ratio metric '{self._num}/{self._den}' on {self._ref} "
             f"differs between variants: z = {row['z']} "
             f"(ratio_a={row['ratio_a']} on n={row['n_a']}, "
             f"ratio_b={row['ratio_b']} on n={row['n_b']}) — |z| exceeds "
             f"the maximum {self._max_abs_z}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class SrmChi2Max(Constraint):
+class SrmChi2Max(_Statistic):
     """Sample-ratio-mismatch gate: the Pearson chi-squared statistic of
     the observed assignment counts against the configured split may not
     exceed ``max_chi2`` (platforms typically alert far beyond the 5%
@@ -3499,30 +3304,24 @@ class SrmChi2Max(Constraint):
             ref, ref_value=max_chi2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import sample_ratio_mismatch
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.sample_ratio_mismatch(
+            ref.get_selection(engine), self._assign, self._shares
+        ))
 
-        rows = sample_ratio_mismatch(
-            self._ref.get_selection(engine), self._assign, self._shares
-        ).collect()
-        row = rows[0] if rows else None
+    def _compare(self, row, _):
         if row is None:
-            return TestResult(
-                True, "No assignment rows; SRM gate is vacuous."
-            )
-        if row["chi2"] is not None and row["chi2"] <= self._max_chi2:
-            return TestResult.success()
-        assertion_text = (
+            return Undefined(True, "No assignment rows; SRM gate is vacuous.")
+        return row["chi2"] is not None and row["chi2"] <= self._max_chi2, (
             f"Assignment counts of '{self._assign}' on {self._ref} "
             f"mismatch the expected split: chi2 = {row['chi2']} over "
             f"{row['n_levels']} levels (n={row['n']}) exceeds the "
             f"maximum {self._max_chi2} — the randomizer, logging, or "
             f"filtering is biased. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class PettittStability(Constraint):
+class PettittStability(_Statistic):
     """No-change-point gate on the daily ``sum(value)`` series: the
     Pettitt test's approximate p-value must stay ABOVE ``min_p_value``
     (rejecting means some day splits the series into two different
@@ -3534,6 +3333,8 @@ class PettittStability(Constraint):
     exact U statistic via mid-ranks on the calendar-bounded daily
     frame.  A series with fewer than 2 days passes vacuously.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -3549,33 +3350,17 @@ class PettittStability(Constraint):
             ref, ref_value=min_p_value, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.pettitt_changepoint(
+            _daily_cents(ref, engine), "__cents"
+        ))
 
-        from ..operators.timeseries import daily_totals, pettitt_changepoint
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "PettittStability requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = daily_totals(df, date_col, F.sum(cents), "__cents")
-        row = pettitt_changepoint(daily, "__cents").first()
+    def _compare(self, row, _):
         if row is None or row["p_value"] is None:
-            return TestResult(
+            return Undefined(
                 True, "Fewer than two days; change-point gate is vacuous."
             )
-        if row["p_value"] >= self._min_p:
-            return TestResult.success()
-        return TestResult.failure(
+        return row["p_value"] >= self._min_p, (
             f"Daily series of {self._ref} has a probable change point "
             f"at {row['change_day']}: Pettitt K = {row['k_stat']} over "
             f"{row['n_days']} days, p = {row['p_value']} < "
@@ -3583,7 +3368,7 @@ class PettittStability(Constraint):
         )
 
 
-class DispersionMax(Constraint):
+class DispersionMax(_Statistic):
     """Overdispersion gate: the variance-to-mean ratio of an integer
     count column may not exceed ``max_dispersion`` in any group
     (Poisson arrivals give ~1; far above means burstiness — bots,
@@ -3612,39 +3397,38 @@ class DispersionMax(Constraint):
             ref, ref_value=max_dispersion, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import dispersion_index
-
-        cols = self._ref.get_columns(engine)
-        expected = 2 if self._group else 1
-        if not cols or len(cols) != expected:
+    def _check_arguments(self) -> None:
+        cols = self._ref.get_columns()
+        if not cols or len(cols) != (2 if self._group else 1):
             raise ValueError(
                 "DispersionMax requires the count column"
                 + (" plus the group column" if self._group else "")
                 + " in its reference."
             )
-        out = dispersion_index(
-            self._ref.get_selection(engine), cols[0], group_col=self._group
+
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        out = stat_ops.dispersion_index(
+            ref.get_selection(engine), ref.get_columns(engine)[0],
+            group_col=self._group,
         )
-        offenders = (
+        return _rows(
             out.where(F.col("dispersion") > self._max_d)
             .orderBy(F.desc("dispersion"))
             .limit(5)
-            .collect()
         )
+
+    def _compare(self, offenders, _):
         if not offenders:
-            return TestResult.success()
+            return True, None
         worst = offenders[0]
         scope = (
             f"group {worst[self._group]!r} of " if self._group else ""
         )
-        assertion_text = (
-            f"Count column '{cols[0]}' on {scope}{self._ref} is "
-            f"overdispersed: variance/mean = {worst['dispersion']} "
-            f"(n={worst['n']}, mean={worst['mean']}) exceeds the "
-            f"maximum {self._max_d}"
+        return False, (
+            f"Count column '{self._ref.get_columns()[0]}' on {scope}"
+            f"{self._ref} is overdispersed: variance/mean = "
+            f"{worst['dispersion']} (n={worst['n']}, mean={worst['mean']}) "
+            f"exceeds the maximum {self._max_d}"
             + (
                 f"; {len(offenders)} group(s) violate"
                 if self._group
@@ -3652,10 +3436,9 @@ class DispersionMax(Constraint):
             )
             + f". {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class DidZMax(Constraint):
+class DidZMax(_Statistic):
     """Difference-in-differences gate: |z| of the DiD estimate between
     two assignment levels of a one-row-per-unit pre/post frame may not
     exceed ``max_abs_z`` — the quasi-experimental A/B gate for
@@ -3687,45 +3470,36 @@ class DidZMax(Constraint):
             ref, ref_value=max_abs_z, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import diff_in_diff
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.diff_in_diff(
+            ref.get_selection(engine), self._pre, self._post, self._assign
+        ))
 
-        try:
-            rows = diff_in_diff(
-                self._ref.get_selection(engine),
-                self._pre,
-                self._post,
-                self._assign,
-            ).collect()
-        except ValueError as exc:
-            return TestResult.failure(
-                f"Difference-in-differences on {self._ref} is undefined: "
-                f"{exc}. ",
-                self.get_description(),
-            )
-        row = rows[0] if rows else None
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Difference-in-differences on {self._ref} is undefined: "
+            f"{exc}. "
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["z"] is None:
             detail = (
                 f"n_a={row['n_a']}, n_b={row['n_b']}" if row else "no rows"
             )
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Difference-in-differences on {self._ref} is undefined "
-                f"(variant with n < 2 or zero delta variance; {detail}). ",
-                self.get_description(),
-            )
-        if abs(row["z"]) <= self._max_abs_z:
-            return TestResult.success()
-        assertion_text = (
+                f"(variant with n < 2 or zero delta variance; {detail}). "
+            ))
+        return abs(row["z"]) <= self._max_abs_z, (
             f"Difference-in-differences of '{self._post}' vs "
             f"'{self._pre}' on {self._ref} is significant: DiD = "
             f"{row['did']} (z = {row['z']}, se = {row['se']}, "
             f"n = {row['n_a']}/{row['n_b']}) — |z| exceeds the maximum "
             f"{self._max_abs_z}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CentroidShiftMax(Constraint):
+class CentroidShiftMax(_Statistic):
     """Embedding domain-shift gate: no pair of groups (sources,
     snapshots) may have centroid distance — the linear-kernel MMD —
     above ``max_dist``.  A mean shift is what breaks cosine-threshold
@@ -3754,24 +3528,21 @@ class CentroidShiftMax(Constraint):
             ref, ref_value=max_dist, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..pipeline.similarity import centroid_shift
-
-        offenders = (
-            centroid_shift(
-                self._ref.get_selection(engine), self._vec, self._group
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _rows(
+            similarity.centroid_shift(
+                ref.get_selection(engine), self._vec, self._group
             )
             .where(F.col("dist") > self._max_dist)
             .orderBy(F.desc("dist"))
             .limit(5)
-            .collect()
         )
+
+    def _compare(self, offenders, _):
         if not offenders:
-            return TestResult.success()
+            return True, None
         worst = offenders[0]
-        assertion_text = (
+        return False, (
             f"Embedding groups of '{self._group}' on {self._ref} have "
             f"shifted centroids: dist({worst['grp_a']}, "
             f"{worst['grp_b']}) = {worst['dist']} "
@@ -3779,10 +3550,9 @@ class CentroidShiftMax(Constraint):
             f"exceeds the maximum {self._max_dist}; "
             f"{len(offenders)} pair(s) violate. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class JoinFanoutMax(Constraint):
+class JoinFanoutMax(_TwoSample):
     """Pre-join cardinality gate between two sources: the exact inner-
     join output Σ n₁(k)·n₂(k) may not exceed ``max_output_rows``,
     and/or no single key's fanout product may exceed ``max_fanout`` —
@@ -3824,17 +3594,15 @@ class JoinFanoutMax(Constraint):
             ref, ref2=ref2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.skew import join_explosion_audit
+    def _retrieve(self, engine: SparkSession, _):
+        left, right = self._sides(engine)
+        return _row(skew.join_explosion_audit(
+            left, self._key1, right, self._key2
+        ))
 
-        row = join_explosion_audit(
-            self._ref.get_selection(engine),
-            self._key1,
-            self._ref2.get_selection(engine),
-            self._key2,
-        ).collect()[0]
+    def _compare(self, row, _):
         if row["n_keys"] == 0:
-            return TestResult(True, "No matching keys; join is empty.")
+            return Undefined(True, "No matching keys; join is empty.")
         problems = []
         output_rows = int(row["output_rows"])
         max_fanout = int(row["max_fanout"])
@@ -3848,9 +3616,7 @@ class JoinFanoutMax(Constraint):
                 f"the worst key multiplies {max_fanout}x > the allowed "
                 f"{self._max_fanout}"
             )
-        if not problems:
-            return TestResult.success()
-        assertion_text = (
+        return not problems, (
             f"Joining {self._ref} to {self._ref2} on "
             f"('{self._key1}', '{self._key2}') explodes: "
             + " and ".join(problems)
@@ -3858,7 +3624,6 @@ class JoinFanoutMax(Constraint):
             f"{row['n_keys']} matched; worst offenders: "
             f"{row['top_keys']}). "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
 def _betacf(a: float, b: float, x: float) -> float:
@@ -3929,7 +3694,7 @@ def _student_t_sf_two_sided(t: float, df: float) -> float:
     return _reg_inc_beta(df / 2.0, 0.5, x)
 
 
-class WelchTMax(Constraint):
+class WelchTMax(_Statistic):
     """Mean A/B gate with unequal variances: |Welch t| between the two
     levels of an assignment column may not exceed ``max_abs_t`` —
     "the mean of this integer metric must not differ significantly
@@ -3962,52 +3727,43 @@ class WelchTMax(Constraint):
             ref, ref_value=max_abs_t, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import welch_ttest
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.welch_ttest(
+            ref.get_selection(engine), self._metric, self._assign
+        ))
 
-        row = welch_ttest(
-            self._ref.get_selection(engine), self._metric, self._assign
-        ).collect()[0]
+    def _compare(self, row, _):
         if row["t"] is None:
             # Same convention as WelchTBetween: zero combined variance
             # with both variants testable (n >= 2) and EQUAL means is a
             # constant metric — no shift, a pass.  Different constant
             # means are a certain shift; an n < 2 side is untestable.
-            if (
-                row["n_a"] >= 2
-                and row["n_b"] >= 2
-                and row["mean_a"] == row["mean_b"]
-            ):
-                return TestResult.success()
             if row["n_a"] >= 2 and row["n_b"] >= 2:
-                return TestResult.failure(
+                return row["mean_a"] == row["mean_b"], (
                     f"Certain mean shift between variants of {self._ref}: "
                     f"both variants are constant (zero variance) with "
                     f"different means (mean_a={row['mean_a']} on "
                     f"n={row['n_a']}, mean_b={row['mean_b']} on "
-                    f"n={row['n_b']}). ",
-                    self.get_description(),
+                    f"n={row['n_b']}). "
                 )
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Welch t between variants of {self._ref} is undefined "
                 f"(a variant below 2 units; "
-                f"n_a={row['n_a']}, n_b={row['n_b']}). ",
-                self.get_description(),
-            )
+                f"n_a={row['n_a']}, n_b={row['n_b']}). "
+            ))
         if abs(row["t"]) <= self._max_abs_t:
-            return TestResult.success()
+            return True, None
         p = round(_student_t_sf_two_sided(row["t"], row["df"]), 6)
-        assertion_text = (
+        return False, (
             f"Welch t between variants of {self._ref} is {row['t']} "
             f"(mean_a={row['mean_a']} on n={row['n_a']}, "
             f"mean_b={row['mean_b']} on n={row['n_b']}, "
             f"df={row['df']}, p={p}) — |t| exceeds the maximum "
             f"{self._max_abs_t}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class BrownForsytheFMax(Constraint):
+class BrownForsytheFMax(_Statistic):
     """Variance-homogeneity gate: the Brown-Forsythe F statistic
     (Levene with the median center) of an integer metric across the
     levels of a group column may not exceed ``max_f`` — "no segment's
@@ -4038,32 +3794,27 @@ class BrownForsytheFMax(Constraint):
             ref, ref_value=max_f, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import brown_forsythe
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.brown_forsythe(
+            ref.get_selection(engine), self._value, self._group
+        ))
 
-        rows = brown_forsythe(
-            self._ref.get_selection(engine), self._value, self._group
-        ).collect()
-        row = rows[0] if rows else None
+    def _compare(self, row, _):
         if row is None or row["f_stat"] is None:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 "Brown-Forsythe F is undefined (fewer than two groups "
-                "or zero within-group deviation); the gate is vacuous.",
-            )
-        if row["f_stat"] <= self._max_f:
-            return TestResult.success()
-        assertion_text = (
+                "or zero within-group deviation); the gate is vacuous."
+            ))
+        return row["f_stat"] <= self._max_f, (
             f"Brown-Forsythe F of {self._value} across {self._group} "
             f"levels of {self._ref} is {row['f_stat']} "
             f"(df1={row['df1']}, df2={row['df2']}, n={row['n']}) — "
             f"group spreads differ beyond the maximum {self._max_f}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CMHChi2Max(Constraint):
+class CMHChi2Max(_Statistic):
     """Stratified association gate: the Cochran-Mantel-Haenszel χ² of
     exposure/outcome association across strata may not exceed
     ``max_chi2`` — "conversion must not associate with the variant
@@ -4097,35 +3848,30 @@ class CMHChi2Max(Constraint):
             ref, ref_value=max_chi2, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import cmh_test
-
-        rows = cmh_test(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.cmh_test(
+            ref.get_selection(engine),
             self._stratum,
             self._exposure.to_column(),
             self._outcome.to_column(),
-        ).collect()
-        row = rows[0] if rows else None
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["chi2"] is None:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 "CMH χ² is undefined (no stratum carries variance); "
-                "the gate is vacuous.",
-            )
-        if row["chi2"] <= self._max_chi2:
-            return TestResult.success()
-        assertion_text = (
+                "the gate is vacuous."
+            ))
+        return row["chi2"] <= self._max_chi2, (
             f"CMH χ² of exposure/outcome association across "
             f"{row['n_strata']} {self._stratum} strata of {self._ref} "
             f"is {row['chi2']} (pooled odds ratio {row['or_mh']}, "
             f"n={row['n']}) — exceeds the maximum {self._max_chi2}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class BHSignificantMax(Constraint):
+class BHSignificantMax(_Statistic):
     """Multiple-testing segment gate: after Benjamini-Hochberg FDR
     adjustment across per-group two-proportion z-tests, at most
     ``max_significant`` groups may stay significant at
@@ -4164,13 +3910,9 @@ class BHSignificantMax(Constraint):
             ref, ref_value=max_significant, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import grouped_ztest_bh
-
-        out = grouped_ztest_bh(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        out = stat_ops.grouped_ztest_bh(
+            ref.get_selection(engine),
             self._group,
             self._population_a.to_column(),
             self._population_b.to_column(),
@@ -4178,28 +3920,27 @@ class BHSignificantMax(Constraint):
             rounded=False,
         )
         # decide on the UNROUNDED q (6-dp rounding can flip borderline
-        # q ≈ threshold cases) and report the TRUE count — both actions
-        # run over the bounded |groups|-row digest (ADVICE r9)
-        significant = out.where(F.col("q_value") <= self._q)
-        n_sig = significant.count()
-        if n_sig <= self._max_sig:
-            return TestResult.success()
-        sig = significant.orderBy("q_value", "group").limit(5).collect()
+        # q ≈ threshold cases) and report the TRUE count — one action
+        # over the bounded |groups|-row digest (ADVICE r9)
+        return _rows(out.where(F.col("q_value") <= self._q))
+
+    def _compare(self, significant, _):
+        if len(significant) <= self._max_sig:
+            return True, None
         worst = ", ".join(
             f"{r['group']!r} (z={round(r['z'], 6)}, "
             f"q={round(r['q_value'], 6)})"
-            for r in sig
+            for r in _lowest_q(significant)
         )
-        assertion_text = (
-            f"{n_sig} {self._group} segment(s) of {self._ref} stay "
-            f"significant at BH FDR q <= {self._q} (allowed: "
+        return False, (
+            f"{len(significant)} {self._group} segment(s) of {self._ref} "
+            f"stay significant at BH FDR q <= {self._q} (allowed: "
             f"{self._max_sig}); worst: {worst}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class CumulativeHazardMax(Constraint):
+class CumulativeHazardMax(_Statistic):
     """Churn-rate gate: the Nelson-Aalen cumulative hazard of the
     terminal event, evaluated at the LONGEST observed duration, may not
     exceed ``max_hazard`` — "accumulated churn pressure over the whole
@@ -4229,38 +3970,29 @@ class CumulativeHazardMax(Constraint):
             ref, ref_value=max_hazard, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import nelson_aalen
-
-        rows = (
-            nelson_aalen(
-                self._ref.get_selection(engine),
-                self._duration,
-                self._event,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(
+            timeseries.nelson_aalen(
+                ref.get_selection(engine), self._duration, self._event
             )
             .orderBy(F.desc("duration"))
             .limit(1)
-            .collect()
         )
-        row = rows[0] if rows else None
+
+    def _compare(self, row, _):
         if row is None:
-            return TestResult(
+            return Undefined(
                 True, "No durations observed; the hazard gate is vacuous."
             )
-        if row["cumhaz"] <= self._max_hazard:
-            return TestResult.success()
-        assertion_text = (
+        return row["cumhaz"] <= self._max_hazard, (
             f"Nelson-Aalen cumulative hazard of {self._ref} reaches "
             f"{row['cumhaz']} at duration {row['duration']} "
             f"(variance {row['var_cumhaz']}) — exceeds the maximum "
             f"{self._max_hazard}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class DurbinWatsonWithin(Constraint):
+class DurbinWatsonWithin(_Statistic):
     """Residual-whiteness gate: the Durbin-Watson statistic of the
     daily ``sum(value)`` series' OLS fit must stay within
     ``[min_dw, max_dw]`` (2 = white residuals; ≪2 = positive runs the
@@ -4272,6 +4004,8 @@ class DurbinWatsonWithin(Constraint):
     calendar-bounded daily frame (DECIMAL-exact OLS sufficient
     statistics, index-ordered residual folds).
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -4294,51 +4028,31 @@ class DurbinWatsonWithin(Constraint):
             cache_size=cache_size,
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import daily_totals, durbin_watson
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "DurbinWatsonWithin requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = daily_totals(df, date_col, F.sum(cents), "__cents")
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        daily = _daily_cents(ref, engine)
         day0 = daily.agg(F.min("day").alias("__d0"))
         idx = daily.join(F.broadcast(day0)).select(
             F.datediff(F.col("day"), F.col("__d0")).alias("__t"),
             "__cents",
         )
-        rows = durbin_watson(idx, "__t", "__cents").collect()
-        row = rows[0] if rows else None
+        return _row(timeseries.durbin_watson(idx, "__t", "__cents"))
+
+    def _compare(self, row, _):
         if row is None or row["dw"] is None:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 "Durbin-Watson is undefined (fewer than 3 days or a "
-                "degenerate fit); the gate is vacuous.",
-            )
-        if self._min_dw <= row["dw"] <= self._max_dw:
-            return TestResult.success()
-        assertion_text = (
-            f"Durbin-Watson of the daily {value_col} series of "
-            f"{self._ref} is {row['dw']} over {row['n']} days "
+                "degenerate fit); the gate is vacuous."
+            ))
+        return self._min_dw <= row["dw"] <= self._max_dw, (
+            f"Durbin-Watson of the daily {self._ref.get_columns()[1]} "
+            f"series of {self._ref} is {row['dw']} over {row['n']} days "
             f"(trend slope {row['slope']}) — outside "
             f"[{self._min_dw}, {self._max_dw}]. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class KruskalWallisHMax(Constraint):
+class KruskalWallisHMax(_Statistic):
     """k-group rank-location gate: the tie-corrected Kruskal-Wallis H
     across the levels of a group column may not exceed ``max_h`` — "no
     segment's distribution may sit systematically higher than the
@@ -4369,42 +4083,36 @@ class KruskalWallisHMax(Constraint):
             ref, ref_value=max_h, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import kruskal_wallis
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.kruskal_wallis(
+            ref.get_selection(engine), self._value, self._group
+        ))
 
-        try:
-            rows = kruskal_wallis(
-                self._ref.get_selection(engine), self._value, self._group
-            ).collect()
-        except ValueError:
-            # empty / all-null selection: the rank cumulative has no
-            # values at all — same vacuous verdict as the NULL-h path
-            # (MannWhitney precedent).
-            return TestResult(
-                True,
-                "Kruskal-Wallis H is undefined (no non-null values); "
-                "the gate is vacuous.",
-            )
-        row = rows[0] if rows else None
+    def _undefined(self, exc):
+        # empty / all-null selection: the rank cumulative has no values
+        # at all — same vacuous verdict as the NULL-h path (MannWhitney
+        # precedent).
+        return Undefined(True, (
+            "Kruskal-Wallis H is undefined (no non-null values); "
+            "the gate is vacuous."
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["h_adj"] is None:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 "Kruskal-Wallis H is undefined (fewer than two groups "
-                "or every value tied); the gate is vacuous.",
-            )
-        if row["h_adj"] <= self._max_h:
-            return TestResult.success()
-        assertion_text = (
+                "or every value tied); the gate is vacuous."
+            ))
+        return row["h_adj"] <= self._max_h, (
             f"Kruskal-Wallis H of {self._value} across "
             f"{row['n_groups']} {self._group} levels of {self._ref} is "
             f"{row['h_adj']} (df={row['df']}, n={row['n']}) — some "
             f"segment's distribution sits systematically apart, beyond "
             f"the maximum {self._max_h}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class WelchTBetween(Constraint):
+class WelchTBetween(_TwoSample):
     """Welch unequal-variance mean comparison between an integer metric
     column of each data source: fails when the two-sided Student-t
     p-value (Welch-Satterthwaite df, scipy-free incomplete beta) drops
@@ -4420,6 +4128,8 @@ class WelchTBetween(Constraint):
     1-row digest out.
     """
 
+    _columns = 1
+
     def __init__(
         self,
         ref: DataReference,
@@ -4433,65 +4143,49 @@ class WelchTBetween(Constraint):
         self._significance_level = significance_level
         super().__init__(ref, ref2=ref2, name=name, cache_size=cache_size)
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
+    def _retrieve(self, engine: SparkSession, _):
+        return _row(stat_ops.welch_ttest(
+            self._tagged_union(engine), "__v", "__g"
+        ))
 
-        from ..operators.stats import welch_ttest
+    def _undefined(self, exc):
+        # a side with no rows at all: the level probe sees < 2 levels
+        return Undefined(False, (
+            f"Welch test between {self._ref} and "
+            f"{self._target_prefix} is undefined: one side has no "
+            "non-null rows. "
+        ))
 
-        col1 = self._ref.get_column(engine)
-        col2 = self._ref2.get_column(engine)
-        d1 = self._ref.get_selection(engine).select(
-            F.col(col1).alias("__v"), F.lit("a").alias("__g")
-        )
-        d2 = self._ref2.get_selection(engine).select(
-            F.col(col2).alias("__v"), F.lit("b").alias("__g")
-        )
-        try:
-            row = welch_ttest(d1.unionByName(d2), "__v", "__g").collect()[0]
-        except ValueError:
-            # a side with no rows at all: the level probe sees < 2 levels
-            return TestResult.failure(
-                f"Welch test between {self._ref} and "
-                f"{self._target_prefix} is undefined: one side has no "
-                "non-null rows. ",
-                self.get_description(),
-            )
+    def _compare(self, row, _):
         if row["t"] is None:
             # n < 2 on a side or zero combined variance. Zero variance
             # alone does not mean agreement: two constant columns with
             # DIFFERENT means are a certain mean shift — only identical
             # constant columns pass. A 1-row side is untestable.
             if row["n_a"] >= 2 and row["n_b"] >= 2:
-                if row["mean_a"] == row["mean_b"]:
-                    return TestResult.success()
-                return TestResult.failure(
+                return row["mean_a"] == row["mean_b"], (
                     f"Certain mean shift between {self._ref} and "
                     f"{self._target_prefix}: both sides are constant "
                     f"(zero variance) with different means "
                     f"(mean_a={row['mean_a']} on n={row['n_a']}, "
-                    f"mean_b={row['mean_b']} on n={row['n_b']}). ",
-                    self.get_description(),
+                    f"mean_b={row['mean_b']} on n={row['n_b']}). "
                 )
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Welch test between {self._ref} and "
                 f"{self._target_prefix} is undefined "
-                f"(n_a={row['n_a']}, n_b={row['n_b']}). ",
-                self.get_description(),
-            )
+                f"(n_a={row['n_a']}, n_b={row['n_b']}). "
+            ))
         p = _student_t_sf_two_sided(row["t"], row["df"])
-        if p >= self._significance_level:
-            return TestResult.success()
-        assertion_text = (
+        return p >= self._significance_level, (
             f"Mean shift between {self._ref} and {self._target_prefix}: "
             f"Welch t = {row['t']} (mean_a={row['mean_a']} on "
             f"n={row['n_a']}, mean_b={row['mean_b']} on n={row['n_b']}, "
             f"df={row['df']}), two-sided p = {round(p, 6)} < "
             f"{self._significance_level}. "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class RMSTMin(Constraint):
+class RMSTMin(_Statistic):
     """Survival-value gate: the restricted mean survival time at
     ``horizon`` (average event-free time per subject within the first
     ``horizon`` units — the area under the KM curve) must be at least
@@ -4525,29 +4219,23 @@ class RMSTMin(Constraint):
             ref, ref_value=min_rmst, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.timeseries import rmst
-
-        rows = rmst(
-            self._ref.get_selection(engine),
-            self._duration,
-            self._event,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.rmst(
+            ref.get_selection(engine), self._duration, self._event,
             self._horizon,
-        ).collect()
-        row = rows[0] if rows else None
+        ))
+
+    def _compare(self, row, _):
         if row is None:
-            return TestResult(
+            return Undefined(
                 True, "No durations observed; the RMST gate is vacuous."
             )
-        if row["rmst"] >= self._min_rmst:
-            return TestResult.success()
-        assertion_text = (
+        return row["rmst"] >= self._min_rmst, (
             f"Restricted mean survival time of {self._ref} at horizon "
             f"{self._horizon} is {row['rmst']} (over "
             f"{row['n_durations']} distinct durations) — below the "
             f"minimum {self._min_rmst}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
 def _fisher_exact_two_sided(a: int, b: int, c: int, d: int) -> float:
@@ -4586,7 +4274,7 @@ def _fisher_exact_two_sided(a: int, b: int, c: int, d: int) -> float:
     return min(total, 1.0)
 
 
-class FisherExactMin(Constraint):
+class FisherExactMin(_Statistic):
     """Small-sample 2x2 association gate: the two-sided Fisher exact
     p-value of the ``success`` rate between two row-filter populations
     must stay at or above ``min_p_value`` — the EXACT counterpart of
@@ -4620,35 +4308,31 @@ class FisherExactMin(Constraint):
             ref, ref_value=min_p_value, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from ..operators.stats import two_proportion_ztest
-
-        row = two_proportion_ztest(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(stat_ops.two_proportion_ztest(
+            ref.get_selection(engine),
             self._population_a.to_column(),
             self._population_b.to_column(),
             self._success.to_column(),
-        ).collect()[0]
+        ))
+
+    def _compare(self, row, _):
         n_a, s_a = row["n_a"], row["successes_a"]
         n_b, s_b = row["n_b"], row["successes_b"]
         if n_a == 0 or n_b == 0:
-            return TestResult.failure(
+            return Undefined(False, (
                 f"Fisher exact test between populations of {self._ref} "
-                f"is undefined (an empty side; n_a={n_a}, n_b={n_b}). ",
-                self.get_description(),
-            )
+                f"is undefined (an empty side; n_a={n_a}, n_b={n_b}). "
+            ))
         p = _fisher_exact_two_sided(s_a, n_a - s_a, s_b, n_b - s_b)
-        if p >= self._min_p:
-            return TestResult.success()
-        assertion_text = (
+        return p >= self._min_p, (
             f"Success rates differ between populations of {self._ref}: "
             f"Fisher exact two-sided p = {round(p, 6)} < {self._min_p} "
             f"({s_a}/{n_a} vs {s_b}/{n_b}). {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class ForecastBacktestMax(Constraint):
+class ForecastBacktestMax(_Statistic):
     """Predictability gate: the seasonal-naive backtest MASE of the
     daily ``sum(value)`` series may not exceed ``max_mase`` — the last
     ``horizon`` days held out and each predicted FROM TRAIN ONLY (the
@@ -4662,6 +4346,8 @@ class ForecastBacktestMax(Constraint):
     Engine: ``operators.timeseries.forecast_backtest`` — bounded
     calendar-frame equi-joins; DECIMAL-exact absolute errors.
     """
+
+    _columns = 2, ": (date_column, value_column)"
 
     def __init__(
         self,
@@ -4681,54 +4367,33 @@ class ForecastBacktestMax(Constraint):
             ref, ref_value=max_mase, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.timeseries import daily_totals, forecast_backtest
-
-        cols = self._ref.get_columns(engine)
-        if not cols or len(cols) != 2:
-            raise ValueError(
-                "ForecastBacktestMax requires exactly two columns: "
-                "(date_column, value_column)."
-            )
-        date_col, value_col = cols
-        df = self._ref.get_selection(engine).where(
-            F.col(date_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        daily = daily_totals(df, date_col, F.sum(cents), "__cents")
-        rows = forecast_backtest(
-            daily,
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        return _row(timeseries.forecast_backtest(
+            _daily_cents(ref, engine),
             "day",
             "__cents",
             horizon=self._horizon,
             period=self._period,
-        ).collect()
-        row = rows[0] if rows else None
+        ))
+
+    def _compare(self, row, _):
         if row is None or row["mase"] is None:
-            return TestResult(
-                True,
+            return Undefined(True, (
                 "Backtest MASE is undefined (not enough aligned days "
                 "in the holdout or a flat in-sample series); the "
-                "predictability gate is vacuous.",
-            )
-        if row["mase"] <= self._max_mase:
-            return TestResult.success()
-        assertion_text = (
-            f"Seasonal-naive backtest of the daily {value_col} series "
-            f"of {self._ref}: MASE = {row['mase']} over the last "
-            f"{self._horizon} days (MAE {row['mae']} cents vs "
-            f"in-sample naive {row['naive_mae']}; "
+                "predictability gate is vacuous."
+            ))
+        return row["mase"] <= self._max_mase, (
+            f"Seasonal-naive backtest of the daily "
+            f"{self._ref.get_columns()[1]} series of {self._ref}: MASE = "
+            f"{row['mase']} over the last {self._horizon} days (MAE "
+            f"{row['mae']} cents vs in-sample naive {row['naive_mae']}; "
             f"MAPE {row['mape_pct']}%) — exceeds the maximum "
             f"{self._max_mase}. {self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())
 
 
-class MeanBHSignificantMax(Constraint):
+class MeanBHSignificantMax(_Statistic):
     """Multiple-testing segment gate on MEANS: after Benjamini-Hochberg
     FDR adjustment across per-group Welch comparisons of an integer
     metric, at most ``max_significant`` groups may stay significant at
@@ -4767,13 +4432,9 @@ class MeanBHSignificantMax(Constraint):
             ref, ref_value=max_significant, name=name, cache_size=cache_size
         )
 
-    def test(self, engine: SparkSession) -> TestResult:
-        from pyspark.sql import functions as F
-
-        from ..operators.stats import grouped_welch_bh
-
-        out = grouped_welch_bh(
-            self._ref.get_selection(engine),
+    def _retrieve(self, engine: SparkSession, ref: DataReference):
+        out = stat_ops.grouped_welch_bh(
+            ref.get_selection(engine),
             self._group,
             self._metric,
             self._population_a.to_column(),
@@ -4781,20 +4442,19 @@ class MeanBHSignificantMax(Constraint):
             rounded=False,
         )
         # unrounded-q decision + true count, as in BHSignificantMax
-        significant = out.where(F.col("q_value") <= self._q)
-        n_sig = significant.count()
-        if n_sig <= self._max_sig:
-            return TestResult.success()
-        sig = significant.orderBy("q_value", "group").limit(5).collect()
+        return _rows(out.where(F.col("q_value") <= self._q))
+
+    def _compare(self, significant, _):
+        if len(significant) <= self._max_sig:
+            return True, None
         worst = ", ".join(
             f"{r['group']!r} (diff={round(r['diff'], 6)}, "
             f"t={round(r['t'], 6)}, q={round(r['q_value'], 6)})"
-            for r in sig
+            for r in _lowest_q(significant)
         )
-        assertion_text = (
-            f"{n_sig} {self._group} segment(s) of {self._ref} have "
-            f"a significant {self._metric} mean shift at BH FDR q <= "
+        return False, (
+            f"{len(significant)} {self._group} segment(s) of {self._ref} "
+            f"have a significant {self._metric} mean shift at BH FDR q <= "
             f"{self._q} (allowed: {self._max_sig}); worst: {worst}. "
             f"{self._condition_string} "
         )
-        return TestResult.failure(assertion_text, self.get_description())

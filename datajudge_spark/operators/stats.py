@@ -754,6 +754,11 @@ def grouped_quantile_treatment_effect(
                 f"{group_col}; pass an explicit `groups` list."
             )
         groups = sorted(r["g"] for r in rows)
+    if not groups:
+        raise ValueError(
+            f"grouped_quantile_treatment_effect: no {group_col} group "
+            "has a non-null value"
+        )
     cells = [(i, s) for i in range(len(groups)) for s in (0, 1)]
     aliases = [f"c{i}_{s}" for i, s in cells]
     # the wide conditional-count / conditional-min expression lists are
@@ -2761,8 +2766,12 @@ def ztest_from_counts(agg: DataFrame) -> DataFrame:
     feeds the IDENTICAL expression tree and hash-matches batch)."""
     na, sa = F.col("n_a").cast("double"), F.col("s_a").cast("double")
     nb, sb = F.col("n_b").cast("double"), F.col("s_b").cast("double")
-    pooled = (sa + sb) / (na + nb)
-    var = pooled * (1.0 - pooled) * (1.0 / na + 1.0 / nb)
+    # try_divide: the guard below does not keep Spark from evaluating
+    # ``var`` (a subexpression it shares) on an empty side
+    pooled = F.try_divide(sa + sb, na + nb)
+    var = pooled * (1.0 - pooled) * (
+        F.try_divide(F.lit(1.0), na) + F.try_divide(F.lit(1.0), nb)
+    )
     z = F.when(
         (F.col("n_a") > 0) & (F.col("n_b") > 0) & (var > 0),
         (sa / na - sb / nb) / F.sqrt(var),

@@ -508,6 +508,8 @@ def grouped_theil_sen(
     from ..pipeline._util import materialize_once
     from .stats import _bucketed_global_cums, _sql_ident, _sql_str
 
+    if not groups:
+        raise ValueError("grouped_theil_sen needs at least one group")
     # NULL days/values would silently diverge the n_days count from the
     # pair join (which drops them via d1 < d2); exclude them up front.
     # Persisted: the pair join's two branches AND the per-group day

@@ -13,16 +13,20 @@ float text in the messages does not depend on the core count.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from datajudge_spark import Condition
-from datajudge_spark.constraints import stats
+from datajudge_spark import Condition, WithinRequirement
+from datajudge_spark._threads import run_overlapped
+from datajudge_spark.constraints import base, stats
 from datajudge_spark.reference import DataReference
 from datajudge_spark.sources import ExpressionDataSource
+
+from conftest import count_jobs
 
 GOLDEN = Path(__file__).parent / "fixtures" / "stats_parity.json"
 NO_ROWS = Condition(raw_string="1 = 0")
@@ -85,7 +89,8 @@ def _rows():
     passage = "the quick brown fox jumps over the lazy dog"
     train = [(1, "alpha beta gamma " + passage),
              (2, "one two three four five six")]
-    evals = [(10, "prefix " + passage), (11, "zymurgy quixotic jackdaw vexing")]
+    evals = [(10, "prefix " + passage),
+             (11, "zymurgy quixotic jackdaw vexing")]
     old = [(k, k) for k in range(10)]
     new = [(k, 99 if k == 3 else k) for k in range(11)]
     left = [(1,), (1,), (2,), (3,)]
@@ -93,7 +98,8 @@ def _rows():
     return {
         "nums": (nums, "k long, x int, y int, g string, c string, par "
                  "string, big int, zero int, const int, cnt int, x1 int, "
-                 "x2 int, yv int, vec array<double>, emb array<double>, half int"),
+                 "x2 int, yv int, vec array<double>, emb array<double>, "
+                 "half int"),
         "daily": (daily, "d date, flat double, trend double, week double, "
                   "g string, const double"),
         "events": (events, "d date"),
@@ -624,28 +630,220 @@ def _cases():
 CASES = _cases()
 
 
-def observe(constraint, spark) -> dict:
-    """What ``test`` gives: the outcome and failure message, or the type
-    and first line of the error it raised."""
+# Degenerate inputs that raised a raw Spark or PySpark error before, and
+# now reach the undefined verdict through a documented ValueError or a
+# NULL statistic
+CHANGED = {
+    "TwoProportionZMax-no_rows": {
+        "outcome": False,
+        "message": "Two-proportion z between populations of ab is "
+        "undefined (empty side or zero pooled variance; n_a=0, n_b=0). ",
+    },
+    "FisherExactMin-no_rows": {
+        "outcome": False,
+        "message": "Fisher exact test between populations of ab is "
+        "undefined (an empty side; n_a=0, n_b=0). ",
+    },
+    "GroupedTrendSlopeBetween-no_rows": {
+        "outcome": False,
+        "message": "Grouped Theil-Sen of ['d', 'trend', 'g'] on daily's "
+        "column(s) 'd', 'trend', 'g' is undefined: grouped_theil_sen "
+        "needs at least one group ",
+    },
+    "GroupedTrendSlopeBetween-all_null": {
+        "outcome": False,
+        "message": "Grouped Theil-Sen of ['d', 'trend', 'g'] on "
+        "daily_null's column(s) 'd', 'trend', 'g' is undefined: "
+        "grouped_theil_sen needs at least one group ",
+    },
+    "GroupedQteMax-all_null": {
+        "outcome": False,
+        "message": "Grouped quantile treatment effect on ab_null is "
+        "undefined: grouped_quantile_treatment_effect: no seg group has a "
+        "non-null value. ",
+    },
+}
+
+
+def _first_test(constraint, spark):
     try:
-        result = constraint.test(spark)
+        return constraint.test(spark)
     except Exception as exc:  # noqa: BLE001 - the error is the observation
-        first = (str(exc).splitlines() or [""])[0]
-        return {"raises": type(exc).__name__, "message": first}
-    return {"outcome": result.outcome, "message": result.failure_message}
+        return exc
+
+
+def observe(outcome) -> dict:
+    """A test's outcome and failure message, or the type and first line
+    of the error it raised."""
+    if isinstance(outcome, Exception):
+        first = (str(outcome).splitlines() or [""])[0]
+        return {"raises": type(outcome).__name__, "message": first}
+    return {"outcome": outcome.outcome, "message": outcome.failure_message}
+
+
+def _check(spark, frames, case) -> dict:
+    """Test a case's constraint, then test it again, and keep only what
+    the assertions read: the constraint and the frames behind its plans
+    are released as soon as the case is done."""
+    constraint = CASES[case](frames)
+    first = _first_test(constraint, spark)
+    if isinstance(first, Exception):
+        # its traceback would hold the constraint alive
+        return {"first": observe(first)}
+    again, jobs = count_jobs(
+        spark, f"retest-{case}", lambda: constraint.test(spark)
+    )
+    return {
+        "first": first if first.outcome else observe(first),
+        "retest": (jobs, again == first, constraint._needs_spark(spark)),
+        "description": (
+            first.constraint_description, constraint.get_description()
+        ),
+        "plan": first._factual_queries is not None,
+    }
 
 
 @pytest.fixture(scope="module")
-def frames(spark):
-    return Frames(spark)
+def tested(spark):
+    """Each case's observations; the cases run a few at a time, as a
+    requirement's members do."""
+    frames = Frames(spark)
+    return dict(zip(CASES, run_overlapped(spark, [
+        functools.partial(_check, spark, frames, case) for case in CASES
+    ])))
 
 
 @pytest.fixture(scope="module")
 def golden():
-    return json.loads(GOLDEN.read_text())
+    return {**json.loads(GOLDEN.read_text()), **CHANGED}
 
 
 @pytest.mark.parametrize("case", CASES)
-def test_parity(spark, frames, golden, case):
-    constraint = CASES[case](frames)
-    assert observe(constraint, spark) == golden[case]
+def test_parity(tested, golden, case):
+    seen = tested[case]
+    first = seen["first"]
+    observed = observe(first) if isinstance(first, base.TestResult) else first
+    assert observed == golden[case]
+    if "retest" not in seen:
+        return
+    # the summary is read once: a re-test runs no job, passing or
+    # failing, and returns the same result
+    assert seen["retest"] == (0, True, False)
+    if isinstance(first, base.TestResult):
+        # a pass is the bare result, its note (if any) and nothing else
+        assert first == base.TestResult(True, golden[case]["message"])
+    else:
+        description, expected = seen["description"]
+        assert description == expected
+        assert seen["plan"]
+
+
+def test_requirement_retest_runs_no_job(spark):
+    df = spark.createDataFrame(
+        [(1000 if i == 0 else i % 5 + 1,) for i in range(40)], "v int"
+    ).coalesce(1)
+    req = WithinRequirement.from_dataframe(df, "skewed")
+    req.add_gini_max_constraint("v", 0.1)  # fails
+    req.add_jarque_bera_constraint("v", 1e9)
+    req.add_mad_outlier_fraction_constraint("v", 1.0)
+    assert all(c._needs_spark(spark) for c in req)
+    first, jobs = count_jobs(spark, "req-first", lambda: req.test(spark))
+    assert jobs > 0
+    assert [r.outcome for r in first] == [False, True, True]
+    assert "Relation" in first[0].logging_message
+    again, jobs = count_jobs(spark, "req-again", lambda: req.test(spark))
+    assert jobs == 0
+    assert again == first
+    assert not any(c._needs_spark(spark) for c in req)
+
+
+def test_cache_size_zero_reruns(spark):
+    frames = Frames(spark)
+    gini = stats.GiniMax(frames.ref("nums", ["big"]), 0.1, cache_size=0)
+    first = gini.test(spark)
+    assert gini._needs_spark(spark)
+    again, jobs = count_jobs(spark, "uncached", lambda: gini.test(spark))
+    assert jobs > 0
+    assert observe(again) == observe(first)
+
+
+# Spark jobs of the first test of a passing case before the failure
+# sample joined the summary (a failing one ran one more): neither may
+# run more now
+PASS_JOBS = {
+    "BHSignificantMax-pass": 1,
+    "MeanBHSignificantMax-pass": 1,
+    "WinnowingContaminationMax-pass": 11,
+}
+
+
+@pytest.mark.parametrize("case", PASS_JOBS)
+def test_failure_sample_joins_the_summary(spark, case):
+    frames = Frames(spark)
+    passing = CASES[case](frames)
+    result, jobs = count_jobs(spark, case, lambda: passing.test(spark))
+    assert result.outcome
+    assert jobs <= PASS_JOBS[case]
+    failing = CASES[case.replace("-pass", "-fail")](frames)
+    result, jobs = count_jobs(
+        spark, case + "-fail", lambda: failing.test(spark)
+    )
+    assert not result.outcome
+    assert jobs <= PASS_JOBS[case]
+    again, jobs = count_jobs(
+        spark, case + "-retest", lambda: failing.test(spark)
+    )
+    assert (again, jobs) == (result, 0)
+
+
+ARGUMENT_ERRORS = {
+    "single column": (
+        lambda f: stats.GiniMax(f.ref("nums", ["x", "y"]), 0.5),
+        "DataReference was expected to only have a single column but had "
+        "multiple: ['x', 'y']",
+    ),
+    "column count": (
+        lambda f: stats.GroupedKsMax(f.ref("nums", ["y"]), 0.5),
+        "GroupedKsMax requires exactly two columns: (value_column, "
+        "group_column).",
+    ),
+    "column count, no roles": (
+        lambda f: stats.SpearmanBounds(f.ref("nums", ["x"]), max_rho=0.5),
+        "SpearmanBounds requires exactly two columns.",
+    ),
+    "columns per source": (
+        lambda f: stats.BootstrapMeanOverlap(
+            f.ref("nums", ["k", "x"]), f.ref("nums", ["x"])
+        ),
+        "BootstrapMeanOverlap requires two columns per source: "
+        "(key_column, value_column).",
+    ),
+    "group column": (
+        lambda f: stats.DispersionMax(
+            f.ref("nums", ["cnt"]), 1.0, group_column="g"
+        ),
+        "DispersionMax requires the count column plus the group column in "
+        "its reference.",
+    ),
+    "same columns": (
+        lambda f: stats.ProfileDrift(
+            f.ref("nums", ["x"]), f.ref("nums", ["y"])
+        ),
+        "ProfileDrift requires the same column list on both references; "
+        "got ['x'] vs ['y'].",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", ARGUMENT_ERRORS)
+def test_argument_errors_raise_before_any_job(spark, case):
+    # an argument error raises as it did from the per-class overrides,
+    # never as an undefined verdict
+    build, message = ARGUMENT_ERRORS[case]
+    constraint = build(Frames(spark))
+    raised, jobs = count_jobs(
+        spark, case.replace(",", ""), lambda: _first_test(constraint, spark)
+    )
+    assert type(raised) is ValueError
+    assert str(raised) == message
+    assert jobs == 0
