@@ -10,8 +10,9 @@ Every class is a statistic on the one lifecycle of ``Constraint.test``
 - ``_compare``: the verdict on that summary against the bounds the
   constraint holds, as ``(ok, message)``.
 
-The summary is read once, through the factual slot's per-instance
-cache, so a re-test runs no Spark job.  A statistic its data leaves
+The summary is read through the per-instance slot cache, so a re-test
+runs no Spark job; a two-sample statistic (``_TwoSample``) reads both
+sides into the factual slot's one summary.  A statistic its data leaves
 undefined (an empty side, a constant column) is judged ``Undefined``:
 by ``_compare`` from the summary, or by ``_undefined`` when the
 operator raises its documented ``ValueError``.
@@ -118,8 +119,9 @@ def _lowest_q(rows: list, n: int = 5) -> list:
 
 class _Statistic(Constraint):
     """A constraint on a statistic of its data; see the module
-    docstring.  The target slot holds the literal ``ref_value``, which
-    ``_compare`` does not read: the bounds live on the instance."""
+    docstring.  The bounds live on the instance: ``_compare`` does not
+    read the literal ``ref_value`` a within statistic's target slot
+    holds."""
 
     #: the columns the reference names, checked before any Spark job:
     #: ``(count, roles)`` for ``count`` columns named ``roles`` in the
@@ -3730,6 +3732,12 @@ class WelchTMax(_Statistic):
     def _retrieve(self, engine: SparkSession, ref: DataReference):
         return _row(stat_ops.welch_ttest(
             ref.get_selection(engine), self._metric, self._assign
+        ))
+
+    def _undefined(self, exc):
+        return Undefined(False, (
+            f"Welch t between variants of {self._ref} is undefined: "
+            f"{exc}. "
         ))
 
     def _compare(self, row, _):

@@ -656,6 +656,11 @@ CHANGED = {
         "daily_null's column(s) 'd', 'trend', 'g' is undefined: "
         "grouped_theil_sen needs at least one group ",
     },
+    "WelchTMax-no_rows": {
+        "outcome": False,
+        "message": "Welch t between variants of ab is undefined: Welch "
+        "t-test needs exactly two assignment levels, got []. ",
+    },
     "GroupedQteMax-all_null": {
         "outcome": False,
         "message": "Grouped quantile treatment effect on ab_null is "
